@@ -1,15 +1,17 @@
 #!/usr/bin/env python
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE compact JSON line as the FINAL stdout line (per-query
-medians, minima total, pipeline e2e, ann-pair verdict — sized to fit
-the driver's 2000-char capture buffer) and writes the full detail
-(raw samples, ann_pair block, 10x/sf1 scale probes) to
-``BENCH_DETAIL.json`` next to this file:
+The headline set is every registered query whose ``tags`` carry
+``"headline"`` (declared at its ``register`` site, gate or extended
+tier alike).  Prints ONE compact JSON line as the FINAL stdout line
+(per-query minima, minima total, pipeline e2e — sized to fit the
+driver's 2000-char capture buffer) and writes the full detail (raw
+samples, medians, 10x/sf1 scale probes) to ``BENCH_DETAIL.json`` next
+to this file:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is executed to completion (count + a bounded collect of the
-result) so the full plan — scans, shuffles, windows — actually runs.
+Each query is executed to completion through the noop sink, so the
+full plan — scans, shuffles, windows — actually runs.
 
 Noise hygiene (round-9 VERDICT #1): three base passes per query
 (min + median published), and a NOISE SENTINEL — one fixed query
@@ -27,160 +29,20 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from diabetes_etl_spark.plans import all_queries
-from diabetes_etl_spark.session import get_spark
+from pyspark.sql import functions as F
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "agg_global_kpis",
-    "quantiles_by_flag",
-    "window_topk_per_group",
-    "window_running_lead_lag",
-    "join_outer_order_counts",
-    "events_sessionize_sql",
-    "asof_purchase_last_click",
-    "medallion_events_gold",
-    # diabetes medallion + dashboard (the reference's own surface)
-    "diab_gold_demographics",
-    "diab_dash_risk_distribution",
-    # subquery family (decorrelation-to-join plans, round-4)
-    "subq_large_volume_orders",
-    "subq_small_quantity_revenue",
-    # LLM-pipeline extensions
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_components",
-    "sim_topk_cosine",
-    "sim_lsh_topk",
-    "text_quality_by_lang",
-    "text_repetition_signals",
-    # round-5 LLM-pipeline families: PII scan (gate) + decontamination
-    "pii_scan_stats",
-    "decontam_overlap_stats",
-    # E2E training-data prep composite (dedup -> near-dup -> quality ->
-    # token budget) — the nightly-corpus-pipeline headline
-    "docs_prep_pipeline",
-    # round-6 LLM-pipeline families: iterative k-means + SemDeDup
-    # within-cluster dedup, corpus-trained bigram LM scoring,
-    # temperature mixing, LOCF fill
-    "cluster_kmeans_embeddings",
-    "semdedup_cluster_stats",
-    "text_bigram_lm_quality",
-    "mix_temperature_langs",
-    "events_locf_fill",
-    # round-7 families: Bloom blocklist probe (broadcast bit table +
-    # FP accounting), dedup APPLY (components + representative attach),
-    # BM25 retrieval (broadcast query-sized sides)
-    "decontam_bloom_probe",
-    "dedup_apply_stats",
-    "text_bm25_topk",
-    # round-8 families: progressive-JPEG corpus decode (9-scan SOF2
-    # assembly per row — the heaviest pandas path), power-iteration
-    # PCA (2 corpus passes + d-row aggregates per round)
-    "multimodal_progressive_decode",
-    "embeddings_pca_power",
-    # round-8 late families: PQ ANN (codebook train + ADC scoring),
-    # content-defined chunking (per-row boundary scan + fp shuffle),
-    # WordPiece greedy segmentation (constant-folded vocab map),
-    # ROUGE/BLEU pair scoring (distributed clipped overlap)
-    "sim_pq_adc_topk",
-    "dedup_cdc_chunks",
-    "text_wordpiece_segments",
-    "text_rouge_bleu_pairs",
-    # round-9 late families: histogram-GBDT depth-2 tree (one fact
-    # scan per level), exact AUC/KS rank metrics (bounded score-group
-    # table), KMV bottom-k intersection sketch, item-item CF (capped
-    # co-occurrence cosine)
-    "ml_gbdt_histogram_tree",
-    "classifier_auc_roc",
-    "sketch_kmv_event_overlap",
-    "cf_item_similarity_topk",
-    # round-10 gate families: tie-corrected rank-sum on the bounded
-    # value support, density clustering over the materialized pair
-    # relation, MG-candidates + exact recount heavy hitters
-    "events_ab_mann_whitney",
-    "cluster_dbscan_docs",
-    "text_mg_heavy_ngrams",
-    # round-11 gate families: the repaired conformal plan (exact
-    # selection instead of an unpartitioned window — its bench row IS
-    # the evidence for the round-10 verdict fix) and the one-scan A/B
-    # healthcheck composite
-    "ml_conformal_interval",
-    "events_ab_healthcheck",
-    # round-12 gate promotions (the headline grows ONLY by newly
-    # promoted queries — protocol frozen since round 10): the causal/
-    # inference suite plus the Spark-4 Python DataSource scan
-    "events_ab_fdr_bh",
-    "events_ipw_stratified_ate",
-    "events_ab_quantile_effects",
-    "corpus_pps_ht_estimate",
-    "stream_msprt_monitor",
-    "versioned_datasource_scan",
-    # round-12b rotation promotions (same growth rule)
-    "events_aipw_doubly_robust",
-    "events_ab_rmst",
-    # round-13 rotation promotions (same growth rule): the production
-    # Qini and off-policy forms, the anytime-valid CS (event-grain —
-    # the verdict-named promotion; its user-grain production twin
-    # events_ab_confidence_sequence_users is oracle-paired in the
-    # extended tier, a round-14 rotation candidate), the streaming
-    # Python DataSource, TPC-H q8, and the user-grain streaming mSPRT
-    "events_uplift_qini_cutpoints",
-    "events_policy_ips_snips",
-    "events_ab_confidence_sequence",
-    "stream_versioned_source",
-    "q8_market_share",
-    "stream_msprt_monitor_users",
-    # round-13b rotation promotions (same growth rule): offline
-    # changepoint localization, the day-batched UCB1 replay, and
-    # CTE-unrolled IPF raking.  graph_modularity_communities is
-    # gate-promoted but NOT added here: its LPA state machinery
-    # re-runs the per-round parquet commits on every bench
-    # repetition (~20 s cold at sf0.1), and the headline wall-clock
-    # already sits near the capture budget — the same machinery's
-    # bench behavior was measured in the graph rows of earlier
-    # rounds, and the query stays timed per-round in
-    # CORRECTNESS_r13 at the driver's scale factor.
-    "events_changepoint_binseg",
-    "events_bandit_ucb_replay",
-    "sample_raking_ipf",
-]
+from diabetes_etl_spark.plans import all_queries
+from diabetes_etl_spark.session import get_spark, warm_session
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     spark = get_spark(app_name="diabetes-etl-spark-bench")
-    # Full registry: HEADLINE may name extended-tier queries (e.g. the
-    # equal-params ANN pair) — the bench set must not silently shrink
-    # when the gate tier is re-curated.
     registry = all_queries(include_extended=True)
-    missing = [n for n in HEADLINE if n not in registry]
-    if missing:
-        print(f"# WARNING: headline queries missing: {missing}", file=sys.stderr)
-    names = [n for n in HEADLINE if n in registry]
-    # Warm the JVM/session on the smallest fixture so per-query numbers
-    # measure the plans, not session startup.
-    registry["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001").count()
-    # Warm the Python worker pool too: the first Pandas-UDF stage pays a
-    # process spawn + numpy/pandas import per core (~20s across 32
-    # cores), which is session startup, not plan cost.
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    _warm = F.pandas_udf(lambda s: s, "double")
-    spark.range(256).repartition(32).select(
-        _warm(F.col("id").cast("double"))
-    ).write.format("noop").mode("overwrite").save()
-    # Warm the Structured-Streaming machinery too: the session's FIRST
-    # streaming query pays one-time init (~4-10s observed) that would
-    # otherwise land on whichever streaming-shaped headline runs first
-    # and pollute its run-0 sample (round-5 VERDICT #3).
-    if "stream_ingest_events" in registry:
-        registry["stream_ingest_events"].fn(
-            spark, "/root/testdata/sf0.001"
-        ).write.format("noop").mode("overwrite").save()
+    names = [n for n, spec in registry.items() if "headline" in spec.tags]
+    # per-query numbers measure the plans, not session startup
+    warm_session(spark)
 
     # Multiple passes per query, keep the per-query minimum: single-shot
     # timings on a shared host mix plan cost with transient JVM/GC/IO
@@ -240,58 +102,6 @@ def main() -> None:
                 f"# {name} (>1.5x spread extra): {elapsed}s",
                 file=sys.stderr,
             )
-    # Equal-params ANN pair: interpreted vs Arrow-vectorized LSH
-    # bucketing at identical (8 tables, 6 bits, top-5).  Measured in
-    # its own PAIRED block (round-7 VERDICT #1): single-shot numbers
-    # on this host swing up to 3x, and the r6/r7 driver artifacts and
-    # local re-measurements disagreed about which path wins — so the
-    # bench now runs the two queries ADJACENT, alternating which goes
-    # first each round, and publishes the RAW per-run samples so the
-    # driver's own artifact settles the claim without any out-of-band
-    # measurement.  4 rounds = 4 paired comparisons; "wins" counts
-    # rounds where vectorized was strictly faster than the interpreted
-    # run of the SAME round (paired, so page-cache/GC drift hits both).
-    ann_pair = None
-    _PAIR = ("sim_lsh_topk_scale", "sim_lsh_topk_vectorized")
-    if all(n in registry for n in _PAIR):
-        # Unrecorded first-touch warm-up: the vectorized path pays a
-        # one-time ~1.5-2s cost on its very first execution (numpy
-        # worker-side import + broadcast pickle) that the generic
-        # pandas-UDF warm-up above does not cover — observed as a lost
-        # first paired round (3.2s -> 1.4s steady state) that says
-        # nothing about the plans being compared.
-        for name in _PAIR:
-            run_query(name, "/root/testdata/sf0.001")
-        pair_samples: dict[str, list[float]] = {n: [] for n in _PAIR}
-        orders = []
-        wins_vec = 0
-        for rnd in range(4):
-            order = _PAIR if rnd % 2 == 0 else _PAIR[::-1]
-            orders.append("->".join(order))
-            round_t = {}
-            for name in order:
-                t = run_query(name, sf_dir)
-                pair_samples[name].append(t)
-                round_t[name] = t
-                print(f"# ann_pair round {rnd} {name}: {t}s", file=sys.stderr)
-            if round_t[_PAIR[1]] < round_t[_PAIR[0]]:
-                wins_vec += 1
-        ann_pair = {
-            "samples": pair_samples,
-            "orders": orders,
-            "paired_rounds": 4,
-            "vectorized_wins": wins_vec,
-            "min": {n: min(s) for n, s in pair_samples.items()},
-            "median": {
-                n: round(sorted(s)[len(s) // 2], 3)
-                for n, s in pair_samples.items()
-            },
-        }
-        # feed the pair's min/median into the headline dicts so the
-        # round-over-round per-query tracking keeps its continuity
-        for n in _PAIR:
-            samples[n] = pair_samples[n]
-
     timings = {n: min(s) for n, s in samples.items()}
     medians = {n: round(sorted(s)[len(s) // 2], 3) for n, s in samples.items()}
     total = round(sum(timings.values()), 3)
@@ -355,7 +165,6 @@ def main() -> None:
             scale10x = {"rows_documents": n_docs}
             for name in (
                 "dedup_minhash_lsh",
-                "sim_lsh_topk_scale",
                 # round-6: count-table designs — bigram LM's model table
                 # and the CMS's constant-size cells must stay sublinear
                 # on a 10x duplication-heavy corpus
@@ -560,8 +369,6 @@ def main() -> None:
             " ~1 are expected — read scaling from scale10x/scale_sf1"
         ),
     }
-    if ann_pair is not None:
-        result["ann_pair"] = ann_pair
     if pipeline_e2e is not None:
         result["pipeline_e2e_sec"] = pipeline_e2e
     if scale10x is not None:
@@ -588,12 +395,10 @@ def main() -> None:
     # The driver captures only the LAST ~2000 chars of stdout and
     # parses the final line; the full result dict outgrew that buffer
     # in round 5 and BENCH_r{5..8}.json all recorded `parsed: null`
-    # (round-8 VERDICT #1).  So: full detail (raw samples, ann_pair
-    # block, scale10x/sf1 probes) goes to a COMMITTED side file, and
-    # the final stdout line is a compact summary hard-capped well
-    # under the buffer — per-query MEDIANS (the round-over-round
-    # comparison number), the minima total, e2e, and the ann-pair
-    # verdict.
+    # (round-8 VERDICT #1).  So: full detail (raw samples, medians,
+    # scale10x/sf1 probes) goes to a COMMITTED side file, and the
+    # final stdout line is a compact summary hard-capped well under
+    # the buffer — per-query minima, the minima total, and e2e.
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
@@ -610,7 +415,7 @@ def main() -> None:
     # times from THIS line only — a query missing from it is reported
     # as "dropped_from_bench" even when it merely got FASTER (round
     # 13: the slowest-25 truncation hid a 3.6x improvement as a
-    # drop).  All 67 query names alone are ~1400 chars, so full names
+    # drop).  All 65 query names alone are ~1400 chars, so full names
     # + 3dp values cannot fit; instead of truncating the SET, degrade
     # VALUE precision and then optional keys until the line fits —
     # every query always stays present under its full name.  1dp on a
@@ -624,7 +429,6 @@ def main() -> None:
         # where 1dp quantization would exceed the noise floor)
         precisions = [3, 2, "mixed", 1]
         droppable = [
-            "ann_vectorized_wins",
             "detail",
             "pipeline_e2e_sec",
             "noise_sentinel",
@@ -666,10 +470,6 @@ def main() -> None:
     }
     if pipeline_e2e is not None:
         compact["pipeline_e2e_sec"] = pipeline_e2e
-    if ann_pair is not None:
-        compact["ann_vectorized_wins"] = (
-            f"{ann_pair['vectorized_wins']}/{ann_pair['paired_rounds']}"
-        )
     print(_fit_line())
     spark.stop()
 

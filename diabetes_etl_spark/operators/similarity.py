@@ -133,7 +133,8 @@ def cosine_threshold_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs with cosine >= threshold (embedding near-dup detection).
-    Exact all-pairs form — the verifier; use lsh_topk for the scale path.
+    Exact all-pairs form — the verifier; use cosine_neardup_lsh for the
+    scale path.
     """
     base = with_norm(df, vec_col)
     a = base.select(
@@ -181,87 +182,6 @@ def lsh_bucket(vec_col: str, n_bits: int, dim: int, seed: int = 0) -> Column:
         )
         code = code + F.when(proj > 0, F.lit(1 << h)).otherwise(F.lit(0)).cast("long")
     return code
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_ids: Column,
-    k: int = 5,
-    n_bits: int = 6,
-    dim: int = 64,
-    n_tables: int = 4,
-    multiprobe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: multi-table LSH candidate generation + exact
-    re-rank.
-
-    L independent hash tables (disjoint hyperplane seeds) raise recall
-    the standard way — a neighbour is found if it collides in ANY
-    table: P = 1-(1-p^b)^L; multiprobe additionally probes every 1-bit
-    flip of each query bucket.  The corpus side is scanned once per
-    table (map-side explode, no shuffle); the tiny exploded query side
-    is broadcast, so the join never moves the corpus.
-    """
-    base = with_norm(df, vec_col)
-    table_buckets = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                lsh_bucket(vec_col, n_bits, dim, seed=t * 131).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    cands = base.select(
-        F.col(id_col).alias("candidate_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("_norm").alias("c_norm"),
-        F.explode(table_buckets).alias("tb"),
-    ).select("candidate_id", "c_vec", "c_norm", "tb.tbl", "tb.bucket")
-    flips = [0] + ([1 << i for i in range(n_bits)] if multiprobe else [])
-    probe_buckets = F.flatten(
-        F.transform(
-            table_buckets,
-            lambda tb: F.array(
-                *[
-                    F.struct(
-                        tb["tbl"].alias("tbl"),
-                        tb["bucket"].bitwiseXOR(F.lit(flip)).alias("bucket"),
-                    )
-                    for flip in flips
-                ]
-            ),
-        )
-    )
-    queries = (
-        base.filter(query_ids)
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.col("_norm").alias("q_norm"),
-            F.explode(probe_buckets).alias("tb"),
-        )
-        .select("query_id", "q_vec", "q_norm", "tb.tbl", "tb.bucket")
-    )
-    pairs = cands.join(F.broadcast(queries), ["tbl", "bucket"]).filter(
-        F.col("candidate_id") != F.col("query_id")
-    )
-    scored = pairs.withColumn(
-        "cosine_sim",
-        F.round(
-            dot_exact("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 9
-        ),
-    ).dropDuplicates(["query_id", "candidate_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("candidate_id")
-    )
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= k)
-        .select("query_id", "candidate_id", "cosine_sim", "sim_rank")
-    )
 
 
 # -- Near-dup pairs, LSH-bucketed scale path --------------------------------
@@ -517,7 +437,7 @@ def ivf_topk(
     cell join replaces the cross product: candidate volume
     ~ n_assign * n_probe / n_centroids of the corpus, concentrated
     where the neighbours actually are — the complementary ANN design to
-    lsh_topk (data-adaptive cells vs oblivious planes).  Training
+    lsh_topk_vectorized (data-adaptive cells vs oblivious planes).  Training
     samples min(train_cap, n) vectors by xxhash64 order — deterministic
     and bounded regardless of corpus size.
 
@@ -612,22 +532,19 @@ def lsh_topk_vectorized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """lsh_topk with the bucket codes computed by an Arrow-batched
-    Pandas UDF: all (n_tables * n_bits) signed projections per vector
-    collapse into ONE numpy matmul per batch.
+    """Approximate top-k: multi-table random-hyperplane LSH candidate
+    generation + exact re-rank, with the bucket codes computed by an
+    Arrow-batched Pandas UDF: all (n_tables * n_bits) signed
+    projections per vector collapse into ONE numpy matmul per batch.
 
-    Native higher-order expressions evaluate lambda-per-element
-    interpreted — fine for a handful of projections, but at 48 planes x
-    dim 64 the matmul path is the honest winner (the one place in this
-    repo where a Python UDF beats built-ins).  The claim is PAIRED:
-    single-shot timings on a shared host swing up to 3x (the round-7
-    driver artifact, where the two queries ran separated by the full
-    headline list, briefly showed vectorized behind), so bench.py runs
-    the pair in a dedicated adjacent alternating-order block
-    (``ann_pair`` in the bench JSON, raw per-run samples included)
-    and only the same-round comparison is meaningful.  Round-8 paired
-    measurement at identical (8 tables, 6 bits, top-5), sf0.1,
-    local[32]: vectorized won 4/4 rounds, ratios 1.4-2.7x.
+    L independent hash tables raise recall the standard way — a
+    neighbour is found if it collides in ANY table: P = 1-(1-p^b)^L;
+    multiprobe additionally probes every 1-bit flip of each query
+    bucket.  The tiny exploded query side is broadcast, so the join
+    never moves the corpus.  Native higher-order expressions evaluate
+    lambda-per-element interpreted; at 48 planes x dim 64 the matmul
+    path measured faster than an expression form of the same buckets
+    in paired rounds at identical (8 tables, 6 bits, top-5), sf0.1.
     Hyperplanes come from a seeded PCG64 generator, deterministic
     across runs and platforms.
     """

@@ -271,8 +271,10 @@ FROM ks ORDER BY rank
     "two grouped passes over events; every window rides the "
     "event-type grid (bounded by the type vocabulary, not the "
     "corpus).",
-    tags=("events", "ab-testing", "statistics", "multiplicity", "extension"),
-    extended=False,  # gate (round-12 rotation)
+    tags=(
+        "events", "ab-testing", "statistics", "multiplicity", "extension",
+        "headline",
+    ),
 )(_fdr_bh)
 
 
@@ -780,8 +782,8 @@ FROM agg
     "the naive one.  DECIMAL-folded outcomes, exact integer counts, "
     "pinned double epilogue.  Scale: one user-grain pass, then the "
     "4-row stratum grid.",
-    tags=("events", "causal", "statistics", "extension"),
-    extended=False,  # demoted round 13 — registry._EXTENDED wins (rationale there)
+    tags=("events", "causal", "statistics", "extension", "headline"),
+    extended=True,
 )(_ipw_ate)
 
 
@@ -882,8 +884,11 @@ FROM j GROUP BY q ORDER BY q
     "q_a/q_b hash bit-exact.  Scale: one grouped pass to the "
     "bounded value support, one window over it, a 4-way quantile "
     "fan-out on the spine only.",
-    tags=("events", "ab-testing", "statistics", "quantile", "extension"),
-    extended=False,  # demoted round 13 — registry._EXTENDED wins (rationale there)
+    tags=(
+        "events", "ab-testing", "statistics", "quantile", "extension",
+        "headline",
+    ),
+    extended=True,
 )(_quantile_effects)
 
 
@@ -1198,8 +1203,7 @@ FROM c ORDER BY decile
     "placement.  Scale: one user-grain aggregate, then everything "
     "rides the O(score-support) spine — no row_number, no ntile, no "
     "per-user window anywhere in the plan (plan-asserted).",
-    tags=("events", "uplift", "causal", "scale", "extension"),
-    extended=False,  # gate (round-13 rotation: the production Qini form, verdict-r12 #1)
+    tags=("events", "uplift", "causal", "scale", "extension", "headline"),
 )(_uplift_qini_cutpoints)
 
 
@@ -1574,8 +1578,8 @@ register(
     "event-grain FIXTURE TWIN — the production monitor is "
     "stream_msprt_monitor_users (user-grain trials, no iid caveat; "
     "see events_ab_msprt_users).",
-    tags=("streaming", "ab-testing", "sequential", "extension"),
-    extended=False,  # demoted round 13 — registry._EXTENDED wins (rationale there)
+    tags=("streaming", "ab-testing", "sequential", "extension", "headline"),
+    extended=True,
 )(_stream_msprt_monitor)
 
 
@@ -1611,8 +1615,7 @@ register(
     "grids count each user once, the randomization unit is the "
     "analysis unit: no event-level-iid caveat.  Epilogue shared "
     "verbatim with the batch query (_msprt_epilogue).",
-    tags=("streaming", "ab-testing", "sequential", "extension"),
-    extended=False,  # gate (round-13 rotation: the production monitor replaces the event-grain twin)
+    tags=("streaming", "ab-testing", "sequential", "extension", "headline"),
 )(_stream_msprt_monitor_users)
 
 
@@ -2034,8 +2037,7 @@ register(
     "naive / stratified / IPW / AIPW / RDD / IV.  Scale: ONE "
     "user-grain pass to an (4 strata x 2 arms) grid; everything "
     "after is a bounded epilogue.",
-    tags=("events", "causal", "statistics", "extension"),
-    extended=False,  # gate (round-12b rotation)
+    tags=("events", "causal", "statistics", "extension", "headline"),
 )(_aipw_ate)
 
 
@@ -2142,8 +2144,7 @@ FROM agg
     "folds until the final divisions; NULL (never fabricated) when "
     "no user matches the target policy.  Scale: ONE user-grain "
     "grouped pass to a 1-row epilogue.",
-    tags=("events", "causal", "policy", "statistics", "extension"),
-    extended=False,  # gate (round-13 rotation, verdict-r12 #1)
+    tags=("events", "causal", "policy", "statistics", "extension", "headline"),
 )(_ops_ips)
 
 
@@ -2687,8 +2688,10 @@ FROM fin
     "excluded as in the standard estimator.  Scale: one grouped "
     "scan of events to per-user spans; every window rides the "
     "per-arm O(distinct lifetimes) spine.",
-    tags=("events", "survival", "ab-testing", "statistics", "extension"),
-    extended=False,  # gate (round-12b rotation)
+    tags=(
+        "events", "survival", "ab-testing", "statistics", "extension",
+        "headline",
+    ),
 )(_rmst_arms)
 
 
@@ -2818,8 +2821,10 @@ register(
     "One quantized ln + one sqrt per day row.  Scale: one grouped "
     "pass to the (day x variant) grid; every window rides the "
     "O(days) spine.",
-    tags=("events", "ab-testing", "sequential", "statistics", "extension"),
-    extended=False,  # gate (round-13 rotation, verdict-r12 #1)
+    tags=(
+        "events", "ab-testing", "sequential", "statistics", "extension",
+        "headline",
+    ),
 )(_confseq)
 
 
@@ -3181,6 +3186,8 @@ register(
     "state hash-pinned.  Scale: one map-side-combinable pass to the "
     "O(days x 4) grid, then an O(days^2 x arms) scalar epilogue on "
     "the spine.",
-    tags=("events", "causal", "policy", "bandit", "sequential", "extension"),
-    extended=False,  # gate (round-13b rotation)
+    tags=(
+        "events", "causal", "policy", "bandit", "sequential", "extension",
+        "headline",
+    ),
 )(_bandit_ucb_replay)

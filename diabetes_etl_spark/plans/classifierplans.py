@@ -420,8 +420,8 @@ ORDER BY level, leaf
     "identical CTE layers, hash-pinning every winner's gain, split "
     "counts, and leaf means.  Scale: per level = one fact scan + an "
     "O(leaves x F x B)-row window; no global sort anywhere.",
-    tags=("ml", "gbdt", "histogram", "iterative", "extension"),
-    extended=False,  # promoted to the gate round 9 (registry._EXTENDED rationale)
+    tags=("ml", "gbdt", "histogram", "iterative", "extension", "headline"),
+    extended=True,
 )
 def ml_gbdt_histogram_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.gbdt import (
@@ -546,8 +546,8 @@ FROM a
     "max |tp*nn - fp*np| (cross-multiplied — no per-row float "
     "ratios).  The oracle unrolls the same 3 GD training rounds and "
     "replays the identical rank algebra.",
-    tags=("classifier", "ml", "ranking-metric", "extension"),
-    extended=False,  # promoted to the gate round 9 (registry._EXTENDED rationale)
+    tags=("classifier", "ml", "ranking-metric", "extension", "headline"),
+    extended=True,
 )
 def classifier_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.classifier import (
@@ -971,7 +971,7 @@ FROM w
     "classifier_logreg_train is the iterative general-d pattern; "
     "this is the exact small-d shortcut).",
     tags=("ml", "regression", "extension"),
-    extended=False,  # gate (round-10 rotation)
+    extended=True,
 )
 def ml_ridge_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -1248,8 +1248,7 @@ FROM qhat q2, test t
     "histogram passes over the calibration split, never a global "
     "sort; the selection_exact_percentiles pattern), so NO stage "
     "executes an unpartitioned total order.",
-    tags=("ml", "conformal", "uncertainty", "extension"),
-    extended=False,  # gate (round-10 rotation)
+    tags=("ml", "conformal", "uncertainty", "extension", "headline"),
 )
 def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
@@ -1493,7 +1492,7 @@ FROM terms
     "(asserted in tests — the decomposition is only exact when "
     "scores are constant within bins).  One corpus pass to 10 bins + one for the cross term.",
     tags=("classifier", "ml", "calibration", "extension"),
-    extended=False,  # demoted round 12 — registry._EXTENDED wins (rationale there)
+    extended=True,
 )
 def classifier_brier_decomposition(
     spark: SparkSession, sf_dir: str

@@ -108,10 +108,8 @@ FROM af ORDER BY vec_id
     "state commits per round to work_dir parquet (components.py "
     "pattern).  The oracle unrolls identical iterations as CTE "
     "layers, hash-pinning every round.",
-    tags=("clustering", "iterative", "extension"),
-    # gate since round 6 (second rotation): replaces sim_ivf_topk —
-    # see the swap rationale in registry._EXTENDED
-    extended=False,
+    tags=("clustering", "iterative", "extension", "headline"),
+    extended=True,
 )
 def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -188,7 +186,7 @@ ORDER BY m.cluster
     "cartesian — the standard way embedding dedup survives 100 TB.  "
     "Zero-norm vectors are excluded (no cosine direction).  Output: "
     "per-cluster point / dup-pair / dropped / kept counts.",
-    tags=("clustering", "dedup", "similarity", "extension"),
+    tags=("clustering", "dedup", "similarity", "extension", "headline"),
 )
 def semdedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

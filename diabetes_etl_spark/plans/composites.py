@@ -1,5 +1,6 @@
-"""Composite gate queries — one per operator family that the extended
-tier splits into per-operator variants (plans/registry.py `_EXTENDED`).
+"""Composite queries — one per operator family that the extended
+tier splits into per-operator variants (each registered with
+``extended=True``).
 
 The driver's correctness gate checks the first GATE_CAPACITY registered
 queries, so each family gets ONE merged query here that exercises every
@@ -132,6 +133,7 @@ ORDER BY l_returnflag
     "quantiles_by_flag / corr_stddev_by_flag queries (SURVEY §2.3; "
     "reference pipeline:123-155,323,608-611).",
     tags=("agg", "quantile", "stats", "composite"),
+    extended=True,
 )
 def quantiles_corr_stddev_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -253,6 +255,7 @@ SELECT 'distinct', custkey FROM (
     "the extended setop_intersect / setop_except / distinct_flag_status "
     "queries (SURVEY §2.7).",
     tags=("setop", "distinct", "composite"),
+    extended=True,
 )
 def setop_intersect_except_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -310,6 +313,7 @@ ORDER BY o_orderpriority, o_orderstatus
     "kpi_long_unpivot queries (SURVEY §2.7; reference dashboard "
     "D:742-790).",
     tags=("pivot", "unpivot", "composite"),
+    extended=True,
 )
 def pivot_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -372,6 +376,7 @@ ORDER BY region, nation
     "cube_status_priority / having_frequent_customers queries "
     "(SURVEY §2.3/§2.7).",
     tags=("agg", "grouping-sets", "having", "sql", "composite"),
+    extended=True,
 )
 def grouping_sets_having_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("customer", "nation", "region"):
@@ -417,6 +422,7 @@ ORDER BY window_kind, window_start
     "gate twin of the extended events_tumbling_hourly / "
     "events_sliding_windows queries (SURVEY §2.8).",
     tags=("events", "window-time", "composite"),
+    extended=True,
 )
 def events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -480,6 +486,7 @@ ORDER BY branch, join_key
     "queries (SURVEY §2.8); bounded input makes both equal their batch "
     "oracles.",
     tags=("streaming", "join", "composite"),
+    extended=True,
 )
 def stream_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer").select(
@@ -632,7 +639,7 @@ ORDER BY o_orderpriority, rank
     "Row-identical to the window form under the total "
     "(price DESC, orderkey) order — the oracle IS the window form.",
     tags=("topk", "window", "scale-technique", "extension"),
-    extended=False,  # promoted to the gate round 8 (registry._EXTENDED rationale)
+    extended=True,
 )
 def topk_pruned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.topk import topk_per_group_pruned

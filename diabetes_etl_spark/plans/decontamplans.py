@@ -57,8 +57,7 @@ GROUP BY d.lang ORDER BY d.lang
     "shuffles its text); post-join volume is proportional to "
     "contamination; the oracle replays the same shingling and join "
     "in DuckDB.",
-    tags=("decontam", "dedup", "text", "extension"),
-    extended=False,  # promoted to the gate round 6 (see registry._EXTENDED rationale)
+    tags=("decontam", "dedup", "text", "extension", "headline"),
 )
 def decontam_overlap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -175,7 +174,7 @@ FROM graded GROUP BY lang ORDER BY lang
     "false-positive rate is itself an output.  Deterministic "
     "pairwise-independent integer hashing (the CMS family) makes even "
     "this approximate structure bit-exactly oracle-paired.",
-    tags=("decontam", "sketch", "approximate", "extension"),
+    tags=("decontam", "sketch", "approximate", "extension", "headline"),
     extended=True,
 )
 def decontam_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:

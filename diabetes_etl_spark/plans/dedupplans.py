@@ -31,7 +31,7 @@ GROUP BY md5(text)
 """,
     doc="Exact dedup: hash-groupBy on md5(text), canonical min-id per "
     "group (one shuffle of (hash, id) — never ships text twice).",
-    tags=("dedup", "extension"),
+    tags=("dedup", "extension", "headline"),
 )
 def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -76,6 +76,7 @@ SELECT doc_a, doc_b, jaccard_sim FROM (
     "a 50-char length band (each doc also emitted into the next band so "
     "boundary pairs are kept) — operators/dedup.py:ngram_jaccard_pairs.",
     tags=("dedup", "extension"),
+    extended=True,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -96,7 +97,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Jaccard verification of candidates — the 100 TB dedup path (no "
     "quadratic block scan).  Recall vs the exact operator asserted in "
     "tests/test_dedup.py.",
-    tags=("dedup", "lsh", "extension"),
+    tags=("dedup", "lsh", "extension", "headline"),
+    extended=True,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -165,6 +167,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     "engine-portable token hash (operators/dedup.py:portable_token_hash) "
     "so the full pipeline is oracle-paired.",
     tags=("dedup", "simhash", "extension"),
+    extended=True,
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -235,7 +238,8 @@ ORDER BY doc_id
     "rounds, lineage checkpointed).  Turns pairwise near-dup output "
     "into keep-one-per-cluster semantics; singleton docs never enter "
     "the graph.",
-    tags=("dedup", "components", "extension"),
+    tags=("dedup", "components", "extension", "headline"),
+    extended=True,
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -352,7 +356,7 @@ ORDER BY name_a, name_b
     "The name itself is the pair-canonicalization id, so Spark's "
     "within-block ordering equals the oracle's a.p_name < b.p_name.",
     tags=("er", "dedup", "fuzzy", "extension"),
-    extended=False,  # promoted to the gate round 6 (see registry._EXTENDED rationale)
+    extended=True,
 )
 def er_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.er import blocked_match_pairs
@@ -513,7 +517,7 @@ FROM labeled GROUP BY lang ORDER BY lang
     "is the cleaned corpus itself.  The oracle closes the exact pair "
     "relation with a recursive CTE and replays the same "
     "representative choice.",
-    tags=("dedup", "components", "extension"),
+    tags=("dedup", "components", "extension", "headline"),
     extended=True,
 )
 def dedup_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,7 +702,7 @@ FROM ranked WHERE rn = 1 ORDER BY cluster_id
     "deduplicated master table.  The oracle replays blocking, a "
     "recursive-CTE closure, and the same election window.",
     tags=("er", "dedup", "survivorship", "extension"),
-    extended=False,  # promoted to the gate (round-7 session rotation, see registry._EXTENDED)
+    extended=True,
 )
 def er_golden_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.er import (
@@ -779,7 +783,7 @@ ORDER BY new_id, matched_id
     "at gate scale, so the exact all-pairs oracle applies verbatim "
     "(the dedup_minhash_lsh precedent).",
     tags=("dedup", "lsh", "incremental", "extension"),
-    extended=False,  # promoted to the gate (round-7 session rotation, see registry._EXTENDED)
+    extended=True,
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1355,7 +1359,8 @@ FROM fl GROUP BY doc_id
     "cdc_dedup_stats).  chunks_fp folds the ORDERED chunk hashes, so "
     "the oracle pins exact boundary positions; only (id, idx, len, "
     "fp) ever shuffles — chunk text never leaves its scan.",
-    tags=("dedup", "cdc", "extension"),
+    tags=("dedup", "cdc", "extension", "headline"),
+    extended=True,
 )
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1646,7 +1651,7 @@ ORDER BY id_a, id_b
     "Scale: pairs exist only within blocks (the standard ER fan-out "
     "bound), one shuffle on the block key.",
     tags=("er", "linkage", "probabilistic", "extension"),
-    extended=False,  # promoted to the gate (round-9 session rotation, see registry._EXTENDED)
+    extended=True,
 )
 def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -1875,8 +1880,8 @@ FROM documents d LEFT JOIN roles r ON r.id = d.doc_id
     "dedup_components (recall note there); everything downstream is "
     "degree-bounded joins and one components run.  Scale: identical "
     "to dedup_components plus two semi-joins.",
-    tags=("dedup", "clustering", "dbscan", "extension"),
-    extended=False,  # gate (round-10b rotation)
+    tags=("dedup", "clustering", "dbscan", "extension", "headline"),
+    extended=True,
 )(_dbscan_docs)
 
 
@@ -1953,7 +1958,7 @@ FROM p WHERE distance <= 8
     "Scale: rank two-pass + one rank-keyed shuffle, pair volume w*n "
     "by construction regardless of name skew.",
     tags=("er", "dedup", "blocking", "extension"),
-    extended=False,  # gate (round-11 rotation)
+    extended=True,
 )(_snm_pairs)
 
 

@@ -1141,7 +1141,7 @@ register(
     oracle=_O_PRELUDE + "\n" + _O_DEMOGRAPHICS,
     doc="Gold demographics summary: 3-key groupBy, 10 aggregates, "
     "derived rate (reference: pipeline:268-301).",
-    tags=("diabetes", "medallion", "agg"),
+    tags=("diabetes", "medallion", "agg", "headline"),
 )(_gold_query(gold_demographics))
 
 register(
@@ -1207,6 +1207,7 @@ register(
 
 # -- the 3 dashboard views (reference: pipeline:398-444) --------------------
 
+# name -> (gold key, view columns, gold builder, extended, doc)
 _VIEW_SPECS = {
     "diab_view_demographics": (
         "demo",
@@ -1214,6 +1215,7 @@ _VIEW_SPECS = {
          "diabetes_rate", "avg_risk_score", "avg_age", "avg_bmi",
          "avg_glucose", "created_at"),
         gold_demographics,
+        True,
         "v_demographics_dashboard: column-pruned projection "
         "(reference: pipeline:398-412).",
     ),
@@ -1223,6 +1225,7 @@ _VIEW_SPECS = {
          "diabetes_rate", "avg_risk_score", "avg_pedigree_function",
          "avg_insulin", "created_at"),
         gold_risk_analysis,
+        True,
         "v_risk_analysis_dashboard: column-pruned projection "
         "(reference: pipeline:414-428).",
     ),
@@ -1233,12 +1236,13 @@ _VIEW_SPECS = {
          "avg_risk_score", "data_quality_score", "summary_date",
          "created_at"),
         gold_executive,
+        True,
         "v_executive_summary_dashboard: column-pruned projection "
         "(reference: pipeline:430-444).",
     ),
 }
 
-for _name, (_key, _cols, _builder, _doc) in _VIEW_SPECS.items():
+for _name, (_key, _cols, _builder, _ext, _doc) in _VIEW_SPECS.items():
     _cte_name, _cte_sql = _GOLD_CTES[_key][0], _GOLD_CTES[_key][1]()
 
     def _view_fn(spark, sf_dir, _b=_builder, _c=_cols):
@@ -1252,50 +1256,53 @@ for _name, (_key, _cols, _builder, _doc) in _VIEW_SPECS.items():
         ),
         doc=_doc,
         tags=("diabetes", "medallion", "view"),
+        extended=_ext,
     )(_view_fn)
 
 
 # -- the 6 dashboard SQL datasets (reference: dashboard JSON D:6-135) -------
 
+# name -> (SQL template, gold keys, extended, extra tags, doc)
 _DASH_SPECS = {
     "diab_dash_kpi_union": (
-        _DASH_KPI, ("ex",),
+        _DASH_KPI, ("ex",), False, (),
         "Dashboard KPI cards: 8-way UNION ALL pivot of the executive row "
         "to long format (reference: D:6-21).",
     ),
     "diab_dash_age_group": (
-        _DASH_AGE, ("demo",),
+        _DASH_AGE, ("demo",), True, (),
         "Dashboard diabetes-rate-by-age-group with CASE custom ordering "
         "(reference: D:31-44).",
     ),
     "diab_dash_bmi_dist": (
-        _DASH_BMI, ("demo",),
+        _DASH_BMI, ("demo",), False, (),
         "Dashboard BMI distribution with uncorrelated scalar subquery for "
         "population share (reference: D:53-68).",
     ),
     "diab_dash_risk_matrix": (
-        _DASH_MATRIX, ("risk",),
+        _DASH_MATRIX, ("risk",), True, (),
         "Dashboard risk matrix: re-aggregation with HAVING and two CASE "
         "orderings (reference: D:74-85).",
     ),
     "diab_dash_totals": (
-        _DASH_TOTALS, ("risk",),
+        _DASH_TOTALS, ("risk",), True, (),
         "Dashboard global totals over the risk analysis table "
         "(reference: D:94-100).",
     ),
     "diab_dash_risk_distribution": (
-        _DASH_DIST, ("demo",),
+        _DASH_DIST, ("demo",), False, ("headline",),
         "Dashboard risk distribution: CTE + CASE-in-GROUP-BY + "
         "SUM() OVER () population share (reference: D:105-135).",
     ),
 }
 
-for _name, (_tpl, _needs, _doc) in _DASH_SPECS.items():
+for _name, (_tpl, _needs, _ext, _tags, _doc) in _DASH_SPECS.items():
     register(
         _name,
         oracle=_dash_oracle(_tpl, _needs),
         doc=_doc,
-        tags=("diabetes", "dashboard", "sql"),
+        tags=("diabetes", "dashboard", "sql", *_tags),
+        extended=_ext,
     )(_dash_fn(_tpl, _needs))
 
 

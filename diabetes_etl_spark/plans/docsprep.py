@@ -92,7 +92,7 @@ ORDER BY lang
     "quality gate >= 0.5, per-language doc/token/subword budget.  "
     "Composes the gated dedup/text operators into the nightly corpus "
     "pipeline shape; oracle replays it with unbanded exact Jaccard.",
-    tags=("dedup", "text", "pipeline", "extension"),
+    tags=("dedup", "text", "pipeline", "extension", "headline"),
     extended=True,
 )
 def docs_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,7 +490,7 @@ ORDER BY global_id
     "100 TB); the plan's only SinglePartition exchange feeds the "
     "num_buckets-row offset prefix-sum (asserted in tests).",
     tags=("docs", "ids", "layout", "extension"),
-    extended=False,  # promoted to the gate (round-9 session rotation, see registry._EXTENDED)
+    extended=True,
 )
 def docs_global_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.ids import assign_global_ids
@@ -645,7 +645,6 @@ SELECT
     "as the near-dup ground truth.  Scale: each stage is the "
     "individually-probed operator; no new shuffle shapes.",
     tags=("docsprep", "composite", "dedup", "extension"),
-    extended=False,  # gate (round-11 rotation)
 )
 def docs_prep_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.clustering import dbscan_labels

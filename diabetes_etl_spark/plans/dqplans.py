@@ -149,7 +149,7 @@ ORDER BY s.ord
     "hard-coded DQ cells into a reusable declarative suite.  Scale: "
     "one corpus scan, a 9-row metrics frame, broadcast verification.",
     tags=("dq", "quality", "constraints", "extension"),
-    extended=False,  # promoted to the gate (round-9 session rotation, see registry._EXTENDED)
+    extended=True,
 )
 def dq_suite_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")

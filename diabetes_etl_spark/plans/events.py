@@ -50,6 +50,7 @@ ORDER BY 1, 2
     doc="Tumbling 1-hour event-time windows (batch form of the streaming "
     "windowed agg; Spark window() aligns to the epoch = date_trunc).",
     tags=("events", "window-time"),
+    extended=True,
 )
 def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -90,6 +91,7 @@ ORDER BY 1
     doc="Sliding windows (1h length, 15min slide): each event lands in 4 "
     "overlapping windows; oracle expands the same 4 offsets explicitly.",
     tags=("events", "window-time"),
+    extended=True,
 )
 def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -136,7 +138,8 @@ ORDER BY user_id, session_seq
     oracle=_SESSION_ORACLE,
     doc="Batch sessionization via gaps-and-islands (lag + running sum), "
     "30-minute inactivity timeout.",
-    tags=("events", "session"),
+    tags=("events", "session", "headline"),
+    extended=True,
 )
 def events_sessionize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
@@ -175,6 +178,7 @@ ORDER BY user_id, session_start
     doc="Native session_window operator (30-minute gap); oracle is the "
     "equivalent gaps-and-islands SQL.",
     tags=("events", "session"),
+    extended=True,
 )
 def events_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -209,7 +213,7 @@ FROM p ASOF LEFT JOIN c
     doc="As-of join: for each purchase, the user's most recent click at or "
     "before it (operators/asof.py union+window formulation; oracle is "
     "DuckDB's native ASOF LEFT JOIN).",
-    tags=("events", "asof", "join"),
+    tags=("events", "asof", "join", "headline"),
 )
 def asof_purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -258,6 +262,7 @@ GROUP BY 1, 2
     "by availableNow through a real readStream source; on bounded input "
     "the complete-mode result equals the batch oracle.",
     tags=("streaming", "window-time"),
+    extended=True,
 )
 def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
@@ -303,6 +308,7 @@ GROUP BY 1
     "streaming aggregate; bounded input makes the complete-mode result "
     "equal the batch oracle.",
     tags=("streaming", "join"),
+    extended=True,
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer").select(
@@ -338,6 +344,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
     "inner join emits matches as they occur — on bounded input the "
     "append-mode result equals the batch oracle.",
     tags=("streaming", "join"),
+    extended=True,
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = (
@@ -471,6 +478,7 @@ ORDER BY user_id
     "merge touches only the buckets the batch names).  Final state "
     "equals the batch latest-row-per-key oracle.",
     tags=("streaming", "cdc", "extension"),
+    extended=True,
 )
 def cdc_scd1_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -875,7 +883,7 @@ FROM st GROUP BY user_id ORDER BY user_id
     "tallies pin the whole fill sequence: carried-row count, "
     "unfilled-prefix count, and the decimal-exact sum of carried "
     "values.",
-    tags=("events", "timeseries", "window", "extension"),
+    tags=("events", "timeseries", "window", "extension", "headline"),
     extended=True,
 )
 def events_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2357,7 +2365,7 @@ ORDER BY r.day
     "Scale: the day dimension is tiny after the one grouped scan of "
     "events; all window/median work runs on O(days) rows.",
     tags=("events", "timeseries", "seasonal", "anomaly", "extension"),
-    extended=False,  # promoted to the gate (round-9 session rotation, see registry._EXTENDED)
+    extended=True,
 )
 def events_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -3242,7 +3250,7 @@ FROM d
     "100 TB this is one fact scan + constants — CUPED is free at any "
     "scale, which is why every platform runs it.",
     tags=("events", "abtest", "statistics", "cuped", "extension"),
-    extended=False,  # promoted to the gate round 9 (registry._EXTENDED rationale)
+    extended=True,
 )
 def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -3378,7 +3386,7 @@ FROM w
     "changes the score).  PSI > 0.25 is the standard retrain alarm.  "
     "Scale: two map-side-combined histogram passes onto <= 20 rows.",
     tags=("events", "drift", "psi", "extension"),
-    extended=False,  # gate (round-10 rotation)
+    extended=True,
 )
 def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -3884,7 +3892,7 @@ FROM cmp
     "table (users x B rows, map-side combined to B rows) — never on "
     "raw events.",
     tags=("events", "abtest", "randomization", "extension"),
-    extended=False,  # gate (round-10 rotation)
+    extended=True,
 )
 def events_ab_randomization_test(
     spark: SparkSession, sf_dir: str
@@ -4610,8 +4618,11 @@ FROM agg
     "support, one sort-window over it — identical shape to "
     "events_wasserstein_drift; nothing is per-row after the first "
     "aggregate.",
-    tags=("statistics", "ab-testing", "nonparametric", "extension"),
-    extended=False,  # demoted round 12 — registry._EXTENDED wins (rationale there)
+    tags=(
+        "statistics", "ab-testing", "nonparametric", "extension",
+        "headline",
+    ),
+    extended=True,
 )(_mann_whitney)
 
 
@@ -5109,7 +5120,7 @@ FROM agg
     "then every window runs on the O(distinct lifetimes) dimension; "
     "the corpus-end date attaches by broadcast.",
     tags=("events", "survival", "ab-testing", "statistics", "extension"),
-    extended=False,  # demoted round 12b — registry._EXTENDED wins (rationale there)
+    extended=True,
 )(_logrank_test)
 
 
@@ -5233,7 +5244,7 @@ FROM d
     "the house convention.  Scale: one user-grain grouped pass "
     "(map-side combined) to a 2-row table, then an epilogue.",
     tags=("events", "ab-testing", "statistics", "extension"),
-    extended=False,  # demoted round 12b — registry._EXTENDED wins (rationale there)
+    extended=True,
 )(_ab_srm_health)
 
 
@@ -5304,7 +5315,6 @@ SELECT event_type, user_id, n_events, rk FROM (
     "Update-mode emissions collapse to the newest summary per key "
     "by the cumulative n_total.",
     tags=("streaming", "stateful", "sketch", "extension"),
-    extended=False,  # gate (round-11 rotation)
 )(_stream_mg_heavy_users)
 
 
@@ -5833,8 +5843,10 @@ FROM d
     "user-grain grouped pass (map-side combined) to a 2-row table, "
     "then a 1-row epilogue; strictly cheaper than the three "
     "constituent scans it replaces.",
-    tags=("events", "ab-testing", "statistics", "composite", "extension"),
-    extended=False,  # gate (round-12 rotation)
+    tags=(
+        "events", "ab-testing", "statistics", "composite", "extension",
+        "headline",
+    ),
 )(_ab_healthcheck)
 
 
@@ -6309,8 +6321,10 @@ register(
     "Scale: one map-side-combinable grouped pass to the O(days) "
     "spine, then segment-partitioned windows on that spine only — "
     "no corpus window, no UDF, no collect.",
-    tags=("events", "statistics", "changepoint", "drift", "extension"),
-    extended=False,  # gate (round-13b rotation)
+    tags=(
+        "events", "statistics", "changepoint", "drift", "extension",
+        "headline",
+    ),
 )(_changepoint_binseg)
 
 

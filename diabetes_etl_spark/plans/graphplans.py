@@ -104,7 +104,7 @@ SELECT node, rank FROM r{_ITERS} ORDER BY node
     "identical iterations as CTE layers, so the hash pins every "
     "intermediate round, not just the fixed point.",
     tags=("graph", "iterative", "pagerank", "extension"),
-    extended=False,  # promoted to the gate round 6 (see registry._EXTENDED rationale)
+    extended=True,
 )
 def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -268,6 +268,7 @@ FROM e{_KC_ROUNDS} GROUP BY a ORDER BY node
     "identical rounds as CTE layers — the hash pins every peel round, "
     "and when a round removes nothing the state IS the exact k-core.",
     tags=("graph", "iterative", "kcore", "extension"),
+    extended=True,
 )
 def graph_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.graph import kcore_peel
@@ -433,7 +434,7 @@ FROM l{_LPA_ITERS} ORDER BY node
     "majority argmax folds into max(struct(count, -label))), state "
     "committed to parquet with restart resume.",
     tags=("graph", "iterative", "community", "extension"),
-    extended=False,  # demoted round 12 — registry._EXTENDED wins (rationale there)
+    extended=True,
 )
 def graph_lpa_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -528,7 +529,6 @@ FROM num, q ORDER BY community
     "node-keyed equi-joins; everything after is O(communities) with "
     "two intentional 1-row broadcast scalar-attach joins.",
     tags=("graph", "community", "modularity", "extension"),
-    extended=False,  # gate (round-13b rotation)
 )
 def graph_modularity_communities(
     spark: SparkSession, sf_dir: str

@@ -84,7 +84,8 @@ ORDER BY 1, 2
     doc="Gold output of the events medallion pipeline run through the "
     "pipeline engine (bronze→silver expectations→gold), oracle-checked "
     "end-to-end.",
-    tags=("pipeline", "medallion"),
+    tags=("pipeline", "medallion", "headline"),
+    extended=True,
 )
 def medallion_events_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     runner = PipelineRunner(build_events_pipeline(sf_dir), spark, mode="views")

@@ -112,7 +112,8 @@ _PCA_ORACLE = _mimic_spark_round(_PCA_ORACLE)
     "(project_out) ahead of clustering/ANN.  The oracle unrolls "
     "identical rounds, so every intermediate eigenvector estimate is "
     "hash-pinned.",
-    tags=("embeddings", "pca", "iterative", "extension"),
+    tags=("embeddings", "pca", "iterative", "extension", "headline"),
+    extended=True,
 )
 def embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.pca import power_iteration_rounds

@@ -125,7 +125,7 @@ FROM scored GROUP BY lang ORDER BY lang
     "regexp_count, zero shuffle before the 5-group aggregate).  The "
     "deterministic doc_id-derived enrichment gives every pattern real "
     "positives; the oracle recounts with regexp_extract_all.",
-    tags=("pii", "text", "extension"),
+    tags=("pii", "text", "extension", "headline"),
 )
 def pii_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = with_pii_counts(_enriched(spark, sf_dir))

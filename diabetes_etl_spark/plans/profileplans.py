@@ -67,7 +67,7 @@ _PROFILE_ORACLE = "\nUNION ALL".join(_arm(c) for c in _COLS) + '\nORDER BY "colu
     "100 TB profile, where per-column exact-distinct shuffles are the "
     "dominant cost.",
     tags=("profile", "agg", "stats", "extension"),
-    extended=False,  # promoted to the gate round 6 (see registry._EXTENDED rationale)
+    extended=True,
 )
 def profile_part_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile_table(load_table(spark, sf_dir, "part"))
@@ -1084,7 +1084,7 @@ FROM chi
     "tests) — sparse tables should left-join the margin product.  V = sqrt(chi2 / (n * "
     "(min(k)-1))).",
     tags=("profile", "association", "statistics", "extension"),
-    extended=False,  # demoted round 12 — registry._EXTENDED wins (rationale there)
+    extended=True,
 )
 def profile_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

@@ -72,7 +72,7 @@ ORDER BY l_returnflag, l_linestatus
 """,
     doc="TPC-H Q1 shape: filtered scan + grouped multi-aggregate "
     "(reference analogue: gold grouped aggs, diabetes_etl_pipeline.py:283-295).",
-    tags=("agg", "scan", "flagship"),
+    tags=("agg", "scan", "flagship", "headline"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -122,7 +122,8 @@ LIMIT 10
 """,
     doc="TPC-H Q3 shape: selective dim filter → fact joins → grouped agg → "
     "deterministic top-10.",
-    tags=("join", "agg", "topk"),
+    tags=("join", "agg", "topk", "headline"),
+    extended=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
@@ -172,7 +173,8 @@ GROUP BY n_name
 ORDER BY revenue DESC
 """,
     doc="TPC-H Q5 shape: snowflake join with broadcast dimensions.",
-    tags=("join", "agg", "broadcast"),
+    tags=("join", "agg", "broadcast", "headline"),
+    extended=True,
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -223,6 +225,7 @@ WHERE l_quantity > 5 AND l_returnflag <> 'A'
     doc="Per-row projection: CASE bucketing, arithmetic with deterministic "
     "rounding, concat, date cast (reference: pipeline:185-257).",
     tags=("project", "filter", "case"),
+    extended=True,
 )
 def proj_filter_case_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -261,7 +264,8 @@ FROM lineitem
 """,
     doc="Single-row global KPIs: count, countDistinct, conditional sums "
     "(count_if), min/max (reference: pipeline:359-366,645-653).",
-    tags=("agg", "global"),
+    tags=("agg", "global", "headline"),
+    extended=True,
 )
 def agg_global_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -293,6 +297,7 @@ ORDER BY o_orderpriority
     doc="Grouped aggregate with exact countDistinct + conditional sum "
     "(reference: pipeline:283-295,318-329).",
     tags=("agg",),
+    extended=True,
 )
 def agg_grouped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -332,7 +337,8 @@ ORDER BY l_returnflag
 """,
     doc="Exact median / interpolated percentiles per group "
     "(reference: pipeline:123-155 median imputation).",
-    tags=("agg", "quantile"),
+    tags=("agg", "quantile", "headline"),
+    extended=True,
 )
 def quantiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -371,6 +377,7 @@ ORDER BY l_returnflag
     "what's hash-pinned; sketch error bounds at production parameters "
     "(accuracy=1e4, default rsd) are asserted in tests.",
     tags=("agg", "quantile", "sketch"),
+    extended=True,
 )
 def quantile_sketch_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -399,6 +406,7 @@ ORDER BY l_returnflag
     doc="Pearson correlation + sample stddev/variance per group "
     "(reference: pipeline:323,608-611).",
     tags=("agg", "stats"),
+    extended=True,
 )
 def corr_stddev_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -432,6 +440,7 @@ ORDER BY CASE o_orderpriority
 """,
     doc="ORDER BY simple-CASE categorical order (reference: dashboard D:36-43).",
     tags=("sort", "case"),
+    extended=True,
 )
 def sort_case_custom_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -476,6 +485,7 @@ UNION ALL SELECT 'n_orders', CAST(n_orders AS DOUBLE) FROM k
     doc="Wide 1-row KPI aggregate unpivoted to (metric_name, metric_value) "
     "long format (reference: dashboard D:6-21).",
     tags=("unpivot", "agg", "setop"),
+    extended=True,
 )
 def kpi_long_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -515,6 +525,7 @@ ORDER BY c_mktsegment
     doc="Unbounded window SUM() OVER () for share-of-total "
     "(reference: dashboard D:130).",
     tags=("window", "agg"),
+    extended=True,
 )
 def window_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -541,7 +552,8 @@ FROM (
 """,
     doc="Top-k per group via ranking window (library operator; no reference "
     "analogue — SURVEY §2.6).",
-    tags=("window", "topk"),
+    tags=("window", "topk", "headline"),
+    extended=True,
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -571,7 +583,8 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """,
     doc="lead/lag + running sum with explicit ROWS frame (library operator, "
     "SURVEY §2.5; decimal-exact so the running sum is order-stable).",
-    tags=("window",),
+    tags=("window", "headline"),
+    extended=True,
 )
 def window_running_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -611,6 +624,7 @@ WINDOW
     "deterministic — percent_rank and cume_dist are exact rational "
     "divisions, identical IEEE doubles in both engines).",
     tags=("window",),
+    extended=True,
 )
 def window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -647,6 +661,7 @@ register(
     oracle=_SCALAR_SUBQ_SQL,
     doc="Uncorrelated scalar subquery as divisor (reference: dashboard D:57).",
     tags=("subquery", "sql"),
+    extended=True,
 )(_sql_query(_SCALAR_SUBQ_SQL, ("customer",)))
 
 
@@ -670,6 +685,7 @@ register(
     oracle=_CTE_SQL,
     doc="CTE + CASE bucketing + grouped agg (reference: dashboard D:105-135).",
     tags=("cte", "case", "sql"),
+    extended=True,
 )(_sql_query(_CTE_SQL, ("orders",)))
 
 
@@ -687,6 +703,7 @@ register(
     oracle=_HAVING_SQL,
     doc="HAVING filter over grouped aggregate (library coverage, FIXTURES §C).",
     tags=("agg", "having", "sql"),
+    extended=True,
 )(_sql_query(_HAVING_SQL, ("orders",)))
 
 
@@ -708,6 +725,7 @@ ORDER BY r_name, n_name
 """,
     doc="Fact ⋈ broadcast dims (nation, region): no shuffle for the dim side.",
     tags=("join", "broadcast"),
+    extended=True,
 )
 def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -734,6 +752,7 @@ WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 """,
     doc="Left-semi join (EXISTS): customers having at least one order.",
     tags=("join", "semi"),
+    extended=True,
 )
 def join_semi_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -752,6 +771,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 """,
     doc="Left-anti join (NOT EXISTS): customers with no orders.",
     tags=("join", "anti"),
+    extended=True,
 )
 def join_anti_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -772,7 +792,8 @@ LEFT JOIN orders ON c_custkey = o_custkey
 GROUP BY c_custkey, c_mktsegment
 """,
     doc="Left-outer join preserving zero-order customers + null-safe agg.",
-    tags=("join", "outer"),
+    tags=("join", "outer", "headline"),
+    extended=True,
 )
 def join_outer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -805,6 +826,7 @@ WHERE o_orderdate >= TIMESTAMP '2000-01-01'
 """,
     doc="UNION ALL of two filtered projections (reference: dashboard D:6-21).",
     tags=("setop",),
+    extended=True,
 )
 def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -826,6 +848,7 @@ SELECT c_custkey FROM customer WHERE c_acctbal > 5000
 """,
     doc="INTERSECT (distinct) of two key sets (SURVEY §2.7 library op).",
     tags=("setop",),
+    extended=True,
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
@@ -846,6 +869,7 @@ SELECT o_custkey FROM orders
 """,
     doc="EXCEPT (distinct): high-balance customers that never ordered.",
     tags=("setop",),
+    extended=True,
 )
 def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     rich = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000).select(
@@ -862,6 +886,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
     doc="DISTINCT projection (dropDuplicates).",
     tags=("setop", "distinct"),
+    extended=True,
 )
 def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -890,6 +915,7 @@ ORDER BY o_orderpriority
     doc="Server-side pivot with pinned value list (reference: dashboard "
     "pivot widget D:742-790; pinned values per SURVEY §7.6).",
     tags=("pivot",),
+    extended=True,
 )
 def pivot_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -912,6 +938,7 @@ SELECT p_partkey, 'p_retailprice', p_retailprice FROM part
 """,
     doc="Unpivot wide columns to long format (df.unpivot / stack).",
     tags=("unpivot",),
+    extended=True,
 )
 def unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(
@@ -936,6 +963,7 @@ ORDER BY status, priority
     doc="ROLLUP hierarchy totals (library op; SURVEY §2.3 notes reference "
     "has no grouping sets — shipped as part of the full agg family).",
     tags=("agg", "rollup"),
+    extended=True,
 )
 def rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -974,6 +1002,7 @@ ORDER BY o_orderstatus
     doc="Equi + range-predicate join: lineitems shipped within 60 days of "
     "their order (SURVEY §2.4 range-join family).",
     tags=("join", "range"),
+    extended=True,
 )
 def range_join_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -1008,6 +1037,7 @@ ORDER BY status, priority
     doc="CUBE cross-dimension totals (library op completing the "
     "grouping-set family next to ROLLUP; SURVEY §2.3).",
     tags=("agg", "cube"),
+    extended=True,
 )
 def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -1043,6 +1073,7 @@ ORDER BY region, nation
     doc="GROUPING SETS with explicit set list over a dimension join "
     "(SQL entry; completes the grouping-set family, SURVEY §2.3).",
     tags=("agg", "grouping-sets", "sql"),
+    extended=True,
 )
 def grouping_sets_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("customer", "nation", "region"):
@@ -1078,6 +1109,7 @@ LIMIT 100
     "explicit form for deterministic pipelines.)  Result is salt-"
     "invariant, so it oracle-checks against a plain GROUP BY.",
     tags=("agg", "skew", "salting"),
+    extended=True,
 )
 def salted_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -1120,6 +1152,7 @@ ORDER BY c_mktsegment
     "reducers instead of one straggler.  Salt-invariant by construction "
     "— oracle-checks against the plain join.",
     tags=("join", "skew", "salting"),
+    extended=True,
 )
 def salted_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.joins import salted_join
@@ -1167,6 +1200,7 @@ ORDER BY o_orderpriority
     "sketch path; full-key estimate error at production rsd=0.02 is "
     "asserted within bound in tests/test_plans.py.",
     tags=("agg", "sketch", "approx"),
+    extended=True,
 )
 def approx_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -1706,7 +1740,6 @@ ORDER BY o_orderpriority
     "(the oracle runs on the raw parquet).  Scale: the only "
     "exchanges left are the 5-row aggregate and the output sort.",
     tags=("join", "bucketing", "layout", "extension"),
-    extended=False,  # promoted to the gate (round-9 session rotation, see registry._EXTENDED)
 )
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.sources.bucketed import bucketed_pair
@@ -1890,8 +1923,8 @@ ORDER BY type_a, type_b
     "Gate form runs k=4096 COVERING (sketch not full -> exact-count "
     "branch), so the oracle is the exact set algebra; the truncated "
     "(k-1)*2^32/tau estimator branch carries error-bound unit tests.",
-    tags=("sketch", "kmv", "distinct", "jaccard", "extension"),
-    extended=False,  # promoted to the gate round 9 (registry._EXTENDED rationale)
+    tags=("sketch", "kmv", "distinct", "jaccard", "extension", "headline"),
+    extended=True,
 )(_kmv_event_overlap)
 
 
@@ -2023,7 +2056,7 @@ ORDER BY item, rank
     "on item ids (int,int,count rows); top-k is a per-item window, "
     "never a global sort.  SQRT is IEEE-correctly-rounded, division "
     "pinned — identical doubles both engines.",
-    tags=("recsys", "cf", "similarity", "extension"),
+    tags=("recsys", "cf", "similarity", "extension", "headline"),
     extended=True,
 )(_cf_item_similarity)
 

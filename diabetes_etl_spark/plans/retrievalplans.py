@@ -147,7 +147,7 @@ SELECT doc_id, rrf_score, n_lists, CAST(rn AS INT) AS rrf_rank FROM (
     "hash-checkable; the oracle replays both retrievers and the "
     "fusion.",
     tags=("retrieval", "ranking", "hybrid", "extension"),
-    extended=False,  # promoted to the gate round 8 (registry._EXTENDED rationale)
+    extended=True,
 )
 def retrieval_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.ranking import bm25_topk, rrf_fuse

@@ -131,6 +131,7 @@ FROM sharded GROUP BY shard ORDER BY shard
     "end-to-end — the only shuffle is the final per-shard aggregate "
     "(at scale, the same exchange the shard writer needs anyway).",
     tags=("sampling", "chunking", "sharding", "composite", "extension"),
+    extended=True,
 )
 def corpus_sampling_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -438,7 +439,8 @@ FROM sel GROUP BY lang ORDER BY lang
     "DECIMAL so it is order-independent, and sqrt is correctly "
     "rounded IEEE, so the oracle's replay is bit-identical.  "
     "Per-language kept-doc / row / char tallies plus the rate.",
-    tags=("sampling", "mixing", "extension"),
+    tags=("sampling", "mixing", "extension", "headline"),
+    extended=True,
 )
 def mix_temperature_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.sampling import temperature_mix
@@ -538,7 +540,7 @@ ORDER BY sample_rank
     "key projection + TakeOrderedAndProject (per-partition k-row "
     "heaps, no full sort, no O(corpus) shuffle).",
     tags=("sampling", "weighted", "extension"),
-    extended=False,  # promoted to the gate round 8 (registry._EXTENDED rationale)
+    extended=True,
 )
 def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.sampling import weighted_sample
@@ -820,8 +822,7 @@ FROM s
     "broadcast 1-row aggregate; everything else is scan-local.  "
     "Scale: two scans (totals + selection), no shuffle beyond the "
     "1-row epilogue.",
-    tags=("sampling", "survey", "estimation", "extension"),
-    extended=False,  # gate (round-12 rotation)
+    tags=("sampling", "survey", "estimation", "extension", "headline"),
 )
 def corpus_pps_ht_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.sampling import portable_unit_hash
@@ -1087,8 +1088,10 @@ ORDER BY c_nationkey, c_mktsegment
     "map-side-combined grouped passes (sample cells, full margins); "
     "all scaling work is windows over the O(nations x segments) "
     "cell grid.",
-    tags=("sampling", "weighting", "iterative", "statistics", "extension"),
-    extended=False,  # gate (round-13b rotation)
+    tags=(
+        "sampling", "weighting", "iterative", "statistics", "extension",
+        "headline",
+    ),
 )
 def sample_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

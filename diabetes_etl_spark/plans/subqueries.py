@@ -82,7 +82,8 @@ register(
     "AVG into ONE re-grouped aggregate over lineitem joined back on "
     "l_partkey — the inner table is scanned once, not once per outer "
     "row, which is the difference between O(N) and O(N^2) at scale.",
-    tags=("subquery", "correlated", "extension"),
+    tags=("subquery", "correlated", "extension", "headline"),
+    extended=True,
 )(_sql_query(_CORR_AVG_SQL, ("lineitem", "part")))
 
 
@@ -104,7 +105,7 @@ register(
     "aggregated+HAVING subquery.  Plans as a semi join against the "
     "grouped lineitem — the HAVING filter shrinks the subquery side "
     "before the join, and AQE can broadcast it when it fits.",
-    tags=("subquery", "in", "having", "extension"),
+    tags=("subquery", "in", "having", "extension", "headline"),
     extended=True,
 )(_sql_query(_IN_HAVING_SQL, ("customer", "orders", "lineitem")))
 
@@ -301,5 +302,4 @@ register(
     "graph_khop_reach's iterative anti-join-visited BFS, which "
     "computes the same first-reach profile operator-style.",
     tags=("subquery", "recursive-cte", "graph", "extension"),
-    extended=False,  # promoted to the gate round 9 (registry._EXTENDED rationale)
 )(_sql_query(_RECURSIVE_SQL, ("lineitem", "orders")))

@@ -42,6 +42,7 @@ FROM documents
     doc="Per-document token counting + portable rolling-hash fingerprint "
     "(operators/text.py; all-native expressions).",
     tags=("text", "extension"),
+    extended=True,
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -75,7 +76,8 @@ ORDER BY lang
 """,
     doc="Corpus quality profile per language tag: token volume, lexical "
     "diversity, heuristic quality score (operators/text.py).",
-    tags=("text", "agg", "extension"),
+    tags=("text", "agg", "extension", "headline"),
+    extended=True,
 )
 def text_quality_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -122,6 +124,7 @@ FROM documents
     doc="N-gram/stopword language-ID heuristic: per-language hit counts + "
     "argmax with fixed preference order (deterministic scoring operator).",
     tags=("text", "extension"),
+    extended=True,
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -150,6 +153,7 @@ SELECT doc_id, quality_score FROM (
     doc="Quality-gate filter: keep documents above the heuristic quality "
     "threshold (the standard corpus pre-filter stage).",
     tags=("text", "filter", "extension"),
+    extended=True,
 )
 def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -179,6 +183,7 @@ FROM (
     "pre-tokenizer matches + chars-per-token ratio (operators/text.py: "
     "subword_count — the LLM token-budget estimator).",
     tags=("text", "extension"),
+    extended=True,
 )
 def text_subword_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -242,7 +247,7 @@ FROM (
     "pipeline filters on.  All native array expressions (struct n-grams via arrays_zip, sorted-run aggregates) "
     "— per-row, map-side, zero shuffle, no Python "
     "(operators/text.py:repeated_ngram_fraction/top_token_fraction).",
-    tags=("text", "extension"),
+    tags=("text", "extension", "headline"),
     extended=True,
 )
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,7 +397,8 @@ FROM scored GROUP BY id ORDER BY doc_id
     "One map-side-combined count-table groupBy; unigrams re-aggregate "
     "the COUNT TABLE, not the corpus; scoring is equi-joins + one "
     "per-doc aggregate — the model lives in the plan, not the driver.",
-    tags=("text", "lm", "quality", "extension"),
+    tags=("text", "lm", "quality", "extension", "headline"),
+    extended=True,
 )
 def text_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.text import bigram_lm_score
@@ -566,6 +572,7 @@ FROM est ORDER BY exact_cnt DESC, tok
     "cross-engine and the overcounts themselves hash-match the "
     "oracle's replay.",
     tags=("text", "sketch", "approximate", "extension"),
+    extended=True,
 )
 def cms_token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.sketch import cms_cells, cms_estimate
@@ -745,8 +752,7 @@ SELECT doc_id, bm25_score, CAST(rn AS INT) AS bm25_rank FROM (
     "the one libm call: quantized to 9 decimals at the source and "
     "decimal-folded across terms, making the ranking hash-checkable "
     "(see the determinism note in operators/ranking.py).",
-    tags=("text", "ranking", "retrieval", "extension"),
-    extended=False,  # promoted to the gate round 8 (registry._EXTENDED rationale)
+    tags=("text", "ranking", "retrieval", "extension", "headline"),
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.ranking import bm25_topk
@@ -1392,7 +1398,8 @@ FROM m
     "arithmetic: the only shuffle is the pair join; ln/exp quantize "
     "to 9 decimals at the source (BM25 precedent), zero-overlap "
     "pairs short-circuit before any ln(0).",
-    tags=("text", "rouge", "bleu", "extension"),
+    tags=("text", "rouge", "bleu", "extension", "headline"),
+    extended=True,
 )
 def text_rouge_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the DISTRIBUTED overlap shape (ngram_count_table + least-join),
@@ -1580,7 +1587,7 @@ FROM fin GROUP BY doc_id
     "(no ln), the vocab is a bounded constant-folded map literal, and "
     "segmentation is a shuffle-free JVM projection; the oracle "
     "replays the identical walk with a packed-BIGINT accumulator.",
-    tags=("text", "tokenizer", "wordpiece", "extension"),
+    tags=("text", "tokenizer", "wordpiece", "extension", "headline"),
 )
 def text_wordpiece_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.wordpiece import wordpiece_pipeline
@@ -2058,7 +2065,6 @@ ORDER BY doc_id
     "every step is one vectorized regexp pass inside whole-stage "
     "codegen — linear, no shuffle, no Python.",
     tags=("text", "html", "extraction", "extension"),
-    extended=False,  # promoted to the gate (round-9 session rotation, see registry._EXTENDED)
 )
 def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2934,8 +2940,8 @@ WHERE 10000 * n > 2 * n_total
     "candidates are batches x k regardless of corpus size, ride a "
     "broadcast semi-join, and the recount shuffles only candidate "
     "rows; the 1-row total is an in-plan broadcast.",
-    tags=("text", "sketch", "heavy-hitters", "extension"),
-    extended=False,  # gate (round-10b rotation)
+    tags=("text", "sketch", "heavy-hitters", "extension", "headline"),
+    extended=True,
 )(_mg_heavy_ngrams)
 
 

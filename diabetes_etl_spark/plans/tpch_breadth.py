@@ -141,8 +141,7 @@ register(
     "after their filters; the only big shuffle is lineitem⋈orders; "
     "both sums compute in ONE aggregate pass (no self-join, no second "
     "scan).",
-    tags=("join", "agg", "case", "extension"),
-    extended=False,  # gate (round-13 rotation, verdict-r12 #7)
+    tags=("join", "agg", "case", "extension", "headline"),
 )(
     _sql_query(
         _Q8_SQL,
@@ -659,7 +658,7 @@ register(
     "strict > threshold partition-count-invariant.  Closes verdict-r8 "
     "item 4 (q11/q20 were 'omitted rather than faked').",
     tags=("tpch", "having", "scalar-subquery", "extension"),
-    extended=False,  # demoted round 13 — registry._EXTENDED wins (rationale there)
+    extended=True,
 )(_sql_query(_Q11_SQL, ("part", "supplier", "nation")))
 
 

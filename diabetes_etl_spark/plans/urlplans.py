@@ -85,7 +85,7 @@ FROM parts GROUP BY domain ORDER BY domain
     "independent path that catches parser misreads.  Scan-local "
     "projection + one aggregate shuffle on domain.",
     tags=("url", "text", "extension"),
-    extended=False,  # promoted to the gate round 6 (see registry._EXTENDED rationale)
+    extended=True,
 )
 def url_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = with_url_parts(_urls(spark, sf_dir))
@@ -213,5 +213,5 @@ FROM c GROUP BY canon
     "ONLY tracking params.  Scale: projection + one groupBy on the "
     "canonical string.",
     tags=("url", "dedup", "extension"),
-    extended=False,  # demoted round 13 — registry._EXTENDED wins (rationale there)
+    extended=True,
 )(_url_canonical_dedup)

@@ -66,7 +66,7 @@ ORDER BY snapshot
     "each aggregated and hash-compared against the equivalent "
     "predicate replay on the raw fixture.",
     tags=("versioned", "time-travel", "extension"),
-    extended=False,  # promoted to the gate round 6 (see registry._EXTENDED rationale)
+    extended=True,
 )
 def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.sources.versioned import VersionedTable
@@ -136,7 +136,7 @@ ORDER BY commit_version
     "delete+insert shape feeds merge_cdc_partial_aggs directly for "
     "incremental view maintenance off the feed.",
     tags=("versioned", "cdc", "extension"),
-    extended=False,  # demoted round 12 — registry._EXTENDED wins (rationale there)
+    extended=True,
 )
 def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.sources.versioned import VersionedTable
@@ -275,8 +275,8 @@ ORDER BY snapshot
     "the oracle replays each as predicates on the raw fixture.  The "
     "Delta-format interop surface (format-string reads) the "
     "env-blocked delta-spark would have provided.",
-    tags=("versioned", "datasource", "source", "extension"),
-    extended=False,  # demoted round 13 — registry._EXTENDED wins (rationale there)
+    tags=("versioned", "datasource", "source", "extension", "headline"),
+    extended=True,
 )
 def versioned_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.sources.vds import register_versioned_source
@@ -343,8 +343,7 @@ ORDER BY phase
     "or loss across the restart hash-mismatches the oracle.  "
     "Delete/rewrite commits raise unless ignoreChanges=true (the "
     "Delta contract; tested in tests/test_vds.py).",
-    tags=("streaming", "versioned", "datasource", "extension"),
-    extended=False,  # gate (round-13 rotation: streaming half of the Python DataSource, verdict-r12 #1)
+    tags=("streaming", "versioned", "datasource", "extension", "headline"),
 )
 def stream_versioned_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.sources.vds import register_versioned_source

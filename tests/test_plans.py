@@ -589,6 +589,18 @@ def test_coverage_header_matches_registry():
     assert int(m.group(3)) == n_oracle
 
 
+def test_gate_fits_capacity_and_headline_queries_have_oracles():
+    """The register sites declare tier and headline status; pin what the
+    driver and bench.py rely on: the gate tier fits the driver's
+    capacity, and every query bench.py times is oracle-checked."""
+    from diabetes_etl_spark.plans.registry import GATE_CAPACITY
+
+    assert len(all_queries()) <= GATE_CAPACITY
+    headline = {n: s for n, s in QUERIES.items() if "headline" in s.tags}
+    assert headline, "no query is tagged headline"
+    assert [n for n, s in headline.items() if not s.oracle] == []
+
+
 def test_q11_broadcasts_generator_and_dims_no_cartesian(spark, sf_dir):
     """Derived-partsupp q11: the 4-row generator and supplier/nation
     dims broadcast; nothing degenerates to a true cartesian (the only

@@ -23,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from diabetes_etl_spark.plans.registry import all_queries  # noqa: E402
-from diabetes_etl_spark.session import get_spark  # noqa: E402
+from diabetes_etl_spark.session import get_spark, warm_session  # noqa: E402
 
 
 def formatted_plan(df) -> str:
@@ -41,18 +41,7 @@ def main() -> None:
 
     spark = get_spark(app_name="opt-measure-r13")
     registry = all_queries(include_extended=True)
-    # session warm-up mirroring bench.py so numbers are comparable
-    registry["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001").count()
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    _warm = F.pandas_udf(lambda s: s, "double")
-    spark.range(256).repartition(32).select(
-        _warm(F.col("id").cast("double"))
-    ).write.format("noop").mode("overwrite").save()
-    if "stream_ingest_events" in registry:
-        registry["stream_ingest_events"].fn(
-            spark, "/root/testdata/sf0.001"
-        ).write.format("noop").mode("overwrite").save()
+    warm_session(spark)  # the same warm-up as bench.py
 
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

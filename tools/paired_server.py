@@ -2,7 +2,7 @@
 line), times one noop-sink execution at $SPARK_GRAFT_SF_DIR (default
 sf0.1), prints ``TIME <name> <sec>`` per line.  Driven by
 tools/opt_paired.py which alternates two trees (A/B) so host drift
-hits both variants equally — the bench ann_pair protocol generalized.
+hits both variants equally.
 """
 
 from __future__ import annotations
@@ -14,24 +14,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from diabetes_etl_spark.plans.registry import all_queries  # noqa: E402
-from diabetes_etl_spark.session import get_spark  # noqa: E402
+from diabetes_etl_spark.session import get_spark, warm_session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="paired-" + os.path.basename(os.getcwd()))
     registry = all_queries(include_extended=True)
-    registry["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001").count()
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    _warm = F.pandas_udf(lambda s: s, "double")
-    spark.range(256).repartition(32).select(
-        _warm(F.col("id").cast("double"))
-    ).write.format("noop").mode("overwrite").save()
-    if "stream_ingest_events" in registry:
-        registry["stream_ingest_events"].fn(
-            spark, "/root/testdata/sf0.001"
-        ).write.format("noop").mode("overwrite").save()
+    warm_session(spark)
     print("READY", flush=True)
     for line in sys.stdin:
         name = line.strip()

@@ -7,9 +7,7 @@ sublinear vs 10x-linear scaling).
 
 Usage: python tools/scale_probe.py [query ...]
 """
-import importlib
 import os
-import pkgutil
 import shutil
 import sys
 import tempfile
@@ -21,16 +19,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-import diabetes_etl_spark.plans as plans  # noqa: E402
+from diabetes_etl_spark.plans import all_queries  # noqa: E402
 from diabetes_etl_spark.session import get_spark  # noqa: E402
-
-for m in pkgutil.iter_modules(plans.__path__):
-    importlib.import_module(f"diabetes_etl_spark.plans.{m.name}")
-from diabetes_etl_spark.plans.registry import _REGISTRY  # noqa: E402
 
 
 def main() -> None:
     spark = get_spark()
+    registry = all_queries(include_extended=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     tmp = tempfile.mkdtemp(prefix="scale_probe_")
     # non-replicated tables link through at 1x so any query can run
@@ -73,7 +68,7 @@ def main() -> None:
             best = None
             for _ in range(2):
                 t0 = time.perf_counter()
-                _REGISTRY[name].fn(spark, d).write.format("noop").mode(
+                registry[name].fn(spark, d).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 s = round(time.perf_counter() - t0, 3)
