@@ -107,9 +107,9 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
 
     # 10x scale spot-check for the dedup/ANN scale paths (round-3
-    # VERDICT #7): replicate documents+embeddings 10x (id offsets; each
-    # document copy gets a distinct trailing token, so copies are
-    # NEAR-dups that must survive banding AND exact verification — a
+    # VERDICT #7): replicate documents+embeddings 10x
+    # (tools/scale_probe.py:replicate_corpus_10x — near-dup document
+    # copies, direction-perturbed embedding copies; a
     # duplication-heavy corpus is the worst case the bounded-bucket
     # design exists for).  Bench-only: validates that the bounded pair
     # generator and the broadcast bucket join hold beyond sf0.1.
@@ -117,50 +117,12 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_SCALE10X", "1") != "0":
         import shutil
         import tempfile
-        from functools import reduce
 
-        from pyspark.sql import DataFrame
+        from tools.scale_probe import replicate_corpus_10x
 
         tmp = tempfile.mkdtemp(prefix="bench_scale10x_")
         try:
-            docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-            emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            reduce(
-                DataFrame.unionByName,
-                [
-                    docs.select(
-                        (F.col("doc_id") + F.lit(k * 10_000_000)).alias("doc_id"),
-                        F.concat(F.col("text"), F.lit(f" copytag{k}")).alias("text"),
-                        "lang", "source", "n_chars",
-                    )
-                    for k in range(10)
-                ],
-            ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-            # embeddings replicate PERTURBED (round-7 VERDICT #9): each
-            # copy k adds a deterministic per-dimension offset that
-            # changes the vector's DIRECTION, so the 10x corpus has 10x
-            # distinct points — identical copies would collapse into
-            # the same LSH buckets / k-means cells and measure a
-            # degenerate best case instead of real 10x ANN/clustering
-            # load
-            def _perturb(k: int):
-                return lambda x, i: (
-                    x
-                    + F.lit(0.013 * k)
-                    * F.cos(i.cast("double") * F.lit(1.7) + F.lit(float(k)))
-                ).cast("float")
-
-            reduce(
-                DataFrame.unionByName,
-                [
-                    emb.select(
-                        (F.col("vec_id") + F.lit(k * 10_000_000)).alias("vec_id"),
-                        F.transform("embedding", _perturb(k)).alias("embedding"),
-                        "label",
-                    )
-                    for k in range(10)
-                ],
-            ).write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
+            replicate_corpus_10x(spark, sf_dir, tmp)
             n_docs = spark.read.parquet(f"{tmp}/documents.parquet").count()
             scale10x = {"rows_documents": n_docs}
             for name in (

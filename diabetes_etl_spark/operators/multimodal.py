@@ -8,6 +8,14 @@ payload deserialization), and run decode/feature-extraction through
 `mapInPandas` so payload bytes cross into Python once, Arrow-batched,
 with per-partition parallelism.
 
+Two private helpers own that plumbing: every ``attach_*_payloads``
+fixture producer goes through :func:`_fixture_assets` (the
+``_ASSET_SCHEMA`` shape, ``n_bytes`` and md5 filled in one place), and
+every decoder kernel through :func:`_asset_kernel` (NULL-row and mime
+filtering, output columns and nullable-int casts from the kernel's
+DDL schema), so a kernel is just its per-asset function.  Raster
+decoders are looked up by mime in ``_IMAGE_DECODERS``.
+
 Decoder surface (no media libraries exist in this container, so
 everything here is pure stdlib — and therefore honest about what it
 can and cannot decode):
@@ -61,7 +69,8 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -96,6 +105,87 @@ def attach_binary_payload(
             F.md5(payload).alias("checksum"),
         ).alias("asset_meta"),
     )
+
+
+_ASSET_SCHEMA = (
+    "doc_id long, payload binary, "
+    "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
+)
+
+# nullable int columns must cross Arrow as ints-with-nulls, not
+# object/float
+_NULLABLE_INTS = {"int": "Int32", "long": "Int64"}
+
+
+def _fixture_assets(
+    df: DataFrame, id_col: str, encode: Callable[..., tuple[str, bytes]],
+    *cols: str,
+) -> DataFrame:
+    """Executor-side fixture producer: ``encode(doc_id, *cols) ->
+    (mime, payload)`` per row, emitted in the ``_ASSET_SCHEMA`` shape
+    with ``n_bytes`` and the md5 ``checksum`` filled in here.  Payload
+    bytes are created executor-side, Arrow-batched, never shipped
+    through the driver (widen() keeps single-file inputs off one
+    core)."""
+    from diabetes_etl_spark.operators.util import widen
+
+    src = widen(df.select(F.col(id_col).alias("doc_id"), *cols))
+
+    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, *extra in zip(pdf["doc_id"], *(pdf[c] for c in cols)):
+                doc_id = int(doc_id)
+                mime, payload = encode(doc_id, *extra)
+                meta = {
+                    "mime": mime,
+                    "n_bytes": len(payload),
+                    "checksum": hashlib.md5(payload).hexdigest(),
+                }
+                rows.append((doc_id, payload, meta))
+            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
+
+    return src.mapInPandas(produce, schema=_ASSET_SCHEMA)
+
+
+def _asset_kernel(
+    assets: DataFrame,
+    per_asset: Callable[[int, str | None, bytes], Iterable[tuple]],
+    schema: str,
+    mimes: set[str] | None,
+) -> DataFrame:
+    """Run ``per_asset(doc_id, mime, payload)``, which returns 0..n
+    ``schema`` rows, over every asset as ONE Arrow-batched
+    ``mapInPandas`` stage.
+
+    Rows with a NULL payload or NULL ``asset_meta``, and rows whose
+    mime is outside ``mimes`` (``None`` accepts every mime), are
+    dropped, never fabricated and never a task failure.  A frame with
+    no ``asset_meta`` column (raw ``doc_id, payload`` rows such as a
+    ``binaryFile`` scan) is not routed: ``per_asset`` sees
+    ``mime=None``.  Output column names and nullable-int casts come
+    from ``schema`` (a flat ``name type, ...`` DDL), worked out once
+    here on the driver.
+    """
+    fields = [f.split() for f in schema.split(",")]
+    columns = [name for name, _ in fields]
+    casts = {n: _NULLABLE_INTS[t] for n, t in fields if t in _NULLABLE_INTS}
+    has_meta = "asset_meta" in assets.columns
+    route = has_meta and mimes is not None
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            metas = pdf["asset_meta"] if has_meta else repeat({"mime": None})
+            rows = []
+            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], metas):
+                if payload is None or meta is None:
+                    continue
+                if route and meta["mime"] not in mimes:
+                    continue
+                rows.extend(per_asset(doc_id, meta["mime"], bytes(payload)))
+            yield pd.DataFrame(rows, columns=columns).astype(casts)
+
+    return assets.mapInPandas(run, schema=schema)
 
 
 # -- deterministic media fixtures -------------------------------------------
@@ -357,39 +447,13 @@ def attach_color_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFra
     — the color twin of the mixed-modality producer below, used by the
     multimodal_color_decode query whose oracle recomputes decoded-RGB
     statistics arithmetically."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        _, _, jw, jh = fixture_media_dims(doc_id)
+        pixels = _fixture_color_pixels(doc_id, jw, jh)
+        return "image/jpeg", jpeg_color_bytes(jw, jh, pixels)
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                _, _, jw, jh = fixture_media_dims(doc_id)
-                payload = jpeg_color_bytes(
-                    jw, jh, _fixture_color_pixels(doc_id, jw, jh)
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/jpeg",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 def attach_dri_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -401,40 +465,15 @@ def attach_dri_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     constant-block RGB content as :func:`attach_color_jpeg_payloads` —
     the color oracle's arithmetic pins the decode verbatim while Spark
     runs the restart-boundary entropy path."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        _, _, jw, jh = fixture_media_dims(doc_id)
+        pixels = _fixture_color_pixels(doc_id, jw, jh)
+        return "image/jpeg", jpeg_color_bytes(
+            jw, jh, pixels, restart_interval=1 + doc_id % 4
+        )
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                _, _, jw, jh = fixture_media_dims(doc_id)
-                payload = jpeg_color_bytes(
-                    jw, jh, _fixture_color_pixels(doc_id, jw, jh),
-                    restart_interval=1 + doc_id % 4,
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/jpeg",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 def attach_progressive_jpeg_payloads(
@@ -448,40 +487,15 @@ def attach_progressive_jpeg_payloads(
     oracle's arithmetic verbatim while Spark exercises the entirely
     different progressive entropy path (DC/AC first + refinement
     scans, EOBn runs, coefficient accumulation)."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        _, _, jw, jh = fixture_media_dims(doc_id)
+        pixels = _fixture_color_pixels(doc_id, jw, jh)
+        return "image/jpeg", jpeg_progressive_bytes(
+            jw, jh, pixels, n_components=3
+        )
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                _, _, jw, jh = fixture_media_dims(doc_id)
-                payload = jpeg_progressive_bytes(
-                    jw, jh, _fixture_color_pixels(doc_id, jw, jh),
-                    n_components=3,
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/jpeg",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 def attach_interlaced_png_payloads(
@@ -495,39 +509,13 @@ def attach_interlaced_png_payloads(
     per-byte arithmetic — while Spark runs the entirely different
     seven-pass deinterlacing decode path (per-pass unfilter + grid
     scatter) over honest zlib-compressed bytes."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        pw, ph, _, _ = fixture_media_dims(doc_id)
+        pixels = _fixture_pixels(doc_id, pw * ph * 3)
+        return "image/png", png_interlaced_bytes(pw, ph, pixels)
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                pw, ph, _, _ = fixture_media_dims(doc_id)
-                payload = png_interlaced_bytes(
-                    pw, ph, _fixture_pixels(doc_id, pw * ph * 3)
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/png",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 def fixture_color420_dims(doc_id: int) -> tuple[int, int]:
@@ -568,105 +556,44 @@ def attach_color420_jpeg_payloads(
     whose 16x16 macro blocks are constant RGB; used by the
     multimodal_color420_decode query whose oracle recomputes
     decoded-RGB statistics arithmetically."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        jw, jh = fixture_color420_dims(doc_id)
+        pixels = _fixture_color420_pixels(doc_id, jw, jh)
+        return "image/jpeg", jpeg_color_bytes(
+            jw, jh, pixels, subsampling="420"
+        )
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                jw, jh = fixture_color420_dims(doc_id)
-                payload = jpeg_color_bytes(
-                    jw, jh, _fixture_color420_pixels(doc_id, jw, jh),
-                    subsampling="420",
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/jpeg",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 def attach_media_payloads(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Mixed-modality binary fixture over a text table: by doc_id mod 4,
-    rows become a real PNG (synthesized pixels), a JPEG container with
-    a real frame header, a real PCM16 WAV (synthesized samples), or the
-    plain-text payload.  Runs as an Arrow-batched mapInPandas producer —
-    the same plumbing a real ingest-side media normalizer would use
-    (payload bytes are created executor-side, never shipped through the
-    driver)."""
-    from diabetes_etl_spark.operators.util import widen
+    rows become a real PNG (synthesized pixels), a real baseline
+    grayscale JPEG stream (constant 8x8 blocks, :func:`jpeg_gray_bytes`),
+    a real PCM16 WAV (synthesized samples), or the plain-text payload.
+    Runs as an Arrow-batched mapInPandas producer — the same plumbing a
+    real ingest-side media normalizer would use (payload bytes are
+    created executor-side, never shipped through the driver)."""
 
-    src = widen(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    )
+    def encode(doc_id: int, text: str) -> tuple[str, bytes]:
+        png_w, png_h, jpg_w, jpg_h = fixture_media_dims(doc_id)
+        kind = doc_id % 4
+        if kind == 0:
+            pixels = _fixture_pixels(doc_id, png_w * png_h * 3)
+            return "image/png", png_bytes(png_w, png_h, pixels)
+        if kind == 1:
+            pixels = _fixture_jpeg_pixels(doc_id, jpg_w, jpg_h)
+            return "image/jpeg", jpeg_gray_bytes(jpg_w, jpg_h, pixels)
+        if kind == 2:
+            rate, ch, frames = fixture_audio_params(doc_id)
+            samples = _fixture_samples(doc_id, ch * frames)
+            return "audio/wav", wav_bytes(rate, ch, samples)
+        return "text/plain", str(text).encode("utf-8")
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                png_w, png_h, jpg_w, jpg_h = fixture_media_dims(doc_id)
-                kind = doc_id % 4
-                if kind == 0:
-                    payload = png_bytes(
-                        png_w, png_h, _fixture_pixels(doc_id, png_w * png_h * 3)
-                    )
-                    mime = "image/png"
-                elif kind == 1:
-                    payload = jpeg_gray_bytes(
-                        jpg_w, jpg_h,
-                        _fixture_jpeg_pixels(doc_id, jpg_w, jpg_h),
-                    )
-                    mime = "image/jpeg"
-                elif kind == 2:
-                    rate, ch, frames = fixture_audio_params(doc_id)
-                    payload = wav_bytes(
-                        rate, ch, _fixture_samples(doc_id, ch * frames)
-                    )
-                    mime = "audio/wav"
-                else:
-                    payload = str(text).encode("utf-8")
-                    mime = "text/plain"
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": mime,
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode, text_col)
 
 
 # -- decoders ---------------------------------------------------------------
@@ -2657,42 +2584,15 @@ def attach_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decoded RGB is identical either way, so ONE arithmetic oracle
     covers both decode paths while Spark exercises each on half the
     corpus."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        gw, gh = fixture_gif_dims(doc_id)
+        return "image/gif", gif_bytes(
+            gw, gh, _fixture_pixels(doc_id, gw * gh),
+            interlaced=doc_id % 2 == 1,
+        )
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                gw, gh = fixture_gif_dims(doc_id)
-                payload = gif_bytes(
-                    gw,
-                    gh,
-                    _fixture_pixels(doc_id, gw * gh),
-                    interlaced=doc_id % 2 == 1,
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/gif",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
-
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 # -- BMP (Windows DIB): BI_RGB 8/24-bit and BI_RLE8, either row order ------
@@ -2987,49 +2887,36 @@ def attach_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     structure), ids % 4 == 0 are 24-bit TOP-DOWN, ids % 4 == 2 are
     24-bit bottom-up — the decoded RGB is identical across all three
     wire shapes, so ONE arithmetic oracle covers every decode path."""
-    from diabetes_etl_spark.operators.util import widen
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        bw, bh = fixture_bmp_dims(doc_id)
+        idx = fixture_bmp_indices(doc_id, bw, bh)
+        if doc_id % 2 == 1:
+            return "image/bmp", bmp_bytes(bw, bh, idx, bpp=8, rle=True)
+        return "image/bmp", bmp_bytes(
+            bw, bh, idx, bpp=24, top_down=doc_id % 4 == 0
+        )
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                bw, bh = fixture_bmp_dims(doc_id)
-                idx = fixture_bmp_indices(doc_id, bw, bh)
-                if doc_id % 2 == 1:
-                    payload = bmp_bytes(bw, bh, idx, bpp=8, rle=True)
-                else:
-                    payload = bmp_bytes(
-                        bw, bh, idx, bpp=24, top_down=doc_id % 4 == 0
-                    )
-                rows.append(
-                    (
-                        doc_id,
-                        payload,
-                        {
-                            "mime": "image/bmp",
-                            "n_bytes": len(payload),
-                            "checksum": hashlib.md5(payload).hexdigest(),
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "asset_meta"])
+    return _fixture_assets(df, id_col, encode)
 
-    return src.mapInPandas(
-        produce,
-        schema=(
-            "doc_id long, payload binary, "
-            "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
-        ),
-    )
+
+# Full raster decoders by mime; each returns (width, height, channels,
+# decoded bytes).  JPEG covers baseline AND progressive at any sampling
+# (4:4:4 / 4:2:0 / 4:2:2 / 4:4:0, gray or color), baseline incl.
+# restart intervals; only progressive+DRI raises ValueError, and the
+# caller decides between a header probe and failure.
+_IMAGE_DECODERS = {
+    "image/png": decode_png,
+    "image/gif": decode_gif,
+    "image/bmp": decode_bmp,
+    "image/jpeg": decode_jpeg_auto,
+}
 
 
 def decode_payload(mime: str, payload: bytes) -> bytes:
     """Decode a media payload to its canonical raw representation
-    (identity for text, pixel bytes for PNG/JPEG, PCM frame bytes for
-    WAV).
+    (identity for text, pixel bytes for the ``_IMAGE_DECODERS``
+    rasters, PCM frame bytes for WAV).
 
     Compressed audio/video needs codec libraries this environment
     lacks; those fail loudly instead of producing fake media — probe
@@ -3038,20 +2925,10 @@ def decode_payload(mime: str, payload: bytes) -> bytes:
     """
     if mime == "text/plain":
         return payload
-    if mime == "image/png":
-        return decode_png(payload)[3]
-    if mime == "image/gif":
-        return decode_gif(payload)[3]
-    if mime == "image/bmp":
-        return decode_bmp(payload)[3]
+    if mime in _IMAGE_DECODERS:
+        return _IMAGE_DECODERS[mime](payload)[3]
     if mime == "audio/wav":
         return decode_wav(payload)[3]
-    if mime == "image/jpeg":
-        # baseline AND progressive decode fully at any sampling
-        # (4:4:4 / 4:2:0 / 4:2:2 / 4:4:0, gray or color), baseline
-        # incl. restart intervals; only progressive+DRI raises
-        # ValueError, and the caller decides between probe and failure
-        return decode_jpeg_auto(payload)[3]
     raise NotImplementedError(
         f"decoder for {mime!r} requires media libraries (ffmpeg-class "
         "audio/video codecs) not present in this environment"
@@ -3068,94 +2945,37 @@ def _byte_stats(raw: bytes) -> tuple[int, int, int]:
     return n_space, n_alpha, fp
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-batch mime-routed decode + featurization (deterministic).
+def _asset_features(doc_id: int, mime: str, payload: bytes) -> list[tuple]:
+    """One FEATURE_SCHEMA row per asset, mime-routed (deterministic).
 
-    byte_len counts DECODED bytes where a decoder exists (pixels for
-    PNG, text bytes for text); for header-only media (JPEG) it is the
-    container size and the byte-level stats are NULL — never fabricated.
+    byte_len counts DECODED bytes (pixels for rasters, PCM frames for
+    WAV, text bytes for text); a JPEG this codec cannot fully decode
+    keeps its container size and header dims with NULL byte-level
+    stats — never fabricated.
     """
-    for pdf in batches:
-        rows = []
-        for doc_id, payload, meta in zip(
-            pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-        ):
-            mime = meta["mime"]
-            payload = bytes(payload)
-            if mime == "image/png":
-                w, h, ch, raw = decode_png(payload)
-                n_space, n_alpha, fp = _byte_stats(raw)
-                rows.append(
-                    (doc_id, mime, len(raw), w, h, ch, n_space, n_alpha,
-                     fp, None, None)
-                )
-            elif mime == "image/gif":
-                w, h, ch, raw = decode_gif(payload)
-                n_space, n_alpha, fp = _byte_stats(raw)
-                rows.append(
-                    (doc_id, mime, len(raw), w, h, ch, n_space, n_alpha,
-                     fp, None, None)
-                )
-            elif mime == "image/bmp":
-                w, h, ch, raw = decode_bmp(payload)
-                n_space, n_alpha, fp = _byte_stats(raw)
-                rows.append(
-                    (doc_id, mime, len(raw), w, h, ch, n_space, n_alpha,
-                     fp, None, None)
-                )
-            elif mime == "image/jpeg":
-                try:
-                    w, h, ch, raw = decode_jpeg_auto(payload)
-                    n_space, n_alpha, fp = _byte_stats(raw)
-                    rows.append(
-                        (doc_id, mime, len(raw), w, h, ch, n_space,
-                         n_alpha, fp, None, None)
-                    )
-                except ValueError:
-                    # progressive+DRI / exotic-SOF streams:
-                    # dimensions from the header probe, pixel stats
-                    # honestly NULL
-                    w, h, ch = probe_jpeg(payload)
-                    rows.append(
-                        (doc_id, mime, len(payload), w, h, ch, None,
-                         None, None, None, None)
-                    )
-            elif mime == "audio/wav":
-                rate, ch, n_frames, raw = decode_wav(payload)
-                n_space, n_alpha, fp = _byte_stats(raw)
-                rows.append(
-                    (doc_id, mime, len(raw), None, None, ch, n_space,
-                     n_alpha, fp, rate, n_frames)
-                )
-            else:
-                raw = decode_payload(mime, payload)
-                n_space, n_alpha, fp = _byte_stats(raw)
-                rows.append(
-                    (
-                        doc_id, mime, len(raw), None, None, None,
-                        n_space, n_alpha, fp, None, None,
-                    )
-                )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "mime", "byte_len", "width", "height",
-                "n_channels", "n_space", "n_alpha", "head_fingerprint",
-                "sample_rate", "n_frames",
-            ],
-        )
-        # nullable int columns must cross Arrow as ints-with-nulls, not
-        # object/float
-        for c in ("width", "height", "n_channels", "n_space", "n_alpha",
-                  "sample_rate", "n_frames"):
-            out[c] = out[c].astype("Int32")
-        out["head_fingerprint"] = out["head_fingerprint"].astype("Int64")
-        yield out
+    if mime in _IMAGE_DECODERS:
+        try:
+            w, h, ch, raw = _IMAGE_DECODERS[mime](payload)
+        except ValueError:
+            if mime != "image/jpeg":
+                raise
+            # progressive+DRI / exotic-SOF streams: dimensions from the
+            # header probe, pixel stats honestly NULL
+            w, h, ch = probe_jpeg(payload)
+            return [(doc_id, mime, len(payload), w, h, ch) + (None,) * 5]
+        return [(doc_id, mime, len(raw), w, h, ch, *_byte_stats(raw), None, None)]
+    if mime == "audio/wav":
+        rate, ch, n_frames, raw = decode_wav(payload)
+        return [(doc_id, mime, len(raw), None, None, ch, *_byte_stats(raw),
+                 rate, n_frames)]
+    raw = decode_payload(mime, payload)
+    return [(doc_id, mime, len(raw), None, None, None, *_byte_stats(raw),
+             None, None)]
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched decode + featurize over the binary payloads."""
-    return assets.mapInPandas(_feature_batches, schema=FEATURE_SCHEMA)
+    return _asset_kernel(assets, _asset_features, FEATURE_SCHEMA, None)
 
 
 # -- ISO-BMFF (MP4) container probe -----------------------------------------
@@ -3333,54 +3153,29 @@ def attach_video_payloads(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Executor-side producer of real ISO-BMFF payloads (geometry a
-    pure function of doc_id), Arrow-batched — the video twin of
-    attach_media_payloads."""
-    from diabetes_etl_spark.operators.util import widen
+    pure function of doc_id, mime ``video/mp4``), Arrow-batched in the
+    shared asset shape — the video twin of attach_media_payloads."""
 
-    src = widen(df.select(F.col(id_col).alias("doc_id")))
+    def encode(doc_id: int) -> tuple[str, bytes]:
+        w, h, dur, audio = fixture_video_params(doc_id)
+        return "video/mp4", mp4_bytes(w, h, dur, with_audio=audio)
 
-    def produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h, dur, audio = fixture_video_params(doc_id)
-                payload = mp4_bytes(w, h, dur, with_audio=audio)
-                rows.append((doc_id, payload, "video/mp4", len(payload)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "payload", "mime", "n_bytes"]
-            )
-
-    return src.mapInPandas(
-        produce,
-        schema="doc_id long, payload binary, mime string, n_bytes int",
-    )
+    return _fixture_assets(df, id_col, encode)
 
 
 def probe_video_features(assets: DataFrame) -> DataFrame:
-    """mapInPandas probe over video/mp4 payloads → container metadata
-    rows (no codec, no fake frames)."""
+    """Probe over video/mp4 payloads → container metadata rows (no
+    codec, no fake frames)."""
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dur, w, h, nv, na = probe_mp4(bytes(payload))
-                rows.append((int(doc_id), dur, w, h, nv, na))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "duration_ms", "width", "height",
-                    "n_video_tracks", "n_audio_tracks",
-                ],
-            )
+    def probe(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
+        return [(doc_id, *probe_mp4(payload))]
 
-    return assets.mapInPandas(
+    return _asset_kernel(
+        assets,
         probe,
-        schema=(
-            "doc_id long, duration_ms long, width int, height int, "
-            "n_video_tracks int, n_audio_tracks int"
-        ),
+        "doc_id long, duration_ms long, width int, height int, "
+        "n_video_tracks int, n_audio_tracks int",
+        {"video/mp4"},
     )
 
 
@@ -3407,9 +3202,9 @@ def resize_images(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
     decode→resize path.  Emitted stats: exact pixel sum / min / max
     and the 16-byte-head rolling fingerprint of the RESIZED image.
 
-    Non-raster rows are dropped; a JPEG this codec can't fully decode
-    (progressive+DRI streams) degrades to header dims with NULL
-    pixel stats — never fabricated pixels.
+    Rows other than PNG/JPEG are dropped; a JPEG this codec can't
+    fully decode (progressive+DRI streams) degrades to header dims with
+    NULL pixel stats — never fabricated pixels.
 
     Scale shape: narrow mapInPandas (no shuffle); decode cost
     parallelizes with input splits (widen() upstream in the attach
@@ -3417,63 +3212,32 @@ def resize_images(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-            ):
-                mime = meta["mime"]
-                if not mime.startswith("image/"):
-                    continue
-                payload = bytes(payload)
-                try:
-                    if mime == "image/png":
-                        w, h, ch, raw = decode_png(payload)
-                    else:
-                        w, h, ch, raw = decode_jpeg_auto(payload)
-                except ValueError:
-                    # degrade to header dims when only full decode is
-                    # unavailable (progressive+DRI streams); a
-                    # payload whose HEADER is also unreadable (corrupt
-                    # PNG, gif/webp mime) is dropped — a malformed row
-                    # must never fail the whole mapInPandas batch
-                    try:
-                        w, h, ch = probe_jpeg(payload)
-                    except ValueError:
-                        continue
-                    rows.append(
-                        (doc_id, mime, w, h, ch, out_w, out_h,
-                         None, None, None, None)
-                    )
-                    continue
-                arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, ch)
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                flat = arr[ys][:, xs].reshape(-1)
-                fp = 0
-                for x in flat[:16]:
-                    fp = (fp * 131 + int(x)) % 1_000_000_007
-                rows.append(
-                    (doc_id, mime, w, h, ch, out_w, out_h,
-                     int(flat.sum()), int(flat.min()), int(flat.max()), fp)
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "in_width", "in_height",
-                    "n_channels", "out_width", "out_height", "px_sum",
-                    "px_min", "px_max", "head_fingerprint",
-                ],
-            )
-            for c in ("in_width", "in_height", "n_channels", "out_width",
-                      "out_height", "px_min", "px_max"):
-                out[c] = out[c].astype("Int32")
-            for c in ("px_sum", "head_fingerprint"):
-                out[c] = out[c].astype("Int64")
-            yield out
+    def resized(doc_id: int, mime: str, payload: bytes) -> list[tuple]:
+        try:
+            w, h, ch, raw = _IMAGE_DECODERS[mime](payload)
+        except ValueError:
+            # degrade to header dims when only full decode is
+            # unavailable (progressive+DRI streams); a payload whose
+            # HEADER is also unreadable (corrupt PNG) is dropped — a
+            # malformed row must never fail the whole batch
+            try:
+                w, h, ch = probe_jpeg(payload)
+            except ValueError:
+                return []
+            return [(doc_id, mime, w, h, ch, out_w, out_h) + (None,) * 4]
+        arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, ch)
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        flat = arr[ys][:, xs].reshape(-1)
+        fp = 0
+        for x in flat[:16]:
+            fp = (fp * 131 + int(x)) % 1_000_000_007
+        return [(doc_id, mime, w, h, ch, out_w, out_h,
+                 int(flat.sum()), int(flat.min()), int(flat.max()), fp)]
 
-    return assets.mapInPandas(batches, schema=RESIZE_SCHEMA)
+    return _asset_kernel(
+        assets, resized, RESIZE_SCHEMA, {"image/png", "image/jpeg"}
+    )
 
 
 # -- nearest-sample audio resample ------------------------------------------
@@ -3506,48 +3270,25 @@ def resample_audio(assets: DataFrame, target_rate: int) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-            ):
-                if meta["mime"] != "audio/wav":
-                    continue
-                try:
-                    rate, ch, n_frames, raw = decode_wav(bytes(payload))
-                except ValueError:
-                    # malformed WAV bytes: drop the row, never the batch
-                    continue
-                arr = np.frombuffer(raw, dtype="<i2").reshape(n_frames, ch)
-                n_out = (n_frames * target_rate) // rate
-                idx = (np.arange(n_out) * rate) // target_rate
-                res = arr[idx]
-                flat = res.astype("<i2").tobytes()
-                fp = 0
-                for x in flat[:16]:
-                    fp = (fp * 131 + x) % 1_000_000_007
-                rows.append(
-                    (doc_id, rate, target_rate, ch, n_frames, n_out,
-                     int(res.astype("int64").sum()), int(res.min()),
-                     int(res.max()), fp)
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rate_in", "rate_out", "n_channels",
-                    "n_frames_in", "n_frames_out", "sample_sum",
-                    "sample_min", "sample_max", "head_fingerprint",
-                ],
-            )
-            for c in ("rate_in", "rate_out", "n_channels", "n_frames_in",
-                      "n_frames_out", "sample_min", "sample_max"):
-                out[c] = out[c].astype("Int32")
-            for c in ("sample_sum", "head_fingerprint"):
-                out[c] = out[c].astype("Int64")
-            yield out
+    def resampled(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
+        try:
+            rate, ch, n_frames, raw = decode_wav(payload)
+        except ValueError:
+            # malformed WAV bytes: drop the row, never the batch
+            return []
+        arr = np.frombuffer(raw, dtype="<i2").reshape(n_frames, ch)
+        n_out = (n_frames * target_rate) // rate
+        idx = (np.arange(n_out) * rate) // target_rate
+        res = arr[idx]
+        flat = res.astype("<i2").tobytes()
+        fp = 0
+        for x in flat[:16]:
+            fp = (fp * 131 + x) % 1_000_000_007
+        return [(doc_id, rate, target_rate, ch, n_frames, n_out,
+                 int(res.astype("int64").sum()), int(res.min()),
+                 int(res.max()), fp)]
 
-    return assets.mapInPandas(batches, schema=RESAMPLE_SCHEMA)
+    return _asset_kernel(assets, resampled, RESAMPLE_SCHEMA, {"audio/wav"})
 
 
 # -- video frame-sampling plan ----------------------------------------------
@@ -3577,34 +3318,18 @@ def plan_video_frames(
     feature statistics.
     """
 
-    def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dur, w, h, nv, _na = probe_mp4(bytes(payload))
-                if nv == 0 or dur <= 0:
-                    continue
-                total = max(1, (dur * fps) // 1000)
-                n = int(min(n_frames, total))
-                for j in range(n):
-                    ts = (j * dur) // n
-                    rows.append(
-                        (int(doc_id), int((ts * fps) // 1000), int(ts),
-                         w, h, n)
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "ts_ms", "width", "height",
-                    "n_frames_sampled",
-                ],
-            )
-            for c in ("frame_idx", "width", "height", "n_frames_sampled"):
-                out[c] = out[c].astype("Int32")
-            out["ts_ms"] = out["ts_ms"].astype("Int64")
-            yield out
+    def plan(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
+        dur, w, h, nv, _na = probe_mp4(payload)
+        if nv == 0 or dur <= 0:
+            return []
+        total = max(1, (dur * fps) // 1000)
+        n = int(min(n_frames, total))
+        return [
+            (doc_id, (ts * fps) // 1000, ts, w, h, n)
+            for ts in ((j * dur) // n for j in range(n))
+        ]
 
-    return assets.mapInPandas(plan, schema=FRAME_PLAN_SCHEMA)
+    return _asset_kernel(assets, plan, FRAME_PLAN_SCHEMA, {"video/mp4"})
 
 
 def decode_video_frame(payload: bytes, ts_ms: int) -> bytes:
@@ -3655,51 +3380,28 @@ def audio_signal_features(assets: DataFrame, max_lag: int = 8) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-            ):
-                if meta["mime"] != "audio/wav":
-                    continue
-                try:
-                    rate, ch, n_frames, raw = decode_wav(bytes(payload))
-                except ValueError:
-                    continue
-                arr = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                c0 = arr[::ch]
-                energy = int((arr * arr).sum())
-                peak = int(np.abs(arr).max()) if arr.size else 0
-                neg = c0 < 0
-                zc = int((neg[1:] != neg[:-1]).sum()) if c0.size > 1 else 0
-                best_lag, best_r = 0, None
-                for lag in range(1, max_lag + 1):
-                    if lag >= c0.size:
-                        break
-                    r = int((c0[:-lag] * c0[lag:]).sum())
-                    if best_r is None or r > best_r:
-                        best_lag, best_r = lag, r
-                rows.append(
-                    (doc_id, rate, ch, n_frames, energy, peak, zc,
-                     best_lag, best_r if best_r is not None else 0)
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rate", "n_channels", "n_frames", "energy",
-                    "peak_amp", "zero_crossings", "best_lag",
-                    "best_autocorr",
-                ],
-            )
-            for c in ("rate", "n_channels", "n_frames", "peak_amp",
-                      "zero_crossings", "best_lag"):
-                out[c] = out[c].astype("Int32")
-            for c in ("doc_id", "energy", "best_autocorr"):
-                out[c] = out[c].astype("Int64")
-            yield out
+    def signal(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
+        try:
+            rate, ch, n_frames, raw = decode_wav(payload)
+        except ValueError:
+            return []
+        arr = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+        c0 = arr[::ch]
+        energy = int((arr * arr).sum())
+        peak = int(np.abs(arr).max()) if arr.size else 0
+        neg = c0 < 0
+        zc = int((neg[1:] != neg[:-1]).sum()) if c0.size > 1 else 0
+        best_lag, best_r = 0, None
+        for lag in range(1, max_lag + 1):
+            if lag >= c0.size:
+                break
+            r = int((c0[:-lag] * c0[lag:]).sum())
+            if best_r is None or r > best_r:
+                best_lag, best_r = lag, r
+        return [(doc_id, rate, ch, n_frames, energy, peak, zc, best_lag,
+                 best_r if best_r is not None else 0)]
 
-    return assets.mapInPandas(batches, schema=AUDIO_SIGNAL_SCHEMA)
+    return _asset_kernel(assets, signal, AUDIO_SIGNAL_SCHEMA, {"audio/wav"})
 
 
 # -- perceptual hashing (dHash) ----------------------------------------------
@@ -3737,54 +3439,32 @@ def image_dhash(assets: DataFrame) -> DataFrame:
 
     GW, GH = 9, 8
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-            ):
-                mime = meta["mime"]
-                if not mime.startswith("image/"):
-                    continue
-                try:
-                    if mime == "image/png":
-                        w, h, ch, raw = decode_png(bytes(payload))
-                    elif mime == "image/gif":
-                        w, h, ch, raw = decode_gif(bytes(payload))
-                    elif mime == "image/jpeg":
-                        w, h, ch, raw = decode_jpeg_auto(bytes(payload))
-                    else:
-                        continue
-                except (ValueError, NotImplementedError):
-                    continue
-                px = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                px = px.reshape(h, w, ch)
-                if ch >= 3:
-                    gray = (
-                        299 * px[:, :, 0] + 587 * px[:, :, 1]
-                        + 114 * px[:, :, 2]
-                    ) // 1000
-                else:
-                    gray = px[:, :, 0]
-                ys = (np.arange(GH) * h) // GH
-                xs = (np.arange(GW) * w) // GW
-                g = gray[np.ix_(ys, xs)]
-                bits = (g[:, :-1] < g[:, 1:]).flatten()  # 8x8 = 64
-                val = 0
-                for k in range(63):
-                    if bits[k]:
-                        val |= 1 << k
-                rows.append((doc_id, mime, w, h, val))
-            out = pd.DataFrame(
-                rows, columns=["doc_id", "mime", "width", "height", "dhash"]
-            )
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            for c in ("doc_id", "dhash"):
-                out[c] = out[c].astype("Int64")
-            yield out
+    def dhash(doc_id: int, mime: str, payload: bytes) -> list[tuple]:
+        try:
+            w, h, ch, raw = _IMAGE_DECODERS[mime](payload)
+        except (ValueError, NotImplementedError):
+            return []
+        px = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        px = px.reshape(h, w, ch)
+        if ch >= 3:
+            gray = (
+                299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]
+            ) // 1000
+        else:
+            gray = px[:, :, 0]
+        ys = (np.arange(GH) * h) // GH
+        xs = (np.arange(GW) * w) // GW
+        g = gray[np.ix_(ys, xs)]
+        bits = (g[:, :-1] < g[:, 1:]).flatten()  # 8x8 = 64
+        val = 0
+        for k in range(63):
+            if bits[k]:
+                val |= 1 << k
+        return [(doc_id, mime, w, h, val)]
 
-    return assets.mapInPandas(batches, schema=DHASH_SCHEMA)
+    return _asset_kernel(
+        assets, dhash, DHASH_SCHEMA, {"image/png", "image/gif", "image/jpeg"}
+    )
 
 
 AUDIO_FP_SCHEMA = "doc_id long, rate int, n_frames int, afp long"
@@ -3812,43 +3492,25 @@ def audio_fingerprint(assets: DataFrame, n_windows: int = 64) -> DataFrame:
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-            ):
-                if meta["mime"] != "audio/wav":
-                    continue
-                try:
-                    rate, ch, n_frames, raw = decode_wav(bytes(payload))
-                except ValueError:
-                    continue
-                c0 = np.frombuffer(raw, dtype="<i2").astype(np.int64)[::ch]
-                n = c0.size
-                bounds = (np.arange(n_windows + 1) * n) // n_windows
-                e = np.array(
-                    [
-                        int((c0[bounds[i]:bounds[i + 1]] ** 2).sum())
-                        for i in range(n_windows)
-                    ],
-                    dtype=object,
-                )
-                val = 0
-                for k in range(n_windows - 1):
-                    if e[k] < e[k + 1]:
-                        val |= 1 << k
-                rows.append((doc_id, rate, n_frames, val))
-            out = pd.DataFrame(
-                rows, columns=["doc_id", "rate", "n_frames", "afp"]
-            )
-            out["rate"] = out["rate"].astype("Int32")
-            out["n_frames"] = out["n_frames"].astype("Int32")
-            for c in ("doc_id", "afp"):
-                out[c] = out[c].astype("Int64")
-            yield out
+    def fingerprint(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
+        try:
+            rate, ch, n_frames, raw = decode_wav(payload)
+        except ValueError:
+            return []
+        c0 = np.frombuffer(raw, dtype="<i2").astype(np.int64)[::ch]
+        n = c0.size
+        bounds = (np.arange(n_windows + 1) * n) // n_windows
+        e = [
+            int((c0[bounds[i]:bounds[i + 1]] ** 2).sum())
+            for i in range(n_windows)
+        ]
+        val = 0
+        for k in range(n_windows - 1):
+            if e[k] < e[k + 1]:
+                val |= 1 << k
+        return [(doc_id, rate, n_frames, val)]
 
-    return assets.mapInPandas(batches, schema=AUDIO_FP_SCHEMA)
+    return _asset_kernel(assets, fingerprint, AUDIO_FP_SCHEMA, {"audio/wav"})
 
 
 # -- ViT-style patch statistics ----------------------------------------------
@@ -3875,60 +3537,30 @@ def image_patch_stats(assets: DataFrame, patch: int = 2) -> DataFrame:
     """
     import numpy as np
 
-    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            out = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["asset_meta"]
-            ):
-                # PNG only: the fixture's JPEG rows are header-only
-                # containers (no entropy data), and _feature_batches
-                # already treats them as such — dropped, not fabricated
-                # meta can be NULL when the operator is fed raw rows
-                # (attach_media_payloads always sets it, but this is a
-                # public building block) — dropped, not fabricated
-                if (
-                    payload is None
-                    or meta is None
-                    or meta["mime"] != "image/png"
-                ):
-                    continue
-                try:
-                    w, h, ch, px = decode_png(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    continue
-                a = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-                if ch >= 3:
-                    luma = (
-                        a[:, :, 0].astype(np.int64)
-                        + a[:, :, 1]
-                        + a[:, :, 2]
-                    )
-                else:
-                    luma = a[:, :, 0].astype(np.int64) * 3
-                n_py, n_px = h // patch, w // patch
-                if n_px == 0 or n_py == 0:
-                    continue
-                t = (
-                    luma[: n_py * patch, : n_px * patch]
-                    .reshape(n_py, patch, n_px, patch)
-                    .sum(axis=(1, 3))
-                )
-                fp = 0
-                for s in t.ravel():
-                    fp = (fp * 131 + int(s)) % _PATCH_MOD
-                out.append(
-                    (
-                        int(doc_id), int(w), int(h), int(n_px),
-                        int(n_py), int(t.sum()), fp,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "width", "height", "n_px", "n_py",
-                    "patch_sum_total", "patch_fp",
-                ],
-            )
+    def patches(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
+        try:
+            w, h, ch, px = decode_png(payload)
+        except (ValueError, NotImplementedError):
+            return []
+        a = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
+        if ch >= 3:
+            luma = a[:, :, 0].astype(np.int64) + a[:, :, 1] + a[:, :, 2]
+        else:
+            luma = a[:, :, 0].astype(np.int64) * 3
+        n_py, n_px = h // patch, w // patch
+        if n_px == 0 or n_py == 0:
+            return []
+        t = (
+            luma[: n_py * patch, : n_px * patch]
+            .reshape(n_py, patch, n_px, patch)
+            .sum(axis=(1, 3))
+        )
+        fp = 0
+        for s in t.ravel():
+            fp = (fp * 131 + int(s)) % _PATCH_MOD
+        return [(doc_id, w, h, n_px, n_py, int(t.sum()), fp)]
 
-    return assets.mapInPandas(batches, schema=PATCH_SCHEMA)
+    # PNG only: _PATCH_ORACLE recomputes the tiles from the media
+    # fixture's PNG rows (doc_id % 4 = 0); its JPEG rows are real
+    # jpeg_gray_bytes streams the oracle does not cover
+    return _asset_kernel(assets, patches, PATCH_SCHEMA, {"image/png"})

@@ -1981,11 +1981,9 @@ ORDER BY doc_id
 def multimodal_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    from typing import Iterator
-
-    import pandas as pd
 
     from diabetes_etl_spark.operators.multimodal import (
+        _asset_kernel,
         _fixture_pixels,
         decode_png,
         fixture_media_dims,
@@ -2011,38 +2009,19 @@ def multimodal_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.png", 1)
         .cast("long")
         .alias("doc_id"),
-        "content",
+        F.col("content").alias("payload"),
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                w, h, _ch, pix = decode_png(bytes(content))
-                out.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        len(pix),
-                        round(float(sum(pix)) / len(pix), 9),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_pixel_bytes",
-                    "mean_pixel",
-                ],
-            )
+    def _decode(doc_id: int, _mime: str | None, payload: bytes) -> list[tuple]:
+        w, h, _ch, pix = decode_png(payload)
+        return [(doc_id, w, h, len(pix), round(float(sum(pix)) / len(pix), 9))]
 
-    return files.mapInPandas(
+    return _asset_kernel(
+        files,
         _decode,
         "doc_id long, width int, height int, n_pixel_bytes long, "
         "mean_pixel double",
+        None,
     ).orderBy("doc_id")
 
 
@@ -2458,9 +2437,10 @@ register(
     "oracle recomputes every tile sum and the fold ARITHMETICALLY "
     "from the fixture generator formula (the dhash precedent) — "
     "codec, luma, tiling, tile order, and fold all hash-checked.  "
-    "JPEG rows (header-only containers in this fixture) are dropped, "
-    "never fabricated.  Scale: one Arrow crossing, per-file "
-    "parallel, ~40 bytes out per image.",
+    "PNG rows only (the oracle covers doc_id % 4 = 0); the "
+    "fixture's real gray-JPEG rows are dropped, never fabricated.  "
+    "Scale: one Arrow crossing, per-file parallel, ~40 bytes out per "
+    "image.",
     tags=("multimodal", "patches", "pandas-udf", "extension"),
     extended=True,
 )(_patch_stats)

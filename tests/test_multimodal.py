@@ -1819,3 +1819,80 @@ def test_attach_dri_payloads_decode_with_real_pixel_stats(spark):
         assert (r["width"], r["height"], r["n_channels"]) == (jw, jh, 3)
         assert r["n_space"] is not None  # real decode, not probe fallback
         assert r["head_fingerprint"] is not None
+
+
+# -- shared asset plumbing: producer shape, NULL rows -----------------------
+
+_ASSET_DDL = (
+    "doc_id long, payload binary, "
+    "asset_meta struct<mime: string, n_bytes: int, checksum: string>"
+)
+
+
+def test_every_producer_emits_the_shared_asset_shape(spark):
+    """All nine attach_*_payloads producers emit (doc_id, payload,
+    asset_meta{mime, n_bytes, checksum}) with n_bytes = len(payload)
+    and checksum = md5(payload)."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from diabetes_etl_spark.operators import multimodal as mm
+
+    docs = spark.range(0, 8).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
+    )
+    producers = [
+        mm.attach_color_jpeg_payloads,
+        mm.attach_dri_jpeg_payloads,
+        mm.attach_progressive_jpeg_payloads,
+        mm.attach_color420_jpeg_payloads,
+        mm.attach_interlaced_png_payloads,
+        mm.attach_media_payloads,
+        mm.attach_gif_payloads,
+        mm.attach_bmp_payloads,
+        mm.attach_video_payloads,
+    ]
+    want = spark.createDataFrame([], _ASSET_DDL).schema
+    for produce in producers:
+        assets = produce(docs)
+        assert assets.schema == want, produce.__name__
+        rows = assets.collect()
+        assert sorted(r.doc_id for r in rows) == list(range(8))
+        for r in rows:
+            payload = bytes(r.payload)
+            assert r.asset_meta.n_bytes == len(payload), produce.__name__
+            assert (
+                r.asset_meta.checksum == hashlib.md5(payload).hexdigest()
+            ), produce.__name__
+
+
+def test_every_decoder_drops_null_payload_and_null_meta_rows(spark):
+    """Each decoder kernel fed a NULL-asset_meta row, a NULL-payload row
+    and one valid row succeeds and emits output for the valid row only
+    — a NULL never fails the task."""
+    from diabetes_etl_spark.operators import multimodal as mm
+
+    png = png_bytes(4, 4, _pix(48))
+    wav = wav_bytes(8000, 1, list(range(-200, 200, 3)))
+    mp4 = mm.mp4_bytes(32, 16, 400)
+    decoders = [
+        (mm.extract_features, "image/png", png),
+        (mm.probe_video_features, "video/mp4", mp4),
+        (lambda a: mm.resize_images(a, 2, 2), "image/png", png),
+        (lambda a: mm.resample_audio(a, 4000), "audio/wav", wav),
+        (lambda a: mm.plan_video_frames(a, 2), "video/mp4", mp4),
+        (mm.audio_signal_features, "audio/wav", wav),
+        (mm.image_dhash, "image/png", png),
+        (mm.audio_fingerprint, "audio/wav", wav),
+        (mm.image_patch_stats, "image/png", png),
+    ]
+    for decode, mime, payload in decoders:
+        meta = {"mime": mime, "n_bytes": len(payload), "checksum": "x"}
+        assets = spark.createDataFrame(
+            [(1, payload, None), (2, None, meta), (3, payload, meta)],
+            _ASSET_DDL,
+        )
+        rows = decode(assets).collect()
+        assert rows and {r.doc_id for r in rows} == {3}, (mime, rows)

@@ -1,9 +1,9 @@
 """Optimization measurement harness (rounds 13+).
 
 Times named registry queries in isolation with the noop sink (guide
-§1.4) and captures the POST-EXECUTION ``explain("formatted")`` plan
-(the AQE final plan) to ``plans/$SPARK_GRAFT_PLANS_ROUND/<name>_
-<tag>.txt`` (default round: r14):
+§1.4) and, with ``--tag``, captures the POST-EXECUTION
+``explain("formatted")`` plan (the AQE final plan) to the gitignored
+``plans/<name>_<tag>.txt`` at the repo root:
 
     python tools/opt_measure.py q1_pricing_summary sim_pq_adc_topk \
         [--sf /root/testdata/sf0.1] [--reps 3] [--tag before]
@@ -36,7 +36,10 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--tag", default=None, help="write plans/r13/<name>_<tag>.txt")
+    ap.add_argument(
+        "--tag", default=None,
+        help="write the executed plan to plans/<name>_<tag>.txt (gitignored)",
+    )
     args = ap.parse_args()
 
     spark = get_spark(app_name="opt-measure-r13")
@@ -44,10 +47,8 @@ def main() -> None:
     warm_session(spark)  # the same warm-up as bench.py
 
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
     )
-    os.makedirs(plans_dir, exist_ok=True)
 
     for name in args.names:
         spec = registry.get(name)
@@ -63,6 +64,7 @@ def main() -> None:
             ts.append(round(time.perf_counter() - t0, 3))
         plan = formatted_plan(df)
         if args.tag:
+            os.makedirs(plans_dir, exist_ok=True)
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
         stats = {

@@ -1,8 +1,9 @@
 """10x scale spot-check for registered queries (the SCALE.md recipe):
 replicate documents 10x with id offsets + copytags and embeddings 10x
-PERTURBED (deterministic per-copy direction shift, round-7 VERDICT #9),
-then time each named query at sf0.1 and at 10x, min-of-2 each, and
-print `RESULT name: sf0.1=..s 10x=..s xlin=..` (xlin < 1 means
+PERTURBED (deterministic per-copy direction shift) via
+:func:`replicate_corpus_10x` — the same replication bench.py's scale10x
+block uses — then time each named query at sf0.1 and at 10x, min-of-2
+each, and print `RESULT name: sf0.1=..s 10x=..s xlin=..` (xlin < 1 means
 sublinear vs 10x-linear scaling).
 
 Usage: python tools/scale_probe.py [query ...]
@@ -23,19 +24,18 @@ from diabetes_etl_spark.plans import all_queries  # noqa: E402
 from diabetes_etl_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
-    spark = get_spark()
-    registry = all_queries(include_extended=True)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    tmp = tempfile.mkdtemp(prefix="scale_probe_")
-    # non-replicated tables link through at 1x so any query can run
-    for name in os.listdir(sf_dir):
-        if name.endswith(".parquet") and name not in (
-            "documents.parquet", "embeddings.parquet"
-        ):
-            os.symlink(
-                os.path.join(sf_dir, name), os.path.join(tmp, name)
-            )
+def replicate_corpus_10x(spark, sf_dir: str, out_dir: str) -> None:
+    """Write documents and embeddings replicated 10x to ``out_dir``.
+
+    Copy k offsets doc_id / vec_id by ``k * 10_000_000``.  Each
+    document copy gets a distinct trailing ``copytag{k}`` token, so
+    copies are NEAR-dups that must survive banding AND exact
+    verification.  Each embedding copy adds a deterministic
+    per-dimension offset that changes the vector's DIRECTION, so the
+    10x set has 10x distinct points — identical copies would collapse
+    into the same LSH buckets / k-means cells and measure a degenerate
+    best case.
+    """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     reduce(DataFrame.unionByName, [
@@ -45,7 +45,7 @@ def main() -> None:
             "lang", "source", "n_chars",
         )
         for k in range(10)
-    ]).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
+    ]).write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
 
     def perturb(k):
         return lambda x, i: (
@@ -60,7 +60,23 @@ def main() -> None:
             "label",
         )
         for k in range(10)
-    ]).write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
+    ]).write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
+
+
+def main() -> None:
+    spark = get_spark()
+    registry = all_queries(include_extended=True)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    tmp = tempfile.mkdtemp(prefix="scale_probe_")
+    # non-replicated tables link through at 1x so any query can run
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet") and name not in (
+            "documents.parquet", "embeddings.parquet"
+        ):
+            os.symlink(
+                os.path.join(sf_dir, name), os.path.join(tmp, name)
+            )
+    replicate_corpus_10x(spark, sf_dir, tmp)
 
     for name in sys.argv[1:]:
         res = {}
