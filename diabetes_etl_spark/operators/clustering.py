@@ -27,31 +27,28 @@ hash-checkable against a SQL oracle):
 
 Scale notes (100 TB lens):
 - points are exploded ONCE to long format (id, pos, x) and
-  materialized to ``work_dir`` parquet; every iteration reads that
-  parquet, so the (possibly expensive) upstream embedding subtree
-  executes exactly once;
+  snapshotted; every iteration reads the snapshot, so the (possibly
+  expensive) upstream embedding subtree executes exactly once;
 - the per-iteration cost is the unavoidable n·d·k term shape, but it
   is produced by a BROADCAST join of the k·d centroid table (a few
   KB) against the long point table — no shuffle of the points until
   the (id, cid) partial aggregate, which map-side-combines n·d·k
   down to n·k before the exchange;
-- centroid state is k·d rows (tiny) and is committed per round to
-  ``work_dir`` parquet with ``_SUCCESS`` markers — the
-  executor-loss-safe pattern proven in operators/components.py:
-  lineage truncates every round and a restarted driver resumes from
-  the last fully-committed round;
+- centroid state is k·d rows (tiny), committed once per round
+  (operators/iterstate.py: parquet with driver-restart resume under
+  ``work_dir``, driver rows without one), so lineage truncates every
+  round;
 - k and d are bounded (centroids broadcast); n is unbounded — the
-  only O(n) state lives in the filesystem, never in driver memory.
+  only O(n) state is the point snapshot, never driver memory.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.functions.numeric import dec_cast
+from diabetes_etl_spark.operators.iterstate import RoundStore
 from diabetes_etl_spark.operators.util import scratch_dir
 
 # per-dimension squared-difference terms and point coordinates fold at
@@ -60,14 +57,6 @@ from diabetes_etl_spark.operators.util import scratch_dir
 # for keeping HALF_UP-vs-half-even cast ties unreachable.
 _DEC_TERM = "decimal(25,15)"
 _MEAN_SCALE = 12
-
-
-def _round_path(work_dir: str, k: int) -> str:
-    return os.path.join(work_dir, f"centroids_{k:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def _assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
@@ -115,6 +104,14 @@ def _update(pts: DataFrame, assign: DataFrame, prev: DataFrame) -> DataFrame:
     )
 
 
+def _long_points(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, pos, x): every vector exploded to long format."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(F.col(vec_col)).alias("pos", "xf"),
+    ).select("id", "pos", F.col("xf").cast("double").alias("x"))
+
+
 def kmeans_assign(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -129,56 +126,20 @@ def kmeans_assign(
     centroid — exact decimal internally, reported as a DOUBLE rounded
     to 9 digits (see the output comment in the code).
 
-    ``work_dir`` is the reliable-materialization directory (module
-    docstring): pass a durable path to make the loop resumable across
-    driver restarts; a given ``work_dir`` belongs to one invocation's
-    (input, k, iterations) and must not be shared across different
-    ones.  When omitted (the default), centroid state lives as k·d
-    driver rows instead — the PCA/GBDT bounded-driver-state pattern —
-    and each round is ONE collect job with no parquet round-trip: the
-    volatile mode costs one job per round, the durable mode one
-    write + read per round (identical arithmetic, identical output;
-    pinned by tests/test_clustering.py work_dir-parity tests).  The
-    long point form is snapshotted once per invocation via
-    localCheckpoint in volatile mode, so every round reads the same
-    point set even under a nondeterministic upstream (the same
-    single-draw guarantee the durable parquet materialization gives).
+    ``work_dir`` selects the round-state medium (operators/iterstate.py):
+    a durable path makes the loop resumable across driver restarts
+    and belongs to one invocation's (input, k, iterations).  When
+    omitted (the default), centroid state lives as k·d driver rows
+    instead — the PCA/GBDT bounded-driver-state pattern — and each
+    round is ONE collect job with no parquet round-trip (identical
+    arithmetic, identical output; pinned by the work_dir-parity tests
+    in tests/test_clustering.py).  Either way the long point form is
+    snapshotted once per invocation: every round reads the same point
+    set, even under a nondeterministic upstream, instead of re-running
+    the corpus scan + posexplode 2*iterations+1 times.
     """
-    spark = df.sparkSession
-    durable = work_dir is not None
-    if durable:
-        os.makedirs(work_dir, exist_ok=True)
-
-    long_pts = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(F.col(vec_col)).alias("pos", "xf"),
-        )
-        .select("id", "pos", F.col("xf").cast("double").alias("x"))
-    )
-    if durable:
-        # long-format points, materialized exactly once: every round
-        # reads this parquet, so the (possibly expensive) upstream
-        # embedding subtree executes exactly once across restarts
-        pts_path = os.path.join(work_dir, "points")
-        if not _is_committed(pts_path):
-            long_pts.write.mode("overwrite").parquet(pts_path)
-        pts = spark.read.parquet(pts_path)
-    else:
-        # volatile mode (round-14, verdict-r13 #3): the loop references
-        # ``pts`` in BOTH _assign and _update every round plus the
-        # final assignment — 2*iterations+1 executions of the upstream
-        # subtree if left lazy.  localCheckpoint materializes the long
-        # form ONCE into executor storage (memory, spilling to local
-        # disk) on its first use (eager=False: building the plan stays
-        # job-free), so every round scans the snapshot instead of
-        # re-running the corpus scan + posexplode.  Per-invocation
-        # state only — nothing persists across runs.  This also pins
-        # the round-13 ADVICE determinism caveat: a nondeterministic
-        # upstream is now snapshotted once, so all rounds see the same
-        # point set (the durable mode's parquet materialization gave
-        # the same guarantee).
-        pts = long_pts.localCheckpoint(eager=False)
+    store = RoundStore(df.sparkSession, work_dir, "centroids")
+    pts = store.snapshot("points", _long_points(df, id_col, vec_col))
 
     # round 0: the k smallest ids seed the centroids (k-row window
     # after a LIMIT — bounded, deterministic)
@@ -193,35 +154,9 @@ def kmeans_assign(
     c0 = pts.join(F.broadcast(seeds), pts["id"] == seeds["sid"]).select(
         "cid", "pos", F.col("x").alias("c")
     )
-
-    if durable:
-        last = None
-        for r in range(iterations, -1, -1):
-            if _is_committed(_round_path(work_dir, r)):
-                last = r
-                break
-        if last is None:
-            c0.coalesce(1).write.mode("overwrite").parquet(
-                _round_path(work_dir, 0)
-            )
-            last = 0
-        cent = spark.read.parquet(_round_path(work_dir, last))
-        for r in range(last + 1, iterations + 1):
-            (
-                _update(pts, _assign(pts, cent), cent)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(_round_path(work_dir, r))
-            )
-            cent = spark.read.parquet(_round_path(work_dir, r))
-    else:
-        # k·d rows of driver state per round; collect -> local relation
-        # preserves the exact doubles (no serialization rounding), so
-        # the arithmetic is bit-identical to the parquet path
-        cent = spark.createDataFrame(c0.collect(), c0.schema)
-        for _ in range(iterations):
-            upd = _update(pts, _assign(pts, cent), cent)
-            cent = spark.createDataFrame(upd.collect(), upd.schema)
+    last, cent = store.resume(iterations) or (0, store.commit_rows(0, c0))
+    for r in range(last + 1, iterations + 1):
+        cent = store.commit_rows(r, _update(pts, _assign(pts, cent), cent))
 
     final = _assign(pts, cent)
     # d2 reports at 9 digits (the repo's float-output convention, cf.
@@ -455,16 +390,14 @@ def kmeans_silhouette(
     resumability contract); distances are the same decimal-exact
     folds, sqrt/compare/divide pinned IEEE doubles.
     """
-    spark = df.sparkSession
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_sil_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
+    work_dir = work_dir or scratch_dir(df.sparkSession, "spark_sil_")
     assign = kmeans_assign(
         df, id_col, vec_col, k=k, iterations=iterations, work_dir=work_dir
     ).select("id", "cluster")
-    pts = spark.read.parquet(os.path.join(work_dir, "points"))
-    cent = spark.read.parquet(_round_path(work_dir, iterations))
+    # k-means' committed points and final centroids, read back fresh
+    store = RoundStore(df.sparkSession, work_dir, "centroids")
+    pts = store.snapshot("points", _long_points(df, id_col, vec_col))
+    _, cent = store.resume(iterations)
     diff = F.col("x") - F.col("c")
     alld = (
         pts.join(F.broadcast(cent), "pos")

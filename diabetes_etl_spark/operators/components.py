@@ -17,26 +17,17 @@ graphs the published fix is alternating large-star/small-star
 SoCC'14), which converges in O(log^2 n); the hook here is the same
 edge relation, so swapping the inner step is local to this file.
 
-Fault tolerance (the 100 TB concern): each round's labels are
-PERSISTED to ``work_dir`` as parquet and read back, so
-
-- lineage is truncated every round (without that, round k replays
-  rounds 1..k-1 and the plan grows quadratically), and
-- the materialization is RELIABLE: it lives in the filesystem, not in
-  executor block-manager memory.  ``localCheckpoint`` (the previous
-  implementation) stores blocks on executors — lose one executor at
-  round k and the whole job dies unrecoverably, which on a
-  1000-executor preemptible fleet is the common case, not the edge
-  case.  On a cluster, point ``work_dir`` at the warehouse/HDFS path;
-  a restarted driver resumes from the last fully-written round
-  (parquet ``_SUCCESS`` markers are the commit protocol — a partially
-  written round is simply overwritten).
+Round state (the symmetrized edge snapshot and one label snapshot
+per round) goes through operators/iterstate.py:RoundStore, which
+describes the two media: committed parquet with driver-restart resume
+when a ``work_dir`` is given, executor ``localCheckpoint`` blocks
+otherwise.
 
 The labels are (id, component) longs — the text/payload never enters
-the loop, so a round's parquet is tiny relative to the input corpus.
-The convergence probe compares two ALREADY-MATERIALIZED rounds (a
-join of two label parquets on id), so each round costs exactly one
-materialization of new state.
+the loop, so a round's state is tiny relative to the input corpus.
+The convergence signal is a ``changed`` column computed inside the
+round's own materialization, so each round costs exactly one
+materialization of new state plus a count over it.
 """
 
 from __future__ import annotations
@@ -46,26 +37,14 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.operators.iterstate import state_write_partitions
+from diabetes_etl_spark.operators.iterstate import (
+    RoundStore,
+    state_write_partitions,
+)
 from diabetes_etl_spark.operators.util import scratch_dir
 
 _CONVERGED_MARKER = "CONVERGED"
 _STAR_SWITCH_MARKER = "STAR_SWITCH"
-
-
-def _round_path(work_dir: str, k: int) -> str:
-    return os.path.join(work_dir, f"round_{k:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _last_committed_round(work_dir: str, max_iter: int) -> int | None:
-    for k in range(max_iter, -1, -1):
-        if _is_committed(_round_path(work_dir, k)):
-            return k
-    return None
 
 
 def connected_components(
@@ -88,25 +67,19 @@ def connected_components(
     the RuntimeError backstop remains for the pathological case where
     neither loop reaches a fixpoint in bounded rounds.
 
-    ``work_dir`` is the reliable-materialization directory (see module
-    docstring).  Pass a durable path to make the loop resumable across
-    driver restarts.  When omitted (round-14, verdict-r13 #8 — the
-    kmeans_assign/pq_train volatile precedent), per-round state lives
-    as ``localCheckpoint`` blocks in executor storage instead: the
-    same one-materialization-per-round lineage truncation with no
-    parquet round-trips and no temp directory, at the cost of
-    restartability — executor/driver loss restarts the invocation
-    from scratch, which is the right trade for a one-shot query (the
-    durable mode is unchanged and remains the 1000-executor
-    preemptible-fleet path).  Identical labels either way: each round
-    runs the same join/aggregate over a materialized snapshot.
+    ``work_dir`` selects the round-state medium (operators/iterstate.py):
+    a durable path makes the loop resumable across driver restarts;
+    without one, rounds are executor ``localCheckpoint`` blocks and a
+    lost executor restarts the invocation.  Identical labels either
+    way: each round runs the same join/aggregate over a materialized
+    snapshot.
 
     High-diameter escape hatch: min-label propagation needs
     O(diameter) rounds, so when the per-round label-change count stops
     shrinking geometrically (the signature of a long-chain graph — a
     near-dup cluster is a near-clique and converges in 2-4 rounds),
     the loop AUTO-SWITCHES to :func:`connected_components_star`
-    (O(log^2 n) rounds) over the already-materialized edge parquet.
+    (O(log^2 n) rounds) over the already-materialized edge snapshot.
     The switch is recorded in ``work_dir`` so a restarted driver
     resumes directly on the star path.  Result contract is unchanged
     (the star labels are reconciled with self-loop-only nodes, which
@@ -116,22 +89,10 @@ def connected_components(
     """
     spark = edges.sparkSession
     nparts = state_write_partitions(spark, state_partitions)
-    durable = work_dir is not None
-    if durable:
-        os.makedirs(work_dir, exist_ok=True)
-
-    if not durable:
-        return _connected_components_volatile(
-            edges, src, dst, max_iter, auto_star, assume_symmetric
-        )
-
-    conv_marker = os.path.join(work_dir, _CONVERGED_MARKER)
-    star_marker = os.path.join(work_dir, _STAR_SWITCH_MARKER)
-    last = _last_committed_round(work_dir, max_iter)
-    if os.path.exists(conv_marker) and last is not None:
-        return spark.read.parquet(_round_path(work_dir, last)).select(
-            "id", "component"
-        )
+    store = RoundStore(spark, work_dir, "round", nparts)
+    resumed = store.marked(_CONVERGED_MARKER) and store.resume(max_iter)
+    if resumed:
+        return resumed[1].select("id", "component")
 
     def _star_fallback(sym_df: DataFrame) -> DataFrame:
         labels = connected_components_star(
@@ -139,7 +100,7 @@ def connected_components(
             "a",
             "b",
             max_iter=max(2 * max_iter, 40),
-            work_dir=os.path.join(work_dir, "star"),
+            work_dir=work_dir and os.path.join(work_dir, "star"),
         )
         # parity with the label-propagation contract: a node appearing
         # ONLY in self-loop edges is its own component (the canonical
@@ -152,87 +113,70 @@ def connected_components(
         )
         return labels.unionByName(missing)
 
-    # materialize the RAW edge list first, then symmetrize FROM THE
-    # PARQUET: the upstream pair pipeline (shingling, LSH, verification
-    # joins) executes exactly once.  Building union(edges, swap(edges))
-    # directly would duplicate the whole upstream subtree — Catalyst
-    # does not share common subtrees across union branches, so the
-    # most expensive stage of the job would run twice.
-    raw_path = os.path.join(work_dir, "raw_edges")
+    # snapshot the RAW edge list first (eagerly), then symmetrize FROM
+    # THE SNAPSHOT: the upstream pair pipeline (shingling, LSH,
+    # verification joins) executes exactly once.  Building
+    # union(edges, swap(edges)) directly would duplicate the whole
+    # upstream subtree — Catalyst does not share common subtrees
+    # across union branches, so the most expensive stage of the job
+    # would run twice.
+    sym = raw = store.snapshot(
+        "raw_edges",
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        eager=True,
+    )
     # ``assume_symmetric``: the caller PROMISES the input already
     # carries both directions of every edge, deduplicated (e.g. it was
     # built as union(e, swap(e)).distinct() upstream, or filtered from
     # such a set) — the symmetrize-distinct below would shuffle the
     # whole edge set once more only to reproduce its input.  A wrong
     # promise gives wrong components; callers opt in explicitly.
-    sym_path = raw_path if assume_symmetric else os.path.join(
-        work_dir, "sym_edges"
-    )
-    if not _is_committed(sym_path):
-        if not _is_committed(raw_path):
-            (
-                edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-                .write.mode("overwrite")
-                .parquet(raw_path)
-            )
-        if not assume_symmetric:
-            raw = spark.read.parquet(raw_path)
-            (
-                raw.union(
-                    raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(sym_path)
-            )
-    sym = spark.read.parquet(sym_path)
-    if os.path.exists(star_marker):
+    if not assume_symmetric:
+        sym = store.snapshot(
+            "sym_edges",
+            raw.union(
+                raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            ).distinct(),
+        )
+    if store.marked(_STAR_SWITCH_MARKER):
         return _star_fallback(sym)
 
-    if last is None:
-        (
+    last, labels = store.resume(max_iter) or (
+        0,
+        store.commit(
+            0,
             sym.select(F.col("a").alias("id"))
             .distinct()
-            .withColumn("component", F.col("id"))
-            .write.mode("overwrite")
-            .parquet(_round_path(work_dir, 0))
-        )
-        last = 0
-    labels = spark.read.parquet(_round_path(work_dir, last))
-
+            .withColumn("component", F.col("id")),
+        ),
+    )
     prev_changed: int | None = None
     strikes = 0
     for k in range(last + 1, max_iter + 1):
         nbr_min = sym.join(
             labels, sym["b"] == labels["id"]
         ).groupBy("a").agg(F.min("component").alias("nbr_min"))
-        out = _round_path(work_dir, k)
         new_comp = F.least(
             labels["component"],
             F.coalesce(F.col("nbr_min"), labels["component"]),
         )
-        # the convergence signal is computed INSIDE the round's write
-        # (the join is already running) and persisted as a column, so
-        # the probe below is a filter+count over the tiny label parquet
-        # — not a second join job per round; coalesce keeps the
-        # per-round file count flat (labels are two longs per node)
-        (
+        # the convergence signal is computed INSIDE the round's
+        # materialization (the join is already running) and kept as a
+        # column, so the probe below is a filter+count over the tiny
+        # label state — not a second join job per round
+        new_labels = store.commit(
+            k,
             labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
             .select(
                 labels["id"],
                 new_comp.alias("component"),
                 (new_comp != labels["component"]).alias("changed"),
-            )
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(out)
+            ),
         )
-        new_labels = spark.read.parquet(out)
         changed = new_labels.filter(F.col("changed")).count()
         labels = new_labels.select("id", "component")
         if changed == 0:
-            with open(conv_marker, "w", encoding="utf-8") as fh:
-                fh.write(str(k))
+            store.mark(_CONVERGED_MARKER, k)
             return labels
         # geometric-shrink probe (module docstring): a near-clique's
         # change count collapses round over round; a chain's decays
@@ -249,98 +193,7 @@ def connected_components(
         else:
             strikes = 0
         if auto_star and k >= 3 and strikes >= 2:
-            with open(star_marker, "w", encoding="utf-8") as fh:
-                fh.write(str(k))
-            return _star_fallback(sym)
-        prev_changed = changed
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "the edge set has a longer path than any near-dup cluster "
-        "should; raise max_iter only if that is intended (or use "
-        "connected_components_star, which converges in O(log^2 n) "
-        "rounds on high-diameter graphs)"
-    )
-
-
-def _connected_components_volatile(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
-    auto_star: bool,
-    assume_symmetric: bool,
-) -> DataFrame:
-    """The no-``work_dir`` body of :func:`connected_components`:
-    identical round structure (one symmetrized-edge snapshot, one
-    label snapshot per round, the same convergence and star-switch
-    probes), with every materialization a ``localCheckpoint`` instead
-    of a committed parquet.  Round state is two longs per node, so
-    executor block storage is the cheaper medium; lineage still
-    truncates every round (without that, round k replays rounds
-    1..k-1).  Raw edges checkpoint EAGERLY before symmetrization so
-    the upstream pair pipeline (shingling, LSH, verification joins)
-    executes exactly once — the union's two branches would otherwise
-    race to compute the same subtree."""
-    raw = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    if assume_symmetric:
-        sym = raw
-    else:
-        sym = (
-            raw.union(
-                raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-
-    def _star_fallback(sym_df: DataFrame) -> DataFrame:
-        labels = connected_components_star(
-            sym_df, "a", "b", max_iter=max(2 * max_iter, 40)
-        )
-        missing = (
-            sym_df.select(F.col("a").alias("id"))
-            .distinct()
-            .join(labels, "id", "left_anti")
-            .withColumn("component", F.col("id"))
-        )
-        return labels.unionByName(missing)
-
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    prev_changed: int | None = None
-    strikes = 0
-    for k in range(1, max_iter + 1):
-        nbr_min = sym.join(
-            labels, sym["b"] == labels["id"]
-        ).groupBy("a").agg(F.min("component").alias("nbr_min"))
-        new_comp = F.least(
-            labels["component"],
-            F.coalesce(F.col("nbr_min"), labels["component"]),
-        )
-        new_labels = (
-            labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
-            .select(
-                labels["id"],
-                new_comp.alias("component"),
-                (new_comp != labels["component"]).alias("changed"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            return labels
-        if prev_changed is not None and changed > 0.7 * prev_changed:
-            strikes += 1
-        else:
-            strikes = 0
-        if auto_star and k >= 3 and strikes >= 2:
+            store.mark(_STAR_SWITCH_MARKER, k)
             return _star_fallback(sym)
         prev_changed = changed
     raise RuntimeError(
@@ -380,10 +233,10 @@ def connected_components_star(
     The set converges to a star forest — every pair is (component
     minimum, member) — detected STRUCTURALLY (each member appears in
     exactly one pair and never as a root), which is stateless and so
-    survives driver-restart resume.  Per-round state is persisted to
-    ``work_dir`` exactly like the label-propagation variant: reliable
-    parquet materialization, resume from the last committed round, no
-    executor-memory checkpoints.
+    survives driver-restart resume.  Per-round state is committed
+    parquet (operators/iterstate.py) under ``work_dir``, or under a
+    scratch directory when it is omitted: resume from the last
+    committed round, no executor-memory checkpoints.
 
     Near-dup clusters are near-cliques, so the default pair-dedup path
     keeps min-label propagation (fewer, cheaper rounds there); this
@@ -392,12 +245,7 @@ def connected_components_star(
     edges, clickstream link graphs).
     """
     spark = edges.sparkSession
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_ccstar_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
-
-    conv_marker = os.path.join(work_dir, _CONVERGED_MARKER)
+    store = RoundStore(spark, work_dir or scratch_dir(spark, "spark_ccstar_"))
 
     def _is_star_forest(pairs: DataFrame) -> bool:
         dup_member = (
@@ -409,27 +257,20 @@ def connected_components_star(
             and member_as_root.limit(1).count() == 0
         )
 
-    last = _last_committed_round(work_dir, max_iter)
-    if not (os.path.exists(conv_marker) and last is not None):
-        if last is None:
-            (
-                edges.select(
-                    F.least(F.col(src), F.col(dst)).alias("a"),
-                    F.greatest(F.col(src), F.col(dst)).alias("b"),
-                )
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(_round_path(work_dir, 0))
+    k, cur = store.resume(max_iter) or (
+        0,
+        store.commit(
+            0,
+            edges.select(
+                F.least(F.col(src), F.col(dst)).alias("a"),
+                F.greatest(F.col(src), F.col(dst)).alias("b"),
             )
-            last = 0
-        cur = spark.read.parquet(_round_path(work_dir, last))
-        converged = _is_star_forest(cur)
-        if converged:
-            with open(conv_marker, "w", encoding="utf-8") as fh:
-                fh.write(str(last))
-        k = last
-        while not converged:
+            .filter(F.col("a") != F.col("b"))
+            .distinct(),
+        ),
+    )
+    if not store.marked(_CONVERGED_MARKER):
+        while not _is_star_forest(cur):
             k += 1
             if k > max_iter:
                 raise RuntimeError(
@@ -464,15 +305,8 @@ def connected_components_star(
                 nxt = smaller.union(self_attach).filter(
                     F.col("a") != F.col("b")
                 )
-            out = _round_path(work_dir, k)
-            nxt.distinct().write.mode("overwrite").parquet(out)
-            cur = spark.read.parquet(out)
-            converged = _is_star_forest(cur)
-            if converged:
-                with open(conv_marker, "w", encoding="utf-8") as fh:
-                    fh.write(str(k))
-    last = _last_committed_round(work_dir, max_iter)
-    cur = spark.read.parquet(_round_path(work_dir, last))
+            cur = store.commit(k, nxt.distinct())
+        store.mark(_CONVERGED_MARKER, k)
     # star forest -> labels: members point at their component minimum;
     # roots label themselves
     members = cur.select(

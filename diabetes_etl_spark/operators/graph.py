@@ -20,20 +20,15 @@ Scale notes (100 TB lens):
   shuffle join edges ⋈ ranks on src + ONE aggregate on dst + ONE
   small left join back onto the node state);
 - the input edge subtree (which may be an expensive upstream
-  pipeline) is materialized to parquet once and every iteration reads
-  the parquet, so the upstream plan executes exactly once;
+  pipeline) is snapshotted once and every iteration reads the
+  snapshot, so the upstream plan executes exactly once;
 - the iteration count is fixed (power iteration converges
   geometrically at damping^k; 10-20 rounds is production practice —
   web-graph PageRank, not an unbounded loop);
-- each round's rank state is committed to ``work_dir`` as parquet
-  (``_SUCCESS`` markers are the commit protocol — the
-  executor-loss-safe pattern proven in operators/components.py):
-  lineage is truncated every round, the materialization lives in the
-  filesystem rather than executor block-manager memory, and a
-  restarted driver resumes from the last fully-written round.  When
-  ``work_dir`` is omitted a process-local temp dir is used (removed
-  at interpreter exit; the returned DataFrame reads from it, hence
-  atexit, not finally).
+- each round's state is committed parquet with driver-restart
+  resume (operators/iterstate.py).  When ``work_dir`` is omitted a
+  scratch directory is used (removed at interpreter exit; the
+  returned DataFrame reads from it, hence atexit, not finally).
 
 Dangling nodes: the caller chooses — `symmetric=True` doubles each
 edge so no node dangles (undirected interpretation); with directed
@@ -44,24 +39,31 @@ exactly in the SQL oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.functions.numeric import dec_cast, dec_sum
-from diabetes_etl_spark.operators.iterstate import state_write_partitions
+from diabetes_etl_spark.operators.iterstate import (
+    RoundStore,
+    state_write_partitions,
+)
 from diabetes_etl_spark.operators.util import scratch_dir
 
 _SCALE = 12
 
 
-def _round_path(work_dir: str, k: int) -> str:
-    return os.path.join(work_dir, f"rank_{k:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+def _edge_snapshot(
+    store: RoundStore, edges: DataFrame, src: str, dst: str, symmetric: bool
+) -> DataFrame:
+    """Distinct (src, dst) edges — both directions when ``symmetric``
+    — snapshotted once: every iteration reads the snapshot, not the
+    (possibly expensive) upstream plan."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if symmetric:
+        e = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    return store.snapshot("edges", e.distinct())
 
 
 def _pr_step(e: DataFrame, ranks: DataFrame, damping: float) -> DataFrame:
@@ -128,40 +130,26 @@ def pagerank(
     and must not be shared across different edge sets or parameters.
     """
     spark = edges.sparkSession
-    nparts = state_write_partitions(spark, state_partitions)
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_pr_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
-
-    # materialize the (possibly expensive) edge subtree exactly once;
-    # every iteration reads this parquet, not the upstream plan
-    edge_path = os.path.join(work_dir, "edges")
-    if not _is_committed(edge_path):
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if symmetric:
-            e = e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-        e.distinct().write.mode("overwrite").parquet(edge_path)
-    e = spark.read.parquet(edge_path)
-
-    last = None
-    for k in range(iterations, -1, -1):
-        if _is_committed(_round_path(work_dir, k)):
-            last = k
-            break
-    if last is None:
-        # round 0: uniform ranks, with the out-degree joined in ONCE —
-        # from here on deg travels with the rank row
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        n_total = nodes.agg(F.count("*").alias("__n"))
-        outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-        (
+    store = RoundStore(
+        spark,
+        work_dir or scratch_dir(spark, "spark_pr_"),
+        "rank",
+        state_write_partitions(spark, state_partitions),
+    )
+    e = _edge_snapshot(store, edges, src, dst, symmetric)
+    # round 0: uniform ranks, with the out-degree joined in ONCE —
+    # from here on deg travels with the rank row
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    n_total = nodes.agg(F.count("*").alias("__n"))
+    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    last, ranks = store.resume(iterations) or (
+        0,
+        store.commit(
+            0,
             nodes.crossJoin(F.broadcast(n_total))
             .join(outdeg, nodes["node"] == outdeg["src"], "left")
             .select(
@@ -169,22 +157,11 @@ def pagerank(
                 dec_cast(F.lit(1.0) / F.col("__n"), _SCALE).alias("rank"),
                 F.col("deg"),
                 F.col("__n"),
-            )
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(_round_path(work_dir, 0))
-        )
-        last = 0
-    ranks = spark.read.parquet(_round_path(work_dir, last))
-
+            ),
+        ),
+    )
     for k in range(last + 1, iterations + 1):
-        (
-            _pr_step(e, ranks, damping)
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(_round_path(work_dir, k))
-        )
-        ranks = spark.read.parquet(_round_path(work_dir, k))
+        ranks = store.commit(k, _pr_step(e, ranks, damping))
     return ranks.select("node", "rank")
 
 
@@ -213,49 +190,36 @@ def kcore_peel(
     Scale notes (100 TB lens): per round ONE degree aggregate (map-
     side combined) + two semi-joins of the edge set against the
     surviving-node table (AQE broadcasts it as it shrinks); the edge
-    set only ever SHRINKS, and each round's survivor edges commit to
-    ``work_dir`` parquet with ``_SUCCESS`` markers — lineage truncates
-    per round, a restarted driver resumes from the last committed
-    round (operators/components.py pattern).
+    set only ever SHRINKS, and each round's survivor edges are
+    committed round state — lineage truncates per round, a restarted
+    driver resumes from the last committed round
+    (operators/iterstate.py).
     """
     spark = edges.sparkSession
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_kcore_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
-
-    def _epath(r: int) -> str:
-        return os.path.join(work_dir, f"edges_{r:05d}")
-
-    last = None
-    for r in range(rounds, -1, -1):
-        if _is_committed(_epath(r)):
-            last = r
-            break
-    if last is None:
-        e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        e = (
-            e.unionByName(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    store = RoundStore(
+        spark, work_dir or scratch_dir(spark, "spark_kcore_"), "edges"
+    )
+    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    last, e = store.resume(rounds) or (
+        0,
+        store.commit(
+            0,
+            e0.unionByName(
+                e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
             )
             .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        e.write.mode("overwrite").parquet(_epath(0))
-        last = 0
-    e = spark.read.parquet(_epath(last))
-
+            .distinct(),
+        ),
+    )
     for r in range(last + 1, rounds + 1):
         deg = e.groupBy("a").agg(F.count("*").alias("deg"))
         alive = deg.filter(F.col("deg") >= k).select("a")
-        (
+        e = store.commit(
+            r,
             e.join(alive, "a")
             .join(alive.select(F.col("a").alias("b")), "b")
-            .select("a", "b")
-            .write.mode("overwrite")
-            .parquet(_epath(r))
+            .select("a", "b"),
         )
-        e = spark.read.parquet(_epath(r))
 
     return e.groupBy(F.col("a").alias("node")).agg(
         F.count("*").alias("deg")
@@ -335,28 +299,15 @@ def personalized_pagerank(
     sum-to-1 interpretation matters.
     """
     spark = edges.sparkSession
-    nparts = state_write_partitions(spark, state_partitions)
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_ppr_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
-
-    edge_path = os.path.join(work_dir, "edges")
-    if not _is_committed(edge_path):
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if symmetric:
-            e = e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-        e.distinct().write.mode("overwrite").parquet(edge_path)
-    e = spark.read.parquet(edge_path)
-
-    last = None
-    for k in range(iterations, -1, -1):
-        if _is_committed(_round_path(work_dir, k)):
-            last = k
-            break
-    if last is None:
+    store = RoundStore(
+        spark,
+        work_dir or scratch_dir(spark, "spark_ppr_"),
+        "rank",
+        state_write_partitions(spark, state_partitions),
+    )
+    e = _edge_snapshot(store, edges, src, dst, symmetric)
+    resumed = store.resume(iterations)
+    if resumed is None:
         nodes = (
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
@@ -382,7 +333,8 @@ def personalized_pagerank(
             F.sum(F.coalesce("__is_src", F.lit(0))).alias("__ns")
         )
         outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-        (
+        resumed = 0, store.commit(
+            0,
             flagged.crossJoin(F.broadcast(n_src))
             .join(outdeg, flagged["node"] == outdeg["src"], "left")
             .select(
@@ -395,22 +347,11 @@ def personalized_pagerank(
                 F.col("deg"),
             )
             .withColumn("rank", F.col("tele"))
-            .select("node", "rank", "deg", "tele")
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(_round_path(work_dir, 0))
+            .select("node", "rank", "deg", "tele"),
         )
-        last = 0
-    ranks = spark.read.parquet(_round_path(work_dir, last))
-
+    last, ranks = resumed
     for k in range(last + 1, iterations + 1):
-        (
-            _ppr_step(e, ranks, damping)
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(_round_path(work_dir, k))
-        )
-        ranks = spark.read.parquet(_round_path(work_dir, k))
+        ranks = store.commit(k, _ppr_step(e, ranks, damping))
     return ranks.select("node", "rank")
 
 
@@ -478,61 +419,32 @@ def label_propagation(
     node; each round is ONE edges ⋈ labels shuffle join plus two
     map-side-combined aggregates (votes bounded by distinct
     (node, in-label) pairs <= edges; the argmax folds into
-    max(struct)) and commits to ``work_dir`` parquet with _SUCCESS
-    markers — lineage truncation + driver-restart resume, write
+    max(struct)) and commits its round state — lineage truncation +
+    driver-restart resume, write
     parallelism from ``state_partitions`` / defaultParallelism
     (operators/iterstate.py), the same contract as pagerank/
     components.  ``symmetric=True`` doubles edges so isolated-sink
     nodes still receive votes (undirected communities, the usual
     reading)."""
     spark = edges.sparkSession
-    nparts = state_write_partitions(spark, state_partitions)
-    if work_dir is None:
-        work_dir = scratch_dir(spark, "spark_lpa_")
-    else:
-        os.makedirs(work_dir, exist_ok=True)
-
-    def _lpath(k: int) -> str:
-        return os.path.join(work_dir, f"labels_{k:05d}")
-
-    edge_path = os.path.join(work_dir, "edges")
-    if not _is_committed(edge_path):
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if symmetric:
-            e = e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-        e.distinct().write.mode("overwrite").parquet(edge_path)
-    e = spark.read.parquet(edge_path)
-
-    last = None
-    for k in range(iterations, -1, -1):
-        if _is_committed(_lpath(k)):
-            last = k
-            break
-    if last is None:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        (
-            nodes.select("node", F.col("node").alias("label"))
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(_lpath(0))
-        )
-        last = 0
-    labels = spark.read.parquet(_lpath(last))
-
+    store = RoundStore(
+        spark,
+        work_dir or scratch_dir(spark, "spark_lpa_"),
+        "labels",
+        state_write_partitions(spark, state_partitions),
+    )
+    e = _edge_snapshot(store, edges, src, dst, symmetric)
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    last, labels = store.resume(iterations) or (
+        0,
+        store.commit(0, nodes.select("node", F.col("node").alias("label"))),
+    )
     for k in range(last + 1, iterations + 1):
-        (
-            _lpa_step(e, labels)
-            .coalesce(nparts)
-            .write.mode("overwrite")
-            .parquet(_lpath(k))
-        )
-        labels = spark.read.parquet(_lpath(k))
+        labels = store.commit(k, _lpa_step(e, labels))
     return labels.select("node", "label")
 
 

@@ -27,7 +27,7 @@ oracle can unroll every round in SQL:
 
 Scale notes (100 TB lens):
 - training explodes vectors once to (id, sub, pos, x) long format and
-  materializes it (one upstream execution); every Lloyd round is a
+  snapshots it (one upstream execution); every Lloyd round is a
   BROADCAST join of the m*k*sub_dim centroid table against that long
   table — points never shuffle for the join, and the (id, sub, code)
   partial aggregate map-side-combines n*d*k terms down to n*m*k
@@ -49,23 +49,14 @@ Scale notes (100 TB lens):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.functions.numeric import dec_cast
+from diabetes_etl_spark.operators.iterstate import RoundStore
 
 _DEC_TERM = "decimal(25,15)"
 _MEAN_SCALE = 12
-
-
-def _round_path(work_dir: str, r: int) -> str:
-    return os.path.join(work_dir, f"codebook_{r:05d}")
-
-
-def _is_committed(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def _assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
@@ -149,40 +140,21 @@ def pq_train(
     """Codebook (sub, cid, pos, c) after ``iterations`` Lloyd rounds
     per subspace, trained on the ``train_cap`` smallest-id vectors
     (all of them when None).  ``dim`` must split evenly into ``m``
-    subspaces.  ``work_dir`` follows the kmeans_assign contract:
-    per-round committed parquet, restartable, one invocation's
-    (input, m, k, iterations) per directory."""
+    subspaces.  ``work_dir`` follows the kmeans_assign contract
+    (operators/iterstate.py): per-round committed parquet, restartable,
+    one invocation's (input, m, k, iterations) per directory; without
+    it the codebook is m·k·sub_dim driver rows, one collect job per
+    Lloyd round."""
     if dim % m:
         raise ValueError(f"dim {dim} does not split into {m} subspaces")
-    sub_dim = dim // m
-    spark = df.sparkSession
-    durable = work_dir is not None
-    if durable:
-        os.makedirs(work_dir, exist_ok=True)
-
     train = df
     if train_cap is not None:
         train = df.orderBy(id_col).limit(train_cap)
 
-    long_pts = _long_points(train, id_col, vec_col, sub_dim)
-    if durable:
-        pts_path = os.path.join(work_dir, "train_points")
-        if not _is_committed(pts_path):
-            long_pts.write.mode("overwrite").parquet(pts_path)
-        pts = spark.read.parquet(pts_path)
-    else:
-        # volatile mode (kmeans_assign precedent): codebook state is
-        # m·k·sub_dim driver rows collected per round — one job per
-        # Lloyd round, no parquet round-trip, bit-identical
-        # arithmetic.  The long point form is localCheckpoint'd ONCE
-        # into executor storage (round-14, verdict-r13 #3): _assign
-        # and _update both reference ``pts`` every round, so leaving
-        # it lazy re-ran the corpus scan + posexplode 2*iterations+1
-        # times.  eager=False keeps plan construction job-free; the
-        # snapshot also pins a nondeterministic upstream to one draw
-        # (the round-13 ADVICE caveat).
-        pts = long_pts.localCheckpoint(eager=False)
-
+    store = RoundStore(df.sparkSession, work_dir, "codebook")
+    pts = store.snapshot(
+        "train_points", _long_points(train, id_col, vec_col, dim // m)
+    )
     seeds = (
         train.select(F.col(id_col).alias("sid"))
         .orderBy("sid")
@@ -192,33 +164,9 @@ def pq_train(
     c0 = pts.join(F.broadcast(seeds), pts["id"] == seeds["sid"]).select(
         "sub", "cid", "pos", F.col("x").alias("c")
     )
-
-    if durable:
-        last = None
-        for r in range(iterations, -1, -1):
-            if _is_committed(_round_path(work_dir, r)):
-                last = r
-                break
-        if last is None:
-            c0.coalesce(1).write.mode("overwrite").parquet(
-                _round_path(work_dir, 0)
-            )
-            last = 0
-        cent = spark.read.parquet(_round_path(work_dir, last))
-        for r in range(last + 1, iterations + 1):
-            (
-                _update(pts, _assign(pts, cent), cent)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(_round_path(work_dir, r))
-            )
-            cent = spark.read.parquet(_round_path(work_dir, r))
-        return cent
-
-    cent = spark.createDataFrame(c0.collect(), c0.schema)
-    for _ in range(iterations):
-        upd = _update(pts, _assign(pts, cent), cent)
-        cent = spark.createDataFrame(upd.collect(), upd.schema)
+    last, cent = store.resume(iterations) or (0, store.commit_rows(0, c0))
+    for r in range(last + 1, iterations + 1):
+        cent = store.commit_rows(r, _update(pts, _assign(pts, cent), cent))
     return cent
 
 

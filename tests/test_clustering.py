@@ -1,7 +1,7 @@
 """Distributed k-means (operators/clustering.py) unit tests:
 convergence on separable data, determinism/partition invariance,
-empty-cluster carry, driver-restart resume, and the broadcast plan
-shape for the centroid join."""
+empty-cluster carry, driver-restart resume, volatile/durable round
+state parity, and the broadcast plan shape for the centroid join."""
 
 from __future__ import annotations
 
@@ -240,3 +240,25 @@ def test_within_cluster_candidates_block_groups_are_bounded(spark):
     sizes = {r["__b"]: r["cnt"] for r in
              blk.groupBy("__b").agg(F.count("*").alias("cnt")).collect()}
     assert len(sizes) == 12 and all(v == cap for v in sizes.values())
+
+
+def test_kmeans_volatile_matches_durable(spark, tmp_path):
+    """kmeans_assign without work_dir (collect-per-round driver state)
+    must be bit-identical to the parquet-commit mode — the round-13
+    volatile refactor is performance-only."""
+    df = _vecs(
+        spark,
+        [(i, [float((i * 7) % 13), float((i * 5) % 11), float(i % 3)])
+         for i in range(40)],
+    )
+    vol = sorted(
+        (r.id, r.cluster, r.d2)
+        for r in kmeans_assign(df, k=3, iterations=2).collect()
+    )
+    dur = sorted(
+        (r.id, r.cluster, r.d2)
+        for r in kmeans_assign(
+            df, k=3, iterations=2, work_dir=str(tmp_path / "wd")
+        ).collect()
+    )
+    assert vol == dur

@@ -1335,3 +1335,52 @@ def test_containment_df_cap_drops_stop_shingles(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = containment_pairs(df, threshold=0.5, df_cap=20).collect()
     assert out == []  # the shared shingles exceed the df cap
+
+
+def test_components_volatile_matches_durable(spark, tmp_path):
+    """No-work_dir components (localCheckpoint rounds) must label
+    exactly like the durable parquet-committed mode."""
+    from diabetes_etl_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 1), (30, 30)],
+        "src long, dst long",
+    )
+    durable = {
+        r.id: r.component
+        for r in connected_components(
+            edges, work_dir=str(tmp_path / "cc")
+        ).collect()
+    }
+    volatile = {
+        r.id: r.component
+        for r in connected_components(edges).collect()
+    }
+    assert volatile == durable
+    assert volatile[3] == 1 and volatile[22] == 20 and volatile[30] == 30
+
+
+def test_components_volatile_raises_when_not_converged(spark):
+    from diabetes_etl_spark.operators.components import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=2, auto_star=False)
+
+
+def test_components_volatile_star_switch_high_diameter(spark):
+    """The volatile loop keeps the auto star-switch: a long chain must
+    still resolve (via the star fallback) instead of erroring."""
+    from diabetes_etl_spark.operators.components import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "src long, dst long"
+    )
+    labels = {
+        r.id: r.component
+        for r in connected_components(chain, max_iter=8).collect()
+    }
+    assert set(labels.values()) == {0}
+    assert len(labels) == 31

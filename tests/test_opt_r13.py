@@ -1,65 +1,12 @@
 """Round-13 optimization-round guards: the refactors must be
-performance-only — volatile (driver-state) iterative modes stay
-bit-identical to the durable (parquet-commit) modes, the vectorized
-CDC kernel stays pinned to the pure-Python reference on non-ASCII
-input, and the streaming versioned source parallelizes by FILE."""
+performance-only — the vectorized CDC kernel stays pinned to the
+pure-Python reference on non-ASCII input, the Arrow shingle kernel
+matches the Column form, and the streaming versioned source
+parallelizes by FILE."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F  # noqa: F401
-
-
-def _vecs(spark, rows):
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    )
-
-
-def test_kmeans_volatile_matches_durable(spark, tmp_path):
-    """kmeans_assign without work_dir (collect-per-round driver state)
-    must be bit-identical to the parquet-commit mode — the round-13
-    volatile refactor is performance-only."""
-    from diabetes_etl_spark.operators.clustering import kmeans_assign
-
-    df = _vecs(
-        spark,
-        [(i, [float((i * 7) % 13), float((i * 5) % 11), float(i % 3)])
-         for i in range(40)],
-    )
-    vol = sorted(
-        (r.id, r.cluster, r.d2)
-        for r in kmeans_assign(df, k=3, iterations=2).collect()
-    )
-    dur = sorted(
-        (r.id, r.cluster, r.d2)
-        for r in kmeans_assign(
-            df, k=3, iterations=2, work_dir=str(tmp_path / "wd")
-        ).collect()
-    )
-    assert vol == dur
-
-
-def test_pq_train_volatile_matches_durable(spark, tmp_path):
-    from diabetes_etl_spark.operators.pq import pq_train
-
-    df = _vecs(
-        spark,
-        [(i, [float((i * j + 3) % 17) for j in range(8)])
-         for i in range(30)],
-    )
-    vol = sorted(
-        map(tuple, pq_train(df, dim=8, m=2, k=3, iterations=2).collect())
-    )
-    dur = sorted(
-        map(
-            tuple,
-            pq_train(
-                df, dim=8, m=2, k=3, iterations=2,
-                work_dir=str(tmp_path / "wd"),
-            ).collect(),
-        )
-    )
-    assert vol == dur
 
 
 def test_cdc_kernel_handles_non_ascii_codepoints(spark):

@@ -1,13 +1,11 @@
 """Round-14 optimization parity tests: every operator internal changed
-this round is pinned against its previous (Column-form / durable-mode)
+this round is pinned against its previous (Column-form)
 implementation — same values, same rows, bit-identical where the
 contract is bit-exact."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
 
 
 # -- Arrow shingle kernel: keep_cols / with_fp / id_col=None -----------------
@@ -322,55 +320,3 @@ def test_exact_kth_fused_bracket_saturates_infinities(spark):
     for k in range(1, len(vals) + 1):
         v, _ = exact_kth(df, "x", k, buckets=8, threshold=2)
         assert v == s[k - 1], k
-
-
-# -- connected components: volatile localCheckpoint mode ---------------------
-
-
-def test_components_volatile_matches_durable(spark, tmp_path):
-    """No-work_dir components (localCheckpoint rounds) must label
-    exactly like the durable parquet-committed mode."""
-    from diabetes_etl_spark.operators.components import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 1), (30, 30)],
-        "src long, dst long",
-    )
-    durable = {
-        r.id: r.component
-        for r in connected_components(
-            edges, work_dir=str(tmp_path / "cc")
-        ).collect()
-    }
-    volatile = {
-        r.id: r.component
-        for r in connected_components(edges).collect()
-    }
-    assert volatile == durable
-    assert volatile[3] == 1 and volatile[22] == 20 and volatile[30] == 30
-
-
-def test_components_volatile_raises_when_not_converged(spark):
-    from diabetes_etl_spark.operators.components import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2, auto_star=False)
-
-
-def test_components_volatile_star_switch_high_diameter(spark):
-    """The volatile loop keeps the auto star-switch: a long chain must
-    still resolve (via the star fallback) instead of erroring."""
-    from diabetes_etl_spark.operators.components import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "src long, dst long"
-    )
-    labels = {
-        r.id: r.component
-        for r in connected_components(chain, max_iter=8).collect()
-    }
-    assert set(labels.values()) == {0}
-    assert len(labels) == 31

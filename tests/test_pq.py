@@ -1,8 +1,9 @@
 """Product quantization (operators/pq.py) unit tests: codebook shape,
 code range, nearest-blob correctness of ADC ranking on separable
 data, bit-determinism across partitionings, self-match exclusion,
-restart resume from committed codebook rounds, and the broadcast
-plan shape for the scoring join."""
+restart resume from committed codebook rounds, volatile/durable
+round state parity, and the broadcast plan shape for the scoring
+join."""
 
 from __future__ import annotations
 
@@ -155,3 +156,24 @@ def test_pq_frozen_codebook_incremental_shape(spark):
     for r in top:
         assert r.candidate_id in hist_ids  # only history is searched
         assert r.candidate_id // 8 == r.query_id // 8  # same blob
+
+
+def test_pq_train_volatile_matches_durable(spark, tmp_path):
+    df = _vecs(
+        spark,
+        [(i, [float((i * j + 3) % 17) for j in range(8)])
+         for i in range(30)],
+    )
+    vol = sorted(
+        map(tuple, pq_train(df, dim=8, m=2, k=3, iterations=2).collect())
+    )
+    dur = sorted(
+        map(
+            tuple,
+            pq_train(
+                df, dim=8, m=2, k=3, iterations=2,
+                work_dir=str(tmp_path / "wd"),
+            ).collect(),
+        )
+    )
+    assert vol == dur
