@@ -25,6 +25,8 @@ partition-prune.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -126,7 +128,6 @@ class CdcSpec:
     tiebreak_by: tuple[str, ...] = ()
     apply_as_deletes: str | None = None
     n_buckets: int = 16
-    commit_mode: str = "rename"
 
 
 @dataclass
@@ -188,7 +189,6 @@ class Pipeline:
         apply_as_deletes: str | None = None,
         n_buckets: int = 16,
         comment: str = "",
-        commit_mode: str = "rename",
     ) -> None:
         """Register a CDC target fed by a change stream — the engine's
         ``dlt.apply_changes``.  ``source`` is either the name of another
@@ -196,11 +196,8 @@ class Pipeline:
         the merge (it is not separately materialized), or a callable
         producing the change stream.  scd_type 1 keeps latest-wins
         state; 2 keeps full version history with __start_at/__end_at
-        (streaming/cdc.py has the semantics and the scale notes).
-        ``commit_mode="manifest"`` publishes buckets through the
-        object-store-safe manifest protocol instead of directory
-        renames — required when the warehouse lives on s3/abfss-style
-        storage where rename is not atomic.
+        (streaming/cdc.py has the semantics, the commit protocol and
+        the scale notes).
         """
         if scd_type not in (1, 2):
             raise ValueError(f"unsupported scd_type {scd_type}")
@@ -232,7 +229,6 @@ class Pipeline:
                 tiebreak_by=tuple(tiebreak_by),
                 apply_as_deletes=apply_as_deletes,
                 n_buckets=n_buckets,
-                commit_mode=commit_mode,
             ),
         )
 
@@ -254,6 +250,21 @@ class Pipeline:
     @staticmethod
     def expect_or_fail(name: str, condition: str):
         return _attach_expectation(Expectation(name, condition, "fail"))
+
+
+def _violated(exp: Expectation):
+    """The row-level violation predicate: the condition is not TRUE.
+    A NULL result is a violation (DLT semantics), the same rows
+    expect_or_drop's filter(cond) drops."""
+    return F.expr(f"NOT coalesce(({exp.condition}), false)")
+
+
+def _violations(warn: list[Expectation]) -> list:
+    """Per-warn-expectation violation counts, aliased ``__v_<i>``."""
+    return [
+        F.sum(F.when(_violated(e), 1).otherwise(0)).alias(f"__v_{i}")
+        for i, e in enumerate(warn)
+    ]
 
 
 def _attach_expectation(exp: Expectation):
@@ -360,21 +371,17 @@ class PipelineRunner:
     def _apply_expectations(self, ds: Dataset, df: DataFrame) -> DataFrame:
         fail_exps = [e for e in ds.expectations if e.action == "fail"]
         if fail_exps and not df.isStreaming:
-            # DLT expect_or_fail semantics: ANY row whose condition is
-            # not TRUE (false OR NULL) aborts the update — NULL results
-            # are violations, same as expect_or_drop's filter(cond)
-            # dropping them.  One combined existence probe (limit(1)
-            # keeps it a short-circuit scan, no full count) for all fail
+            # DLT expect_or_fail semantics: ANY violating row aborts the
+            # update.  One combined existence probe (limit(1) keeps it a
+            # short-circuit scan, no full count) for all fail
             # conditions, then per-expectation attribution only on the
             # failure path.
-            combined = " OR ".join(
-                f"NOT coalesce(({e.condition}), false)" for e in fail_exps
+            combined = functools.reduce(
+                operator.or_, [_violated(e) for e in fail_exps]
             )
-            if df.filter(F.expr(combined)).limit(1).count() > 0:
+            if df.filter(combined).limit(1).count() > 0:
                 for e in fail_exps:
-                    n_bad = df.filter(
-                        F.expr(f"NOT coalesce(({e.condition}), false)")
-                    ).count()
+                    n_bad = df.filter(_violated(e)).count()
                     if n_bad:
                         raise ExpectationFailed(
                             f"dataset {ds.name!r}: expectation {e.name!r} "
@@ -398,19 +405,7 @@ class PipelineRunner:
 
             obs = Observation()
             df = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_checked"),
-                *[
-                    F.sum(
-                        F.when(
-                            F.expr(
-                                f"NOT coalesce(({e.condition}), false)"
-                            ),
-                            1,
-                        ).otherwise(0)
-                    ).alias(f"__v_{i}")
-                    for i, e in enumerate(warn)
-                ],
+                obs, F.count(F.lit(1)).alias("rows_checked"), *_violations(warn)
             )
             self._pending_obs[ds.name] = (obs, warn)
         return df
@@ -458,7 +453,6 @@ class PipelineRunner:
             delete_expr=spec.apply_as_deletes,
             n_buckets=spec.n_buckets,
             checkpoint=ck,
-            commit_mode=spec.commit_mode,
         )
         if out is None:
             # no changes ever applied: empty state typed EXACTLY like
@@ -679,20 +673,7 @@ class PipelineRunner:
                 continue
             df = self._done[name]
             agg = df.agg(
-                F.count(F.lit(1)).alias("rows_checked"),
-                *[
-                    # non-TRUE (false or NULL) counts as a violation,
-                    # matching the fail/drop paths and DLT
-                    F.sum(
-                        F.when(
-                            F.expr(
-                                f"NOT coalesce(({e.condition}), false)"
-                            ),
-                            1,
-                        ).otherwise(0)
-                    ).alias(f"__v_{i}")
-                    for i, e in enumerate(warn)
-                ],
+                F.count(F.lit(1)).alias("rows_checked"), *_violations(warn)
             )
             long = agg.select(
                 F.expr(

@@ -528,9 +528,7 @@ ORDER BY user_id, start_at, event_id
     "apply_changes_scd2, DLT stored_as_scd_type=2 contract); the "
     "current version per key has end_at NULL.  Oracle = the lead() "
     "window over the raw changes.  Gate-tier since round 5 (SCD2 is "
-    "the flagship stored_as_scd_type=2 surface) and committed through "
-    "the object-store-safe MANIFEST protocol, so the gate exercises "
-    "the commit path a cloud warehouse would use.",
+    "the flagship stored_as_scd_type=2 surface).",
     tags=("streaming", "cdc", "extension"),
 )
 def cdc_scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,7 +550,6 @@ def cdc_scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         sequence_col="ts",
         tiebreak_cols=["event_id"],
         checkpoint=os.path.join(base, "ck"),
-        commit_mode="manifest",
     )
     return hist.select(
         "user_id",

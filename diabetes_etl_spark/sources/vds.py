@@ -52,40 +52,14 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from diabetes_etl_spark.sources import manifest
+
 __all__ = ["VersionedDataSource", "register_versioned_source"]
 
 
 @dataclass
 class _FilePartition(InputPartition):
     path: str
-
-
-def _resolve_manifest(path: str, version: str | None) -> dict:
-    mdir = os.path.join(path, "_manifests")
-    if version is not None:
-        cand = os.path.join(mdir, f"v{int(version):020d}.json")
-        try:
-            with open(cand, encoding="utf-8") as f:
-                return json.load(f)
-        except OSError as exc:
-            # same error contract as the latest-version path: a missing
-            # or never-written pinned version is a ValueError naming the
-            # option, not a raw FileNotFoundError with an opaque path
-            raise ValueError(
-                f"versionAsOf {int(version)} not found under {mdir}"
-            ) from exc
-    best = None
-    for name in sorted(os.listdir(mdir), reverse=True):
-        if not (name.startswith("v") and name.endswith(".json")):
-            continue
-        try:
-            with open(os.path.join(mdir, name), encoding="utf-8") as f:
-                return json.load(f)
-        except (json.JSONDecodeError, OSError):
-            # a truncated newest manifest means a torn write: fall back
-            # (same tolerance as VersionedTable._latest)
-            continue
-    raise ValueError(f"no readable manifest under {mdir}")
 
 
 class VersionedReader(DataSourceReader):
@@ -171,9 +145,13 @@ class VersionedDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("versioned source requires option 'path'")
-        return path, _resolve_manifest(
-            path, self.options.get("versionasof")
-        )
+        version = self.options.get("versionasof")
+        if version is not None:
+            return path, manifest.read_at(path, int(version))
+        _, doc = manifest.latest(path)
+        if doc is None:
+            raise ValueError(f"versioned source: no committed version at {path}")
+        return path, doc
 
     def schema(self):
         _, doc = self._doc()
@@ -267,19 +245,10 @@ class VersionedStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"version": self._start}
 
-    def _latest_version(self) -> int:
-        mdir = os.path.join(self._path, "_manifests")
-        best = self._start
-        for name in os.listdir(mdir):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    best = max(best, int(name[1:-5]))
-                except ValueError:
-                    continue
-        return best
-
     def latestOffset(self) -> dict:
-        latest = self._latest_version()
+        # the highest PARSEABLE manifest: a torn newest file is not a
+        # commit, so it must never become an offset
+        latest = max(self._start, manifest.latest(self._path)[0])
         if self._max_versions is not None:
             # clamp UP to the planning cursor (seeded from the
             # committed floor on restart): the returned offset must
@@ -303,9 +272,7 @@ class VersionedStreamReader(DataSourceStreamReader):
         parts: list[_VersionSlice] = []
         prev_paths: set | None = None
         for v in range(lo, hi + 1):
-            doc = _resolve_manifest(self._path, str(v)) if v > 0 else {
-                "files": []
-            }
+            doc = manifest.read_at(self._path, v) if v > 0 else {"files": []}
             paths = {e["path"] for e in doc["files"]}
             if prev_paths is not None:
                 removed = prev_paths - paths

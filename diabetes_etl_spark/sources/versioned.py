@@ -10,9 +10,9 @@ ACID-table semantics a Delta user actually relies on, natively:
 - **Atomic commits.** Data files land in write-once
   ``_data/<run-id>/`` directories that are INVISIBLE until a manifest
   references them; the manifest itself commits via put-if-absent
-  (hard-link on a local FS; the documented object-store equivalent is
-  a conditional PUT with If-None-Match, the same mapping
-  streaming/cdc.py uses).  A reader never sees a half-written version.
+  through the shared commit log, sources/manifest.py (hard-link on a
+  local FS, a conditional PUT with If-None-Match on an object store).
+  A reader never sees a half-written version.
 - **Snapshot isolation.** Readers resolve ONE manifest and read
   exactly its file list; concurrent commits never change a running
   query's input set.
@@ -34,10 +34,10 @@ ACID-table semantics a Delta user actually relies on, natively:
   them — the same pruning Delta file statistics give, and the
   mechanism that keeps a 100 TB table's point query from scanning
   100 TB.
-- **Vacuum.** ``vacuum(keep_last=K)`` deletes data directories no
-  retained manifest references (crash-safe: manifests are pruned
-  first, then unreferenced data dirs; a crash in between leaves only
-  harmless orphans that the next vacuum reaps).
+- **Vacuum.** ``vacuum(keep_last=K)`` is the log's retention sweep:
+  it prunes old manifests first, then the data directories only they
+  referenced; a never-referenced directory is reaped only once it is
+  past the grace period, so an in-flight writer's data survives.
 
 Scale notes (100 TB lens): manifests carry file METADATA only (path,
 rows, bytes, min/max), so a million-file table is a few hundred MB of
@@ -51,7 +51,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -59,9 +58,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.streaming.cdc import ConcurrentCommitError
+from diabetes_etl_spark.sources import manifest
+from diabetes_etl_spark.sources.manifest import ConcurrentCommitError
 
-_MANIFEST_DIR = "_manifests"
 _DATA_DIR = "_data"
 
 # Arrow type-name prefixes whose parquet min/max footer stats are
@@ -157,16 +156,12 @@ class CommitInfo:
     n_rows: int
 
 
-def _run_id() -> str:
-    return f"{os.getpid()}.{uuid.uuid4().hex[:12]}"
-
-
 class VersionedTable:
     """A path-addressed versioned parquet table (see module docstring).
 
     Layout::
 
-        <path>/_manifests/v<00000000000000000001>.json
+        <path>/<the manifest log — sources/manifest.py>
         <path>/_data/<run-id>/part-*.parquet
     """
 
@@ -207,58 +202,16 @@ class VersionedTable:
         self.bloom_m = bloom_m
         self.bloom_k = bloom_k
 
-    # -- manifest plumbing -------------------------------------------------
-
-    def _mdir(self) -> str:
-        return os.path.join(self.path, _MANIFEST_DIR)
+    # -- manifest plumbing (the log itself: sources/manifest.py) ----------
 
     def _latest(self) -> tuple[int, dict | None]:
-        """Highest PARSEABLE manifest (a truncated newest file means
-        that commit never happened — skip it)."""
-        mdir = self._mdir()
-        if not os.path.isdir(mdir):
-            return 0, None
-        for name in sorted(os.listdir(mdir), reverse=True):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                with open(os.path.join(mdir, name), encoding="utf-8") as fh:
-                    doc = json.load(fh)
-                return int(doc["version"]), doc
-            except (OSError, ValueError, KeyError):
-                continue
-        return 0, None
+        return manifest.latest(self.path)
 
     def _manifest_at(self, version: int) -> dict:
-        p = os.path.join(self._mdir(), f"v{version:020d}.json")
-        try:
-            with open(p, encoding="utf-8") as fh:
-                return json.load(fh)
-        except OSError:
-            raise ValueError(
-                f"version {version} does not exist (or was vacuumed) "
-                f"for table {self.path}"
-            ) from None
+        return manifest.read_at(self.path, version)
 
     def _publish(self, version: int, doc: dict) -> None:
-        """Put-if-absent commit of v<version>.json (hard-link; object
-        stores: conditional PUT)."""
-        mdir = self._mdir()
-        os.makedirs(mdir, exist_ok=True)
-        final = os.path.join(mdir, f"v{version:020d}.json")
-        tmp = os.path.join(mdir, f".tmp.{_run_id()}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(doc, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"version {version} already committed for {self.path}"
-            ) from None
-        finally:
-            os.unlink(tmp)
+        manifest.publish(self.path, version, doc)
 
     # -- data-file plumbing ------------------------------------------------
 
@@ -281,7 +234,7 @@ class VersionedTable:
 
         self._check_constraints(df)
 
-        rid = _run_id()
+        rid = f"{os.getpid()}.{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.path, _DATA_DIR, rid)
         df.write.mode("overwrite").parquet(out)
         entries = []
@@ -1036,17 +989,11 @@ class VersionedTable:
 
     def history(self) -> list[CommitInfo]:
         """Commit log, newest first (only non-vacuumed versions)."""
-        mdir = self._mdir()
-        if not os.path.isdir(mdir):
-            return []
         out = []
-        for name in sorted(os.listdir(mdir), reverse=True):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
+        for v in reversed(manifest.versions(self.path)):
             try:
-                with open(os.path.join(mdir, name), encoding="utf-8") as fh:
-                    doc = json.load(fh)
-            except (OSError, ValueError):
+                doc = self._manifest_at(v)
+            except ValueError:
                 continue
             out.append(
                 CommitInfo(
@@ -1059,46 +1006,19 @@ class VersionedTable:
             )
         return out
 
-    def vacuum(self, keep_last: int = 2) -> int:
-        """Drop manifests beyond the newest ``keep_last`` and delete
-        data dirs no retained manifest references.  Order matters for
-        crash-safety: manifests go first (so no retained version can
-        ever reference a deleted file); a crash after that leaves only
-        orphan data dirs, which the next vacuum reaps.
-
-        ``keep_last`` must be >= 1: the current version is never
-        removable (Delta's VACUUM has the same floor) — keep_last=0
-        would delete every manifest and then reap ALL data."""
-        if keep_last < 1:
-            raise ValueError(
-                f"keep_last must be >= 1 (got {keep_last}): vacuum never "
-                "removes the current version"
-            )
-        ver, _ = self._latest()
-        mdir = self._mdir()
-        if not os.path.isdir(mdir):
-            return 0
-        names = sorted(
-            n
-            for n in os.listdir(mdir)
-            if n.startswith("v") and n.endswith(".json")
+    def vacuum(self, keep_last: int = manifest.KEEP_LAST) -> int:
+        """Drop manifests beyond the newest ``keep_last`` (>= 1) and
+        the data dirs only they referenced — the shared retention
+        sweep, sources/manifest.py:sweep (its crash-safety order, its
+        grace period for a writer's not-yet-published data, and its
+        rule that a shallow clone's absolute-path entries are never
+        touched).  Returns the number of data dirs removed."""
+        return manifest.sweep(
+            self.path,
+            _DATA_DIR,
+            lambda doc: (e["path"] for e in doc["files"]),
+            keep_last,
         )
-        for name in names[:-keep_last]:
-            os.unlink(os.path.join(mdir, name))
-        referenced: set[str] = set()
-        for info in self.history():
-            doc = self._manifest_at(info.version)
-            for e in doc["files"]:
-                # _data/<run-id>/file → keep the whole run dir
-                referenced.add(e["path"].split("/")[1])
-        ddir = os.path.join(self.path, _DATA_DIR)
-        removed = 0
-        if os.path.isdir(ddir):
-            for rid in os.listdir(ddir):
-                if rid not in referenced:
-                    shutil.rmtree(os.path.join(ddir, rid), ignore_errors=True)
-                    removed += 1
-        return removed
 
 
 def _zorder(df: DataFrame, cols: tuple[str, ...], n_out: int) -> DataFrame:

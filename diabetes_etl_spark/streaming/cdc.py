@@ -31,60 +31,45 @@ Implementation: ``foreachBatch`` + bucket-partitioned parquet.
   onto Delta MERGE (see pipeline/registry.py's delta gate); this file
   is the format-independent expression of the operator.
 
-Two commit protocols publish the rewritten buckets:
+One commit protocol publishes the rewritten buckets: the shared
+manifest log, sources/manifest.py.
 
-- ``commit_mode="rename"`` (default): each affected bucket dir is
-  swapped in place with two POSIX renames (backup -> replace, same
-  crash contract as sources/maintenance.py:compact_files, recovered
-  per bucket by _recover_buckets).  Correct ONLY where directory
-  rename is atomic — a local filesystem or HDFS.
-- ``commit_mode="manifest"``: object-store-safe.  Data files are
-  written to a write-once ``__data/<run-id>/`` directory that no
-  reader looks at yet, then a single NEW manifest file
-  ``_manifests/v<N+1>.json`` — carrying the complete bucket -> file
-  list mapping — is published with put-if-absent.  The manifest write
-  is the commit point: readers resolve the highest parseable
-  manifest, so a crash anywhere before the manifest lands leaves the
-  previous state fully intact (the half-written data dir is invisible
-  garbage, swept by :func:`gc_orphan_data`).  Object stores give
-  atomic single-object PUT (and conditional PUT for the if-absent
-  check); nothing relies on rename.  Put-if-absent also detects a
-  concurrent writer racing to the same version — the loser gets
-  :class:`ConcurrentCommitError` instead of silently clobbering
-  (optimistic concurrency, the Delta/Iceberg log pattern).
-
-  A target becomes manifest-mode on its first manifest commit, which
-  absorbs any pre-existing rename-layout buckets by reference (their
-  dirs are listed in the manifest and left in place — no rewrite);
-  from then on readers and writers auto-detect the mode from the
-  ``_manifests`` dir, whatever ``commit_mode`` callers pass.
-
-Staging/data directories are suffixed with ``<pid>.<uuid>`` so two
-concurrent runs against one target can never delete each other's
-in-flight staging; leftovers from dead processes are reaped by the
-next run (rename mode) or by gc_orphan_data (manifest mode).
+- A merge writes its rows into a write-once ``__data/<run-id>/`` dir
+  that no reader looks at yet, then commits the next manifest, which
+  carries the complete bucket -> file list mapping, with
+  put-if-absent.  The manifest is the commit point: a crash before it
+  lands leaves the previous state intact, and a writer racing another
+  to the same version gets ``ConcurrentCommitError`` instead of
+  clobbering it.  Nothing relies on rename, so the protocol is the
+  same on a local FS, HDFS and an object store.
+- Every run ends with the log's retention sweep at its fixed
+  retention (the newest ``manifest.KEEP_LAST`` manifests): data only
+  pruned manifests referenced is deleted at once, data no manifest
+  ever referenced only after the log's grace period (it may be a
+  concurrent writer's in-flight commit).  A target's disk use stays
+  bounded.
+- Targets written by the older rename protocol (``__bucket=<b>/``
+  dirs at the target root, swapped in place) still read and merge:
+  a bucket a crash left behind as ``__bucket=<b>__pre_swap`` is
+  restored first, and the first commit absorbs the bucket dirs by
+  reference (its manifest lists them in place, no rewrite).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_MANIFEST_DIR = "_manifests"
+from diabetes_etl_spark.sources import manifest
+
 _DATA_DIR = "__data"
-
-
-class ConcurrentCommitError(RuntimeError):
-    """Another writer committed the manifest version this writer was
-    about to publish — the losing merge must be retried against the
-    new state (or the single-writer contract enforced upstream)."""
 
 
 def _winners(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
@@ -96,49 +81,25 @@ def _winners(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame
     )
 
 
-def _staging_path(target_dir: str, kind: str) -> str:
-    """Unique sibling staging dir: <target>__<kind>_tmp.<pid>.<uuid>."""
-    return (
-        target_dir.rstrip("/")
-        + f"__{kind}_tmp.{os.getpid()}.{uuid.uuid4().hex[:12]}"
+def _with_deleted(df: DataFrame) -> DataFrame:
+    """Compatibility shim: SCD1 targets written before tombstones were
+    persisted carry no __deleted column (treat every stored row as
+    live — exactly what the old layout meant), and a mixed
+    rename-layout/manifest union can surface it as NULL."""
+    if "__deleted" not in df.columns:
+        return df.withColumn("__deleted", F.lit(False))
+    return df.withColumn(
+        "__deleted", F.coalesce(F.col("__deleted"), F.lit(False))
     )
 
 
-def _reap_stale_staging(target_dir: str) -> None:
-    """Remove sibling staging dirs left by DEAD processes (crashed
-    before their swap).  A staging dir whose embedded pid is alive
-    belongs to a concurrent run and is left alone."""
-    parent = os.path.dirname(target_dir.rstrip("/")) or "."
-    base = os.path.basename(target_dir.rstrip("/"))
-    if not os.path.isdir(parent):
-        return
-    for name in os.listdir(parent):
-        if not name.startswith(base + "__") or "_tmp." not in name:
-            continue
-        parts = name.rsplit(".", 2)
-        if len(parts) != 3:
-            continue
-        try:
-            pid = int(parts[1])
-        except ValueError:
-            continue
-        try:
-            os.kill(pid, 0)
-            continue  # owner alive — concurrent run in flight
-        except ProcessLookupError:
-            pass
-        except PermissionError:
-            continue  # alive, owned by someone else
-        shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-
-
-def _recover_buckets(target_dir: str) -> None:
-    """Per-bucket crash recovery (rename mode): restore any bucket whose
-    swap was interrupted (backup exists without a live dir), drop stale
-    backups and dead processes' staging dirs."""
-    _reap_stale_staging(target_dir)
+def _legacy_bucket_entries(target_dir: str) -> dict:
+    """Bucket entries for a target the rename protocol wrote: its
+    ``__bucket=<b>/`` dirs, referenced in place.  A bucket whose swap a
+    crash interrupted is restored first (backup present without a live
+    dir); a backup whose swap completed is dropped."""
     if not os.path.isdir(target_dir):
-        return
+        return {}
     for name in os.listdir(target_dir):
         if not name.endswith("__pre_swap"):
             continue
@@ -148,124 +109,26 @@ def _recover_buckets(target_dir: str) -> None:
             shutil.rmtree(backup)  # crash after swap completed
         else:
             os.rename(backup, live)  # crash inside the window
-
-def _bucket_dirs(target_dir: str) -> list[str]:
-    if not os.path.isdir(target_dir):
-        return []
-    return sorted(
-        os.path.join(target_dir, d)
-        for d in os.listdir(target_dir)
-        if d.startswith("__bucket=") and not d.endswith("__pre_swap")
-    )
-
-
-def _with_deleted(df: DataFrame) -> DataFrame:
-    """Compatibility shim: SCD1 targets written before tombstones were
-    persisted carry no __deleted column (treat every stored row as
-    live — exactly what the old layout meant), and a mixed
-    legacy/manifest union can surface it as NULL."""
-    if "__deleted" not in df.columns:
-        return df.withColumn("__deleted", F.lit(False))
-    return df.withColumn(
-        "__deleted", F.coalesce(F.col("__deleted"), F.lit(False))
-    )
-
-
-def _swap_buckets(target_dir: str, tmp: str, affected: list[int]) -> None:
-    """Two-rename swap of the affected bucket dirs from ``tmp`` into the
-    target (crash contract of sources/maintenance.py:compact_files,
-    recovered per bucket by _recover_buckets).  A bucket absent from
-    ``tmp`` is removed — an empty new state is a legal one."""
-    os.makedirs(target_dir, exist_ok=True)
-    for b in affected:
-        src = os.path.join(tmp, f"__bucket={b}")
-        dst = os.path.join(target_dir, f"__bucket={b}")
-        backup = dst + "__pre_swap"
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        if os.path.exists(dst):
-            os.rename(dst, backup)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-# -- manifest commit protocol ------------------------------------------------
-
-
-def _manifest_dir(target_dir: str) -> str:
-    return os.path.join(target_dir, _MANIFEST_DIR)
-
-
-def _is_manifest_target(target_dir: str) -> bool:
-    return os.path.isdir(_manifest_dir(target_dir))
-
-
-def _latest_manifest(target_dir: str) -> tuple[int, dict | None]:
-    """Resolve the highest PARSEABLE manifest.  A truncated/corrupt
-    newest file (non-atomic writer died mid-PUT) is skipped — the
-    previous version is then the committed state, which is exactly the
-    crash contract."""
-    mdir = _manifest_dir(target_dir)
-    if not os.path.isdir(mdir):
-        return 0, None
-    names = sorted(
-        (n for n in os.listdir(mdir) if n.startswith("v") and n.endswith(".json")),
-        reverse=True,
-    )
-    for name in names:
-        try:
-            with open(os.path.join(mdir, name), encoding="utf-8") as fh:
-                doc = json.load(fh)
-            return int(doc["version"]), doc
-        except (OSError, ValueError, KeyError):
-            continue
-    return 0, None
-
-
-def _publish_manifest(target_dir: str, version: int, buckets: dict) -> None:
-    """Atomic put-if-absent of ``_manifests/v<version>.json``.  Local
-    FS: hard-link from a unique temp name (EEXIST = lost the race).
-    On an object store the equivalent is a conditional PUT
-    (If-None-Match) of the final key."""
-    mdir = _manifest_dir(target_dir)
-    os.makedirs(mdir, exist_ok=True)
-    final = os.path.join(mdir, f"v{version:020d}.json")
-    tmp = os.path.join(mdir, f".tmp.{os.getpid()}.{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({"version": version, "buckets": buckets}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"manifest v{version} already committed by another writer "
-            f"for target {target_dir}"
-        ) from None
-    finally:
-        os.unlink(tmp)
-
-
-def _legacy_bucket_entries(target_dir: str) -> dict:
-    """Manifest entries referencing pre-manifest rename-layout bucket
-    dirs in place (first manifest commit absorbs them — no rewrite)."""
-    entries = {}
-    for d in _bucket_dirs(target_dir):
-        b = os.path.basename(d).split("=", 1)[1]
-        entries[b] = {"dir": os.path.basename(d)}
-    return entries
+    return {
+        d.split("=", 1)[1]: {"dir": d}
+        for d in sorted(os.listdir(target_dir))
+        if d.startswith("__bucket=")
+    }
 
 
 def _current_bucket_entries(target_dir: str) -> tuple[int, dict]:
-    """(latest manifest version, bucket->entry map), falling back to
-    the legacy dir layout when no manifest has ever been committed."""
-    ver, doc = _latest_manifest(target_dir)
+    """(latest manifest version, bucket -> entry map), falling back to
+    the rename layout when no manifest has ever been committed."""
+    ver, doc = manifest.latest(target_dir)
     if doc is None:
         return 0, _legacy_bucket_entries(target_dir)
     return ver, dict(doc["buckets"])
+
+
+def _affected_entries(target_dir: str, affected: list[int]) -> dict:
+    _, entries = _current_bucket_entries(target_dir)
+    wanted = {str(b) for b in affected}
+    return {b: e for b, e in entries.items() if b in wanted}
 
 
 def _write_manifest_data(
@@ -332,92 +195,31 @@ def _read_bucket_entries(
 
 
 def _commit_buckets(
-    merged: DataFrame, target_dir: str, affected: list[int], mode: str
-) -> None:
-    """Publish the re-resolved rows of the affected buckets under the
-    target's commit protocol (see module docstring)."""
-    if mode == "manifest":
-        files = _write_manifest_data(merged, target_dir)
-        ver, buckets = _current_bucket_entries(target_dir)
-        for b in affected:
-            if b in files:
-                buckets[str(b)] = {"files": files[b]}
-            else:
-                buckets.pop(str(b), None)  # bucket emptied
-        _publish_manifest(target_dir, ver + 1, buckets)
-    else:
-        tmp = _staging_path(target_dir, "merge")
-        merged.write.partitionBy("__bucket").mode("overwrite").parquet(tmp)
-        _swap_buckets(target_dir, tmp, affected)
+    rows: DataFrame, target_dir: str, affected: list[int]
+) -> dict[int, list[str]]:
+    """Publish ``rows`` as the new contents of the affected buckets:
+    one data run plus the next manifest (module docstring).  A bucket
+    absent from ``rows`` is dropped — an empty new state is a legal
+    one.  Returns the bucket -> relative file list just written."""
+    files = _write_manifest_data(rows, target_dir)
+    ver, buckets = _current_bucket_entries(target_dir)
+    for b in affected:
+        if b in files:
+            buckets[str(b)] = {"files": files[b]}
+        else:
+            buckets.pop(str(b), None)
+    manifest.publish(target_dir, ver + 1, {"buckets": buckets})
+    return files
 
 
-def _target_mode(target_dir: str, commit_mode: str) -> str:
-    """The commit protocol is a property of the TARGET once created:
-    an existing manifest dir wins over whatever the caller passed."""
-    if commit_mode not in ("rename", "manifest"):
-        raise ValueError(f"unknown commit_mode {commit_mode!r}")
-    return "manifest" if _is_manifest_target(target_dir) else commit_mode
-
-
-def _read_affected(
-    spark: SparkSession, target_dir: str, affected: list[int], mode: str
-) -> DataFrame | None:
-    """Current contents of just the affected buckets."""
-    if mode == "manifest":
-        _, entries = _current_bucket_entries(target_dir)
-        wanted = {str(b) for b in affected}
-        entries = {b: e for b, e in entries.items() if b in wanted}
-        return _read_bucket_entries(spark, target_dir, entries)
-    dirs = [
-        os.path.join(target_dir, f"__bucket={b}")
-        for b in affected
-        if os.path.isdir(os.path.join(target_dir, f"__bucket={b}"))
-    ]
-    if not dirs:
-        return None
-    return spark.read.option("basePath", target_dir).parquet(*dirs)
-
-
-def gc_orphan_data(target_dir: str, grace_seconds: float = 86400.0) -> int:
-    """Sweep ``__data/<run-id>/`` dirs that no retained manifest
-    references and whose mtime is older than ``grace_seconds`` — the
-    garbage left by writers that died between data write and manifest
-    publish (plus superseded bucket rewrites).  The grace window keeps
-    an in-flight writer's not-yet-committed data safe; size it above
-    the longest plausible merge.  Returns the number of dirs removed."""
-    import time
-
-    data_root = os.path.join(target_dir, _DATA_DIR)
-    if not os.path.isdir(data_root):
-        return 0
-    referenced: set[str] = set()
-    mdir = _manifest_dir(target_dir)
-    if os.path.isdir(mdir):
-        for name in os.listdir(mdir):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                with open(os.path.join(mdir, name), encoding="utf-8") as fh:
-                    doc = json.load(fh)
-            except (OSError, ValueError):
-                continue
-            for entry in doc.get("buckets", {}).values():
-                for f in entry.get("files", ()):
-                    rel = os.path.normpath(f)
-                    parts = rel.split(os.sep)
-                    if len(parts) >= 2 and parts[0] == _DATA_DIR:
-                        referenced.add(parts[1])
-    removed = 0
-    now = time.time()
-    for run_id in os.listdir(data_root):
-        path = os.path.join(data_root, run_id)
-        if run_id in referenced or not os.path.isdir(path):
-            continue
-        if now - os.path.getmtime(path) < grace_seconds:
-            continue
-        shutil.rmtree(path, ignore_errors=True)
-        removed += 1
-    return removed
+def _sweep(target_dir: str) -> int:
+    return manifest.sweep(
+        target_dir,
+        _DATA_DIR,
+        lambda doc: (
+            f for e in doc["buckets"].values() for f in e.get("files", ())
+        ),
+    )
 
 
 def _parquet_rows(paths: list[str]) -> int:
@@ -448,51 +250,34 @@ def _entry_files(target_dir: str, entries: dict) -> list[str]:
 
 def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
     """Read the current state of an apply-changes target (all buckets);
-    None when no batch has ever committed a bucket.  Auto-detects the
-    commit protocol.  Manifest-mode reads carry ``__bucket`` as a data
-    column; legacy dirs recover it from the partition path."""
-    if _is_manifest_target(target_dir):
-        _, entries = _current_bucket_entries(target_dir)
-        return _read_bucket_entries(spark, target_dir, entries)
-    _recover_buckets(target_dir)
-    dirs = _bucket_dirs(target_dir)
-    if not dirs:
-        return None
-    return spark.read.option("basePath", target_dir).parquet(*dirs)
+    None when no batch has ever committed a bucket.  ``__bucket`` is a
+    data column of manifest files; rename-layout dirs recover it from
+    the partition path."""
+    _, entries = _current_bucket_entries(target_dir)
+    return _read_bucket_entries(spark, target_dir, entries)
 
 
-def apply_changes_scd1(
+def _apply_changes(
     spark: SparkSession,
     changes: DataFrame,
     target_dir: str,
     keys: list[str],
-    sequence_col: str,
-    tiebreak_cols: list[str] | None = None,
-    delete_expr: str | None = None,
-    n_buckets: int = 16,
-    checkpoint: str | None = None,
-    commit_mode: str = "rename",
+    delete_expr: str | None,
+    n_buckets: int,
+    checkpoint: str,
+    resolve: Callable[[DataFrame, DataFrame | None], DataFrame],
 ) -> DataFrame | None:
-    """Drain the ``changes`` stream (availableNow) into ``target_dir``
-    with latest-wins upsert semantics; returns the resulting state (or
-    None if nothing has ever been applied).
-
-    ``changes`` must be a streaming DataFrame containing ``keys``,
-    ``sequence_col`` and any ``tiebreak_cols``.  ``delete_expr`` is a
-    SQL boolean over the change row; a winning delete removes the key.
-    ``commit_mode`` picks the bucket publish protocol (module
-    docstring); an existing manifest target stays manifest whatever is
-    passed.
-    """
-    order_cols = [sequence_col, *(tiebreak_cols or [])]
-    ck = checkpoint or tempfile.mkdtemp(prefix="cdc_scd1_ck_")
+    """The merge skeleton both SCD types share.  Each micro-batch is
+    tagged with its ``__bucket`` and ``__deleted`` flag; ``resolve(
+    tagged, existing)`` computes the new rows of the buckets the batch
+    names from the batch and those buckets' current rows (None when
+    they are empty), and the result is committed.  The stream drains
+    with availableNow, the run ends with the retention sweep, and the
+    raw target is returned."""
 
     def merge(batch: DataFrame, _batch_id: int) -> None:
         if not batch.columns:
             return
-        mode = _target_mode(target_dir, commit_mode)
-        if mode == "rename":
-            _recover_buckets(target_dir)
         tagged = batch.withColumn(
             "__bucket",
             F.pmod(
@@ -508,33 +293,63 @@ def apply_changes_scd1(
             if delete_expr
             else F.lit(False),
         )
-        best = _winners(tagged, keys, order_cols)
         affected = sorted(
-            r[0] for r in best.select("__bucket").distinct().collect()
+            r[0] for r in tagged.select("__bucket").distinct().collect()
         )
         if not affected:
             return
-        existing = _read_affected(spark, target_dir, affected, mode)
-        if existing is not None:
-            # the target stores __deleted tombstones alongside live
-            # rows; tombstones are WRITTEN (their sequence must outlive
-            # the row so later out-of-order upserts still lose) and
-            # filtered on read
-            merged = _winners(
-                _with_deleted(existing).unionByName(best), keys, order_cols
-            )
-        else:
-            merged = best
-        _commit_buckets(merged, target_dir, affected, mode)
+        existing = _read_bucket_entries(
+            spark, target_dir, _affected_entries(target_dir, affected)
+        )
+        _commit_buckets(resolve(tagged, existing), target_dir, affected)
 
     (
         changes.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ck)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
-    raw = read_target(spark, target_dir)
+    _sweep(target_dir)
+    return read_target(spark, target_dir)
+
+
+def apply_changes_scd1(
+    spark: SparkSession,
+    changes: DataFrame,
+    target_dir: str,
+    keys: list[str],
+    sequence_col: str,
+    tiebreak_cols: list[str] | None = None,
+    delete_expr: str | None = None,
+    n_buckets: int = 16,
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """Drain the ``changes`` stream (availableNow) into ``target_dir``
+    with latest-wins upsert semantics; returns the resulting state (or
+    None if nothing has ever been applied).
+
+    ``changes`` must be a streaming DataFrame containing ``keys``,
+    ``sequence_col`` and any ``tiebreak_cols``.  ``delete_expr`` is a
+    SQL boolean over the change row; a winning delete removes the key.
+    """
+    order_cols = [sequence_col, *(tiebreak_cols or [])]
+
+    def resolve(tagged: DataFrame, existing: DataFrame | None) -> DataFrame:
+        best = _winners(tagged, keys, order_cols)
+        if existing is None:
+            return best
+        # the target stores __deleted tombstones alongside live rows;
+        # tombstones are WRITTEN (their sequence must outlive the row so
+        # later out-of-order upserts still lose) and filtered on read
+        return _winners(
+            _with_deleted(existing).unionByName(best), keys, order_cols
+        )
+
+    raw = _apply_changes(
+        spark, changes, target_dir, keys, delete_expr, n_buckets,
+        checkpoint or tempfile.mkdtemp(prefix="cdc_scd1_ck_"), resolve,
+    )
     if raw is None:
         return None
     # live state only: tombstones and the layout column are internal
@@ -555,7 +370,6 @@ def apply_changes_scd2(
     delete_expr: str | None = None,
     n_buckets: int = 16,
     checkpoint: str | None = None,
-    commit_mode: str = "rename",
 ) -> DataFrame | None:
     """SCD Type 2 apply-changes: every change VERSION is kept, with
     ``__start_at`` = its own sequence value and ``__end_at`` = the next
@@ -571,57 +385,28 @@ def apply_changes_scd2(
     rewritten).
     """
     order_cols = [sequence_col, *(tiebreak_cols or [])]
-    ck = checkpoint or tempfile.mkdtemp(prefix="cdc_scd2_ck_")
 
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        if not batch.columns:
-            return
-        mode = _target_mode(target_dir, commit_mode)
-        if mode == "rename":
-            _recover_buckets(target_dir)
-        incoming = batch.withColumn(
-            "__bucket",
-            F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
-            ).cast("int"),
-        ).withColumn(
-            "__deleted",
-            F.coalesce(F.expr(delete_expr), F.lit(False))
-            if delete_expr
-            else F.lit(False),
+    def resolve(incoming: DataFrame, existing: DataFrame | None) -> DataFrame:
+        history = (
+            incoming
+            if existing is None
+            else existing.drop("__start_at", "__end_at").unionByName(incoming)
         )
-        affected = sorted(
-            r[0] for r in incoming.select("__bucket").distinct().collect()
-        )
-        if not affected:
-            return
-        existing = _read_affected(spark, target_dir, affected, mode)
-        if existing is not None:
-            history = existing.drop("__start_at", "__end_at").unionByName(
-                incoming
-            )
-        else:
-            history = incoming
         # exact-duplicate versions (same key + sequence + tiebreaks)
         # collapse to one row — reprocessing a file is idempotent
         w = Window.partitionBy(*keys).orderBy(
             *[F.col(c).asc() for c in order_cols]
         )
-        versioned = (
+        return (
             _winners(history, [*keys, *order_cols], ["__deleted"])
             .withColumn("__start_at", F.col(sequence_col))
             .withColumn("__end_at", F.lead(sequence_col).over(w))
         )
-        _commit_buckets(versioned, target_dir, affected, mode)
 
-    (
-        changes.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    raw = _apply_changes(
+        spark, changes, target_dir, keys, delete_expr, n_buckets,
+        checkpoint or tempfile.mkdtemp(prefix="cdc_scd2_ck_"), resolve,
     )
-    raw = read_target(spark, target_dir)
     if raw is None:
         return None
     # history keeps tombstone VERSIONS (__deleted marks them); only the
@@ -643,9 +428,9 @@ def vacuum_tombstones(
     earlier re-opens the resurrection window the tombstone closed).
 
     Bucket-scoped like the merges: only buckets that actually hold
-    expired tombstones are read and rewritten (published under the
-    target's commit protocol, same crash recovery); untouched buckets
-    keep their files.  The removed count comes from parquet FOOTER row
+    expired tombstones are read and rewritten (committed as the next
+    manifest, then the retention sweep runs); untouched buckets keep
+    their files.  The removed count comes from parquet FOOTER row
     counts (before minus after over the affected buckets), not an
     extra data scan.  Returns the number of tombstones removed.  Like
     any file-replacing maintenance (sources/maintenance.py:
@@ -663,7 +448,6 @@ def vacuum_tombstones(
             "keep_after must be (sequence_col_name, threshold_value)"
         )
     seq_col, threshold = keep_after
-    mode = _target_mode(target_dir, "rename")
     all_rows = read_target(spark, target_dir)
     if all_rows is None:
         return 0
@@ -681,52 +465,16 @@ def vacuum_tombstones(
     )
     if not affected:
         return 0
-    # re-read ONLY the affected buckets for the rewrite: in rename mode
-    # this is partition pruning, in manifest mode it's the per-bucket
-    # file lists — either way untouched buckets are never scanned again
-    bucket_rows = _with_deleted(
-        _read_affected(spark, target_dir, affected, mode)
+    # re-read ONLY the affected buckets' files for the rewrite:
+    # untouched buckets are never scanned again
+    entries = _affected_entries(target_dir, affected)
+    rows_before = _parquet_rows(_entry_files(target_dir, entries))
+    keep = _with_deleted(
+        _read_bucket_entries(spark, target_dir, entries)
+    ).filter(~expired)
+    files = _commit_buckets(keep, target_dir, affected)
+    rows_after = _parquet_rows(
+        [os.path.join(target_dir, f) for fs in files.values() for f in fs]
     )
-    keep = bucket_rows.filter(~expired)
-
-    if mode == "manifest":
-        _, entries = _current_bucket_entries(target_dir)
-        before_files = _entry_files(
-            target_dir,
-            {b: e for b, e in entries.items() if int(b) in set(affected)},
-        )
-    else:
-        before_files = _entry_files(
-            target_dir,
-            {
-                str(b): {"dir": f"__bucket={b}"}
-                for b in affected
-                if os.path.isdir(os.path.join(target_dir, f"__bucket={b}"))
-            },
-        )
-    rows_before = _parquet_rows(before_files)
-    if mode == "manifest":
-        files = _write_manifest_data(keep, target_dir)
-        ver, buckets = _current_bucket_entries(target_dir)
-        for b in affected:
-            if b in files:
-                buckets[str(b)] = {"files": files[b]}
-            else:
-                buckets.pop(str(b), None)
-        rows_after = _parquet_rows(
-            [os.path.join(target_dir, f) for fs in files.values() for f in fs]
-        )
-        _publish_manifest(target_dir, ver + 1, buckets)
-    else:
-        tmp = _staging_path(target_dir, "vacuum")
-        keep.write.partitionBy("__bucket").mode("overwrite").parquet(tmp)
-        rows_after = _parquet_rows(
-            [
-                os.path.join(root, f)
-                for root, _dirs, fs in os.walk(tmp)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        )
-        _swap_buckets(target_dir, tmp, affected)
+    _sweep(target_dir)
     return rows_before - rows_after

@@ -14,9 +14,10 @@
 3. ``classifier.rank_metrics`` on single-class input (no positives or
    no negatives) yields intentional NULL auc/gini/ks — the repo's
    degenerate-input convention — not silent NaN from a 0 denominator.
-4. ``vds._resolve_manifest`` with an explicit ``versionAsOf`` raises
-   the same ``ValueError`` contract as the latest-version path,
-   naming the option, instead of a raw ``FileNotFoundError``.
+4. Resolving an explicit ``versionAsOf`` that does not exist raises
+   ``ValueError`` naming the version, instead of a raw
+   ``FileNotFoundError`` (the commit log's ``read_at`` contract,
+   sources/manifest.py).
 5. Iterative-operator scratch dirs come from ``util.scratch_dir``:
    conf-rooted (``spark.diabetes_etl.scratchDir``) for shared
    storage, driver-local tempdir ONLY under a local master, loud
@@ -38,10 +39,8 @@ from pyspark.sql import functions as F
 from diabetes_etl_spark.operators.classifier import rank_metrics
 from diabetes_etl_spark.operators.dq import verify
 from diabetes_etl_spark.operators.util import SCRATCH_CONF, scratch_dir
-from diabetes_etl_spark.sources.vds import (
-    VersionedStreamReader,
-    _resolve_manifest,
-)
+from diabetes_etl_spark.sources.manifest import read_at
+from diabetes_etl_spark.sources.vds import VersionedStreamReader
 
 
 # -- 1. capped stream: clean-restart offset floor ----------------------------
@@ -141,8 +140,8 @@ def test_rank_metrics_single_class_yields_null_not_nan(spark):
 
 def test_resolve_manifest_missing_version_is_value_error():
     base = _mk_manifests(2)
-    with pytest.raises(ValueError, match=r"versionAsOf 99 not found"):
-        _resolve_manifest(base, "99")
+    with pytest.raises(ValueError, match=r"version 99 does not exist"):
+        read_at(base, 99)
     shutil.rmtree(base, ignore_errors=True)
 
 

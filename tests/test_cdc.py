@@ -1,6 +1,7 @@
 """CDC apply-changes (streaming/cdc.py) semantics: latest-wins upsert,
 late-data rejection across separate runs, deletes, bucket-scoped
-rewrites, and crash recovery of an interrupted bucket swap."""
+rewrites, bounded disk use, and targets in the older rename layout
+(including a bucket an interrupted swap left behind)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import shutil
 import pytest
 from pyspark.sql import Row
 
+from diabetes_etl_spark.sources import manifest
 from diabetes_etl_spark.streaming.cdc import (
     apply_changes_scd1,
     read_target,
@@ -36,7 +38,7 @@ def _write_changes(spark, src_dir: str, name: str, rows) -> None:
     shutil.rmtree(tmp)
 
 
-def _run(spark, base: str, n_buckets: int = 4, commit_mode: str = "rename"):
+def _run(spark, base: str, n_buckets: int = 4):
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -51,12 +53,27 @@ def _run(spark, base: str, n_buckets: int = 4, commit_mode: str = "rename"):
         delete_expr="op = 'delete'",
         n_buckets=n_buckets,
         checkpoint=os.path.join(base, "ck"),
-        commit_mode=commit_mode,
     )
 
 
 def _state(df) -> dict:
     return {r.user_id: (r.seq, r.value) for r in df.collect()}
+
+
+def _rename_layout(spark, target: str, rows, n_buckets: int = 4) -> None:
+    """Hand-build a target in the rename layout older versions wrote:
+    one ``__bucket=<b>/`` dir per bucket at the target root, rows
+    carrying their ``__deleted`` tombstone flag."""
+    from pyspark.sql import functions as F
+
+    spark.createDataFrame(rows, SCHEMA + ", __deleted boolean").withColumn(
+        "__bucket",
+        F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).cast("int"),
+    ).write.partitionBy("__bucket").mode("overwrite").parquet(target)
+
+
+def _bucket_entries(target: str) -> dict:
+    return manifest.latest(target)[1]["buckets"]
 
 
 def test_upsert_latest_wins_and_late_rows_lose_across_runs(spark, tmp_path):
@@ -108,20 +125,15 @@ def test_merge_touches_only_named_buckets(spark, tmp_path):
     )
     _run(spark, base)
     target = os.path.join(base, "target")
-    before = {
-        d: sorted(os.listdir(os.path.join(target, d)))
-        for d in os.listdir(target)
-    }
+    before = _bucket_entries(target)
     assert len(before) >= 2  # several buckets exist
 
     # one more change for a single key: only that key's bucket may change
     _write_changes(spark, src, "b2", [(0, 2, "v0b", "upsert")])
     final = _run(spark, base)
-    after = {
-        d: sorted(os.listdir(os.path.join(target, d)))
-        for d in os.listdir(target)
-    }
-    changed = [d for d in before if before[d] != after.get(d)]
+    after = _bucket_entries(target)
+    assert set(after) == set(before)
+    changed = [b for b in before if before[b] != after[b]]
     assert len(changed) == 1
     assert _state(final)[0] == (2, "v0b")
 
@@ -130,20 +142,21 @@ def test_crash_recovery_restores_interrupted_swap(spark, tmp_path):
     base = str(tmp_path)
     src = os.path.join(base, "src")
     os.makedirs(src)
-    _write_changes(spark, src, "b1", [(1, 10, "a", "upsert")])
-    final = _run(spark, base)
     target = os.path.join(base, "target")
+    _rename_layout(spark, target, [(1, 10, "a", "upsert", False)])
     bucket = next(
         d for d in os.listdir(target) if d.startswith("__bucket=")
     )
     live = os.path.join(target, bucket)
-    # simulate a crash inside the swap window: live dir renamed to the
-    # backup, replacement never arrived
+    # a rename-layout target left by a crash inside the swap window:
+    # live dir renamed to the backup, replacement never arrived
     os.rename(live, live + "__pre_swap")
     recovered = read_target(spark, target)
     assert _state(recovered) == {1: (10, "a")}
     assert os.path.isdir(live) and not os.path.isdir(live + "__pre_swap")
-    assert _state(final) == {1: (10, "a")}
+    # and the restored bucket merges like any other
+    _write_changes(spark, src, "b1", [(1, 20, "b", "upsert")])
+    assert _state(_run(spark, base)) == {1: (20, "b")}
 
 
 def test_empty_target_reads_none(spark, tmp_path):
@@ -342,7 +355,6 @@ def test_pipeline_apply_changes_manifest_mode(spark, tmp_path):
         keys=["user_id"],
         sequence_by="seq",
         apply_as_deletes="op = 'delete'",
-        commit_mode="manifest",
     )
     out = PipelineRunner(p, spark, mode="warehouse", warehouse=wh).run(
         targets=["user_state_m"]
@@ -441,7 +453,7 @@ def test_manifest_mode_latest_wins_delete_and_late_rows(spark, tmp_path):
         spark, src, "b1",
         [(1, 10, "a", "upsert"), (1, 20, "b", "upsert"), (2, 5, "x", "upsert")],
     )
-    got = _state(_run(spark, base, commit_mode="manifest"))
+    got = _state(_run(spark, base))
     assert got == {1: (20, "b"), 2: (5, "x")}
     target = os.path.join(base, "target")
     assert os.path.isdir(os.path.join(target, "_manifests"))
@@ -451,7 +463,6 @@ def test_manifest_mode_latest_wins_delete_and_late_rows(spark, tmp_path):
         spark, src, "b2",
         [(1, 15, "late", "upsert"), (2, 30, None, "delete")],
     )
-    # second run auto-detects manifest mode even without the flag
     got = _state(_run(spark, base))
     assert got == {1: (20, "b")}
     # and a late upsert older than the applied delete stays dead
@@ -462,14 +473,15 @@ def test_manifest_mode_latest_wins_delete_and_late_rows(spark, tmp_path):
 def test_manifest_crash_before_publish_leaves_state_intact(spark, tmp_path):
     """The crash window of the manifest protocol: data files written,
     manifest never published.  Readers must still see the previous
-    state; gc_orphan_data sweeps the garbage after the grace window."""
-    from diabetes_etl_spark.streaming.cdc import gc_orphan_data
+    state; the retention sweep reaps the garbage after the grace
+    period."""
+    from diabetes_etl_spark.streaming.cdc import _sweep
 
     base = str(tmp_path)
     src = os.path.join(base, "src")
     os.makedirs(src)
     _write_changes(spark, src, "b1", [(1, 10, "a", "upsert")])
-    _run(spark, base, commit_mode="manifest")
+    _run(spark, base)
     target = os.path.join(base, "target")
 
     # simulate a writer that died between data write and manifest
@@ -483,10 +495,12 @@ def test_manifest_crash_before_publish_leaves_state_intact(spark, tmp_path):
     assert _state(
         read_target(spark, target).filter("NOT __deleted")
     ) == {1: (10, "a")}  # ghost invisible
-    # inside the grace window the orphan is protected (in-flight write)
-    assert gc_orphan_data(target, grace_seconds=3600) == 0
+    # inside the grace period the orphan is protected (in-flight write)
+    assert _sweep(target) == 0
     assert os.path.isdir(orphan)
-    assert gc_orphan_data(target, grace_seconds=0) == 1
+    old = os.path.getmtime(orphan) - manifest.GRACE_SECONDS - 60
+    os.utime(orphan, (old, old))
+    assert _sweep(target) == 1
     assert not os.path.exists(orphan)
     # committed data untouched
     assert _state(
@@ -525,7 +539,7 @@ def test_manifest_migration_absorbs_legacy_layout(spark, tmp_path):
 
     # late row for key 1 (loses to legacy seq 10) + fresh key 1 update
     _write_changes(spark, src, "b1", [(1, 20, "b", "upsert")])
-    got = _state(_run(spark, base, commit_mode="manifest"))
+    got = _state(_run(spark, base))
     assert got == {1: (20, "b"), 2: (40, "keep")}
     # key 2's bucket was not named by the batch: still legacy, in place
     assert os.path.isdir(untouched_dir)
@@ -545,16 +559,14 @@ def test_manifest_migration_absorbs_legacy_layout(spark, tmp_path):
 
 
 def test_manifest_concurrent_commit_detected(tmp_path):
-    from diabetes_etl_spark.streaming.cdc import (
-        ConcurrentCommitError,
-        _publish_manifest,
-    )
+    from diabetes_etl_spark.sources.manifest import ConcurrentCommitError
 
     target = str(tmp_path / "t")
-    _publish_manifest(target, 1, {"0": {"files": []}})
+    doc = {"buckets": {"0": {"files": []}}}
+    manifest.publish(target, 1, doc)
     with pytest.raises(ConcurrentCommitError, match="v1 already committed"):
-        _publish_manifest(target, 1, {"0": {"files": []}})
-    _publish_manifest(target, 2, {"0": {"files": []}})  # next version fine
+        manifest.publish(target, 1, doc)
+    manifest.publish(target, 2, doc)  # next version fine
 
 
 def test_truncated_manifest_falls_back_to_previous_version(spark, tmp_path):
@@ -564,7 +576,7 @@ def test_truncated_manifest_falls_back_to_previous_version(spark, tmp_path):
     src = os.path.join(base, "src")
     os.makedirs(src)
     _write_changes(spark, src, "b1", [(1, 10, "a", "upsert")])
-    _run(spark, base, commit_mode="manifest")
+    _run(spark, base)
     target = os.path.join(base, "target")
     mdir = os.path.join(target, "_manifests")
     with open(os.path.join(mdir, f"v{2:020d}.json"), "w") as fh:
@@ -572,25 +584,6 @@ def test_truncated_manifest_falls_back_to_previous_version(spark, tmp_path):
     assert _state(
         read_target(spark, target).filter("NOT __deleted")
     ) == {1: (10, "a")}
-
-
-def test_stale_staging_reaped_only_for_dead_pids(spark, tmp_path):
-    import subprocess
-
-    base = str(tmp_path)
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    target = os.path.join(base, "target")
-    p = subprocess.Popen(["true"])
-    p.wait()
-    dead = os.path.join(base, f"target__merge_tmp.{p.pid}.deadc0de1234")
-    live = os.path.join(base, f"target__merge_tmp.{os.getpid()}.aaaa00001111")
-    os.makedirs(dead)
-    os.makedirs(live)
-    _write_changes(spark, src, "b1", [(1, 10, "a", "upsert")])
-    _run(spark, base)  # merge triggers recovery/reaping
-    assert not os.path.exists(dead)  # dead writer's staging swept
-    assert os.path.isdir(live)  # concurrent (alive) writer's kept
 
 
 def test_scd2_manifest_late_splice_and_vacuum_guard(spark, tmp_path):
@@ -617,7 +610,6 @@ def test_scd2_manifest_late_splice_and_vacuum_guard(spark, tmp_path):
             delete_expr="op = 'delete'",
             n_buckets=4,
             checkpoint=os.path.join(base, "ck2"),
-            commit_mode="manifest",
         )
 
     _write_changes(
@@ -650,7 +642,7 @@ def test_vacuum_on_manifest_target(spark, tmp_path):
             (3, 5, "live", "upsert"),
         ],
     )
-    final = _run(spark, base, commit_mode="manifest")
+    final = _run(spark, base)
     assert _state(final) == {3: (5, "live")}
     target = os.path.join(base, "target")
     assert vacuum_tombstones(spark, target, ("seq", 30)) == 1
@@ -689,3 +681,55 @@ def test_old_layout_target_without_deleted_column_still_merges(
     )
     got = _state(_run(spark, base))
     assert got == {1: (10, "a"), 2: (7, "x")}  # old row won; late lost
+
+
+def test_repeated_runs_keep_disk_bounded(spark, tmp_path):
+    """Every run ends with the retention sweep: five runs that each
+    rewrite the same key's bucket leave only the run dirs the newest
+    two manifests reference."""
+    base = str(tmp_path)
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    for i in range(5):
+        _write_changes(spark, src, f"b{i}", [(1, 10 + i, f"v{i}", "upsert")])
+        assert _state(_run(spark, base)) == {1: (10 + i, f"v{i}")}
+    target = os.path.join(base, "target")
+    assert len(os.listdir(os.path.join(target, "__data"))) <= 2
+    assert _state(
+        read_target(spark, target).filter("NOT __deleted")
+    ) == {1: (14, "v4")}
+
+
+def test_rename_layout_target_merges_and_upgrades(spark, tmp_path):
+    """A target in the rename layout older versions wrote (live rows
+    and tombstones in ``__bucket=<b>/`` dirs) merges with the full SCD1
+    contract, and its first commit references the untouched buckets'
+    dirs in place."""
+    base = str(tmp_path)
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    target = os.path.join(base, "target")
+    _rename_layout(
+        spark,
+        target,
+        [
+            (1, 10, "a", "upsert", False),
+            (2, 30, None, "delete", True),
+            (3, 5, "c", "upsert", False),
+        ],
+    )
+    dirs = {d for d in os.listdir(target) if d.startswith("__bucket=")}
+    _write_changes(
+        spark, src, "b1",
+        [
+            (1, 20, "b", "upsert"),  # newer: wins
+            (2, 25, "zombie", "upsert"),  # older than the tombstone: loses
+            (4, 1, "d", "upsert"),  # new key
+        ],
+    )
+    assert _state(_run(spark, base)) == {
+        1: (20, "b"), 3: (5, "c"), 4: (1, "d"),
+    }
+    kept = {e["dir"] for e in _bucket_entries(target).values() if "dir" in e}
+    assert kept <= dirs
+    assert all(os.path.isdir(os.path.join(target, d)) for d in kept)

@@ -208,3 +208,26 @@ def test_stream_admission_control_caps_offset_advance():
     r3 = VersionedStreamReader(base, {})
     assert r3.latestOffset() == {"version": 7}
     shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_offset_skips_torn_newest_manifest():
+    """A truncated newest manifest is not a commit: the stream reader
+    resolves the same latest version as the batch reader, so the torn
+    file never becomes an offset (planning it would crash)."""
+    import json
+
+    base = tempfile.mkdtemp(prefix="vds_torn_")
+    mdir = os.path.join(base, "_manifests")
+    os.makedirs(mdir)
+    for v in (1, 2):
+        with open(os.path.join(mdir, f"v{v:020d}.json"), "w") as f:
+            json.dump({"version": v, "files": [], "schema": "{}"}, f)
+    with open(os.path.join(mdir, f"v{3:020d}.json"), "w") as f:
+        f.write('{"version": 3, "fil')  # torn
+    from diabetes_etl_spark.sources.vds import VersionedStreamReader
+
+    r = VersionedStreamReader(base, {})
+    end = r.latestOffset()
+    assert end == {"version": 2}
+    assert r.partitions(r.initialOffset(), end) == []
+    shutil.rmtree(base, ignore_errors=True)

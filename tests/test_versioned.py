@@ -7,12 +7,17 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from diabetes_etl_spark.sources.manifest import (
+    GRACE_SECONDS,
+    ConcurrentCommitError,
+    log_dir,
+)
 from diabetes_etl_spark.sources.versioned import VersionedTable
-from diabetes_etl_spark.streaming.cdc import ConcurrentCommitError
 
 
 @pytest.fixture
@@ -87,7 +92,7 @@ def test_torn_manifest_ignored(spark, vt):
     """A truncated newest manifest (writer died mid-PUT without the
     atomic link) must be skipped — previous version stays committed."""
     vt.overwrite(_df(spark, 0, 10))
-    mdir = vt._mdir()
+    mdir = log_dir(vt.path)
     with open(os.path.join(mdir, f"v{2:020d}.json"), "w") as fh:
         fh.write('{"version": 2, "files": [')  # torn
     assert vt.read().count() == 10
@@ -151,6 +156,19 @@ def test_vacuum_drops_unreferenced_data_only(spark, vt):
     # retained data intact after a second (idempotent) vacuum
     assert vt.vacuum(keep_last=1) == 0
     assert vt.read().count() == 30
+
+
+def test_vacuum_keeps_in_flight_writers_data(spark, vt):
+    """A commit's data lands before its manifest: vacuum must not reap
+    a fresh, never-referenced run dir, or the commit would publish a
+    version pointing at deleted files."""
+    vt.overwrite(_df(spark, 0, 10))
+    vt.overwrite(_df(spark, 0, 20))
+    files = vt._write_data(_df(spark, 20, 25))  # in flight: unpublished
+    assert vt.vacuum(keep_last=1) == 1  # only v1's superseded data
+    ver, doc = vt._latest()
+    vt._commit("append", doc["files"] + files, ver, doc["schema"])
+    assert vt.read().count() == 25
 
 
 def test_empty_table_read_errors(spark, tmp_path):
@@ -380,10 +398,14 @@ def test_compact_crash_before_publish_leaves_table_unchanged(
     ver2, doc2 = vt._latest()
     assert (ver2, doc2["files"]) == (ver, doc["files"])
     assert vt.read().count() == 80
-    # the orphaned compaction output is reaped by the next vacuum
+    # the orphaned compaction output is reaped by the first vacuum
+    # after the grace period
     data_dirs = os.listdir(os.path.join(vt.path, "_data"))
     referenced = {e["path"].split("/")[1] for e in doc2["files"]}
     assert set(data_dirs) - referenced  # orphan exists
+    old = time.time() - GRACE_SECONDS - 60
+    for rid in set(data_dirs) - referenced:
+        os.utime(os.path.join(vt.path, "_data", rid), (old, old))
     vt.vacuum(keep_last=10)
     data_dirs = set(os.listdir(os.path.join(vt.path, "_data")))
     assert not data_dirs - referenced
