@@ -24,10 +24,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from diabetes_etl_spark.context import RunContext
 from diabetes_etl_spark.diabetes.schema import FALLBACK_MEDIANS
 
 IMPUTE_COLS = ("Glucose", "BloodPressure", "SkinThickness", "Insulin", "BMI")
-_FLAG_NAMES = {
+FLAG_NAMES = {
     "Glucose": "glucose_imputed",
     "BloodPressure": "bp_imputed",
     "SkinThickness": "skin_imputed",
@@ -58,7 +59,7 @@ def impute_and_flag(df: DataFrame, medians: DataFrame) -> DataFrame:
     """Median-replace zeros in the five measures; flags from raw values."""
     out = df.crossJoin(F.broadcast(medians))
     for c in IMPUTE_COLS:
-        out = out.withColumn(_FLAG_NAMES[c], F.col(c) == 0).withColumn(
+        out = out.withColumn(FLAG_NAMES[c], F.col(c) == 0).withColumn(
             c,
             F.when(F.col(c) == 0, F.col(f"__med_{c}")).otherwise(
                 F.col(c).cast("double")
@@ -145,7 +146,7 @@ def data_quality_score() -> Column:
     steps of 20 (reference: pipeline:248-256; meaningful here because
     flags are computed flag-first, see module docstring)."""
     total = None
-    for flag in _FLAG_NAMES.values():
+    for flag in FLAG_NAMES.values():
         piece = F.when(F.col(flag), 0).otherwise(20)
         total = piece if total is None else total + piece
     return total.cast("int")
@@ -166,4 +167,14 @@ def engineer_features(df: DataFrame) -> DataFrame:
             "risk_level": risk_level(),
             "data_quality_score": data_quality_score(),
         }
+    )
+
+
+def silver(bronze: DataFrame, ctx: RunContext) -> DataFrame:
+    """The silver table (reference: pipeline:101-259): one-pass nonzero
+    medians, flag-first imputation, the transformation timestamp, then
+    the feature columns."""
+    cleaned = impute_and_flag(bronze, nonzero_medians(bronze))
+    return engineer_features(
+        cleaned.withColumn("transformation_timestamp", ctx.now())
     )

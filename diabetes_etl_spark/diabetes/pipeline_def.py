@@ -2,6 +2,14 @@
 behavioral parity with all 14 reference datasets (SURVEY.md §1.4;
 reference: src/diabetes_etl_pipeline.py throughout, cited per table).
 
+The 8 gold tables are module-level builders, each
+``(silver_or_bronze, ctx) -> DataFrame``.  The pipeline's tables call
+them, and so do the oracle-paired ``diab_*`` queries
+(plans/diabetesplans.py), which run them over a synthetic bronze and
+compare the result with DuckDB: the code the gate checks is the code
+the pipeline runs.  The dashboard views select ``DASHBOARD_VIEWS``
+columns from the golds; the dashboard SQL is in dashboard.py.
+
 Differences from the literal reference, by design (SURVEY §4):
 - flag-first imputation (features.py docstring) — so
   `data_quality_score`, `*_imputed_count` and `imputation_rate` are
@@ -9,18 +17,339 @@ Differences from the literal reference, by design (SURVEY §4):
 - imputed measures are DOUBLE deterministically;
 - medians computed in-plan (no driver collect round-trips);
 - clock/run-id injectable via RunContext for reproducible outputs.
+
+Exact forms, so a gold is bit-identical however its rows are
+partitioned (functions/numeric.py):
+- every rounded average is an exact decimal fold (`dec_avg`) rather
+  than `avg`.  The measure fold is at scale 10, which holds the real
+  data (1-3 decimals, medians of them) and the synthetic gate data
+  (1/16ths, medians in 1/32nds, the pedigree function in 1/1024ths)
+  exactly, so it changes no gate value;
+- `avg_risk_score` folds the arbitrary-double `risk_score` at scale 15,
+  and `stddev_risk_score` is the sample stddev from exact decimal sums
+  of x and x² (NULL for a one-row group, as `stddev` is);
+- the four Pearson r come from sums over each cell (rounded to 6
+  decimals), not from Spark's order-sensitive `corr` merge.  A pair is
+  NULL unless both features vary in the cell (`min < max`, exact):
+  `corr` raises DIVIDE_BY_ZERO under ANSI on a constant feature, and the
+  sums formula leaves rounding residue (e.g. 1e-06) where r is
+  undefined.
+
+Decisions where the reference leaves room (SURVEY §2.11, §4):
+- audit columns are TIMESTAMP/DATE from the RunContext: `created_at`,
+  `pipeline_completion_time`, `next_dashboard_refresh_due` and
+  `validation_timestamp` are timestamps; `latest_ingestion`,
+  `latest_transformation` (the max of silver's
+  `transformation_timestamp`), `first_record_time` and
+  `last_record_time` are timestamps, not formatted strings;
+- `processing_duration_minutes` uses `unix_timestamp`;
+- the reference's ORDER BY on demographics and risk analysis belongs
+  to the pipeline tables only; the builders are unordered, so a query
+  over a builder pays no sort.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.context import REAL, RunContext
 from diabetes_etl_spark.diabetes import features as FE
 from diabetes_etl_spark.diabetes.schema import DIABETES_SCHEMA
+from diabetes_etl_spark.functions.numeric import dec_avg, dec_sum
 from diabetes_etl_spark.pipeline.registry import Pipeline
 from diabetes_etl_spark.streaming.ingest import incremental_file_ingest
+
+DEC_MEASURE = dict(scale=10, precision=18)  # measure averages
+DEC_RS = dict(scale=15, precision=27)  # risk_score sum fold
+DEC_RS2 = dict(scale=18, precision=29)  # risk_score^2 sum fold
+
+CORR_PAIRS = (
+    ("Glucose", "BMI", "glucose_bmi_corr"),
+    ("Age", "Pregnancies", "age_pregnancies_corr"),
+    ("BloodPressure", "BMI", "bp_bmi_corr"),
+    ("Insulin", "Glucose", "insulin_glucose_corr"),
+)
+
+# the 3 dashboard views (reference: pipeline:398-444): name -> (gold, columns)
+DASHBOARD_VIEWS = {
+    "v_demographics_dashboard": (
+        "diabetes_demographics_summary",
+        ("age_group", "bmi_category", "pregnancy_risk", "patient_count",
+         "diabetes_rate", "avg_risk_score", "avg_age", "avg_bmi",
+         "avg_glucose", "created_at"),
+    ),
+    "v_risk_analysis_dashboard": (
+        "diabetes_risk_analysis",
+        ("risk_level", "glucose_level", "bp_category", "patient_count",
+         "diabetes_rate", "avg_risk_score", "avg_pedigree_function",
+         "avg_insulin", "created_at"),
+    ),
+    "v_executive_summary_dashboard": (
+        "diabetes_executive_summary",
+        ("total_patients", "diabetes_cases", "diabetes_percentage",
+         "high_risk_patients", "high_risk_percentage", "avg_age",
+         "avg_risk_score", "data_quality_score", "summary_date",
+         "created_at"),
+    ),
+}
+
+
+def _avg(c: str, places: int) -> Column:
+    return F.round(dec_avg(F.col(c), **DEC_MEASURE), places)
+
+
+def _avg_risk() -> Column:
+    return F.round(dec_avg(F.col("risk_score"), **DEC_RS), 3)
+
+
+def _count_if(cond: Column) -> Column:
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _pct(part: str, whole: str) -> Column:
+    return F.round(
+        F.col(part).cast("double") / F.col(whole).cast("double") * 100, 2
+    )
+
+
+def demographics_summary(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:268-301"""
+    return (
+        silver.groupBy("age_group", "bmi_category", "pregnancy_risk")
+        .agg(
+            F.count("*").alias("patient_count"),
+            F.sum(F.col("Outcome").cast("int")).alias("diabetes_cases"),
+            _avg("Age", 2).alias("avg_age"),
+            _avg("BMI", 2).alias("avg_bmi"),
+            _avg("Glucose", 2).alias("avg_glucose"),
+            _avg("BloodPressure", 2).alias("avg_blood_pressure"),
+            _avg_risk().alias("avg_risk_score"),
+            _avg("data_quality_score", 2).alias("avg_data_quality"),
+            F.min("Age").alias("min_age"),
+            F.max("Age").alias("max_age"),
+        )
+        .withColumn("diabetes_rate", _pct("diabetes_cases", "patient_count"))
+        .withColumn("created_at", ctx.now())
+    )
+
+
+def risk_analysis(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:303-342"""
+    rs = F.col("risk_score")
+    n, sx = F.count(rs), dec_sum(rs, **DEC_RS)
+    sxx = dec_sum(rs * rs, **DEC_RS2)
+    var = F.greatest((sxx - sx * sx / n) / (n - 1), F.lit(0.0))
+    g = silver.groupBy("risk_level", "glucose_level", "bp_category").agg(
+        F.count("*").alias("patient_count"),
+        F.sum(F.col("Outcome").cast("int")).alias("diabetes_cases"),
+        _avg_risk().alias("avg_risk_score"),
+        F.when(n > 1, F.round(F.sqrt(var), 3)).alias("stddev_risk_score"),
+        _avg("DiabetesPedigreeFunction", 3).alias("avg_pedigree_function"),
+        _avg("Insulin", 2).alias("avg_insulin"),
+        _avg("SkinThickness", 2).alias("avg_skin_thickness"),
+        F.countDistinct("age_group").alias("age_groups_represented"),
+        _avg("data_quality_score", 2).alias("avg_data_quality"),
+    )
+    dev = F.coalesce(F.col("stddev_risk_score"), F.lit(0.0))
+    return (
+        g.withColumn("diabetes_rate", _pct("diabetes_cases", "patient_count"))
+        .withColumn(
+            "risk_score_range",
+            F.concat(
+                F.format_number(F.col("avg_risk_score") - dev, 3),
+                F.lit(" - "),
+                F.format_number(F.col("avg_risk_score") + dev, 3),
+            ),
+        )
+        .withColumn("created_at", ctx.now())
+    )
+
+
+def executive_summary(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:344-389 (single wide KPI row)"""
+    m = silver.agg(
+        F.count("*").alias("total_patients"),
+        _count_if(F.col("Outcome") == 1).alias("diabetes_cases"),
+        _count_if(F.col("risk_level") == "High").alias("high_risk_patients"),
+        _avg("Age", 1).alias("avg_age"),
+        _avg_risk().alias("avg_risk_score"),
+        _avg("data_quality_score", 1).alias("data_quality_score"),
+    )
+    return m.select(
+        F.lit("summary").alias("summary_type"),
+        F.col("total_patients").cast("double").alias("total_patients"),
+        F.col("diabetes_cases").cast("double").alias("diabetes_cases"),
+        _pct("diabetes_cases", "total_patients").alias("diabetes_percentage"),
+        F.col("high_risk_patients").cast("double").alias("high_risk_patients"),
+        _pct("high_risk_patients", "total_patients").alias(
+            "high_risk_percentage"
+        ),
+        "avg_age",
+        "avg_risk_score",
+        "data_quality_score",
+        ctx.today().alias("summary_date"),
+        ctx.now().alias("created_at"),
+    )
+
+
+def data_quality_metrics(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:453-489 (per-file imputation monitoring)"""
+    counts = [f"{flag}_count" for flag in FE.FLAG_NAMES.values()]
+    g = (
+        silver.withColumn("processing_date", ctx.today())
+        .groupBy("processing_date", "source_file")
+        .agg(
+            F.count("*").alias("total_records"),
+            *[
+                _count_if(F.col(flag)).alias(f"{flag}_count")
+                for flag in FE.FLAG_NAMES.values()
+            ],
+            _avg("data_quality_score", 2).alias("avg_data_quality_score"),
+            F.min("data_quality_score").alias("min_data_quality_score"),
+            F.max("data_quality_score").alias("max_data_quality_score"),
+        )
+    )
+    total = reduce(lambda a, b: a + b, [F.col(c) for c in counts])
+    return (
+        g.withColumn("total_imputed_fields", total.cast("int"))
+        .withColumn(
+            "imputation_rate",
+            F.round(
+                F.col("total_imputed_fields").cast("double")
+                / (F.col("total_records").cast("double") * 5)
+                * 100,
+                2,
+            ),
+        )
+        .withColumn("created_at", ctx.now())
+    )
+
+
+def dashboard_refresh_log(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:498-534 (pipeline-run audit row)"""
+    stats = silver.agg(
+        F.count("*").alias("total_records_processed"),
+        F.countDistinct("source_file").alias("files_processed"),
+        F.max("ingestion_timestamp").alias("latest_ingestion"),
+        F.max("transformation_timestamp").alias("latest_transformation"),
+        _avg("data_quality_score", 2).alias("overall_data_quality"),
+    )
+    return stats.withColumns(
+        {
+            "pipeline_run_id": ctx.run_id(),
+            "pipeline_completion_time": ctx.now(),
+            "status": F.lit("COMPLETED"),
+            "next_dashboard_refresh_due": ctx.now(),
+            "refresh_priority": F.when(
+                F.col("overall_data_quality") < 80, "HIGH"
+            )
+            .when(F.col("total_records_processed") > 1000, "HIGH")
+            .otherwise("NORMAL"),
+        }
+    )
+
+
+def pipeline_health_metrics(bronze: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:543-580 (ingest throughput per hour and file)"""
+    g = (
+        bronze.withColumn(
+            "processing_hour",
+            F.date_format(F.col("ingestion_timestamp"), "yyyy-MM-dd HH"),
+        )
+        .groupBy("processing_hour", "file_name")
+        .agg(
+            F.count("*").alias("records_processed"),
+            F.countDistinct("source_file").alias("unique_files"),
+            F.min("ingestion_timestamp").alias("first_record_time"),
+            F.max("ingestion_timestamp").alias("last_record_time"),
+        )
+        .withColumn(
+            "processing_duration_minutes",
+            (
+                F.unix_timestamp("last_record_time")
+                - F.unix_timestamp("first_record_time")
+            )
+            / 60.0,
+        )
+    )
+    minutes = F.col("processing_duration_minutes")
+    return (
+        g.withColumn(
+            "records_per_minute",
+            F.when(
+                minutes > 0,
+                F.round(F.col("records_processed").cast("double") / minutes, 2),
+            ).otherwise(F.col("records_processed").cast("double")),
+        )
+        .withColumn(
+            "health_status",
+            F.when(F.col("records_processed") == 0, "ERROR")
+            .when(F.col("records_per_minute") < 10, "SLOW")
+            .otherwise("HEALTHY"),
+        )
+        .withColumn("created_at", ctx.now())
+    )
+
+
+def _pearson(x: str, y: str) -> Column:
+    """Pearson r of two columns over a group, from sums; NULL unless both
+    columns vary in the group."""
+    dx, dy = F.col(x).cast("double"), F.col(y).cast("double")
+    n = F.count(F.lit(1)).cast("double")
+    sx, sy = F.sum(dx), F.sum(dy)
+    num = n * F.sum(dx * dy) - sx * sy
+    vx = n * F.sum(dx * dx) - sx * sx
+    vy = n * F.sum(dy * dy) - sy * sy
+    varies = (F.min(x) < F.max(x)) & (F.min(y) < F.max(y))
+    return F.when(varies, F.round(num / (F.sqrt(vx) * F.sqrt(vy)), 6))
+
+
+def feature_correlation(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:589-622"""
+    g = silver.groupBy("age_group", "bmi_category").agg(
+        F.count("*").alias("sample_size"),
+        *[_pearson(x, y).alias(name) for x, y, name in CORR_PAIRS],
+        _avg("Outcome", 3).alias("diabetes_prevalence"),
+    )
+    r = F.abs(F.col("glucose_bmi_corr"))
+    return g.withColumn(
+        "correlation_strength",
+        F.when(r > 0.7, "Strong").when(r > 0.4, "Moderate").otherwise("Weak"),
+    ).withColumn("created_at", ctx.now())
+
+
+def data_validation_summary(silver: DataFrame, ctx: RunContext) -> DataFrame:
+    """reference: pipeline:631-672 (validity rates, single row)"""
+    rules = {
+        "age": (F.col("Age") > 0) & (F.col("Age") < 120),
+        "outcome": F.col("Outcome").isin([0, 1]),
+        "pregnancies": F.col("Pregnancies") >= 0,
+        "glucose": F.col("Glucose") > 0,
+        "bmi": F.col("BMI") > 0,
+    }
+    v = silver.agg(
+        F.count("*").alias("total_records"),
+        *[_count_if(c).alias(f"valid_{k}_count") for k, c in rules.items()],
+    )
+    v = v.withColumns(
+        {
+            f"{k}_validity_rate": _pct(f"valid_{k}_count", "total_records")
+            for k in rules
+        }
+    )
+    rates = reduce(
+        lambda a, b: a + b, [F.col(f"{k}_validity_rate") for k in rules]
+    )
+    return v.withColumns(
+        {
+            "overall_data_quality": F.round(rates / 5, 2),
+            "validation_timestamp": ctx.now(),
+            "validation_date": ctx.today(),
+        }
+    )
 
 
 def _audit_columns(df: DataFrame, ctx: RunContext) -> DataFrame:
@@ -99,13 +428,8 @@ def build_diabetes_pipeline(
         }
     )
     def diabetes_silver(c) -> DataFrame:
-        # reference: pipeline:101-259 (quirk decisions documented above)
-        bronze = c.read("diabetes_bronze_materialized")
-        medians = FE.nonzero_medians(bronze)
-        cleaned = FE.impute_and_flag(bronze, medians).withColumn(
-            "transformation_timestamp", ctx.now()
-        )
-        return FE.engineer_features(cleaned)
+        # reference: pipeline:101-259 (quirk decisions in features.py)
+        return FE.silver(c.read("diabetes_bronze_materialized"), ctx)
 
     @p.table(
         name="diabetes_demographics_summary",
@@ -113,33 +437,8 @@ def build_diabetes_pipeline(
         table_properties=_props("gold"),
     )
     def diabetes_demographics_summary(c) -> DataFrame:
-        # reference: pipeline:268-301
-        s = c.read("diabetes_silver")
-        return (
-            s.groupBy("age_group", "bmi_category", "pregnancy_risk")
-            .agg(
-                F.count("*").alias("patient_count"),
-                F.sum(F.col("Outcome").cast("int")).alias("diabetes_cases"),
-                F.round(F.avg("Age"), 2).alias("avg_age"),
-                F.round(F.avg("BMI"), 2).alias("avg_bmi"),
-                F.round(F.avg("Glucose"), 2).alias("avg_glucose"),
-                F.round(F.avg("BloodPressure"), 2).alias("avg_blood_pressure"),
-                F.round(F.avg("risk_score"), 3).alias("avg_risk_score"),
-                F.round(F.avg("data_quality_score"), 2).alias("avg_data_quality"),
-                F.min("Age").alias("min_age"),
-                F.max("Age").alias("max_age"),
-            )
-            .withColumn(
-                "diabetes_rate",
-                F.round(
-                    F.col("diabetes_cases").cast("double")
-                    / F.col("patient_count").cast("double")
-                    * 100,
-                    2,
-                ),
-            )
-            .withColumn("created_at", ctx.now())
-            .orderBy("age_group", "bmi_category", "pregnancy_risk")
+        return demographics_summary(c.read("diabetes_silver"), ctx).orderBy(
+            "age_group", "bmi_category", "pregnancy_risk"
         )
 
     @p.table(
@@ -148,50 +447,8 @@ def build_diabetes_pipeline(
         table_properties=_props("gold"),
     )
     def diabetes_risk_analysis(c) -> DataFrame:
-        # reference: pipeline:303-342
-        s = c.read("diabetes_silver")
-        return (
-            s.groupBy("risk_level", "glucose_level", "bp_category")
-            .agg(
-                F.count("*").alias("patient_count"),
-                F.sum(F.col("Outcome").cast("int")).alias("diabetes_cases"),
-                F.round(F.avg("risk_score"), 3).alias("avg_risk_score"),
-                F.round(F.stddev("risk_score"), 3).alias("stddev_risk_score"),
-                F.round(F.avg("DiabetesPedigreeFunction"), 3).alias(
-                    "avg_pedigree_function"
-                ),
-                F.round(F.avg("Insulin"), 2).alias("avg_insulin"),
-                F.round(F.avg("SkinThickness"), 2).alias("avg_skin_thickness"),
-                F.countDistinct("age_group").alias("age_groups_represented"),
-                F.round(F.avg("data_quality_score"), 2).alias("avg_data_quality"),
-            )
-            .withColumn(
-                "diabetes_rate",
-                F.round(
-                    F.col("diabetes_cases").cast("double")
-                    / F.col("patient_count").cast("double")
-                    * 100,
-                    2,
-                ),
-            )
-            .withColumn(
-                "risk_score_range",
-                F.concat(
-                    F.format_number(
-                        F.col("avg_risk_score")
-                        - F.coalesce(F.col("stddev_risk_score"), F.lit(0.0)),
-                        3,
-                    ),
-                    F.lit(" - "),
-                    F.format_number(
-                        F.col("avg_risk_score")
-                        + F.coalesce(F.col("stddev_risk_score"), F.lit(0.0)),
-                        3,
-                    ),
-                ),
-            )
-            .withColumn("created_at", ctx.now())
-            .orderBy("risk_level", "glucose_level", "bp_category")
+        return risk_analysis(c.read("diabetes_silver"), ctx).orderBy(
+            "risk_level", "glucose_level", "bp_category"
         )
 
     @p.table(
@@ -200,48 +457,7 @@ def build_diabetes_pipeline(
         table_properties=_props("gold"),
     )
     def diabetes_executive_summary(c) -> DataFrame:
-        # reference: pipeline:344-389
-        s = c.read("diabetes_silver")
-        metrics = s.agg(
-            F.count("*").alias("total_patients"),
-            F.sum(F.when(F.col("Outcome") == 1, 1).otherwise(0)).alias(
-                "diabetes_cases"
-            ),
-            F.sum(F.when(F.col("risk_level") == "High", 1).otherwise(0)).alias(
-                "high_risk_patients"
-            ),
-            F.round(F.avg("Age"), 1).alias("avg_age"),
-            F.round(F.avg("risk_score"), 3).alias("avg_risk_score"),
-            F.round(F.avg("data_quality_score"), 1).alias("data_quality_score"),
-        ).withColumns(
-            {
-                "diabetes_percentage": F.round(
-                    F.col("diabetes_cases").cast("double")
-                    / F.col("total_patients").cast("double")
-                    * 100,
-                    2,
-                ),
-                "high_risk_percentage": F.round(
-                    F.col("high_risk_patients").cast("double")
-                    / F.col("total_patients").cast("double")
-                    * 100,
-                    2,
-                ),
-            }
-        )
-        return metrics.select(
-            F.lit("summary").alias("summary_type"),
-            F.col("total_patients").cast("double").alias("total_patients"),
-            F.col("diabetes_cases").cast("double").alias("diabetes_cases"),
-            "diabetes_percentage",
-            F.col("high_risk_patients").cast("double").alias("high_risk_patients"),
-            "high_risk_percentage",
-            "avg_age",
-            "avg_risk_score",
-            "data_quality_score",
-            ctx.today().alias("summary_date"),
-            ctx.now().alias("created_at"),
-        )
+        return executive_summary(c.read("diabetes_silver"), ctx)
 
     @p.table(
         name="diabetes_data_quality_metrics",
@@ -252,131 +468,23 @@ def build_diabetes_pipeline(
         partition_by=("processing_date",),
     )
     def diabetes_data_quality_metrics(c) -> DataFrame:
-        # reference: pipeline:453-489
-        s = c.read("diabetes_silver")
-        return (
-            s.withColumn("processing_date", ctx.today())
-            .groupBy("processing_date", "source_file")
-            .agg(
-                F.count("*").alias("total_records"),
-                F.sum(F.when(F.col("glucose_imputed"), 1).otherwise(0)).alias(
-                    "glucose_imputed_count"
-                ),
-                F.sum(F.when(F.col("bp_imputed"), 1).otherwise(0)).alias(
-                    "bp_imputed_count"
-                ),
-                F.sum(F.when(F.col("skin_imputed"), 1).otherwise(0)).alias(
-                    "skin_imputed_count"
-                ),
-                F.sum(F.when(F.col("insulin_imputed"), 1).otherwise(0)).alias(
-                    "insulin_imputed_count"
-                ),
-                F.sum(F.when(F.col("bmi_imputed"), 1).otherwise(0)).alias(
-                    "bmi_imputed_count"
-                ),
-                F.round(F.avg("data_quality_score"), 2).alias(
-                    "avg_data_quality_score"
-                ),
-                F.min("data_quality_score").alias("min_data_quality_score"),
-                F.max("data_quality_score").alias("max_data_quality_score"),
-            )
-            .withColumn(
-                "total_imputed_fields",
-                (
-                    F.col("glucose_imputed_count")
-                    + F.col("bp_imputed_count")
-                    + F.col("skin_imputed_count")
-                    + F.col("insulin_imputed_count")
-                    + F.col("bmi_imputed_count")
-                ).cast("int"),
-            )
-            .withColumn(
-                "imputation_rate",
-                F.round(
-                    F.col("total_imputed_fields").cast("double")
-                    / (F.col("total_records").cast("double") * 5)
-                    * 100,
-                    2,
-                ),
-            )
-            .withColumn("created_at", ctx.now())
-        )
+        return data_quality_metrics(c.read("diabetes_silver"), ctx)
 
     @p.table(
         name="dashboard_refresh_log",
         comment="Pipeline-run audit row for dashboard refresh automation",
         table_properties=_props("gold"),
     )
-    def dashboard_refresh_log(c) -> DataFrame:
-        # reference: pipeline:498-534
-        s = c.read("diabetes_silver")
-        stats = s.agg(
-            F.count("*").alias("total_records_processed"),
-            F.countDistinct("source_file").alias("files_processed"),
-            F.max("ingestion_timestamp").alias("latest_ingestion"),
-            F.max("transformation_timestamp").alias("latest_transformation"),
-            F.round(F.avg("data_quality_score"), 2).alias("overall_data_quality"),
-        )
-        return (
-            stats.withColumn("pipeline_run_id", ctx.run_id())
-            .withColumn("pipeline_completion_time", ctx.now())
-            .withColumn("status", F.lit("COMPLETED"))
-            .withColumn("next_dashboard_refresh_due", ctx.now())
-            .withColumn(
-                "refresh_priority",
-                F.when(F.col("overall_data_quality") < 80, "HIGH")
-                .when(F.col("total_records_processed") > 1000, "HIGH")
-                .otherwise("NORMAL"),
-            )
-        )
+    def dashboard_refresh_log_table(c) -> DataFrame:
+        return dashboard_refresh_log(c.read("diabetes_silver"), ctx)
 
     @p.table(
         name="pipeline_health_metrics",
         comment="Ingest throughput / health monitoring per hour and file",
         table_properties=_props("gold"),
     )
-    def pipeline_health_metrics(c) -> DataFrame:
-        # reference: pipeline:543-580
-        b = c.read("diabetes_bronze")
-        return (
-            b.withColumn(
-                "processing_hour",
-                F.date_format(F.col("ingestion_timestamp"), "yyyy-MM-dd HH"),
-            )
-            .groupBy("processing_hour", "file_name")
-            .agg(
-                F.count("*").alias("records_processed"),
-                F.countDistinct("source_file").alias("unique_files"),
-                F.min("ingestion_timestamp").alias("first_record_time"),
-                F.max("ingestion_timestamp").alias("last_record_time"),
-            )
-            .withColumn(
-                "processing_duration_minutes",
-                (
-                    F.unix_timestamp("last_record_time")
-                    - F.unix_timestamp("first_record_time")
-                )
-                / 60.0,
-            )
-            .withColumn(
-                "records_per_minute",
-                F.when(
-                    F.col("processing_duration_minutes") > 0,
-                    F.round(
-                        F.col("records_processed").cast("double")
-                        / F.col("processing_duration_minutes"),
-                        2,
-                    ),
-                ).otherwise(F.col("records_processed").cast("double")),
-            )
-            .withColumn(
-                "health_status",
-                F.when(F.col("records_processed") == 0, "ERROR")
-                .when(F.col("records_per_minute") < 10, "SLOW")
-                .otherwise("HEALTHY"),
-            )
-            .withColumn("created_at", ctx.now())
-        )
+    def pipeline_health_metrics_table(c) -> DataFrame:
+        return pipeline_health_metrics(c.read("diabetes_bronze"), ctx)
 
     @p.table(
         name="diabetes_feature_correlation",
@@ -384,112 +492,19 @@ def build_diabetes_pipeline(
         table_properties=_props("gold"),
     )
     def diabetes_feature_correlation(c) -> DataFrame:
-        # reference: pipeline:589-622
-        s = c.read("diabetes_silver")
-        return (
-            s.groupBy("age_group", "bmi_category")
-            .agg(
-                F.count("*").alias("sample_size"),
-                F.corr("Glucose", "BMI").alias("glucose_bmi_corr"),
-                F.corr("Age", "Pregnancies").alias("age_pregnancies_corr"),
-                F.corr("BloodPressure", "BMI").alias("bp_bmi_corr"),
-                F.corr("Insulin", "Glucose").alias("insulin_glucose_corr"),
-                F.round(F.avg("Outcome"), 3).alias("diabetes_prevalence"),
-            )
-            .withColumn(
-                "correlation_strength",
-                F.when(F.abs(F.col("glucose_bmi_corr")) > 0.7, "Strong")
-                .when(F.abs(F.col("glucose_bmi_corr")) > 0.4, "Moderate")
-                .otherwise("Weak"),
-            )
-            .withColumn("created_at", ctx.now())
-        )
+        return feature_correlation(c.read("diabetes_silver"), ctx)
 
     @p.table(
         name="data_validation_summary",
         comment="Validity-rate report across the quality rules",
         table_properties=_props("gold"),
     )
-    def data_validation_summary(c) -> DataFrame:
-        # reference: pipeline:631-672
-        s = c.read("diabetes_silver")
-        v = s.agg(
-            F.count("*").alias("total_records"),
-            F.sum(
-                F.when((F.col("Age") > 0) & (F.col("Age") < 120), 1).otherwise(0)
-            ).alias("valid_age_count"),
-            F.sum(F.when(F.col("Outcome").isin([0, 1]), 1).otherwise(0)).alias(
-                "valid_outcome_count"
-            ),
-            F.sum(F.when(F.col("Pregnancies") >= 0, 1).otherwise(0)).alias(
-                "valid_pregnancies_count"
-            ),
-            F.sum(F.when(F.col("Glucose") > 0, 1).otherwise(0)).alias(
-                "valid_glucose_count"
-            ),
-            F.sum(F.when(F.col("BMI") > 0, 1).otherwise(0)).alias(
-                "valid_bmi_count"
-            ),
-        )
-        for rate, cnt in [
-            ("age_validity_rate", "valid_age_count"),
-            ("outcome_validity_rate", "valid_outcome_count"),
-            ("pregnancies_validity_rate", "valid_pregnancies_count"),
-            ("glucose_validity_rate", "valid_glucose_count"),
-            ("bmi_validity_rate", "valid_bmi_count"),
-        ]:
-            v = v.withColumn(
-                rate,
-                F.round(
-                    F.col(cnt).cast("double")
-                    / F.col("total_records").cast("double")
-                    * 100,
-                    2,
-                ),
-            )
-        return (
-            v.withColumn(
-                "overall_data_quality",
-                F.round(
-                    (
-                        F.col("age_validity_rate")
-                        + F.col("outcome_validity_rate")
-                        + F.col("pregnancies_validity_rate")
-                        + F.col("glucose_validity_rate")
-                        + F.col("bmi_validity_rate")
-                    )
-                    / 5,
-                    2,
-                ),
-            )
-            .withColumn("validation_timestamp", ctx.now())
-            .withColumn("validation_date", ctx.today())
-        )
+    def data_validation_summary_table(c) -> DataFrame:
+        return data_validation_summary(c.read("diabetes_silver"), ctx)
 
-    # -- dashboard views (reference: pipeline:398-444) --------------------
-
-    @p.view(name="v_demographics_dashboard")
-    def v_demographics_dashboard(c) -> DataFrame:
-        return c.read("diabetes_demographics_summary").select(
-            "age_group", "bmi_category", "pregnancy_risk",
-            "patient_count", "diabetes_rate", "avg_risk_score",
-            "avg_age", "avg_bmi", "avg_glucose", "created_at",
-        )
-
-    @p.view(name="v_risk_analysis_dashboard")
-    def v_risk_analysis_dashboard(c) -> DataFrame:
-        return c.read("diabetes_risk_analysis").select(
-            "risk_level", "glucose_level", "bp_category",
-            "patient_count", "diabetes_rate", "avg_risk_score",
-            "avg_pedigree_function", "avg_insulin", "created_at",
-        )
-
-    @p.view(name="v_executive_summary_dashboard")
-    def v_executive_summary_dashboard(c) -> DataFrame:
-        return c.read("diabetes_executive_summary").select(
-            "total_patients", "diabetes_cases", "diabetes_percentage",
-            "high_risk_patients", "high_risk_percentage", "avg_age",
-            "avg_risk_score", "data_quality_score", "summary_date", "created_at",
+    for name, (gold, cols) in DASHBOARD_VIEWS.items():
+        p.view(name=name)(
+            lambda c, gold=gold, cols=cols: c.read(gold).select(*cols)
         )
 
     return p

@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.functions.numeric import dec_sum, sql_dec_sum
+from diabetes_etl_spark.functions.numeric import dec_sum, sql_dec_sum, sql_spark_round
 from diabetes_etl_spark.functions.stats import (
     exact_cov,
     exact_cov_num,
@@ -1230,9 +1230,7 @@ SELECT event_type, CAST(n AS BIGINT) AS n_rows,
 FROM moms ORDER BY event_type
 """
 
-from diabetes_etl_spark.plans.diabetesplans import _mimic_spark_round
-
-_TREND_ORACLE = _mimic_spark_round(_TREND_ORACLE)
+_TREND_ORACLE = sql_spark_round(_TREND_ORACLE)
 
 
 @register(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.plans.diabetesplans import _mimic_spark_round
+from diabetes_etl_spark.functions.numeric import sql_spark_round
 from diabetes_etl_spark.plans.registry import register
 from diabetes_etl_spark.sources.tables import load_table
 
@@ -92,9 +92,9 @@ v0 AS (
 # (BigDecimal.valueOf) while DuckDB rounds the true binary value —
 # they disagree when the shortest repr IS a midpoint (observed: 2 of
 # 192 v values off by 1e-9 before this rewrite).  The established
-# rewrite (plans/diabetesplans.py:_mimic_spark_round) reproduces
+# rewrite (functions/numeric.py:sql_spark_round) reproduces
 # Spark's string-first rounding inside the oracle.
-_PCA_ORACLE = _mimic_spark_round(_PCA_ORACLE)
+_PCA_ORACLE = sql_spark_round(_PCA_ORACLE)
 
 
 @register(

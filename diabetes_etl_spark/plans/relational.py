@@ -24,6 +24,7 @@ from diabetes_etl_spark.functions.numeric import (
     sql_dec_avg,
     sql_dec_cast,
     sql_dec_sum,
+    sql_spark_round,
 )
 from diabetes_etl_spark.plans.registry import register
 from diabetes_etl_spark.sources.tables import load_table, register_views
@@ -3240,9 +3241,7 @@ def _target_encoding_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _te_oracle() -> str:
     # enc lands at money magnitude (~1e5) where a 9dp round can hit a
     # representable tie; mirror Spark's string-first HALF_UP rounding.
-    from diabetes_etl_spark.plans.diabetesplans import _mimic_spark_round
-
-    return _mimic_spark_round(f"""
+    return sql_spark_round(f"""
 WITH cells AS (
   SELECT o_orderpriority AS category,
     ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
