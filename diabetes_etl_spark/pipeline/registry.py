@@ -8,8 +8,8 @@ provides the same declarative surface on stock PySpark:
 
 - ``Pipeline.table`` / ``Pipeline.view`` register named dataset builders;
 - ``ctx.read(name)`` inside a builder resolves an upstream dataset,
-  materializing it on demand (memoized) — demand-driven topological
-  execution without an explicit sort;
+  materializing it on first use (memoized), so the DAG needs no
+  explicit sort;
 - expectations (`expect_or_drop`, `expect_all`, `expect_or_fail`)
   mirror DLT data-quality semantics (reference: pipeline:54,109-113):
   drop → filter, warn → pass-through + side metrics, fail → assert;
@@ -17,10 +17,30 @@ provides the same declarative surface on stock PySpark:
   the correctness gate) and ``warehouse`` (parquet tables on disk,
   optionally partitioned — the production shape).
 
+Execution model (DLT runs independent flows at the same time):
+
+- one owner per dataset: the first thread to need a dataset builds it,
+  and any other thread that reads it waits for that build instead of
+  starting its own.  A wait that would close a cycle through other
+  threads' builds raises the same ``dependency cycle`` error as a
+  cycle inside one thread;
+- ``run()`` builds its targets from a thread pool with one thread per
+  session core, so once silver is written the golds and views that
+  read it are built side by side;
+- fail fast: each dataset's Spark jobs carry a job tag of their own.
+  The first error a target raises aborts the run: targets not yet
+  started are dropped, the jobs of the datasets still being built are
+  cancelled, and ``run()`` re-raises that first error (an
+  ``ExpectationFailed`` stays an ``ExpectationFailed``);
+- ``materialize(name)`` called directly builds ``name`` and its
+  upstreams serially in the calling thread.
+
 Scale notes: a dataset read by several downstream tables (the silver
 fan-out, reference pipeline:280-643) is cached once via ``cache=``;
 warehouse writes can partition by a date column so downstream scans
-partition-prune.
+partition-prune.  A written table is read back and registered with the
+schema the writer already holds, so neither step runs a
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -28,11 +48,15 @@ from __future__ import annotations
 import functools
 import operator
 import os
+import threading
+import uuid
 from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ExpectationFailed(RuntimeError):
@@ -141,6 +165,15 @@ class Dataset:
     partition_by: tuple[str, ...] = ()
     table_properties: dict[str, str] = field(default_factory=dict)
     cdc: CdcSpec | None = None
+
+
+@dataclass(eq=False)
+class _Build:
+    """One dataset build in flight: the thread that owns it and, once it
+    has failed, the error it raised (which its waiters re-raise)."""
+
+    owner: int
+    error: BaseException | None = None
 
 
 class Pipeline:
@@ -321,8 +354,13 @@ class PipelineRunner:
         )
         self.cache = set(cache)
         self.view_prefix = view_prefix
+        # One lock (with its condition) guards every field below that
+        # the threads building datasets share.
+        self._lock = threading.Condition()
         self._done: dict[str, DataFrame] = {}
-        self._in_progress: set[str] = set()
+        self._builds: dict[str, _Build] = {}  # dataset -> build in flight
+        self._waiting: dict[int, str] = {}  # thread -> dataset it waits on
+        self._error: BaseException | None = None  # first error of run()
         # single-pass warn metrics (pyspark Observation): observe nodes
         # attached in _apply_expectations land here as "pending"; once
         # a materialization ACTION has run over the observed plan they
@@ -331,28 +369,129 @@ class PipelineRunner:
         # pending one)
         self._pending_obs: dict[str, tuple] = {}
         self._observed: dict[str, tuple] = {}
+        self._cdc_tmp: str | None = None
+        # datasets being built by the current thread (in-thread cycles)
+        self._local = threading.local()
+        self._tag_prefix = f"pipeline-{uuid.uuid4().hex}-"
 
     # -- execution --------------------------------------------------------
 
     def run(self, targets: list[str] | None = None) -> dict[str, DataFrame]:
-        for name in targets or list(self.pipeline.datasets):
+        """Materialize ``targets`` (default: every dataset) concurrently,
+        from a pool with one thread per session core, and return every
+        dataset built so far.  The first error a target raises stops the
+        run (queued targets are dropped, in-flight jobs cancelled) and is
+        re-raised here."""
+        names = list(targets or self.pipeline.datasets)
+        workers = min(len(names), self.spark.sparkContext.defaultParallelism)
+        try:
+            with ThreadPoolExecutor(max(1, workers),
+                                    thread_name_prefix="pipeline") as pool:
+                futures = [pool.submit(self._run_target, n) for n in names]
+                wait(futures, return_when=FIRST_EXCEPTION)
+                pool.shutdown(cancel_futures=True)
+            # _run_target records every failure before its future fails
+            if self._error is not None:
+                raise self._error
+        finally:
+            self._error = None
+        with self._lock:
+            return dict(self._done)
+
+    def _run_target(self, name: str) -> None:
+        try:
             self.materialize(name)
-        return dict(self._done)
+        except BaseException as exc:
+            self._abort(exc)
+            raise
+
+    def _abort(self, exc: BaseException) -> None:
+        """Record the run's first error, wake every waiter so it re-raises
+        it, and cancel the Spark jobs of the datasets still in flight."""
+        with self._lock:
+            if self._error is not None:
+                return
+            self._error = exc
+            in_flight = list(self._builds)
+            self._lock.notify_all()
+        sc = self.spark.sparkContext
+        for name in in_flight:
+            sc.cancelJobsWithTag(self._tag_prefix + name)
 
     def materialize(self, name: str) -> DataFrame:
-        if name in self._done:
-            return self._done[name]
-        if name in self._in_progress:
+        """The dataset ``name``, built on first use and memoized.  If
+        another thread is building it, wait for that build (and re-raise
+        its error if it fails)."""
+        stack = self._local.__dict__.setdefault("stack", [])
+        if name in stack:
             raise ValueError(f"dependency cycle at dataset {name!r}")
         ds = self.pipeline.datasets.get(name)
         if ds is None:
             raise KeyError(f"unknown dataset {name!r}")
-        self._in_progress.add(name)
+        with self._lock:
+            while True:
+                if name in self._done:
+                    return self._done[name]
+                if self._error is not None:
+                    raise self._error
+                build = self._builds.get(name)
+                if build is None:
+                    break
+                self._await_build(name, build)
+            build = self._builds[name] = _Build(threading.get_ident())
+        stack.append(name)
+        try:
+            df = self._build(ds)
+        except BaseException as exc:
+            build.error = exc
+            raise
+        finally:
+            stack.pop()
+            with self._lock:
+                del self._builds[name]
+                if build.error is None:
+                    self._done[name] = df
+                self._lock.notify_all()
+        return df
+
+    def _await_build(self, name: str, build: _Build) -> None:
+        """Wait (holding ``_lock``) until another thread's ``build`` of
+        ``name`` ends or the run aborts.  First walk the wait-for chain
+        (owner -> the dataset it waits on -> that dataset's owner ...):
+        if it leads back to this thread, waiting would never end."""
+        me = threading.get_ident()
+        owner: int | None = build.owner
+        while owner is not None:
+            if owner == me:
+                raise ValueError(f"dependency cycle at dataset {name!r}")
+            waits_on = self._waiting.get(owner)
+            owner = (self._builds[waits_on].owner
+                     if waits_on in self._builds else None)
+        self._waiting[me] = name
+        try:
+            self._lock.wait_for(
+                lambda: self._builds.get(name) is not build
+                or self._error is not None
+            )
+        finally:
+            del self._waiting[me]
+        if build.error is not None:
+            raise build.error
+
+    def _build(self, ds: Dataset) -> DataFrame:
+        """Build ``ds`` with its dataset function and write it to its
+        sink, with every Spark job it starts carrying the dataset's job
+        tag."""
+        sc = self.spark.sparkContext
+        tag = self._tag_prefix + ds.name
+        sc.addJobTag(tag)
         try:
             df = ds.fn(PipelineContext(self))
             df = self._apply_expectations(ds, df)
+            if self._error is not None:  # the run aborted meanwhile
+                raise self._error
             if ds.kind == "view":
-                df.createOrReplaceTempView(self.view_prefix + name)
+                df.createOrReplaceTempView(self.view_prefix + ds.name)
             elif ds.cdc is not None:
                 df = self._materialize_cdc(ds, df)
             elif ds.streaming and df.isStreaming:
@@ -360,13 +499,12 @@ class PipelineRunner:
             elif self.mode == "warehouse":
                 df = self._materialize_batch(ds, df)
             else:
-                if name in self.cache:
+                if ds.name in self.cache:
                     df = df.cache()
-                df.createOrReplaceTempView(self.view_prefix + name)
-            self._done[name] = df
+                df.createOrReplaceTempView(self.view_prefix + ds.name)
             return df
         finally:
-            self._in_progress.discard(name)
+            sc.removeJobTag(tag)
 
     def _apply_expectations(self, ds: Dataset, df: DataFrame) -> DataFrame:
         fail_exps = [e for e in ds.expectations if e.action == "fail"]
@@ -407,7 +545,8 @@ class PipelineRunner:
             df = df.observe(
                 obs, F.count(F.lit(1)).alias("rows_checked"), *_violations(warn)
             )
-            self._pending_obs[ds.name] = (obs, warn)
+            with self._lock:
+                self._pending_obs[ds.name] = (obs, warn)
         return df
 
     def _materialize_cdc(self, ds: Dataset, df: DataFrame) -> DataFrame:
@@ -429,9 +568,10 @@ class PipelineRunner:
         if self.warehouse:
             base = self.warehouse
         else:
-            if not hasattr(self, "_cdc_tmp"):
-                self._cdc_tmp = tempfile.mkdtemp(prefix="cdc_pipeline_")
-            base = self._cdc_tmp
+            with self._lock:
+                if self._cdc_tmp is None:
+                    self._cdc_tmp = tempfile.mkdtemp(prefix="cdc_pipeline_")
+                base = self._cdc_tmp
         target = os.path.join(base, ds.name)
         ck = os.path.join(
             self.checkpoint_dir or os.path.join(base, "_checkpoints"),
@@ -478,17 +618,29 @@ class PipelineRunner:
         if ds.partition_by:
             writer = writer.partitionBy(*ds.partition_by)
         writer.save(path)
-        if ds.name in self._pending_obs:
+        with self._lock:
             # the write was the action over the observed plan — the
             # metrics are now available without any further scan
-            self._observed[ds.name] = self._pending_obs.pop(ds.name)
-        out = self.spark.read.format(self.table_format).load(path)
-        self._register_catalog_table(ds, path)
+            if ds.name in self._pending_obs:
+                self._observed[ds.name] = self._pending_obs.pop(ds.name)
+        reader = self.spark.read.format(self.table_format)
+        if self.table_format == "parquet":
+            # The writer's own data columns spare the footer-inference
+            # job.  Partition columns are left to directory discovery
+            # (a file listing, no job), so their types and their place
+            # (last) are exactly those of a fresh spark.read.parquet:
+            # a string partition value that looks like a date reads back
+            # as a date either way.  Delta reads its schema from its log.
+            reader = reader.schema(StructType(
+                [f for f in df.schema if f.name not in ds.partition_by]
+            ))
+        out = reader.load(path)
+        self._register_catalog_table(ds, path, out.schema)
         out.createOrReplaceTempView(self.view_prefix + ds.name)
         return out
 
     def _register_catalog_table(
-        self, ds: Dataset, path: str, schema=None
+        self, ds: Dataset, path: str, schema: StructType
     ) -> None:
         """Persist the dataset as an external catalog table over its
         parquet location, carrying the declared ``comment`` and
@@ -502,25 +654,14 @@ class PipelineRunner:
         fmt = self.table_format
         ident = f"`default`.`{self.view_prefix + ds.name}`"
         self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        # ONE DDL construction.  Explicit columns are used whenever a
-        # schema is available or derivable: required when the location
-        # holds no files yet (a streaming table's empty first run —
-        # parquet inference throws), and required to declare partition
-        # columns.  A schema passed by the caller always wins — the
-        # partitioned branch must NOT re-infer from the (possibly
-        # empty) location, which was exactly the empty-first-run bug.
-        if schema is None and ds.partition_by and fmt == "parquet":
-            schema = self.spark.read.format(fmt).load(path).schema
-        cols_sql = (
-            "("
-            + ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema
-            )
-            + ") "
-            if schema is not None
-            else ""
+        # Explicit columns, from the schema the caller read the table
+        # back with: the catalog then runs no inference job, an empty
+        # location (a streaming table's first run) still registers, and
+        # the partition columns can be declared.
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in schema
         )
-        ddl = f"CREATE TABLE {ident} {cols_sql}USING {fmt}"
+        ddl = f"CREATE TABLE {ident} ({cols}) USING {fmt}"
         if ds.comment:
             ddl += f" COMMENT '{_sql_str(ds.comment)}'"
         if ds.partition_by and fmt == "parquet":
@@ -619,18 +760,11 @@ class PipelineRunner:
                 os.link(src, dst)
             except OSError:
                 shutil.copy2(src, dst)
-        if any(f.endswith(".parquet") for f in os.listdir(path)):
-            out = self.spark.read.parquet(path)
-            self._register_catalog_table(ds, path)
-        else:
-            # first run with zero input files: nothing staged or
-            # published, and parquet can't infer a schema from an empty
-            # dir — fall back to an empty frame with the STREAM's
-            # (known) schema so downstream datasets see the right
-            # columns instead of an AnalysisException, and register the
-            # catalog table with explicit columns for the same reason.
-            out = self.spark.createDataFrame([], df.schema)
-            self._register_catalog_table(ds, path, schema=df.schema)
+        # Read back with the stream's schema: no inference job, and a
+        # first run with zero input files (an empty table directory)
+        # still gives a typed empty frame and catalog table.
+        out = self.spark.read.schema(df.schema).parquet(path)
+        self._register_catalog_table(ds, path, out.schema)
         out.createOrReplaceTempView(self.view_prefix + ds.name)
         return out
 
@@ -643,16 +777,18 @@ class PipelineRunner:
         mirroring how the reference re-derives its warn metrics in
         `data_validation_summary` (pipeline:645-667).
         """
+        with self._lock:
+            done, observed = dict(self._done), dict(self._observed)
         parts = []
         for name, ds in self.pipeline.datasets.items():
             warn = [e for e in ds.expectations if e.action == "warn"]
-            if not warn or name not in self._done:
+            if not warn or name not in done:
                 continue
-            if name in self._observed:
+            if name in observed:
                 # metrics captured DURING the materialization write —
                 # no re-scan; safe to read because the action provably
                 # ran (the pending->observed move happens after save())
-                obs, warn_obs = self._observed[name]
+                obs, warn_obs = observed[name]
                 vals = obs.get
                 rows = [
                     (
@@ -671,8 +807,7 @@ class PipelineRunner:
                     )
                 )
                 continue
-            df = self._done[name]
-            agg = df.agg(
+            agg = done[name].agg(
                 F.count(F.lit(1)).alias("rows_checked"), *_violations(warn)
             )
             long = agg.select(

@@ -50,17 +50,35 @@ def test_warehouse_persists_comment_and_properties(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS `default`.`props_tbl`")
 
 
+def _assert_discovery_schema(spark, out, name: str, path: str) -> None:
+    """The frame the runner returns and the catalog table it registers
+    carry exactly the columns (order and types) that parquet discovery
+    gives for the written files."""
+    fresh = spark.read.parquet(path).schema
+    assert out.schema == fresh
+    table = spark.table(f"`default`.`{name}`").schema
+    assert [(f.name, f.dataType) for f in table] == [
+        (f.name, f.dataType) for f in fresh
+    ]
+
+
 def test_partitioned_table_registered_with_partitions(spark, tmp_path):
     p = Pipeline("props-part")
 
     @p.table(name="props_part", partition_by=("d",),
              table_properties={"quality": "silver"})
     def props_part(ctx):
+        # the partition column comes first and holds date-like strings:
+        # discovery moves it last and types it as a date
         return spark.createDataFrame(
             [Row(d="2024-01-01", v=1), Row(d="2024-01-02", v=2)]
         )
 
-    PipelineRunner(p, spark, mode="warehouse", warehouse=str(tmp_path)).run()
+    out = PipelineRunner(
+        p, spark, mode="warehouse", warehouse=str(tmp_path)
+    ).run()["props_part"]
+    _assert_discovery_schema(spark, out, "props_part",
+                             str(tmp_path / "props_part"))
     assert _tblprops(spark, "props_part").get("quality") == "silver"
     parts = spark.sql("SHOW PARTITIONS `default`.`props_part`").count()
     assert parts == 2
@@ -68,6 +86,30 @@ def test_partitioned_table_registered_with_partitions(spark, tmp_path):
         spark.sql("SELECT sum(v) AS s FROM `default`.`props_part`").first().s == 3
     )
     spark.sql("DROP TABLE IF EXISTS `default`.`props_part`")
+
+
+def test_unpartitioned_table_schema_matches_discovery(spark, tmp_path):
+    import datetime as dt
+    from decimal import Decimal
+
+    p = Pipeline("props-flat")
+
+    @p.table(name="props_flat")
+    def props_flat(ctx):
+        return spark.createDataFrame(
+            [(1, "a", 1.5, Decimal("2.25"), dt.date(2024, 1, 1),
+              dt.datetime(2024, 1, 1, 12), [1, 2])],
+            "k bigint, s string, x double, m decimal(10,2), d date, "
+            "ts timestamp, xs array<int>",
+        )
+
+    out = PipelineRunner(
+        p, spark, mode="warehouse", warehouse=str(tmp_path)
+    ).run()["props_flat"]
+    _assert_discovery_schema(spark, out, "props_flat",
+                             str(tmp_path / "props_flat"))
+    assert spark.table("`default`.`props_flat`").count() == 1
+    spark.sql("DROP TABLE IF EXISTS `default`.`props_flat`")
 
 
 def _write_csv(path, rows: list[tuple[int, int]]) -> None:
