@@ -318,122 +318,3 @@ def connected_components_star(
         .withColumn("component", F.col("id"))
     )
     return members.union(roots)
-
-
-def connected_components_incremental(
-    label_store,
-    new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    work_dir: str | None = None,
-    app_txn: tuple[str, int] | None = None,
-) -> int:
-    """Maintain a PERSISTED (id, component) labeling under edge
-    arrivals — the continuous form of :func:`connected_components`,
-    and the missing half of continuous dedup clustering: the
-    incremental MinHash matcher (operators/dedup.py:
-    minhash_lsh_incremental) emits each batch's match pairs, and this
-    folds them into the standing cluster assignment without ever
-    re-running components over the full pair history.
-
-    Per batch (cost ∝ batch + affected clusters, never the corpus):
-
-    1. batch endpoints map through the stored labels (one join against
-       the batch's node set);
-    2. the REDUCED graph — edges between distinct current labels —
-       is tiny (∝ batch), and :func:`connected_components` over it
-       yields the label-merge mapping; since every stored label is
-       the min id of its cluster, the min over merged labels IS the
-       min over all member ids, so labels stay canonical;
-    3. stored rows in affected components relabel through the
-       broadcast mapping and upsert via the VersionedTable's
-       file-granularity MERGE; new nodes insert with their mapped
-       labels.  A batch that merges nothing commits nothing.
-
-    The store must be a VersionedTable with ``stats_cols=("id",)``
-    (merge prunes on the id envelope).  ``app_txn`` carries a feed
-    cursor for exactly-once driving; a batch that changes nothing
-    commits nothing (and records no cursor — replaying a no-op
-    converges, the same contract as the changefeed maintainers).
-    ``work_dir`` must be batch-scoped (fresh per call): it holds the
-    inner components loop's round files, and a stale directory from a
-    previous batch would be mistaken for resumable state.  Degenerate note: a batch that
-    merges a constant fraction of all clusters relabels that fraction
-    of the table — inherent to any label-store design; the common
-    near-dup case (new docs joining existing clusters) touches only
-    the clusters they join.
-    """
-    spark = new_edges.sparkSession
-    pairs = (
-        new_edges.select(
-            F.col(src).cast("long").alias("a"),
-            F.col(dst).cast("long").alias("b"),
-        )
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    )
-    nodes = (
-        pairs.select(F.col("a").alias("id"))
-        .unionByName(pairs.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    have_state = bool(label_store.history())
-    if have_state:
-        state = label_store.read()
-        node_labels = nodes.join(state, "id", "left").select(
-            "id", F.coalesce("component", "id").alias("lbl")
-        )
-    else:
-        node_labels = nodes.select("id", F.col("id").alias("lbl"))
-    la = node_labels.select(F.col("id").alias("a"), F.col("lbl").alias("la"))
-    lb = node_labels.select(F.col("id").alias("b"), F.col("lbl").alias("lb"))
-    reduced = (
-        pairs.join(la, "a")
-        .join(lb, "b")
-        .filter(F.col("la") != F.col("lb"))
-        .select(F.col("la").alias("src"), F.col("lb").alias("dst"))
-        .distinct()
-    )
-    # mapping: old label -> merged (minimum) label, batch-sized
-    if reduced.limit(1).count() > 0:
-        mapping = connected_components(
-            reduced, work_dir=work_dir
-        ).select(
-            F.col("id").alias("component"),
-            F.col("component").alias("new_component"),
-        )
-    else:
-        mapping = None
-    updates = None
-    if mapping is not None and have_state:
-        relabeled = (
-            label_store.read()
-            .join(F.broadcast(mapping), "component")
-            .select("id", F.col("new_component").alias("component"))
-        )
-        updates = relabeled
-    # new nodes: not in the store yet, labeled through the mapping
-    new_nodes = node_labels
-    if have_state:
-        new_nodes = node_labels.join(
-            label_store.read().select("id"), "id", "left_anti"
-        )
-    if mapping is not None:
-        new_rows = new_nodes.join(
-            F.broadcast(mapping),
-            new_nodes["lbl"] == mapping["component"],
-            "left",
-        ).select(
-            "id",
-            F.coalesce("new_component", "lbl").alias("component"),
-        )
-    else:
-        new_rows = new_nodes.select("id", F.col("lbl").alias("component"))
-    batch_upsert = (
-        new_rows if updates is None else updates.unionByName(new_rows)
-    )
-    if batch_upsert.limit(1).count() == 0:
-        return label_store._latest()[0]
-    if not have_state:
-        return label_store.overwrite(batch_upsert, app_txn=app_txn)
-    return label_store.merge(batch_upsert, "id", app_txn=app_txn)

@@ -1116,8 +1116,8 @@ def _c4_rebuild(
     array narrowly, drop rule-bad and dup positions, re-emit.
     ``with_kept_hashes`` appends the kept lines' 16-hex md5 prefixes
     (``kept_line_hashes``) so a stored cleaned corpus can REBUILD the
-    line-hash index from its own rows — what makes the index a
-    self-healing cache in streaming/changefeed.py:sync_line_index."""
+    line-hash index from its own rows — the index is then a cache that
+    can always be rebuilt."""
     rule_bad = _c4_rule_bad(blocklist)
     lines_arr = _c4_lines_arr(text_col, k)
     rebuilt = base.join(dup_sets, "doc_id", "left")

@@ -321,15 +321,6 @@ def _soundex_steps(col_sql: str) -> str:
     )
 
 
-def soundex_key(col: Column | str) -> Column:
-    """Portable phonetic key column (see module comment for the exact
-    variant).  Pure string expressions — codegen-side, no Python."""
-    col_sql = col if isinstance(col, str) else None
-    if col_sql is None:
-        raise TypeError("soundex_key takes the column NAME (SQL identifier)")
-    return F.expr(_soundex_steps(col_sql))
-
-
 def soundex_sql(col_sql: str) -> str:
     """The identical chain as an oracle-side SQL string."""
     return _soundex_steps(col_sql)

@@ -120,195 +120,6 @@ def conjunctive_search(
     )
 
 
-# -- incremental index maintenance (segment model) ---------------------------
-#
-# The continuous-ingest form mirrors how real search engines grow: a
-# batch APPENDS its own posting segment (cost ∝ batch — the stored
-# index is never read, let alone rewritten); DELETES append TOMBSTONE
-# segments instead of rewriting postings (the Lucene model); readers
-# MERGE segments per term netting tombstones out; and a scheduled
-# COMPACTION folds everything back into canonical bounded chunks
-# (cost ∝ index, run like OPTIMIZE).  Storage is the VersionedTable,
-# so every append/compaction is one atomic manifest commit and
-# `app_txn` gives exactly-once when driven from a change feed cursor
-# (:func:`maintain_cdc_postings` is that glue).
-
-
-def _segment_df(
-    pairs: DataFrame, kind: str, max_postings_per_row: int | None
-) -> DataFrame:
-    """Canonical segment rows for a (doc_id, term) pair set."""
-    if max_postings_per_row is None:
-        rows = pairs.groupBy("term").agg(
-            F.count("*").alias("df"),
-            F.min("doc_id").alias("doc_lo"),
-            F.max("doc_id").alias("doc_hi"),
-            F.sort_array(F.collect_list("doc_id")).alias("postings"),
-        ).withColumn("chunk_idx", F.lit(0))
-    else:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("term").orderBy("doc_id")
-        rows = (
-            pairs.withColumn(
-                "chunk_idx",
-                ((F.row_number().over(w) - 1) / max_postings_per_row).cast(
-                    "int"
-                ),
-            )
-            .groupBy("term", "chunk_idx")
-            .agg(
-                F.count("*").alias("df"),
-                F.min("doc_id").alias("doc_lo"),
-                F.max("doc_id").alias("doc_hi"),
-                F.sort_array(F.collect_list("doc_id")).alias("postings"),
-            )
-        )
-    return rows.select(
-        "term",
-        F.lit(kind).alias("kind"),
-        "chunk_idx",
-        "df",
-        "doc_lo",
-        "doc_hi",
-        "postings",
-        postings_checksum(F.col("postings")).alias("postings_checksum"),
-    )
-
-
-def append_posting_segment(
-    store,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_postings_per_row: int | None = None,
-    app_txn: tuple[str, int] | None = None,
-) -> int:
-    """Append one batch's postings as a NEW segment (kind='post').
-    Contract: a doc id must not be LIVE in the index when appended
-    (insert-only per live doc); re-adding a previously TOMBSTONED doc
-    is legal — its prior post/tomb pairs net to zero and the new
-    segment's pairs carry the new content."""
-    pairs = _doc_terms(docs, id_col, text_col)
-    seg = _segment_df(pairs, "post", max_postings_per_row)
-    if store.history():
-        return store.append(seg, app_txn=app_txn)
-    return store.overwrite(seg, app_txn=app_txn)
-
-
-def append_posting_tombstones(
-    store,
-    deleted_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_postings_per_row: int | None = None,
-    app_txn: tuple[str, int] | None = None,
-) -> int:
-    """Delete documents from the index WITHOUT rewriting postings:
-    append their (term, doc) pairs as a TOMBSTONE segment that the
-    reader nets out — ``deleted_docs`` must carry the deleted rows'
-    TEXT (the change feed's delete rows do: full row images)."""
-    if not store.history():
-        raise ValueError("cannot tombstone an empty posting index")
-    pairs = _doc_terms(deleted_docs, id_col, text_col)
-    return store.append(
-        _segment_df(pairs, "tomb", max_postings_per_row), app_txn=app_txn
-    )
-
-
-def _live_pairs(store) -> DataFrame:
-    """(term, doc_id) pairs surviving tombstone netting."""
-    w = F.when(F.col("kind") == "post", F.lit(1)).otherwise(F.lit(-1))
-    return (
-        store.read()
-        .select("term", F.explode("postings").alias("doc_id"), w.alias("w"))
-        .groupBy("term", "doc_id")
-        .agg(F.sum("w").alias("net"))
-        .filter(F.col("net") > 0)
-        .select("term", "doc_id")
-    )
-
-
-def merged_postings(store) -> DataFrame:
-    """Reader-side segment merge: per term, the tombstone-netted union
-    of every segment's postings as one sorted list + checksum —
-    row-identical to a from-scratch :func:`inverted_postings` over the
-    SURVIVING documents (pinned in tests).  Cost ∝ postings read;
-    terms are the shuffle key."""
-    return (
-        _live_pairs(store)
-        .groupBy("term")
-        .agg(
-            F.count("*").alias("df"),
-            F.min("doc_id").alias("doc_lo"),
-            F.max("doc_id").alias("doc_hi"),
-            F.sort_array(F.collect_list("doc_id")).alias("postings"),
-        )
-        .withColumn("postings_checksum", postings_checksum(F.col("postings")))
-    )
-
-
-def compact_postings(
-    store, max_postings_per_row: int | None = None
-) -> int:
-    """Fold all segments back into canonical bounded chunks, netting
-    tombstones away for good (the OPTIMIZE step): one atomic
-    overwrite; time travel keeps the pre-compaction segment layout
-    readable."""
-    return store.overwrite(
-        _segment_df(_live_pairs(store), "post", max_postings_per_row)
-    )
-
-
-def maintain_cdc_postings(
-    source,
-    index_store,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    app_id: str = "changefeed-index",
-    max_postings_per_row: int | None = None,
-) -> int | None:
-    """Keep a posting index in sync with a versioned DOCUMENT table
-    through its change feed, exactly once: inserts append a posting
-    segment, deletes append tombstones, and the feed cursor commits
-    atomically with each segment (`app_txn`).  An update (delete +
-    re-insert of a doc id) nets correctly: the tombstone cancels the
-    old content's pairs, the new segment adds the new content's.
-    Bootstrap indexes the current snapshot.  Returns the last index
-    version committed, or None when nothing was new."""
-    from diabetes_etl_spark.streaming.changefeed import changes_since
-
-    cursor = index_store.last_app_version(app_id)
-    latest, doc = source._latest()
-    if doc is None:
-        return None
-    if cursor is None:
-        snap = source.read(version_as_of=latest)
-        return append_posting_segment(
-            index_store, snap, id_col, text_col, max_postings_per_row,
-            app_txn=(app_id, latest),
-        )
-    changes, new_cursor = changes_since(source, cursor)
-    if changes is None:
-        return None
-    dels = changes.filter(F.col("_change_type") == "delete")
-    ins = changes.filter(F.col("_change_type") == "insert")
-    # posts + tombstones land in ONE atomic append carrying the
-    # cursor: a two-commit sequence would leave a crash window whose
-    # replay double-tombstones — harmless for the deletion itself but
-    # corrupting a LATER re-insert of the same doc id (old-term net
-    # 1 − 2 + 1 = 0).  One commit means replay either sees the cursor
-    # advanced (no-op) or nothing applied.
-    seg = _segment_df(
-        _doc_terms(ins, id_col, text_col), "post", max_postings_per_row
-    ).unionByName(
-        _segment_df(
-            _doc_terms(dels, id_col, text_col), "tomb", max_postings_per_row
-        )
-    )
-    return index_store.append(seg, app_txn=(app_id, new_cursor))
-
-
 # -- positional index + phrase retrieval -------------------------------------
 
 

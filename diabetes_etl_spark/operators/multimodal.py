@@ -52,9 +52,6 @@ can and cannot decode):
 - ``audio/wav``   — a REAL RIFF/WAVE parser: chunk walk (with odd-size
   padding), fmt parse, PCM16 frame extraction.  Features are computed
   over the DECODED little-endian sample bytes.
-- ``audio/mpeg`` — frame-HEADER probe (MPEG-1 Layer III sync walk:
-  bitrate/sample-rate tables, channel mode, frame count — the
-  metadata a routing/budgeting stage needs).
 - ``video/mp4`` — ISO-BMFF container probe (ISO/IEC 14496-12 box
   walk, largesize/to-end aware: ftyp/moov/mvhd/tkhd/mdhd/hdlr →
   duration, track geometry, video/audio track counts).
@@ -88,23 +85,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # index byte per pixel — see decode_png)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 3, 4: 2, 6: 4}
 _PNG_SCANLINE_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def attach_binary_payload(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Wrap a text column as an opaque binary asset + metadata struct —
-    the shape every multimodal table shares regardless of media type."""
-    payload = F.col(text_col).cast("binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        payload.alias("payload"),
-        F.struct(
-            F.lit("text/plain").alias("mime"),
-            F.length(payload).alias("n_bytes"),
-            F.md5(payload).alias("checksum"),
-        ).alias("asset_meta"),
-    )
 
 
 _ASSET_SCHEMA = (
@@ -219,42 +199,6 @@ def png_bytes(width: int, height: int, pixels: bytes) -> bytes:
     )
 
 
-def png_palette_bytes(
-    width: int, height: int, palette: bytes, indices: bytes
-) -> bytes:
-    """Encode a PALETTE PNG (color type 3): ``palette`` is the PLTE
-    payload (RGB triples, <= 256 entries), ``indices`` one byte per
-    pixel.  Filter-0 scanlines, pure stdlib — the fixture/round-trip
-    twin of :func:`png_bytes` for the indexed-color decode path."""
-    if len(palette) % 3 or not 0 < len(palette) // 3 <= 256:
-        raise ValueError("palette must be 1..256 RGB triples")
-    if len(indices) != width * height:
-        raise ValueError("indices must be width*height bytes")
-    if max(indices) >= len(palette) // 3:
-        raise ValueError("palette index out of range")
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 3, 0, 0, 0)
-    raw = b"".join(
-        b"\x00" + indices[y * width : (y + 1) * width]
-        for y in range(height)
-    )
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", palette)
-        + chunk(b"IDAT", zlib.compress(raw, 9))
-        + chunk(b"IEND", b"")
-    )
-
-
 # Adam7 pass grid (PNG spec §8.2): (x_start, y_start, x_step, y_step).
 # Together the seven passes visit every pixel exactly once.
 _ADAM7 = (
@@ -314,29 +258,6 @@ def png_interlaced_bytes(width: int, height: int, pixels: bytes) -> bytes:
         + chunk(b"IDAT", zlib.compress(bytes(raw), 9))
         + chunk(b"IEND", b"")
     )
-
-
-def jpeg_bytes(width: int, height: int, n_components: int = 3) -> bytes:
-    """Minimal JFIF container (SOI + APP0 + SOF0 + EOI) with a real,
-    parseable frame header.  Carries no entropy-coded image data — it
-    exists to exercise the header prober over honest JPEG marker
-    structure, not to fake pixels."""
-    app0 = (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00"
-        + struct.pack(">HH", 1, 1)
-        + b"\x00\x00"
-    )
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 8 + 3 * n_components)
-        + b"\x08"
-        + struct.pack(">HH", height, width)
-        + bytes([n_components])
-        + b"".join(bytes([i + 1, 0x11, 0]) for i in range(n_components))
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
 
 
 def wav_bytes(sample_rate: int, n_channels: int, samples: list[int]) -> bytes:
@@ -690,17 +611,6 @@ def _png_chunks(payload: bytes) -> Iterator[tuple[bytes, bytes]]:
         if tag == b"IEND":
             return
     raise ValueError("PNG missing IEND")
-
-
-def probe_png(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, channels) from IHDR — header-only, O(1)."""
-    for tag, data in _png_chunks(payload):
-        if tag == b"IHDR":
-            w, h, depth, color = struct.unpack(">IIBB", data[:10])
-            if color not in _PNG_CHANNELS:
-                raise ValueError(f"unsupported PNG color type {color}")
-            return w, h, _PNG_CHANNELS[color]
-    raise ValueError("PNG missing IHDR")
 
 
 def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
@@ -1472,16 +1382,6 @@ def decode_jpeg_baseline(payload: bytes) -> tuple[int, int, int, bytes]:
     return width, height, 3, rgb.tobytes()
 
 
-def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
-    """Grayscale-only wrapper over :func:`decode_jpeg_baseline`
-    (original single-component entry point; raises ValueError on color
-    streams so metadata-only callers keep their probe fallback)."""
-    width, height, ncomp, raw = decode_jpeg_baseline(payload)
-    if ncomp != 1:
-        raise ValueError("color JPEG: use decode_jpeg_baseline")
-    return width, height, raw
-
-
 # -- progressive JPEG (T.81 Annex G, Huffman coding) -------------------------
 #
 # Round-7 VERDICT #3: the last JPEG family.  Progressive streams carry
@@ -2154,86 +2054,7 @@ def decode_jpeg_auto(payload: bytes) -> tuple[int, int, int, bytes]:
     raise ValueError(f"unsupported JPEG SOF marker 0x{marker:02X}")
 
 
-# -- MPEG audio (mp3) frame-header probe ------------------------------------
-#
-# Public-spec tables (ISO/IEC 11172-3): MPEG-1 Layer III bitrates and
-# sample rates.  Header-only metadata — no codec, no fake samples;
-# entropy decode of MPEG audio stays behind NotImplementedError.
-
-_MP3_BITRATES_V1L3 = (
-    None, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320,
-)
-_MP3_RATES_V1 = (44100, 48000, 32000)
-
-
-def mp3_frame_bytes(
-    bitrate_kbps: int, sample_rate: int, n_frames: int = 1,
-    channels: int = 2,
-) -> bytes:
-    """Build a valid MPEG-1 Layer III frame sequence (real headers,
-    zeroed payload) — a fixture for the probe, not a playable song."""
-    try:
-        br_idx = _MP3_BITRATES_V1L3.index(bitrate_kbps)
-    except ValueError:
-        raise ValueError(f"unsupported MPEG1-L3 bitrate {bitrate_kbps}")
-    try:
-        sr_idx = _MP3_RATES_V1.index(sample_rate)
-    except ValueError:
-        raise ValueError(f"unsupported MPEG1 sample rate {sample_rate}")
-    mode = 0b00 if channels == 2 else 0b11  # stereo / single channel
-    hdr = bytes(
-        [
-            0xFF,
-            0xFB,  # sync + MPEG1 + Layer III + no CRC
-            (br_idx << 4) | (sr_idx << 2),  # no padding, private=0
-            (mode << 6),
-        ]
-    )
-    frame_len = 144 * bitrate_kbps * 1000 // sample_rate
-    return (hdr + bytes(frame_len - 4)) * n_frames
-
-
-def probe_mp3(payload: bytes) -> tuple[int, int, int, int]:
-    """(bitrate_kbps, sample_rate, n_channels, n_frames) from MPEG-1
-    Layer III frame headers — walks the whole frame chain so a
-    truncated or desynced stream fails loudly instead of reporting a
-    duration it cannot have.  Header metadata only; sample decode
-    stays NotImplementedError (see decode_payload)."""
-    if len(payload) < 4:
-        raise ValueError("not an MP3 (too short for a frame header)")
-    pos = 0
-    bitrate = rate = channels = None
-    n_frames = 0
-    while pos + 4 <= len(payload):
-        b0, b1, b2, b3 = payload[pos : pos + 4]
-        if b0 != 0xFF or (b1 & 0xE0) != 0xE0:
-            raise ValueError(f"bad MP3 frame sync at byte {pos}")
-        version = (b1 >> 3) & 0x03
-        layer = (b1 >> 1) & 0x03
-        if version != 0b11 or layer != 0b01:
-            raise ValueError(
-                "only MPEG-1 Layer III frame headers are supported"
-            )
-        br_idx = (b2 >> 4) & 0x0F
-        sr_idx = (b2 >> 2) & 0x03
-        if br_idx in (0, 15) or sr_idx == 3:
-            raise ValueError("invalid MP3 bitrate/samplerate index")
-        f_bitrate = _MP3_BITRATES_V1L3[br_idx]
-        f_rate = _MP3_RATES_V1[sr_idx]
-        padding = (b2 >> 1) & 0x01
-        f_channels = 1 if ((b3 >> 6) & 0x03) == 0b11 else 2
-        if bitrate is None:
-            bitrate, rate, channels = f_bitrate, f_rate, f_channels
-        elif (f_bitrate, f_rate, f_channels) != (bitrate, rate, channels):
-            raise ValueError("variable-bitrate MP3 probe not supported")
-        frame_len = 144 * f_bitrate * 1000 // f_rate + padding
-        if pos + frame_len > len(payload):
-            raise ValueError("truncated MP3 frame")
-        pos += frame_len
-        n_frames += 1
-    if n_frames == 0:
-        raise ValueError("MP3 stream contains no frames")
-    return bitrate, rate, channels, n_frames
+# -- WAV (RIFF/WAVE) ---------------------------------------------------------
 
 
 def _wav_chunks(payload: bytes) -> Iterator[tuple[bytes, bytes]]:
@@ -2248,29 +2069,6 @@ def _wav_chunks(payload: bytes) -> Iterator[tuple[bytes, bytes]]:
             raise ValueError("truncated WAV chunk")
         yield tag, data
         pos += 8 + length + (length & 1)  # chunks pad to even offsets
-
-
-def probe_wav(payload: bytes) -> tuple[int, int, int, int]:
-    """(sample_rate, n_channels, bits_per_sample, n_frames) from the
-    fmt chunk + data chunk size — header-only, no sample decode."""
-    rate = channels = bits = block = None
-    data_len = None
-    for tag, data in _wav_chunks(payload):
-        if tag == b"fmt ":
-            fmt_code, channels, rate, _brate, block, bits = struct.unpack(
-                "<HHIIHH", data[:16]
-            )
-            if fmt_code != 1:
-                raise ValueError(
-                    f"unsupported WAV format code {fmt_code} (PCM only)"
-                )
-        elif tag == b"data":
-            data_len = len(data)
-    if rate is None or data_len is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    if not block or block <= 0:
-        raise ValueError("invalid WAV block align")
-    return rate, channels, bits, data_len // block
 
 
 def decode_wav(payload: bytes) -> tuple[int, int, int, bytes]:
@@ -2750,15 +2548,6 @@ def bmp_bytes(
     return head + info + pal_bytes + body
 
 
-def probe_bmp(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, n_channels) from the info header — no pixel
-    decode.  Decoded output is always expanded to 3-channel RGB."""
-    if len(payload) < 26 or payload[:2] != b"BM":
-        raise ValueError("not a BMP stream")
-    w, h = struct.unpack("<ii", payload[18:26])
-    return w, abs(h), 3
-
-
 def _rle8_decode(data: bytes, width: int, height: int) -> list[bytes]:
     """Decode a BI_RLE8 stream to ``height`` full index rows in STORED
     (bottom-up) order.  A feature extractor must refuse rasters with
@@ -2920,7 +2709,7 @@ def decode_payload(mime: str, payload: bytes) -> bytes:
 
     Compressed audio/video needs codec libraries this environment
     lacks; those fail loudly instead of producing fake media — probe
-    the header with :func:`probe_jpeg` / :func:`probe_wav` when only
+    the header with :func:`probe_jpeg` / :func:`probe_mp4` when only
     metadata is needed.
     """
     if mime == "text/plain":
@@ -3312,10 +3101,10 @@ def plan_video_frames(
     container probe (moov walk), per-clip fan-out, schema, Arrow batch
     shape — with the pixel DECODE deliberately env-gated: turning a
     timestamp into pixels needs an H.264-class codec this environment
-    lacks (``decode_video_frame`` below raises NotImplementedError;
-    wiring a real decoder means replacing ONE function, not the
-    pipeline).  Fabricating pixels here would poison any downstream
-    feature statistics.
+    lacks (:func:`decode_payload` raises NotImplementedError for
+    video; wiring a real decoder means adding ONE function, not
+    changing the pipeline).  Fabricating pixels here would poison any
+    downstream feature statistics.
     """
 
     def plan(doc_id: int, _mime: str, payload: bytes) -> list[tuple]:
@@ -3330,17 +3119,6 @@ def plan_video_frames(
         ]
 
     return _asset_kernel(assets, plan, FRAME_PLAN_SCHEMA, {"video/mp4"})
-
-
-def decode_video_frame(payload: bytes, ts_ms: int) -> bytes:
-    """ENV-GATED: extracting pixels at a timestamp requires an
-    H.264/H.265-class codec; this sandbox has none and fabricated
-    pixels would poison downstream statistics.  The sampling PLAN
-    (which frames to pull) is real — see plan_video_frames."""
-    raise NotImplementedError(
-        "video frame decode needs a codec library absent from this "
-        "environment; plan_video_frames supplies the sampling plan"
-    )
 
 
 # -- audio signal features ---------------------------------------------------

@@ -89,8 +89,8 @@ def power_iteration_rounds(
     round: the d-vector; corpus passes per round: one.
 
     Returns the unit eigenvector estimate at 9-decimal quantization;
-    pair with :func:`project_out` to remove the dominant direction
-    (the all-but-the-top normalization step).
+    removing that direction, r = x - (x·v)v, is the all-but-the-top
+    normalization step.
 
     ``state_store`` (a VersionedTable) commits every completed
     round's full (round, pos, v) history atomically so a restarted
@@ -166,24 +166,3 @@ def power_iteration_rounds(
                 app_txn=("power_round", rnd),
             )
     return spark.createDataFrame(out, "round int, pos int, v double")
-
-
-def project_out(
-    df: DataFrame,
-    component: list[float],
-    vec_col: str = "embedding",
-    out_col: str = "residual",
-) -> DataFrame:
-    """Remove a direction from every embedding:
-    r = x - (x·v)v — the all-but-the-top step, scan-local (one
-    in-array fold + one transform, no shuffle, no UDF)."""
-    v_arr = F.array(*[F.lit(x) for x in component])
-    xs = F.col(vec_col).cast("array<double>")
-    dot = F.aggregate(
-        F.zip_with(xs, v_arr, lambda x, w: x * w),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    return df.withColumn(
-        out_col, F.zip_with(xs, v_arr, lambda x, w: x - dot * w)
-    )

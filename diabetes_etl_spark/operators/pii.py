@@ -76,12 +76,6 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def with_redacted_text(
-    df: DataFrame, text_col: str = "text", out_col: str = "redacted"
-) -> DataFrame:
-    return df.withColumn(out_col, redact_pii(F.col(text_col)))
-
-
 def kanonymity_profile(
     df: DataFrame,
     quasi_cols: list[str],

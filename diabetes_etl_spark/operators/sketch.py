@@ -148,18 +148,6 @@ def cms_estimate(
     )
 
 
-def merge_cells(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of CMS cell tables built with identical
-    (width, depth, seed) — the rollup operation: per-partition,
-    per-day, or per-micro-batch sketches combine into the sketch of
-    the concatenated input exactly (tested), in one bounded
-    depth*width aggregate."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
-
-
 # -- portable Bloom filter --------------------------------------------------
 #
 # The membership sketch next to CMS (frequency) and HLL (cardinality):
@@ -207,29 +195,6 @@ def bloom_bits(
     )
 
 
-def bloom_hit_mask(
-    bits: DataFrame,
-    key_col: str,
-    m: int = 8192,
-    k: int = 5,
-    seed: int = 23,
-) -> Column:
-    """SCAN-LOCAL membership test: a boolean Column that is true iff
-    all k probe bits of column ``key_col`` are set — the fast
-    path of :func:`bloom_probe` and the shape a 100 TB blocklist scrub
-    actually wants.
-
-    The bit table is collected ONCE to the driver (bounded by m —
-    8 KB of ints per 64k-bit filter, the same bounded-collect budget
-    as the IVF training sample) and folded into an array-of-longs
-    bitmask LITERAL; each probe is then two integer ops + a bit test
-    inside whole-stage codegen.  No explode, no join, no shuffle, no
-    per-row aggregate — the probe disappears into the scan, which is
-    the entire point of a Bloom pre-filter.
-    """
-    return bloom_hit_mask_fp(bits, fingerprint(key_col), m, k, seed)
-
-
 def bloom_hit_mask_fp(
     bits: DataFrame,
     fp: Column,
@@ -237,12 +202,17 @@ def bloom_hit_mask_fp(
     k: int = 5,
     seed: int = 23,
 ) -> Column:
-    """:func:`bloom_hit_mask` over an ALREADY-COMPUTED fingerprint
-    Column.  Callers probing long keys should project
-    ``fingerprint(col)`` into a column first and pass that column
-    here: Catalyst does not CSE the per-character fold, so inlining
-    the key would re-hash it once per probe (k x the string work --
-    the same pitfall cms_cells documents)."""
+    """SCAN-LOCAL membership test over an ALREADY-COMPUTED fingerprint
+    Column: true iff all k probe bits of ``fp`` are set in ``bits``.
+
+    The bit table is collected ONCE to the driver (bounded by m) and
+    folded into an array-of-longs bitmask LITERAL; each probe is then
+    two integer ops + a bit test inside whole-stage codegen.  No
+    explode, no join, no shuffle.  Callers probing long keys should
+    project ``fingerprint(col)`` into a column first and pass that
+    column here: Catalyst does not CSE the per-character fold, so
+    inlining the key would re-hash it once per probe (k x the string
+    work -- the same pitfall cms_cells documents)."""
     words = [0] * ((m + 63) // 64)
     for row in bits.collect():  # <= m rows by construction
         b = int(row["bit"])
@@ -268,48 +238,6 @@ def bloom_hit_mask_fp(
         )
         cond = test if cond is None else (cond & test)
     return cond
-
-
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """Bit union — per-partition/per-day filters built with identical
-    (m, k, seed) combine into the filter of the concatenated input
-    exactly (tested), like CMS merge_cells / HLL hll_merge."""
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.distinct()
-
-
-def bloom_probe(
-    bits: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    m: int = 8192,
-    k: int = 5,
-    seed: int = 23,
-) -> DataFrame:
-    """``keys`` + ``bloom_hit`` (boolean): true iff ALL k probe bits
-    are set — no false negatives, false positives at the documented
-    rate.  The bit table BROADCASTS (<= m one-int rows), so the key
-    side never shuffles for the probe itself; the only aggregate is
-    per input row over its k probes."""
-    fp = F.col("__fp")
-    probes = F.array(*[_bloom_bit(fp, m, j, seed) for j in range(k)])
-    probed = (
-        keys.select("*", fingerprint(key_col).alias("__fp"))
-        .select(*keys.columns, F.posexplode(probes).alias("__j", "bit"))
-    )
-    marked = probed.join(
-        F.broadcast(bits.withColumn("__set", F.lit(1))), "bit", "left"
-    )
-    return (
-        marked.groupBy(*keys.columns)
-        .agg(
-            (
-                F.sum(F.coalesce("__set", F.lit(0))) == F.lit(k)
-            ).alias("bloom_hit")
-        )
-    )
 
 
 # -- portable HyperLogLog ---------------------------------------------------
@@ -351,7 +279,7 @@ def hll_registers(
 ) -> DataFrame:
     """(idx, rho): the HLL register table (at most 2^m_log2 rows) —
     one map-side-combined groupBy, constant shuffle like cms_cells.
-    Merge sketches with :func:`hll_merge`.  NULL keys are dropped
+    Sketches merge by register-wise max.  NULL keys are dropped
     (no countable identity).
 
     rho is derived with integer/string arithmetic only (`div`,
@@ -373,15 +301,6 @@ def hll_registers(
         .groupBy("idx")
         .agg(F.max("rho").alias("rho"))
     )
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Register-wise max — the HLL union; like CMS merge_cells, per-
-    partition/day sketches roll up without raw data."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("idx").agg(F.max("rho").alias("rho"))
 
 
 def hll_estimate(registers: DataFrame, m_log2: int = 6) -> DataFrame:
@@ -502,7 +421,7 @@ def cms_join_size(cells_a: DataFrame, cells_b: DataFrame) -> DataFrame:
 
     Both sketches must share (width, depth, seed).  Cost: one join of
     two <= depth*width-row tables + a depth-row aggregate — O(1) in
-    input size, mergeable inputs (merge_cells) make it work across
+    input size, mergeable inputs (cell-wise sums) make it work across
     partitions/days.  Deterministic like every sketch here: the
     estimate hash-checks against a SQL replay."""
     a = cells_a.select("r", "c", F.col("cnt").alias("__a"))
@@ -514,46 +433,6 @@ def cms_join_size(cells_a: DataFrame, cells_b: DataFrame) -> DataFrame:
     )
     return per_row.agg(
         F.min("__dot").cast("long").alias("join_size_estimate")
-    )
-
-
-def hll_intersection_estimate(
-    a: DataFrame, b: DataFrame, m_log2: int = 6
-) -> DataFrame:
-    """Inclusion-exclusion distinct-intersection estimate from two HLL
-    register tables: |A ∩ B| ≈ est(A) + est(B) − est(A ∪ B), with the
-    union by register-wise max (:func:`hll_merge`) — the cross-dataset
-    overlap question (shared users, shared doc ids, contamination
-    overlap at sketch cost) answered WITHOUT co-shuffling the raw
-    keys: three constant-size register tables, one 1-row result
-    (hll_inter_estimate, hll_a, hll_b, hll_union).
-
-    Error grows relative to the UNION's standard error (~1.04/sqrt(m)
-    of |A ∪ B|), so small intersections of large sets are noisy —
-    inherent to inclusion-exclusion on sketches (the MinHash-style
-    Jaccard route needs the signatures this portable HLL does not
-    keep); the absolute error bound is still ~2 sigma of the union
-    estimate, asserted in tests.  Negative point estimates clamp to
-    zero."""
-    ea = hll_estimate(a, m_log2).select(
-        F.col("hll_estimate").alias("hll_a")
-    )
-    eb = hll_estimate(b, m_log2).select(
-        F.col("hll_estimate").alias("hll_b")
-    )
-    eu = hll_estimate(hll_merge(a, b), m_log2).select(
-        F.col("hll_estimate").alias("hll_union")
-    )
-    return (
-        ea.crossJoin(eb)
-        .crossJoin(eu)
-        .select(
-            F.greatest(
-                F.lit(0.0),
-                F.col("hll_a") + F.col("hll_b") - F.col("hll_union"),
-            ).alias("hll_inter_estimate"),
-            "hll_a", "hll_b", "hll_union",
-        )
     )
 
 
@@ -662,33 +541,15 @@ def kmv_sketch(
     )
 
 
-def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
-    """Distinct-count estimate per group: exact count when the sketch
-    is not full (covering mode), else (k-1) * 2^32 / tau where tau is
-    the k-th smallest hash."""
-    g = sketch.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"), F.max("h").alias("tau")
-    )
-    return g.select(
-        "g",
-        F.when(F.col("n") < k, F.col("n").cast("double"))
-        .otherwise(
-            F.lit(float(k - 1))
-            * F.lit(4294967296.0)
-            / F.col("tau").cast("double")
-        )
-        .alias("est_distinct"),
-    )
-
-
 def kmv_pair_stats(sketch: DataFrame, k: int) -> DataFrame:
     """Pairwise union / intersection / Jaccard estimates from the
     merged bottom-k of every group pair (g_a < g_b).
 
     The merged sketch\'s bottom-k is a uniform sample of the union;
     the fraction of it present in BOTH sides estimates Jaccard
-    (matches / sample size), and the union size uses the same
-    not-full-is-exact rule as kmv_estimate.  Runs entirely on the
+    (matches / sample size), and the union size is exact while the
+    merged sketch is not full, else (k-1) * 2^32 / tau with tau the
+    k-th smallest hash.  Runs entirely on the
     O(groups x k) sketch table — the fact table is never rescanned;
     merging two sketches is union + re-truncate (the mergeability
     contract)."""

@@ -2,23 +2,17 @@
 consumption side of CDC apply-changes (streaming/cdc.py): once a
 dimension is stored as type-2 history with ``__start_at``/``__end_at``
 bounds, every fact wants the dimension VERSION that was valid at its
-own event time, and analysts want the dimension AS OF a timestamp.
+own event time.
 
-Two operators:
-
-- :func:`temporal_join` — fact rows joined to the history version
-  whose [start, end) interval contains the fact timestamp.  Because
-  SCD2 intervals PARTITION time per key (end = next start, current
-  version open-ended), every fact matches at most one version — no
-  dedup pass, no window re-sort of the fact side.  This is the
-  interval formulation of the as-of join (operators/asof.py is the
-  union+window formulation over raw events); given a materialized
-  history table it is ONE equi-join on the key with the interval
-  predicate as join residual.
-- :func:`scd2_snapshot` — the dimension table as of a timestamp: a
-  scan-local filter (start <= t < end), no shuffle at all.  Time
-  travel for dimensions, the query-side twin of the versioned table's
-  commit-level time travel.
+:func:`temporal_join` joins fact rows to the history version whose
+[start, end) interval contains the fact timestamp.  Because
+SCD2 intervals PARTITION time per key (end = next start, current
+version open-ended), every fact matches at most one version — no
+dedup pass, no window re-sort of the fact side.  This is the
+interval formulation of the as-of join (operators/asof.py is the
+union+window formulation over raw events); given a materialized
+history table it is ONE equi-join on the key with the interval
+predicate as join residual.
 
 Scale notes (100 TB lens): the join is a plain equi-join on the
 dimension key — it shuffles fact and history on the key once (or
@@ -33,7 +27,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def _interval_contains(
@@ -79,19 +72,4 @@ def temporal_join(
     return facts.join(history, cond, how).select(
         *[facts[c] for c in facts.columns],
         *[history[c] for c in hist_cols],
-    )
-
-
-def scd2_snapshot(
-    history: DataFrame,
-    as_of: Column,
-    start_col: str = "__start_at",
-    end_col: str = "__end_at",
-) -> DataFrame:
-    """The dimension as of ``as_of`` (a timestamp Column/literal):
-    exactly the versions whose interval contains the instant — one
-    scan-local filter, zero shuffle, at most one row per key by the
-    SCD2 partition-of-time invariant."""
-    return history.filter(
-        _interval_contains(as_of, F.col(start_col), F.col(end_col))
     )

@@ -48,11 +48,6 @@ def stopword_hits(c: Column, pattern: str = LANG_STOPWORDS["en"]) -> Column:
     return F.regexp_count(F.lower(c), F.lit(pattern))
 
 
-def char_class_count(c: Column, char_class: str) -> Column:
-    """Number of characters NOT matching [^class] — i.e. in the class."""
-    return F.length(F.regexp_replace(c, f"[^{char_class}]", ""))
-
-
 def quality_score(c: Column) -> Column:
     """Heuristic document quality in [0,1]: length, stopword density,
     lexical diversity — the standard cheap pre-filters for LLM corpora.
@@ -86,15 +81,6 @@ def word_shingles(c: Column, n: int = 5) -> Column:
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-
-
-def char_ngrams(c: Column, n: int = 3) -> Column:
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
-            lambda i: F.substring(c, i, n),
         )
     )
 
@@ -348,78 +334,6 @@ def kn_bigram_lm_score(
 # shuffle belongs to whatever join built the pairs.  The clipped-
 # count lambda is O(distinct-grams x grams) per row — quadratic in
 # DOCUMENT length, constant in corpus size.
-
-
-def _clipped_overlap(ref_grams: Column, cand_grams: Column) -> Column:
-    """Sum over distinct candidate n-grams of min(count-in-ref,
-    count-in-cand) — the clipped modified-precision numerator."""
-    return F.aggregate(
-        F.array_distinct(cand_grams),
-        F.lit(0),
-        lambda acc, g: acc
-        + F.least(
-            F.size(F.filter(ref_grams, lambda x: x == g)),
-            F.size(F.filter(cand_grams, lambda x: x == g)),
-        ),
-    )
-
-
-def rouge_n(
-    ref_col: Column, cand_col: Column, n: int = 1
-) -> tuple[Column, Column, Column]:
-    """(precision, recall, f1) of clipped n-gram overlap — ROUGE-N
-    (Lin 2004) with BLEU-style clipping.  Division is IEEE double on
-    integer operands (cross-engine exact); f1 rounds to 9 digits.
-
-    PER-ROW form: the clipped lambda is O(distinct x grams) per pair —
-    right for sentence-level scoring; corpus-scale pair scoring should
-    use the explode/join shape (ngram_count_table + least-join, cf.
-    plans/textplans.py:text_rouge_bleu_pairs — measured 10x faster at
-    sf0.01 on ~300-token documents)."""
-    gr = ngrams_with_duplicates(ref_col, n)
-    gc = ngrams_with_duplicates(cand_col, n)
-    ov = _clipped_overlap(gr, gc).cast("double")
-    p = ov / F.size(gc)
-    r = ov / F.size(gr)
-    f1 = F.when(ov > 0, F.round(2 * p * r / (p + r), 9)).otherwise(
-        F.lit(0.0)
-    )
-    return F.round(p, 9), F.round(r, 9), f1
-
-
-def bleu_score(
-    ref_col: Column, cand_col: Column, max_n: int = 2
-) -> Column:
-    """Sentence BLEU-``max_n`` (Papineni et al. 2002) with Chen &
-    Cherry (2014) smoothing method 2 (add one to the numerator and
-    denominator of every order above unigram) and the standard
-    brevity penalty min(1, exp(1 - ref_len/cand_len)).
-
-    Determinism: each modified precision is an integer-operand IEEE
-    division; its libm ``ln`` quantizes to 9 decimals at the source
-    (the BM25 precedent), the uniform-weight sum is exact (weights
-    1/max_n on <= 9-decimal values), and the final ``exp`` product
-    quantizes to 9 — hash-stable cross-engine on the fixtures."""
-    log_sum = F.lit(0.0)
-    ov1 = None
-    for k in range(1, max_n + 1):
-        gr = ngrams_with_duplicates(ref_col, k)
-        gc = ngrams_with_duplicates(cand_col, k)
-        ov = _clipped_overlap(gr, gc).cast("double")
-        if k == 1:
-            ov1 = ov
-            p_k = ov / F.size(gc)
-        else:
-            p_k = (ov + 1.0) / (F.size(gc) + 1.0)
-        log_sum = log_sum + F.round(F.log(p_k), 9) / max_n
-    ref_len = token_count(ref_col).cast("double")
-    cand_len = token_count(cand_col).cast("double")
-    bp = F.least(F.lit(1.0), F.round(F.exp(1.0 - ref_len / cand_len), 9))
-    # zero unigram overlap means ln(0): guard BEFORE the log so neither
-    # engine ever evaluates it (DuckDB raises on ln(0))
-    return F.when(ov1 == 0, F.lit(0.0)).otherwise(
-        F.round(bp * F.round(F.exp(log_sum), 9), 9)
-    )
 
 
 def ngram_count_table(

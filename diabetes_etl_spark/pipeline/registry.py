@@ -70,36 +70,6 @@ def _sql_str(s: str) -> str:
     return s.replace("\\", "\\\\").replace("'", "\\'")
 
 
-def delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake runtime is on the session's classpath.
-
-    The reference's table_properties (`pipelines.autoOptimize.managed`,
-    src/diabetes_etl_pipeline.py:49-52) imply Delta-backed managed
-    tables on Databricks; stock-Spark deployments add the
-    `delta-spark` package to get the same format.  This probe gates the
-    optional `table_format="delta"` sink path so environments without
-    the package (like this sandbox) fall back to parquet with a clear
-    error instead of a classpath stack trace mid-write.
-
-    Status note (round 5): installing `delta-spark` was re-evaluated
-    and remains unavailable — this sandbox disallows package
-    installation (`import delta` fails; no pip access), so the gate
-    stays and the Delta path stays exercised only via this probe's
-    negative branch.  On a real deployment the same code path lights
-    up by launching Spark with the delta-spark package + catalog conf;
-    apply_changes then maps onto Delta MERGE (streaming/cdc.py keeps
-    the format-independent semantics, including the manifest commit
-    protocol for object stores, which Delta's own log subsumes).
-    """
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.spark.sql.delta.DeltaLog"
-        )
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
 def _committed_sink_files(sink_dir: str) -> set[str] | None:
     """File names the streaming file sink has durably committed, parsed
     from its ``_spark_metadata`` log (v1: one JSON SinkFileStatus per
@@ -330,21 +300,11 @@ class PipelineRunner:
         checkpoint_dir: str | None = None,
         cache: tuple[str, ...] = (),
         view_prefix: str = "",
-        table_format: str = "parquet",
     ):
         if mode not in ("views", "warehouse"):
             raise ValueError(mode)
         if mode == "warehouse" and not warehouse:
             raise ValueError("warehouse mode requires a warehouse dir")
-        if table_format not in ("parquet", "delta"):
-            raise ValueError(f"unsupported table_format {table_format!r}")
-        if table_format == "delta" and not delta_available(spark):
-            raise RuntimeError(
-                "table_format='delta' requires the Delta Lake runtime "
-                "(delta-spark) on the Spark classpath; this session does "
-                "not have it — use the parquet default"
-            )
-        self.table_format = table_format
         self.pipeline = pipeline
         self.spark = spark
         self.mode = mode
@@ -614,7 +574,7 @@ class PipelineRunner:
 
     def _materialize_batch(self, ds: Dataset, df: DataFrame) -> DataFrame:
         path = os.path.join(self.warehouse, ds.name)
-        writer = df.write.mode("overwrite").format(self.table_format)
+        writer = df.write.mode("overwrite").format("parquet")
         if ds.partition_by:
             writer = writer.partitionBy(*ds.partition_by)
         writer.save(path)
@@ -623,18 +583,15 @@ class PipelineRunner:
             # metrics are now available without any further scan
             if ds.name in self._pending_obs:
                 self._observed[ds.name] = self._pending_obs.pop(ds.name)
-        reader = self.spark.read.format(self.table_format)
-        if self.table_format == "parquet":
-            # The writer's own data columns spare the footer-inference
-            # job.  Partition columns are left to directory discovery
-            # (a file listing, no job), so their types and their place
-            # (last) are exactly those of a fresh spark.read.parquet:
-            # a string partition value that looks like a date reads back
-            # as a date either way.  Delta reads its schema from its log.
-            reader = reader.schema(StructType(
-                [f for f in df.schema if f.name not in ds.partition_by]
-            ))
-        out = reader.load(path)
+        # The writer's own data columns spare the footer-inference job.
+        # Partition columns are left to directory discovery (a file
+        # listing, no job), so their types and their place (last) are
+        # exactly those of a fresh spark.read.parquet: a string
+        # partition value that looks like a date reads back as a date
+        # either way.
+        out = self.spark.read.schema(StructType(
+            [f for f in df.schema if f.name not in ds.partition_by]
+        )).parquet(path)
         self._register_catalog_table(ds, path, out.schema)
         out.createOrReplaceTempView(self.view_prefix + ds.name)
         return out
@@ -651,7 +608,6 @@ class PipelineRunner:
         """
         # database-qualified so the same-named temp view (which shadows
         # unqualified names) never intercepts the DDL
-        fmt = self.table_format
         ident = f"`default`.`{self.view_prefix + ds.name}`"
         self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
         # Explicit columns, from the schema the caller read the table
@@ -661,15 +617,15 @@ class PipelineRunner:
         cols = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema
         )
-        ddl = f"CREATE TABLE {ident} ({cols}) USING {fmt}"
+        ddl = f"CREATE TABLE {ident} ({cols}) USING parquet"
         if ds.comment:
             ddl += f" COMMENT '{_sql_str(ds.comment)}'"
-        if ds.partition_by and fmt == "parquet":
+        if ds.partition_by:
             part = ", ".join(f"`{c}`" for c in ds.partition_by)
             ddl += f" PARTITIONED BY ({part})"
         ddl += f" LOCATION '{_sql_str(path)}'"
         self.spark.sql(ddl)
-        if ds.partition_by and fmt == "parquet":
+        if ds.partition_by:
             self.spark.sql(f"ALTER TABLE {ident} RECOVER PARTITIONS")
         if ds.table_properties:
             kv = ", ".join(
@@ -697,21 +653,11 @@ class PipelineRunner:
         The staged publish assumes a local-POSIX warehouse path
         (os.listdir + os.link/copy); on an object store the equivalent
         is a manifest-commit protocol (what Delta's transaction log
-        provides — see the table_format gate below).
+        provides).
         """
         if self.mode != "warehouse":
             raise ValueError(
                 f"streaming dataset {ds.name!r} requires warehouse mode"
-            )
-        if self.table_format != "parquet":
-            # Delta's transactional log is its own commit protocol; the
-            # per-file staged publish below is parquet-specific.  A
-            # delta streaming sink would validate via time travel +
-            # RESTORE instead — not implemented (no delta runtime in
-            # this environment to test against).
-            raise NotImplementedError(
-                "streaming datasets currently support only the parquet "
-                "table_format"
             )
         path = os.path.join(self.warehouse, ds.name)
         staging = os.path.join(self.warehouse, "_staging", ds.name)

@@ -1150,7 +1150,6 @@ _CONF_SPLIT = (
     "CAST(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '#' "
     "|| CAST(l_linenumber AS VARCHAR)), 1, 8))::BIGINT % 4 AS INT)"
 )
-_CONF_SPLIT_SPARK = None  # built inline
 
 
 _CONF_STATS = """

@@ -212,11 +212,11 @@ def decontam_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.explode(F.arrays_zip("sh", "fp")).alias("z"),
     )
-    # SCAN-LOCAL probe (bloom_hit_mask): the <= m-row bit table folds
-    # into a literal bitmask, so the corpus side tests membership
+    # SCAN-LOCAL probe (bloom_hit_mask_fp): the <= m-row bit table
+    # folds into a literal bitmask, so the corpus side tests membership
     # inside codegen — no explode-by-probe, no join, no gram strings
-    # in any shuffle (the join-based bloom_probe grouped per gram and
-    # measured 1.8x slower at sf0.1; equivalence is pinned in
+    # in any shuffle (a join-based probe grouped per gram measured
+    # 1.8x slower at sf0.1; equivalence is pinned in
     # tests/test_sketch.py)
     probed = corp_grams.select(
         "doc_id",

@@ -1400,7 +1400,7 @@ FROM keys GROUP BY block_key
     "words map through a PORTABLE Soundex (identical translate+regexp "
     "chain on both engines — Spark's builtin variant is deliberately "
     "not used so the oracle can replay it; operators/er.py:"
-    "soundex_key), the per-name key is the '-'-join of word codes, "
+    "soundex_sql), the per-name key is the '-'-join of word codes, "
     "and blocks aggregate to (size, distinct names, min key).  "
     "Blocking is THE standard ER fan-out bound: candidate pairs come "
     "from within blocks only — block sizes are the quantity this "

@@ -109,7 +109,7 @@ _PCA_ORACLE = sql_spark_round(_PCA_ORACLE)
     "aggregate), and driver state is the d-vector (the k-means-"
     "centroid pattern).  The spectral primitive behind embedding "
     "whitening / all-but-the-top dominant-direction removal "
-    "(project_out) ahead of clustering/ANN.  The oracle unrolls "
+    "ahead of clustering/ANN.  The oracle unrolls "
     "identical rounds, so every intermediate eigenvector estimate is "
     "hash-pinned.",
     tags=("embeddings", "pca", "iterative", "extension", "headline"),

@@ -1146,7 +1146,7 @@ ORDER BY doc_id, frame_idx
     "(operators/multimodal.py:plan_video_frames): the moov-walk "
     "probe, per-clip fan-out, schema, and Arrow batch shape are the "
     "REAL plumbing of a frame-extraction stage; only the pixel "
-    "decode itself is env-gated (decode_video_frame raises — no "
+    "decode itself is env-gated (decode_payload raises for video — no "
     "codec here, and fabricated pixels would poison downstream "
     "stats).  Integer-arithmetic timestamps make the plan "
     "oracle-replayable from the fixture geometry.",

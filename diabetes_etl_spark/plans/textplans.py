@@ -1393,8 +1393,8 @@ FROM m
     "(Chen-Cherry method 2, brevity penalty) for every document "
     "against its decade-head reference (ref = doc_id - doc_id%10) — "
     "the overlap metrics a curation pipeline uses for paraphrase "
-    "scoring and contamination severity beyond binary n-gram hits "
-    "(operators/text.py:rouge_n/bleu_score).  All per-row JVM array "
+    "scoring and contamination severity beyond binary n-gram hits.  "
+    "All per-row JVM array "
     "arithmetic: the only shuffle is the pair join; ln/exp quantize "
     "to 9 decimals at the source (BM25 precedent), zero-overlap "
     "pairs short-circuit before any ln(0).",
@@ -1489,16 +1489,6 @@ def text_rouge_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WP_V, _WP_MIN, _WP_MAX = 200, 2, 4
 _WP_MOD, _WP_BASE = 1_073_741_789, 131
-_WP_F = 2048  # packed-state field width (pos | np | fp)
-
-
-def _wp_j_sql() -> str:
-    cases = " ".join(
-        f"WHEN acc % {_WP_F} + {l - 1} <= length(w) AND "
-        f"len(m[substr(w, CAST(acc % {_WP_F} AS INT), {l})]) > 0 THEN {l}"
-        for l in range(_WP_MAX, 1, -1)
-    )
-    return f"(CASE {cases} ELSE 1 END)"
 
 
 def _wp_oracle() -> str:

@@ -133,8 +133,8 @@ ORDER BY commit_version
     "consecutive manifests cancel by multiset algebra and are never "
     "read (cost ∝ churn — asserted in tests/test_versioned.py); "
     "rewritten files' surviving rows cancel in exceptAll.  The "
-    "delete+insert shape feeds merge_cdc_partial_aggs directly for "
-    "incremental view maintenance off the feed.",
+    "delete+insert shape is the retraction input "
+    "streaming/aggmaint.py:merge_cdc_partial_aggs takes.",
     tags=("versioned", "cdc", "extension"),
     extended=True,
 )

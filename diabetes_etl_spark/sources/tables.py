@@ -183,66 +183,9 @@ def write_sink(
     writer.save(path)
 
 
-def save_bucketed(
-    df: DataFrame,
-    name: str,
-    bucket_cols: tuple[str, ...],
-    n_buckets: int,
-    sort_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (hash-pre-partitioned) managed table.
-
-    Bucketing pays the shuffle once at write time: every later
-    equi-join or aggregation on the bucket key reads co-located buckets
-    and plans with NO Exchange on either bucketed side — the difference
-    between moving 100 TB per join and moving nothing
-    (tests/test_sources.py asserts the shuffle-free plan).  The
-    repartition guarantees one file per bucket, which is what lets a
-    sortBy'd table also skip the join-time sort.
-    """
-    writer = (
-        df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-        .write.mode(mode)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(name)
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = FIXTURE_TABLES
 ) -> None:
     """Register fixture tables as temp views for the SQL entry point."""
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def save_range_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: tuple[str, ...],
-    n_files: int,
-    fmt: str = "parquet",
-) -> None:
-    """Persist with a RANGE-partitioned, within-file-sorted layout — the
-    open-source analogue of clustering/Z-ordering on one key prefix.
-
-    repartitionByRange gives globally disjoint per-file key ranges and
-    sortWithinPartitions makes every parquet row group's min/max stats
-    tight, so any reader filtering on the sort key skips whole files
-    and row groups from footer metadata alone (parquet predicate
-    pushdown).  At 100 TB this is the difference between scanning the
-    table and scanning the qualifying fraction; the shuffle is paid
-    once at write time, like save_bucketed pays for join locality.
-    tests/test_sources.py asserts the disjoint-ranges property from the
-    actual footers.
-    """
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )

@@ -196,8 +196,8 @@ class VersionedStreamReader(DataSourceStreamReader):
     emitting or dropping rewritten rows would corrupt downstream
     exactly-once sinks; the error names the option, the user opts in.
     Offsets checkpoint through Spark's offset log, so restart resumes
-    at the committed version — exactly-once with the txn handshake in
-    streaming/changefeed.py."""
+    at the committed version — exactly-once with the ``app_txn``
+    handshake of sources/versioned.py."""
 
     def __init__(self, path: str, options) -> None:
         self._path = path

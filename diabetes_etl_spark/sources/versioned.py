@@ -306,9 +306,9 @@ class VersionedTable:
         # version) IN the same atomic commit as the data, so after a
         # crash the consumer reads its own table to learn exactly how
         # far it got — the idempotence handshake streaming sinks need
-        # (streaming/changefeed.py is the consumer here).  The map
-        # carries forward from the parent manifest so unrelated
-        # commits never erase another app's cursor.
+        # (read back with last_app_version).  The map carries forward
+        # from the parent manifest so unrelated commits never erase
+        # another app's cursor.
         # ``txn_map_override`` replaces the carry-forward wholesale —
         # rollback() uses it to restore the ROLLED-BACK version's
         # cursor map: carrying the latest map forward would restore
@@ -720,12 +720,12 @@ class VersionedTable:
         """Restore an old version as a NEW commit (Delta RESTORE).
 
         Unlike Delta's RESTORE (which keeps the newest `txn` map and
-        so can strand changefeed consumers), the restored version's
+        so can strand feed consumers), the restored version's
         ``app_txn`` cursor map is restored WITH its data: a consumer
         view rolled back to version V wakes up with the cursors it had
-        at V, replays the upstream gap, and reconverges — preserving
-        the changefeed module's "no window where view and cursor
-        disagree" guarantee across restores (round-8 ADVICE medium).
+        at V, replays the upstream gap, and reconverges — there is no
+        window where a view and its cursor disagree, across restores
+        too (round-8 ADVICE medium).
         """
         ver, _ = self._latest()
         old = self._manifest_at(version)

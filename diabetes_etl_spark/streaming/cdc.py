@@ -15,9 +15,7 @@ Semantics (the public ``dlt.apply_changes`` contract for SCD type 1):
   STATE but persists in the target as a tombstone carrying its
   sequence — otherwise a late upsert older than the delete would find
   no applied row to lose to and resurrect the key.  Tombstones are
-  filtered out of the returned state; :func:`vacuum_tombstones` is the
-  retention sweep (Delta VACUUM analogue) that drops them once they
-  age past the late-data horizon.
+  filtered out of the returned state and stay in the target.
 
 Implementation: ``foreachBatch`` + bucket-partitioned parquet.
 
@@ -28,8 +26,8 @@ Implementation: ``foreachBatch`` + bucket-partitioned parquet.
   buckets.  Buckets the batch doesn't name are never read or written,
   so merge cost scales with ``batch_size x target_size / n_buckets``,
   not with target size.  At warehouse scale the same statement maps
-  onto Delta MERGE (see pipeline/registry.py's delta gate); this file
-  is the format-independent expression of the operator.
+  onto Delta MERGE; this file is the format-independent expression of
+  the operator.
 
 One commit protocol publishes the rewritten buckets: the shared
 manifest log, sources/manifest.py.
@@ -222,32 +220,6 @@ def _sweep(target_dir: str) -> int:
     )
 
 
-def _parquet_rows(paths: list[str]) -> int:
-    """Row count from parquet FOOTERS only — a driver-side metadata
-    read per file, no data-page scan and no Spark job."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for p in paths:
-        total += pq.ParquetFile(p).metadata.num_rows
-    return total
-
-
-def _entry_files(target_dir: str, entries: dict) -> list[str]:
-    out: list[str] = []
-    for e in entries.values():
-        if "files" in e:
-            out.extend(os.path.join(target_dir, f) for f in e["files"])
-        else:
-            d = os.path.join(target_dir, e["dir"])
-            out.extend(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            )
-    return out
-
-
 def read_target(spark: SparkSession, target_dir: str) -> DataFrame | None:
     """Read the current state of an apply-changes target (all buckets);
     None when no batch has ever committed a bucket.  ``__bucket`` is a
@@ -285,7 +257,7 @@ def _apply_changes(
             ).cast("int"),
         ).withColumn(
             # NULL from delete_expr must mean "not a delete", never a
-            # phantom NULL tombstone that no filter or vacuum matches
+            # phantom NULL tombstone that no filter matches
             # (same coalesce convention as expectation conditions,
             # pipeline/registry.py)
             "__deleted",
@@ -412,69 +384,3 @@ def apply_changes_scd2(
     # history keeps tombstone VERSIONS (__deleted marks them); only the
     # physical layout column is internal
     return raw.drop("__bucket")
-
-
-def vacuum_tombstones(
-    spark: SparkSession,
-    target_dir: str,
-    keep_after: tuple[str, object],
-) -> int:
-    """Drop SCD1 tombstones whose sequence is < ``keep_after`` —
-    the retention sweep completing the delete lifecycle.
-
-    ``keep_after`` must be at or behind the late-data horizon: a
-    tombstone may only be dropped once no change older than it can
-    still arrive (the same contract as a streaming watermark; dropping
-    earlier re-opens the resurrection window the tombstone closed).
-
-    Bucket-scoped like the merges: only buckets that actually hold
-    expired tombstones are read and rewritten (committed as the next
-    manifest, then the retention sweep runs); untouched buckets keep
-    their files.  The removed count comes from parquet FOOTER row
-    counts (before minus after over the affected buckets), not an
-    extra data scan.  Returns the number of tombstones removed.  Like
-    any file-replacing maintenance (sources/maintenance.py:
-    compact_files), DataFrames created over the target BEFORE the
-    sweep go stale — re-read after vacuuming.
-
-    SCD1-only by contract, and ENFORCED: an SCD2 target (schema
-    carries __start_at/__end_at) is rejected, because dropping its
-    tombstone VERSIONS would corrupt neighbors' validity bounds that
-    still reference their sequence values.
-    """
-    # validate BEFORE any I/O — misuse should be free
-    if not (isinstance(keep_after, tuple) and len(keep_after) == 2):
-        raise TypeError(
-            "keep_after must be (sequence_col_name, threshold_value)"
-        )
-    seq_col, threshold = keep_after
-    all_rows = read_target(spark, target_dir)
-    if all_rows is None:
-        return 0
-    if {"__start_at", "__end_at"} & set(all_rows.columns):
-        raise ValueError(
-            "vacuum_tombstones is SCD1-only: target carries __start_at/"
-            "__end_at (SCD2 history), whose tombstone versions anchor "
-            "neighbors' validity bounds and must not be swept"
-        )
-    all_rows = _with_deleted(all_rows)
-    expired = F.col("__deleted") & (F.col(seq_col) < F.lit(threshold))
-    affected = sorted(
-        r[0]
-        for r in all_rows.filter(expired).select("__bucket").distinct().collect()
-    )
-    if not affected:
-        return 0
-    # re-read ONLY the affected buckets' files for the rewrite:
-    # untouched buckets are never scanned again
-    entries = _affected_entries(target_dir, affected)
-    rows_before = _parquet_rows(_entry_files(target_dir, entries))
-    keep = _with_deleted(
-        _read_bucket_entries(spark, target_dir, entries)
-    ).filter(~expired)
-    files = _commit_buckets(keep, target_dir, affected)
-    rows_after = _parquet_rows(
-        [os.path.join(target_dir, f) for fs in files.values() for f in fs]
-    )
-    _sweep(target_dir)
-    return rows_before - rows_after

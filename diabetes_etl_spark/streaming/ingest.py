@@ -85,24 +85,6 @@ def incremental_file_ingest(
     return df
 
 
-def run_to_sink(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    fmt: str = "parquet",
-) -> None:
-    """Drain all currently-available input into a file sink, exactly once
-    per checkpoint lifetime, then stop (availableNow semantics)."""
-    q = (
-        stream_df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_snapshot(
     spark: SparkSession,
     stream_df: DataFrame,

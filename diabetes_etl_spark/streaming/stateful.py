@@ -90,94 +90,6 @@ def latest_profiles(snapshot: DataFrame) -> DataFrame:
     )
 
 
-# -- transformWithStateInPandas twin (Spark 4 API) --------------------------
-#
-# Same per-user profile semantics through the NEW arbitrary-state API
-# (SPARK-49564 transformWithState): typed composite state handles
-# (ValueState here; List/MapState available), timers, TTL, and state
-# schema evolution — the successor to applyInPandasWithState.  Keeping
-# both operators side by side documents the migration path.
-#
-# ENVIRONMENT GATE (like the Delta sink, COVERAGE.md): the
-# transformWithState state-server protocol needs google.protobuf
-# (pyspark/sql/streaming/proto/StateMessage_pb2), which this container
-# lacks and cannot install (no network — see COVERAGE.md).  The
-# operator therefore probes availability and raises a clear error
-# instead of the raw worker crash; the applyInPandasWithState twin
-# above carries the gate query.
-
-try:  # Spark >= 4.0 only
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover - this repo pins pyspark 4
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """StatefulProcessor maintaining the same fixed-width profile as
-    _update_user_profile, via a ValueState handle."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("profile", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        (user_id,) = key
-        if self._state.exists():
-            n, n_p, mx, last = self._state.get()
-        else:
-            n, n_p, mx, last = 0, 0, None, None
-        for pdf in rows:
-            n += len(pdf)
-            n_p += int((pdf["event_type"] == "purchase").sum())
-            bmax = pdf["value"].max(skipna=True)
-            if pd.notna(bmax):
-                mx = float(bmax) if mx is None else max(mx, float(bmax))
-            blast = pdf["ts"].max()
-            if pd.notna(blast):
-                micros = blast.value // 1000
-                last = micros if last is None else max(last, micros)
-        self._state.update((n, n_p, mx, last))
-        yield pd.DataFrame(
-            [(user_id, n, n_p, mx, last)],
-            columns=[
-                "user_id", "n_events", "n_purchases", "max_value",
-                "last_ts_micros",
-            ],
-        )
-
-    def close(self) -> None:
-        return None
-
-
-def transform_with_state_available() -> bool:
-    """The new API needs protobuf for its state-server wire protocol."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        return False
-    return StatefulProcessor is not object
-
-
-def running_user_profiles_tws(events_stream: DataFrame) -> DataFrame:
-    """transformWithStateInPandas variant of running_user_profiles —
-    identical output contract, new-API state handles."""
-    if not transform_with_state_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the google.protobuf package "
-            "(state-server wire protocol), which this environment lacks; "
-            "use running_user_profiles (applyInPandasWithState) instead"
-        )
-    return (
-        events_stream.select("user_id", "event_type", "value", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserProfileProcessor(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 # -- online Misra-Gries heavy-hitter state (round 10) ------------------------
 
 _MG_OUT_SCHEMA = (

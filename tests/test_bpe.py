@@ -7,7 +7,44 @@ from __future__ import annotations
 
 from collections import Counter
 
-from diabetes_etl_spark.operators.bpe import bpe_train, symbolize_words
+from pyspark.sql import DataFrame
+
+from diabetes_etl_spark.operators.bpe import (
+    apply_merge,
+    symbolize_words,
+    top_pair,
+)
+
+
+def bpe_train(
+    df: DataFrame, n_merges: int, text_col: str = "text"
+) -> tuple[list[tuple[str, str, int]], DataFrame]:
+    """Learn ``n_merges`` merges; returns (merge table, final word
+    table).  One 1-row collect per step (the argmax — bounded driver
+    traffic, like the IVF train sample); each step's rewrite is the
+    same broadcast fold as :func:`apply_merge`, and the word table is
+    cached between steps (it is the whole working set).
+
+    The multi-step driver of the engine's merge kernels (the
+    oracle-paired query runs a single step); it re-aggregates the full
+    word table per merge."""
+    words = symbolize_words(df, text_col).cache()
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(n_merges):
+        row = top_pair(words).collect()
+        if not row or row[0].cnt is None:
+            break
+        a, b, cnt = row[0].a, row[0].b, int(row[0].cnt)
+        merges.append((a, b, cnt))
+        nxt = apply_merge(
+            words, words.sparkSession.createDataFrame(
+                [(a, b)], "a string, b string"
+            )
+        ).cache()
+        nxt.count()  # materialize before uncaching the parent
+        words.unpersist()
+        words = nxt
+    return merges, words
 
 
 def _ref_bpe(texts: list[str], n_merges: int):
@@ -72,70 +109,6 @@ def test_bpe_train_partition_invariant(spark):
 
 
 # -- delta-maintained training (round-7) ------------------------------------
-
-
-def test_bpe_train_delta_matches_reference(spark):
-    from diabetes_etl_spark.operators.bpe import bpe_train_delta
-
-    df = spark.createDataFrame([(t,) for t in _TEXTS], "text string")
-    merges, words = bpe_train_delta(df, 5)
-    ref_merges, ref_syms = _ref_bpe(_TEXTS, 5)
-    assert merges == ref_merges
-    got = {r.word: r.sym.split(" ") for r in words.collect()}
-    assert got == ref_syms
-
-
-def test_bpe_train_delta_equals_full_loop_deep(spark):
-    """Deep merge run where delta bookkeeping errors would compound:
-    every step's argmax must match the full-reaggregation loop."""
-    from diabetes_etl_spark.operators.bpe import bpe_train, bpe_train_delta
-
-    texts = _TEXTS + [
-        "banana bandana ana anna na nab ban",
-        "mississippi missing mission emission",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    m_full, w_full = bpe_train(df, 12)
-    m_delta, w_delta = bpe_train_delta(df, 12, checkpoint_every=3)
-    assert m_delta == m_full
-    assert (
-        {r.word: r.sym for r in w_delta.collect()}
-        == {r.word: r.sym for r in w_full.collect()}
-    )
-
-
-def test_bpe_train_delta_scans_only_affected_words(spark):
-    """The delta loop's per-merge pair aggregate must read the
-    affected-word SLICE of the cached vocabulary (a Contains filter on
-    the symbol string), never the full table — the structural property
-    that replaces the full per-merge re-aggregation (raw Spark job
-    counts are not comparable under AQE's sub-job splitting)."""
-    from pyspark.sql import functions as F
-
-    from diabetes_etl_spark.operators.bpe import (
-        _merge_fold,
-        _word_pair_deltas,
-        symbolize_words,
-    )
-
-    df = spark.createDataFrame([(t,) for t in _TEXTS], "text string")
-    words = symbolize_words(df)
-    m = spark.createDataFrame([("l", "o")], "ma string, mb string")
-    changed_old = (
-        words.filter(
-            F.concat(F.lit(" "), F.col("sym"), F.lit(" ")).contains(
-                F.lit(" l o ")
-            )
-        )
-        .crossJoin(F.broadcast(m))
-        .withColumn("new_sym", _merge_fold())
-    )
-    plan = _word_pair_deltas(changed_old)._jdf.queryExecution().toString()
-    assert "Contains" in plan  # the affected-word restriction is in-plan
-    # and the deltas are exactly the affected words' old-minus-new pairs
-    got = {(r.a, r.b): r.d for r in _word_pair_deltas(changed_old).collect()}
-    assert got[("l", "o")] < 0  # merged pair disappears
-    assert all(d != 0 for d in got.values())
 
 
 # -- in-plan encode (round-7) -----------------------------------------------

@@ -260,41 +260,6 @@ def test_streaming_publish_crash_recovery(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS `default`.`staged_tbl`")
 
 
-def test_delta_format_is_gated_on_runtime(spark, tmp_path):
-    """table_format='delta' must fail fast with a clear message when the
-    Delta runtime is absent (this sandbox), and write delta when it is
-    present — never a mid-write classpath stack trace."""
-    from diabetes_etl_spark.pipeline.registry import delta_available
-
-    p = Pipeline("delta-gate")
-
-    @p.table(name="delta_tbl")
-    def delta_tbl(ctx):
-        return spark.createDataFrame([Row(a=1)])
-
-    if not delta_available(spark):
-        with pytest.raises(RuntimeError, match="delta-spark"):
-            PipelineRunner(
-                p, spark, mode="warehouse", warehouse=str(tmp_path),
-                table_format="delta",
-            )
-    else:  # pragma: no cover - needs delta on the classpath
-        PipelineRunner(
-            p, spark, mode="warehouse", warehouse=str(tmp_path),
-            table_format="delta",
-        ).run()
-        assert os.path.isdir(str(tmp_path / "delta_tbl" / "_delta_log"))
-        spark.sql("DROP TABLE IF EXISTS `default`.`delta_tbl`")
-
-
-def test_unknown_table_format_rejected(spark, tmp_path):
-    with pytest.raises(ValueError, match="table_format"):
-        PipelineRunner(
-            Pipeline("x"), spark, mode="warehouse", warehouse=str(tmp_path),
-            table_format="orc",
-        )
-
-
 def test_expect_or_fail_null_condition_is_violation(spark):
     """DLT semantics: a constraint evaluating to NULL is a violation,
     consistent with expect_or_drop dropping non-TRUE rows."""

@@ -405,39 +405,6 @@ def test_sampling_output_column_collisions_rejected(spark):
         repeat_sample(repeated, rates={}, default_rate=1.0)
 
 
-def test_vacuum_drops_only_expired_tombstones(spark, tmp_path):
-    from diabetes_etl_spark.streaming.cdc import (
-        read_target,
-        vacuum_tombstones,
-    )
-
-    base = str(tmp_path)
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    _write_changes(
-        spark, src, "b1",
-        [
-            (1, 10, None, "delete"),   # old tombstone -> expired
-            (2, 50, None, "delete"),   # recent tombstone -> kept
-            (3, 5, "live", "upsert"),  # live row older than threshold:
-                                       # NEVER vacuumed (not a tombstone)
-        ],
-    )
-    final = _run(spark, base)
-    # consume pre-vacuum frames BEFORE the sweep: vacuum replaces bucket
-    # files, so earlier DataFrames over the target go stale (the same
-    # caveat as compact_files)
-    assert _state(final) == {3: (5, "live")}
-    target = os.path.join(base, "target")
-    removed = vacuum_tombstones(spark, target, ("seq", 30))
-    assert removed == 1
-    raw = read_target(spark, target)
-    rows = {r["user_id"]: r["__deleted"] for r in raw.collect()}
-    assert rows == {2: True, 3: False}
-    # idempotent: nothing further to remove
-    assert vacuum_tombstones(spark, target, ("seq", 30)) == 0
-
-
 # -- manifest commit protocol (object-store-safe) ---------------------------
 
 
@@ -586,9 +553,7 @@ def test_truncated_manifest_falls_back_to_previous_version(spark, tmp_path):
     ) == {1: (10, "a")}
 
 
-def test_scd2_manifest_late_splice_and_vacuum_guard(spark, tmp_path):
-    from diabetes_etl_spark.streaming.cdc import vacuum_tombstones
-
+def test_scd2_manifest_late_splice(spark, tmp_path):
     base = str(tmp_path)
     src = os.path.join(base, "src")
     os.makedirs(src)
@@ -623,35 +588,6 @@ def test_scd2_manifest_late_splice_and_vacuum_guard(spark, tmp_path):
         (1, 20, "late", 20, 30),
         (1, 30, "c", 30, None),
     ]
-    # the SCD1-only retention sweep must refuse SCD2 history
-    with pytest.raises(ValueError, match="SCD1-only"):
-        vacuum_tombstones(spark, os.path.join(base, "t2"), ("seq", 100))
-
-
-def test_vacuum_on_manifest_target(spark, tmp_path):
-    from diabetes_etl_spark.streaming.cdc import vacuum_tombstones
-
-    base = str(tmp_path)
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    _write_changes(
-        spark, src, "b1",
-        [
-            (1, 10, None, "delete"),
-            (2, 50, None, "delete"),
-            (3, 5, "live", "upsert"),
-        ],
-    )
-    final = _run(spark, base)
-    assert _state(final) == {3: (5, "live")}
-    target = os.path.join(base, "target")
-    assert vacuum_tombstones(spark, target, ("seq", 30)) == 1
-    rows = {
-        r["user_id"]: r["__deleted"]
-        for r in read_target(spark, target).collect()
-    }
-    assert rows == {2: True, 3: False}
-    assert vacuum_tombstones(spark, target, ("seq", 30)) == 0
 
 
 def test_old_layout_target_without_deleted_column_still_merges(

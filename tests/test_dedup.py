@@ -641,95 +641,6 @@ def test_hash_profile_jaccard_equals_string_jaccard(spark, sf_dir):
     assert diff == 0
 
 
-def test_continuous_dedup_loop_matches_one_shot(spark, tmp_path):
-    """The full continuous-dedup composition (rounds 7+8): per ingest
-    batch, near-dup matches come from the PERSISTED minhash index
-    (minhash_lsh_incremental), the index extends by append, and the
-    match edges fold into the standing cluster labels
-    (connected_components_incremental) — after every batch the labels
-    equal the one-shot pipeline (minhash_lsh_pairs + components) over
-    everything ingested so far.  History text is never re-read, and
-    no component run ever sees the full pair history."""
-    from diabetes_etl_spark.operators.components import (
-        connected_components,
-        connected_components_incremental,
-    )
-    from diabetes_etl_spark.operators.dedup import (
-        minhash_index,
-        minhash_lsh_incremental,
-        minhash_lsh_pairs,
-    )
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the band "
-        "plays on and the crowd cheers loudly tonight in the park"
-    )
-    other = (
-        "completely different prose about distributed query engines "
-        "partition pruning shuffle exchanges and adaptive execution"
-    )
-    batches = [
-        [(1, base + " v1"), (2, other + " v1")],
-        [(10, base + " v2"), (11, other + " zz2")],   # cross-batch dups
-        [(20, base + " v3"), (21, "unrelated short text entirely")],
-    ]
-    kw = dict(threshold=0.5)
-
-    bands_store = VersionedTable(spark, str(tmp_path / "bands"))
-    prof_store = VersionedTable(spark, str(tmp_path / "profiles"))
-    labels = VersionedTable(spark, str(tmp_path / "labels"), stats_cols=("id",))
-
-    seen: list[tuple[int, str]] = []
-    for i, b in enumerate(batches):
-        docs = spark.createDataFrame(b, "doc_id long, text string")
-        if bands_store.history():
-            idx_b, idx_p = bands_store.read(), prof_store.read()
-        else:
-            empty = spark.createDataFrame([], "doc_id long, text string")
-            idx_b, idx_p = minhash_index(empty, "doc_id", "text")
-        matches = minhash_lsh_incremental(
-            idx_b, idx_p, docs, "doc_id", "text", **kw
-        )
-        edges = matches.select(
-            F.col("new_id").alias("src"), F.col("matched_id").alias("dst")
-        )
-        connected_components_incremental(
-            labels, edges, work_dir=str(tmp_path / f"wd{i}"),
-        )
-        nb, np_ = minhash_index(docs, "doc_id", "text")
-        if bands_store.history():
-            bands_store.append(nb)
-            prof_store.append(np_)
-        else:
-            bands_store.overwrite(nb)
-            prof_store.overwrite(np_)
-        seen.extend(b)
-
-        # reference: one-shot pipeline over everything so far
-        all_docs = spark.createDataFrame(seen, "doc_id long, text string")
-        pairs = minhash_lsh_pairs(all_docs, "doc_id", "text", **kw)
-        want = sorted(
-            (r.id, r.component)
-            for r in connected_components(
-                pairs.select(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                ),
-                work_dir=str(tmp_path / f"ref{i}"),
-            ).collect()
-        )
-        got = (
-            sorted((r.id, r.component) for r in labels.read().collect())
-            if labels.history()
-            else []
-        )
-        assert got == want, f"after batch {i}"
-
-    # the three base-variants form ONE cluster spanning all batches
-    comp_of = {r.id: r.component for r in labels.read().collect()}
-    assert comp_of[1] == comp_of[10] == comp_of[20] == 1
-
-
 def _brute_shingle_jaccard(rows, threshold):
     """Driver-side quadratic scan (test-only truth): distinct 5-token
     shingles, exact Jaccard, every pair."""

@@ -1,10 +1,8 @@
 """Round-8 maintenance features (round-7 VERDICT #4/#5/#6/#8):
 
-- two-store join-aggregate view surviving BOTH fact deltas and
-  dimension updates (retract-old/insert-new over affected groups);
-- streaming consumption of the versioned table's change feed with the
-  Delta-`txn` idempotence handshake (cursor committed atomically with
-  the refreshed view);
+- the Delta-`txn` idempotence handshake on the versioned table
+  (consumer cursors committed atomically with the data, carried
+  forward and restored with rollback);
 - schema evolution type WIDENING (int chain, float→double) on
   merge_schema appends, with loud errors on incompatible changes;
 - MIN/MAX maintenance under retractions via bounded per-group
@@ -15,227 +13,12 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from diabetes_etl_spark.sources.versioned import VersionedTable
-from diabetes_etl_spark.streaming.aggmaint import (
-    maintain_minmax_state,
-    merge_join_dim_delta,
-    merge_join_fact_delta,
-)
-from diabetes_etl_spark.streaming.changefeed import (
-    maintain_cdc_view,
-    run_to_latest,
-)
+from diabetes_etl_spark.streaming.aggmaint import maintain_minmax_state
 
 
-# -- two-store join view: fact + dim deltas ---------------------------------
-
-
-def _batch_join_agg(spark, facts, dim):
-    """Reference recompute: Agg(all facts ⋈ current dim)."""
-    f = spark.createDataFrame(facts, "ck long, region string, amt double")
-    d = spark.createDataFrame(dim, "ck long, segment string")
-    return sorted(
-        (r.region, r.segment, r.n_rows, str(r.sum_amt))
-        for r in f.join(d, "ck")
-        .groupBy("region", "segment")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("amt").cast("decimal(28,2)")).alias("sum_amt"),
-        )
-        .collect()
-    )
-
-
-def _view_rows(view):
-    return sorted(
-        (r.region, r.segment, r.n_rows, str(r.sum_amt))
-        for r in view.read().collect()
-    )
-
-
-def test_join_view_survives_fact_and_dim_deltas(spark, tmp_path):
-    """Interleave 3 fact micro-batches with 2 dim updates; after every
-    step the maintained view equals the batch recompute over all facts
-    joined to the CURRENT dim — fact history never rescanned, dim
-    updates applied as retract-old/insert-new through fact_store."""
-    fact_store = VersionedTable(spark, str(tmp_path / "fact"))
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    dim1 = [(1, "gold"), (2, "silver"), (3, "gold")]
-    d1 = spark.createDataFrame(dim1, "ck long, segment string")
-
-    fb1 = [(1, "eu", 10.0), (2, "eu", 20.0), (3, "us", 5.0)]
-    merge_join_fact_delta(
-        fact_store, view, spark.createDataFrame(fb1, "ck long, region string, amt double"),
-        d1, "ck", ["region"], ["segment"], ["amt"],
-    )
-    assert _view_rows(view) == _batch_join_agg(spark, fb1, dim1)
-
-    # dim update: customer 1 gold -> platinum (D old + I new images)
-    changes = spark.createDataFrame(
-        [(1, "gold", "D"), (1, "platinum", "I")],
-        "ck long, segment string, _op string",
-    )
-    merge_join_dim_delta(
-        fact_store, view, changes, "ck", ["region"], ["segment"], ["amt"]
-    )
-    dim2 = [(1, "platinum"), (2, "silver"), (3, "gold")]
-    assert _view_rows(view) == _batch_join_agg(spark, fb1, dim2)
-
-    # second fact batch joins the UPDATED dim
-    fb2 = [(1, "eu", 7.5), (3, "us", 2.5)]
-    d2 = spark.createDataFrame(dim2, "ck long, segment string")
-    merge_join_fact_delta(
-        fact_store, view, spark.createDataFrame(fb2, "ck long, region string, amt double"),
-        d2, "ck", ["region"], ["segment"], ["amt"],
-    )
-    assert _view_rows(view) == _batch_join_agg(spark, fb1 + fb2, dim2)
-
-    # dim update that CANCELS a group: customer 3 gold -> silver moves
-    # all us/gold mass to us/silver; us/gold must disappear, not
-    # linger as a zero row
-    changes2 = spark.createDataFrame(
-        [(3, "gold", "D"), (3, "silver", "I")],
-        "ck long, segment string, _op string",
-    )
-    merge_join_dim_delta(
-        fact_store, view, changes2, "ck", ["region"], ["segment"], ["amt"]
-    )
-    dim3 = [(1, "platinum"), (2, "silver"), (3, "silver")]
-    got = _view_rows(view)
-    assert got == _batch_join_agg(spark, fb1 + fb2, dim3)
-    assert all(not (r[0] == "us" and r[1] == "gold") for r in got)
-
-    # third fact batch, including a join key the dim update touched
-    fb3 = [(3, "us", 100.0), (2, "eu", 1.0)]
-    d3 = spark.createDataFrame(dim3, "ck long, segment string")
-    merge_join_fact_delta(
-        fact_store, view, spark.createDataFrame(fb3, "ck long, region string, amt double"),
-        d3, "ck", ["region"], ["segment"], ["amt"],
-    )
-    assert _view_rows(view) == _batch_join_agg(spark, fb1 + fb2 + fb3, dim3)
-
-
-def test_join_dim_delta_rejects_unknown_ops(spark, tmp_path):
-    fact_store = VersionedTable(spark, str(tmp_path / "fact"))
-    view = VersionedTable(spark, str(tmp_path / "view"))
-    merge_join_fact_delta(
-        fact_store, view,
-        spark.createDataFrame([(1, "eu", 1.0)], "ck long, region string, amt double"),
-        spark.createDataFrame([(1, "gold")], "ck long, segment string"),
-        "ck", ["region"], ["segment"], ["amt"],
-    )
-    bad = spark.createDataFrame(
-        [(1, "gold", "UPSERT")], "ck long, segment string, _op string"
-    )
-    with pytest.raises(ValueError, match="unknown op code"):
-        merge_join_dim_delta(
-            fact_store, view, bad, "ck", ["region"], ["segment"], ["amt"]
-        )
-
-
-# -- change-feed streaming consumption --------------------------------------
-
-
-def _src_table(spark, path):
-    return VersionedTable(spark, str(path), stats_cols=("k",))
-
-
-def _expect_view(spark, src, keys=("g",)):
-    return sorted(
-        (r.g, r.n_rows, str(r.sum_v))
-        for r in src.read()
-        .groupBy(*keys)
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("v").cast("decimal(28,2)")).alias("sum_v"),
-        )
-        .collect()
-    )
-
-
-def _got_view(view):
-    return sorted(
-        (r.g, r.n_rows, str(r.sum_v)) for r in view.read().collect()
-    )
-
-
-def test_changefeed_maintains_view_across_commit_kinds(spark, tmp_path):
-    """End-to-end CDF loop: writes to the versioned table → change
-    feed → Z-set-maintained aggregate equals the batch recompute after
-    every producer commit (append, delete_where, merge upsert)."""
-    src = _src_table(spark, tmp_path / "src")
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    def rows(*tuples):
-        return spark.createDataFrame(list(tuples), "k long, g string, v double")
-
-    # v1: initial load; consumer bootstraps from the snapshot
-    src.overwrite(rows((1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)))
-    assert maintain_cdc_view(src, view, ["g"], ["v"]) is not None
-    assert _got_view(view) == _expect_view(spark, src)
-    assert view.last_app_version("changefeed") == 1
-
-    # nothing new -> no-op, no empty commit
-    assert maintain_cdc_view(src, view, ["g"], ["v"]) is None
-    n_commits = len(view.history())
-
-    # v2 append + v3 delete, consumed in ONE incremental batch
-    src.append(rows((4, "b", 40.0), (5, "c", 50.0)))
-    src.delete_where("k <= 1")
-    assert maintain_cdc_view(src, view, ["g"], ["v"]) is not None
-    assert _got_view(view) == _expect_view(spark, src)
-    assert view.last_app_version("changefeed") == 3
-    assert len(view.history()) == n_commits + 1
-
-    # v4 merge upsert (rewrite appears as delete+insert pair -> exact
-    # retraction); group 'c' vanishes when its only row moves to 'a'
-    src.merge(rows((5, "a", 55.0)), key_col="k")
-    maintain_cdc_view(src, view, ["g"], ["v"])
-    got = _got_view(view)
-    assert got == _expect_view(spark, src)
-    assert all(r[0] != "c" for r in got)
-
-
-def test_changefeed_idempotent_replay_and_bounded_batches(spark, tmp_path):
-    """Crash-replay safety: the cursor lives INSIDE the view's commit,
-    so re-running the consumer never double-applies; bounded draining
-    (max_versions_per_batch=1) walks the history one commit at a time
-    and converges to the same state."""
-    src = _src_table(spark, tmp_path / "src")
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    def rows(*tuples):
-        return spark.createDataFrame(list(tuples), "k long, g string, v double")
-
-    src.overwrite(rows((1, "a", 1.0)))
-    src.append(rows((2, "b", 2.0)))
-    src.append(rows((3, "b", 3.0)))
-    src.delete_where("k = 2")
-
-    seen = []
-    n = run_to_latest(
-        src, view, ["g"], ["v"], max_versions_per_batch=1,
-        on_batch=seen.append,
-    )
-    # bootstrap consumed the snapshot at latest (v4) in one commit
-    assert n == 1 and view.last_app_version("changefeed") == 4
-    assert _got_view(view) == _expect_view(spark, src)
-
-    # two more producer commits, drained one version per batch
-    src.append(rows((4, "c", 4.0)))
-    src.append(rows((5, "c", 5.0)))
-    n = run_to_latest(src, view, ["g"], ["v"], max_versions_per_batch=1)
-    assert n == 2
-    assert _got_view(view) == _expect_view(spark, src)
-
-    # replay after "crash": calling again is a no-op at every level
-    state_before = _got_view(view)
-    assert run_to_latest(src, view, ["g"], ["v"]) == 0
-    assert maintain_cdc_view(src, view, ["g"], ["v"]) is None
-    assert _got_view(view) == state_before
+# -- application transaction ids (app_txn) ----------------------------------
 
 
 def test_app_txn_survives_unrelated_commits(spark, tmp_path):
@@ -577,141 +360,6 @@ def test_zorder_rejects_single_column(spark, tmp_path):
         t.compact(target_bytes=1 << 30, zorder_by=("x",))
 
 
-# -- two-feed materialized join view ----------------------------------------
-
-
-def _mk_fact_rows(spark, *tuples):
-    return spark.createDataFrame(
-        list(tuples), "ck long, region string, amt double"
-    )
-
-
-def _mk_dim_rows(spark, *tuples):
-    return spark.createDataFrame(list(tuples), "ck long, segment string")
-
-
-def _expected_join_view(spark, fact_src, dim_src):
-    return sorted(
-        (r.region, r.segment, r.n_rows, str(r.sum_amt))
-        for r in fact_src.read()
-        .join(dim_src.read(), "ck")
-        .groupBy("region", "segment")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("amt").cast("decimal(28,2)")).alias("sum_amt"),
-        )
-        .collect()
-    )
-
-
-def test_join_view_from_two_feeds_tracks_both_tables(spark, tmp_path):
-    from diabetes_etl_spark.streaming.changefeed import (
-        maintain_join_view_from_feeds,
-    )
-
-    fact_src = VersionedTable(spark, str(tmp_path / "facts"), stats_cols=("ck",))
-    dim_src = VersionedTable(spark, str(tmp_path / "dims"), stats_cols=("ck",))
-    fact_store = VersionedTable(spark, str(tmp_path / "fstore"))
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    def sync():
-        return maintain_join_view_from_feeds(
-            fact_src, dim_src, fact_store, view,
-            "ck", ["region"], ["segment"], ["amt"],
-        )
-
-    fact_src.overwrite(_mk_fact_rows(spark, (1, "eu", 10.0), (2, "us", 20.0)))
-    dim_src.overwrite(_mk_dim_rows(spark, (1, "gold"), (2, "silver")))
-    out = sync()
-    assert out["bootstrap"] is not None
-    assert _view_rows(view) == _expected_join_view(spark, fact_src, dim_src)
-
-    # independent upstream commits, one sync applies both feeds
-    fact_src.append(_mk_fact_rows(spark, (1, "eu", 5.0), (2, "eu", 7.0)))
-    dim_src.merge(_mk_dim_rows(spark, (1, "platinum")), key_col="ck")
-    out = sync()
-    assert out["dim"] is not None and out["fact"] is not None
-    assert _view_rows(view) == _expected_join_view(spark, fact_src, dim_src)
-
-    # nothing new -> every phase is a no-op
-    assert all(v is None for v in sync().values())
-
-
-def test_join_view_feed_crash_between_stores_recovers_exactly(
-    spark, tmp_path, monkeypatch
-):
-    """Crash injected between the fact_store commit and the view
-    commit; a dim update lands BEFORE the next sync — the recovery
-    path must replay the missed fact delta against the dim AS APPLIED
-    at crash time, or the ΔF·ΔD cross term double-counts."""
-    from diabetes_etl_spark.streaming.changefeed import (
-        maintain_join_view_from_feeds,
-    )
-
-    fact_src = VersionedTable(spark, str(tmp_path / "facts"), stats_cols=("ck",))
-    dim_src = VersionedTable(spark, str(tmp_path / "dims"), stats_cols=("ck",))
-    fact_store = VersionedTable(spark, str(tmp_path / "fstore"))
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    def sync():
-        return maintain_join_view_from_feeds(
-            fact_src, dim_src, fact_store, view,
-            "ck", ["region"], ["segment"], ["amt"],
-        )
-
-    fact_src.overwrite(_mk_fact_rows(spark, (1, "eu", 10.0)))
-    dim_src.overwrite(_mk_dim_rows(spark, (1, "gold")))
-    sync()
-
-    # crash: the fact phase's VIEW commit fails after fact_store moved
-    fact_src.append(_mk_fact_rows(spark, (1, "eu", 3.0)))
-    real_overwrite = view.overwrite
-
-    def exploding_overwrite(*a, **kw):
-        raise RuntimeError("injected crash")
-
-    monkeypatch.setattr(view, "overwrite", exploding_overwrite)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sync()
-    monkeypatch.setattr(view, "overwrite", real_overwrite)
-    assert (fact_store.last_app_version("factfeed") or 0) > (
-        view.last_app_version("factfeed") or 0
-    )
-
-    # dim changes while the view lags
-    dim_src.merge(_mk_dim_rows(spark, (1, "platinum")), key_col="ck")
-    out = sync()
-    assert out["fact_recovery"] is not None and out["dim"] is not None
-    assert _view_rows(view) == _expected_join_view(spark, fact_src, dim_src)
-    # idempotent afterwards
-    assert all(v is None for v in sync().values())
-    assert _view_rows(view) == _expected_join_view(spark, fact_src, dim_src)
-
-
-def test_join_view_feed_rejects_fact_deletes(spark, tmp_path):
-    from diabetes_etl_spark.streaming.changefeed import (
-        maintain_join_view_from_feeds,
-    )
-
-    fact_src = VersionedTable(spark, str(tmp_path / "facts"), stats_cols=("ck",))
-    dim_src = VersionedTable(spark, str(tmp_path / "dims"), stats_cols=("ck",))
-    fact_store = VersionedTable(spark, str(tmp_path / "fstore"))
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    fact_src.overwrite(_mk_fact_rows(spark, (1, "eu", 10.0), (2, "us", 1.0)))
-    dim_src.overwrite(_mk_dim_rows(spark, (1, "gold"), (2, "gold")))
-    maintain_join_view_from_feeds(
-        fact_src, dim_src, fact_store, view,
-        "ck", ["region"], ["segment"], ["amt"],
-    )
-    fact_src.delete_where("ck = 2")
-    with pytest.raises(ValueError, match="insert-only"):
-        maintain_join_view_from_feeds(
-            fact_src, dim_src, fact_store, view,
-            "ck", ["region"], ["segment"], ["amt"],
-        )
-
-
 # -- CHECK constraints ------------------------------------------------------
 
 
@@ -771,125 +419,3 @@ def test_minmax_null_values_dropped_not_confused_with_state(spark, tmp_path):
         ["g"], "v", "op", k=4,
     )
     assert store.read().first().group_max == 7.0
-
-
-# -- continuous clean-corpus loop --------------------------------------------
-
-
-def _raw_batches():
-    return [
-        [
-            (1, "a b c d e f g h x1 x2 x3 x4 x5 x6 x7 x8"),
-            (2, "a b c d e f g h slow y2 y3 y4 y5 y6 y7 y8"),
-        ],
-        [
-            (3, "unique u2 u3 u4 u5 u6 u7 u8 tail"),
-            (4, "a b c d e f g h n1 n2 n3 n4 n5 n6 n7 n8"),
-        ],
-        [
-            (5, "x1 x2 x3 x4 x5 x6 x7 x8 fresh1 fresh2"),
-            (6, "n1 n2 n3 n4 n5 n6 n7 n8 end"),
-        ],
-    ]
-
-
-def _clean_tables(spark, tmp_path, sub):
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-
-    raw = VersionedTable(spark, str(tmp_path / f"{sub}_raw"),
-                         stats_cols=("doc_id",))
-    clean = VersionedTable(spark, str(tmp_path / f"{sub}_clean"),
-                           stats_cols=("doc_id",))
-    index = VersionedTable(spark, str(tmp_path / f"{sub}_idx"),
-                           stats_cols=("h",))
-    return raw, clean, index
-
-
-def _one_shot(spark, rows):
-    from diabetes_etl_spark.operators.dedup import remove_duplicate_lines
-
-    full = spark.createDataFrame(rows, "doc_id long, text string")
-    return sorted(
-        map(tuple, remove_duplicate_lines(full, blocklist=("slow",)).collect())
-    )
-
-
-_CLEAN_COLS = [
-    "doc_id", "n_lines", "n_rule_dropped", "n_dup_dropped", "n_kept",
-    "cleaned_text",
-]
-
-
-def test_clean_corpus_loop_matches_one_shot_per_tick(spark, tmp_path):
-    from diabetes_etl_spark.streaming.changefeed import maintain_clean_corpus
-
-    raw, clean, index = _clean_tables(spark, tmp_path, "loop")
-    seen = []
-    for b in _raw_batches():
-        raw.append(spark.createDataFrame(b, "doc_id long, text string"))
-        assert maintain_clean_corpus(
-            raw, clean, index, blocklist=("slow",)
-        ) is not None
-        seen += b
-        got = sorted(
-            map(tuple, clean.read().select(*_CLEAN_COLS).collect())
-        )
-        assert got == _one_shot(spark, seen)
-    # nothing new -> no-op, state unchanged
-    assert maintain_clean_corpus(raw, clean, index, blocklist=("slow",)) is None
-
-
-def test_clean_corpus_loop_self_heals_after_crash_before_index_sync(
-    spark, tmp_path
-):
-    """Simulate a crash AFTER the clean append but BEFORE the index
-    sync: the next tick must repair the index from clean's own feed
-    and still match the one-shot cleaner."""
-    from diabetes_etl_spark.operators.dedup import (
-        remove_duplicate_lines_incremental,
-    )
-    from diabetes_etl_spark.streaming.changefeed import (
-        changes_since,
-        maintain_clean_corpus,
-        sync_line_index,
-    )
-
-    raw, clean, index = _clean_tables(spark, tmp_path, "crash")
-    batches = _raw_batches()
-    raw.append(spark.createDataFrame(batches[0], "doc_id long, text string"))
-    assert maintain_clean_corpus(raw, clean, index, blocklist=("slow",))
-
-    # tick 2 crashes mid-way: replicate the body up to the clean
-    # append, then "die" before sync_line_index
-    raw.append(spark.createDataFrame(batches[1], "doc_id long, text string"))
-    sync_line_index(clean, index)
-    cursor = clean.last_app_version("clean-corpus")
-    changes, new_cursor = changes_since(raw, cursor, raw._latest()[0])
-    batch = changes.drop("_change_type", "_commit_version")
-    cleaned, _ = remove_duplicate_lines_incremental(
-        index.read().select("h"), batch, blocklist=("slow",),
-        with_kept_hashes=True,
-    )
-    clean.append(cleaned, app_txn=("clean-corpus", new_cursor))
-    # CRASH here (no index sync).  Tick 3 must self-heal:
-    raw.append(spark.createDataFrame(batches[2], "doc_id long, text string"))
-    assert maintain_clean_corpus(raw, clean, index, blocklist=("slow",))
-    got = sorted(map(tuple, clean.read().select(*_CLEAN_COLS).collect()))
-    assert got == _one_shot(spark, [r for b in batches for r in b])
-
-
-def test_clean_corpus_loop_rejects_raw_deletes(spark, tmp_path):
-    import pytest
-
-    from diabetes_etl_spark.streaming.changefeed import maintain_clean_corpus
-
-    raw, clean, index = _clean_tables(spark, tmp_path, "del")
-    raw.append(
-        spark.createDataFrame(
-            _raw_batches()[0], "doc_id long, text string"
-        )
-    )
-    assert maintain_clean_corpus(raw, clean, index, blocklist=("slow",))
-    raw.delete_where("doc_id = 1")
-    with pytest.raises(ValueError, match="append-only"):
-        maintain_clean_corpus(raw, clean, index, blocklist=("slow",))

@@ -14,7 +14,6 @@ import pytest
 
 from diabetes_etl_spark.operators.multimodal import (
     decode_jpeg_baseline,
-    decode_jpeg_gray,
     decode_payload,
     fixture_color_block_rgb,
     jpeg_color_bytes,
@@ -23,13 +22,18 @@ from diabetes_etl_spark.operators.multimodal import (
     fixture_audio_params,
     fixture_jpeg_block_value,
     fixture_media_dims,
-    jpeg_bytes,
     jpeg_gray_bytes,
     png_bytes,
     probe_jpeg,
+    wav_bytes,
+)
+from tests.media_fixtures import (
+    decode_jpeg_gray,
+    jpeg_bytes,
+    png_palette_bytes,
+    probe_bmp,
     probe_png,
     probe_wav,
-    wav_bytes,
 )
 
 
@@ -296,42 +300,6 @@ def test_codec_gaps_still_stubbed():
         decode_payload("audio/mpeg", b"\xff\xfb\x90\x00")
     with pytest.raises(NotImplementedError, match="video/mp4"):
         decode_payload("video/mp4", b"\x00\x00\x00\x18ftypmp42")
-
-
-# -- MP3 frame-header probe -------------------------------------------------
-
-
-@pytest.mark.parametrize(
-    "kbps,rate,frames,ch",
-    [(128, 44100, 3, 2), (320, 48000, 1, 1), (32, 32000, 5, 2)],
-)
-def test_mp3_probe_walks_frame_chain(kbps, rate, frames, ch):
-    from diabetes_etl_spark.operators.multimodal import (
-        mp3_frame_bytes,
-        probe_mp3,
-    )
-
-    payload = mp3_frame_bytes(kbps, rate, n_frames=frames, channels=ch)
-    assert probe_mp3(payload) == (kbps, rate, ch, frames)
-
-
-def test_mp3_probe_rejects_bad_streams():
-    from diabetes_etl_spark.operators.multimodal import (
-        mp3_frame_bytes,
-        probe_mp3,
-    )
-
-    with pytest.raises(ValueError, match="frame sync"):
-        probe_mp3(b"ID3\x04\x00" + b"\x00" * 40)
-    with pytest.raises(ValueError, match="truncated"):
-        probe_mp3(mp3_frame_bytes(128, 44100)[:-10])
-    with pytest.raises(ValueError, match="too short"):
-        probe_mp3(b"\xff")
-    # MPEG-2 version bits rejected, not mis-parsed
-    p = bytearray(mp3_frame_bytes(128, 44100))
-    p[1] = 0xF3  # version = MPEG-2
-    with pytest.raises(ValueError, match="MPEG-1 Layer III"):
-        probe_mp3(bytes(p))
 
 
 # -- WAV round trip -------------------------------------------------------
@@ -724,15 +692,6 @@ def test_frame_plan_clamps_to_short_clips(spark):
     assert len(rows) == 2 and all(r.n_frames_sampled == 2 for r in rows)
 
 
-def test_video_frame_decode_is_env_gated(spark):
-    import pytest
-
-    from diabetes_etl_spark.operators.multimodal import decode_video_frame
-
-    with pytest.raises(NotImplementedError, match="codec"):
-        decode_video_frame(b"\x00", 0)
-
-
 # -- 4:2:0 chroma-subsampled baseline JPEG (round-7) ------------------------
 
 
@@ -833,8 +792,6 @@ def test_decode_payload_routes_420_jpeg():
 def test_palette_png_decodes_to_rgb():
     from diabetes_etl_spark.operators.multimodal import (
         decode_png,
-        png_palette_bytes,
-        probe_png,
     )
 
     palette = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 7, 8, 9])
@@ -852,7 +809,6 @@ def test_palette_png_filtered_scanlines_roundtrip():
     # wrong; filter-0 encode + full decode must reproduce exactly
     from diabetes_etl_spark.operators.multimodal import (
         decode_png,
-        png_palette_bytes,
     )
 
     palette = bytes(b for i in range(16) for b in (i * 16, 255 - i * 16, i))
@@ -871,7 +827,6 @@ def test_palette_png_rejects_bad_index_and_missing_plte():
 
     from diabetes_etl_spark.operators.multimodal import (
         decode_png,
-        png_palette_bytes,
     )
 
     with _pytest.raises(ValueError, match="index out of range"):
@@ -897,7 +852,6 @@ def test_palette_png_rejects_bad_index_and_missing_plte():
 def test_decode_payload_routes_palette_png(spark):
     from diabetes_etl_spark.operators.multimodal import (
         decode_payload,
-        png_palette_bytes,
     )
 
     palette = bytes([10, 20, 30])
@@ -1335,7 +1289,6 @@ def test_bmp_roundtrip(w, h, kw):
         bmp_bytes,
         decode_bmp,
         decode_payload,
-        probe_bmp,
     )
 
     idx = _pix(w * h, seed=9)

@@ -90,6 +90,9 @@ def test_shingle_frame_matches_column_form(spark):
         # kernel special-cases None -> [""] to match — this row pins
         # that parity against future session SQL-conf changes.
         (8, None),
+        # astral-plane (non-BMP) code points: one token each, same
+        # shingles from the Python kernel and the JVM split
+        (9, "clef 𝄞 music 😀 note one two three"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     col_form = {

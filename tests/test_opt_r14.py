@@ -25,6 +25,8 @@ def test_shingle_frame_fp_matches_fingerprint_expr(spark):
         (3, "中文 分词 测试 one two three four"),
         (4, "tok1 tok2 tok3 tok4 tok5 tok6"),
         (5, None),
+        # astral-plane (non-BMP) code points: ascii() is 119070 / 128512
+        (6, "clef 𝄞 music 😀 note one two three"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     expected = {

@@ -5,12 +5,10 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from diabetes_etl_spark.operators.pca import (
     mean_vector,
     power_iteration_rounds,
-    project_out,
 )
 
 
@@ -40,29 +38,6 @@ def test_power_iteration_finds_dominant_direction(spark):
     assert abs(abs(v[1]) - 1 / math.sqrt(2)) < 0.02
     assert v[0] * v[1] > 0
     assert all(abs(x) < 0.1 for x in v[2:])
-
-
-def test_project_out_removes_component(spark):
-    df = _aniso_df(spark, n=100)
-    out = power_iteration_rounds(df, iterations=4)
-    final = {r.pos: r.v for r in out.collect() if r.round == 4}
-    v = [final[i] for i in range(len(final))]
-    res = project_out(df, v)
-    # residuals are orthogonal to v
-    dots = res.select(
-        F.abs(
-            F.aggregate(
-                F.zip_with(
-                    F.col("residual"),
-                    F.array(*[F.lit(x) for x in v]),
-                    lambda r, w: r * w,
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-        ).alias("dot")
-    ).agg(F.max("dot")).first()[0]
-    assert dots < 1e-6
 
 
 def test_mean_vector_exact(spark):

@@ -305,8 +305,8 @@ def test_png_interlaced_roundtrip_random_geometry(geom):
     from diabetes_etl_spark.operators.multimodal import (
         decode_png,
         png_interlaced_bytes,
-        probe_png,
     )
+    from tests.media_fixtures import probe_png
 
     w, h, seed = geom
     rnd = _random.Random(seed)

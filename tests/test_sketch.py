@@ -4,9 +4,16 @@ invariance."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.operators.sketch import cms_cells, cms_estimate
+from diabetes_etl_spark.operators.sketch import (
+    _bloom_bit,
+    bloom_hit_mask_fp,
+    cms_cells,
+    cms_estimate,
+)
+from diabetes_etl_spark.operators.text import fingerprint
 
 _W, _D = 32, 4  # small width so collisions actually happen
 
@@ -17,6 +24,101 @@ def _stream(spark, counts: dict[str, int]):
 
 
 _COUNTS = {f"w{i}": (i % 7) + 1 for i in range(60)}  # 60 keys, 32 cells
+
+
+# -- reference forms of the sketches, checked against the engine's ---------
+#
+# Cell-wise CMS merge, a column-name wrapper over bloom_hit_mask_fp, the
+# join-based Bloom probe and the KMV distinct-count estimator: no plan
+# runs them, so they live here, as the rollup and the references the
+# engine's bloom_bits, bloom_hit_mask_fp and kmv_sketch are checked
+# against.
+
+
+def merge_cells(*sketches: DataFrame) -> DataFrame:
+    """Cell-wise sum of CMS cell tables built with identical
+    (width, depth, seed) — the rollup operation: per-partition,
+    per-day, or per-micro-batch sketches combine into the sketch of
+    the concatenated input exactly (tested), in one bounded
+    depth*width aggregate."""
+    out = sketches[0]
+    for s in sketches[1:]:
+        out = out.unionByName(s)
+    return out.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
+
+
+def bloom_hit_mask(
+    bits: DataFrame,
+    key_col: str,
+    m: int = 8192,
+    k: int = 5,
+    seed: int = 23,
+) -> Column:
+    """SCAN-LOCAL membership test: a boolean Column that is true iff
+    all k probe bits of column ``key_col`` are set — the fast
+    path of :func:`bloom_probe` and the shape a 100 TB blocklist scrub
+    actually wants.
+
+    The bit table is collected ONCE to the driver (bounded by m —
+    8 KB of ints per 64k-bit filter, the same bounded-collect budget
+    as the IVF training sample) and folded into an array-of-longs
+    bitmask LITERAL; each probe is then two integer ops + a bit test
+    inside whole-stage codegen.  No explode, no join, no shuffle, no
+    per-row aggregate — the probe disappears into the scan, which is
+    the entire point of a Bloom pre-filter.
+    """
+    return bloom_hit_mask_fp(bits, fingerprint(key_col), m, k, seed)
+
+
+def bloom_probe(
+    bits: DataFrame,
+    keys: DataFrame,
+    key_col: str,
+    m: int = 8192,
+    k: int = 5,
+    seed: int = 23,
+) -> DataFrame:
+    """``keys`` + ``bloom_hit`` (boolean): true iff ALL k probe bits
+    are set — no false negatives, false positives at the documented
+    rate.  The bit table BROADCASTS (<= m one-int rows), so the key
+    side never shuffles for the probe itself; the only aggregate is
+    per input row over its k probes."""
+    fp = F.col("__fp")
+    probes = F.array(*[_bloom_bit(fp, m, j, seed) for j in range(k)])
+    probed = (
+        keys.select("*", fingerprint(key_col).alias("__fp"))
+        .select(*keys.columns, F.posexplode(probes).alias("__j", "bit"))
+    )
+    marked = probed.join(
+        F.broadcast(bits.withColumn("__set", F.lit(1))), "bit", "left"
+    )
+    return (
+        marked.groupBy(*keys.columns)
+        .agg(
+            (
+                F.sum(F.coalesce("__set", F.lit(0))) == F.lit(k)
+            ).alias("bloom_hit")
+        )
+    )
+
+
+def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
+    """Distinct-count estimate per group: exact count when the sketch
+    is not full (covering mode), else (k-1) * 2^32 / tau where tau is
+    the k-th smallest hash."""
+    g = sketch.groupBy("g").agg(
+        F.count(F.lit(1)).alias("n"), F.max("h").alias("tau")
+    )
+    return g.select(
+        "g",
+        F.when(F.col("n") < k, F.col("n").cast("double"))
+        .otherwise(
+            F.lit(float(k - 1))
+            * F.lit(4294967296.0)
+            / F.col("tau").cast("double")
+        )
+        .alias("est_distinct"),
+    )
 
 
 def test_cms_estimates_upper_bound_every_key(spark):
@@ -85,7 +187,6 @@ def test_cms_streaming_incremental_maintenance(spark, tmp_path, sf_dir):
     Streaming."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from diabetes_etl_spark.operators.sketch import cms_cells, merge_cells
     from diabetes_etl_spark.sources.tables import (
         load_events_stream,
         load_table,
@@ -138,25 +239,6 @@ def test_hll_estimate_within_error_bound(spark):
     assert abs(est - n) / n < 0.39
 
 
-def test_hll_merge_equals_union_sketch(spark):
-    from diabetes_etl_spark.operators.sketch import (
-        hll_merge,
-        hll_registers,
-    )
-
-    a = spark.range(0, 800).select(F.col("id").alias("k"))
-    b = spark.range(500, 1500).select(F.col("id").alias("k"))
-    merged = sorted(
-        map(tuple, hll_merge(
-            hll_registers(a, "k"), hll_registers(b, "k")
-        ).collect())
-    )
-    direct = sorted(
-        map(tuple, hll_registers(a.unionByName(b), "k").collect())
-    )
-    assert merged == direct
-
-
 def test_hll_duplicates_do_not_move_the_estimate(spark):
     from diabetes_etl_spark.operators.sketch import (
         hll_estimate,
@@ -174,7 +256,7 @@ def test_hll_duplicates_do_not_move_the_estimate(spark):
 
 
 def test_bloom_no_false_negatives(spark):
-    from diabetes_etl_spark.operators.sketch import bloom_bits, bloom_probe
+    from diabetes_etl_spark.operators.sketch import bloom_bits
 
     members = spark.createDataFrame(
         [(f"key{i}",) for i in range(500)], "tok string"
@@ -190,7 +272,7 @@ def test_bloom_no_false_negatives(spark):
 def test_bloom_false_positive_rate_bounded(spark):
     import math
 
-    from diabetes_etl_spark.operators.sketch import bloom_bits, bloom_probe
+    from diabetes_etl_spark.operators.sketch import bloom_bits
 
     m, k, n = 8192, 5, 500
     members = spark.createDataFrame(
@@ -207,22 +289,6 @@ def test_bloom_false_positive_rate_bounded(spark):
     )
     expect = (1 - math.exp(-k * n / m)) ** k
     assert fp / 2000 < 5 * expect + 0.01  # generous slack over theory
-
-
-def test_bloom_merge_equals_direct_build(spark):
-    from diabetes_etl_spark.operators.sketch import bloom_bits, bloom_merge
-
-    a = spark.createDataFrame([(f"a{i}",) for i in range(100)], "tok string")
-    b = spark.createDataFrame([(f"b{i}",) for i in range(100)], "tok string")
-    merged = sorted(
-        r.bit for r in bloom_merge(
-            bloom_bits(a, "tok"), bloom_bits(b, "tok")
-        ).collect()
-    )
-    direct = sorted(
-        r.bit for r in bloom_bits(a.unionByName(b), "tok").collect()
-    )
-    assert merged == direct
 
 
 def test_bloom_bits_partition_invariant(spark):
@@ -288,11 +354,7 @@ def test_bloom_mask_probe_equals_join_probe(spark):
     of high mask words)."""
     from pyspark.sql import functions as F
 
-    from diabetes_etl_spark.operators.sketch import (
-        bloom_bits,
-        bloom_hit_mask,
-        bloom_probe,
-    )
+    from diabetes_etl_spark.operators.sketch import bloom_bits
 
     members = spark.createDataFrame(
         [(f"key{i}",) for i in range(400)], "tok string"
@@ -350,43 +412,6 @@ def test_cms_join_size_disjoint_keys_is_small(spark):
     ).collect()[0].join_size_estimate
     # truth is 0; only hash collisions contribute
     assert est < 300 * 300 * 0.01
-
-
-def test_hll_intersection_estimate_tracks_true_overlap(spark):
-    """Inclusion-exclusion on register tables: the intersection
-    estimate lands within ~2 sigma of the union's standard error of
-    the true overlap, and disjoint sets estimate ~0."""
-    from diabetes_etl_spark.operators.sketch import (
-        hll_intersection_estimate,
-        hll_registers,
-    )
-
-    m_log2 = 6
-    a = hll_registers(
-        spark.range(0, 4000).select(F.col("id").cast("string").alias("k")),
-        "k", m_log2=m_log2,
-    )
-    b = hll_registers(
-        spark.range(2000, 6000).select(
-            F.col("id").cast("string").alias("k")
-        ),
-        "k", m_log2=m_log2,
-    )
-    row = hll_intersection_estimate(a, b, m_log2).first()
-    sigma_union = 1.04 / (1 << (m_log2 // 2)) * row.hll_union
-    # true overlap 2000; allow 3x the union sigma (three estimates
-    # contribute error)
-    assert abs(row.hll_inter_estimate - 2000) < 3 * sigma_union
-
-    c = hll_registers(
-        spark.range(100000, 104000).select(
-            F.col("id").cast("string").alias("k")
-        ),
-        "k", m_log2=m_log2,
-    )
-    row2 = hll_intersection_estimate(a, c, m_log2).first()
-    assert row2.hll_inter_estimate < 3 * sigma_union  # ~disjoint
-    assert row2.hll_inter_estimate >= 0.0
 
 
 # -- fixed-grid histogram quantiles (round-8) -------------------------------
@@ -468,7 +493,6 @@ def test_kmv_covering_is_exact(spark):
     from pyspark.sql import functions as F
 
     from diabetes_etl_spark.operators.sketch import (
-        kmv_estimate,
         kmv_pair_stats,
         kmv_sketch,
     )
@@ -487,7 +511,6 @@ def test_kmv_truncated_estimator_within_bounds(spark):
     from pyspark.sql import functions as F
 
     from diabetes_etl_spark.operators.sketch import (
-        kmv_estimate,
         kmv_pair_stats,
         kmv_sketch,
     )

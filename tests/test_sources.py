@@ -1,11 +1,8 @@
 """Source/sink coverage: multi-format round-trips (csv/json/orc keep
-values and types under an explicit schema) and bucketed managed tables
-(the write-once-shuffle, join-forever-free layout for 100 TB fact
-tables)."""
+values and types under an explicit schema), partitioned sinks, schema
+merging and malformed-row handling."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +10,6 @@ from pyspark.sql import functions as F
 from diabetes_etl_spark.sources.tables import (
     load_table,
     read_source,
-    save_bucketed,
     write_sink,
 )
 
@@ -58,94 +54,6 @@ def test_partitioned_sink_prunes(spark, tmp_path_factory, lineitem_slice):
     # partition filter handled at listing time, not as a data filter
     assert back.count() == lineitem_slice.filter(F.col("l_returnflag") == "R").count()
     assert "PartitionFilters: [isnotnull(l_returnflag" in plan
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir):
-    """Both sides bucketed on the join key => SortMergeJoin with zero
-    Exchange operators (broadcast disabled to force the SMJ path)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    customer = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment"
-    )
-    save_bucketed(orders, "t_orders_bkt", ("o_custkey",), 8, ("o_custkey",))
-    save_bucketed(customer, "t_customer_bkt", ("c_custkey",), 8, ("c_custkey",))
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_orders_bkt").join(
-            spark.table("t_customer_bkt"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-        # and it computes the same thing as the plain join
-        plain = orders.join(
-            customer, F.col("o_custkey") == F.col("c_custkey")
-        )
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_customer_bkt")
-
-
-def test_bucketed_aggregation_is_shuffle_free(spark, sf_dir):
-    """groupBy on the bucket key reuses the bucketing => no Exchange."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    save_bucketed(orders, "t_orders_bkt_agg", ("o_custkey",), 8)
-    try:
-        agg = (
-            spark.table("t_orders_bkt_agg")
-            .groupBy("o_custkey")
-            .agg(F.count("*").alias("n_orders"))
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed agg still shuffles:\n{plan}"
-        assert agg.count() == orders.select("o_custkey").distinct().count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_bkt_agg")
-
-
-def test_save_range_sorted_yields_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    import pyarrow.parquet as pq
-
-    from diabetes_etl_spark.sources.tables import load_table, save_range_sorted
-
-    out = str(tmp_path / "orders_sorted")
-    save_range_sorted(
-        load_table(spark, sf_dir, "orders"), out, ("o_orderkey",), n_files=4
-    )
-    ranges = []
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(out, f))
-        col_idx = md.schema.to_arrow_schema().get_field_index("o_orderkey")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-            # within a file, row groups are sorted: tight stats
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) >= 2
-    # files' key ranges must be pairwise disjoint (range partitioning)
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, (ranges,)
-    # and a key-filtered scan pushes the predicate to those footers
-    got = (
-        spark.read.parquet(out)
-        .filter("o_orderkey = 7")
-        .select("o_orderkey")
-        .collect()
-    )
-    assert [r.o_orderkey for r in got] == [7]
 
 
 def test_merge_schema_reads_evolving_parquet(spark, tmp_path):

@@ -9,6 +9,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.context import RunContext
@@ -16,8 +17,10 @@ from diabetes_etl_spark.diabetes.pipeline_def import build_diabetes_pipeline
 from diabetes_etl_spark.diabetes.schema import DIABETES_SCHEMA
 from diabetes_etl_spark.pipeline.registry import PipelineRunner
 from diabetes_etl_spark.sources.tables import load_events_stream, load_table
-from diabetes_etl_spark.streaming.ingest import incremental_file_ingest, run_to_sink
-from diabetes_etl_spark.streaming.ingest import stream_snapshot
+from diabetes_etl_spark.streaming.ingest import (
+    incremental_file_ingest,
+    stream_snapshot,
+)
 from perfbench.datagen import write_pima_csv
 
 CSV_DIR = "/root/reference/data"
@@ -34,6 +37,24 @@ def csv_dir(tmp_path_factory):
     for i in range(3):
         write_pima_csv(str(out / f"diabetes_part_{i + 1}.csv"), 1, i, 128)
     return str(out)
+
+
+def run_to_sink(
+    stream_df: DataFrame,
+    path: str,
+    checkpoint: str,
+    fmt: str = "parquet",
+) -> None:
+    """Drain all currently-available input into a file sink, exactly once
+    per checkpoint lifetime, then stop (availableNow semantics)."""
+    q = (
+        stream_df.writeStream.format(fmt)
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def test_incremental_ingest_exactly_once(spark, tmp_path, csv_dir):
@@ -161,34 +182,6 @@ def test_stateful_profiles_accumulate_across_batches(spark, tmp_path, sf_dir):
     assert emissions > 0
 
 
-def test_transform_with_state_gated_on_protobuf(spark, sf_dir):
-    """The Spark-4 transformWithStateInPandas twin is env-gated: its
-    wire protocol needs google.protobuf, absent here (COVERAGE.md).
-    With the package present the operator runs the same profile logic
-    as the applyInPandasWithState gate query; without it, it must
-    raise the clear NotImplementedError, not the raw worker crash."""
-    from diabetes_etl_spark.sources.tables import load_events_stream
-    from diabetes_etl_spark.streaming.stateful import (
-        running_user_profiles_tws,
-        transform_with_state_available,
-    )
-
-    stream = load_events_stream(spark, sf_dir)
-    if not transform_with_state_available():
-        import pytest
-
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            running_user_profiles_tws(stream)
-        return
-    from diabetes_etl_spark.streaming.ingest import stream_snapshot
-    from diabetes_etl_spark.streaming.stateful import latest_profiles
-
-    snap = stream_snapshot(
-        spark, running_user_profiles_tws(stream), output_mode="update"
-    )
-    assert latest_profiles(snap).count() > 0
-
-
 def test_incremental_aggregate_maintenance_equals_batch(spark, tmp_path, sf_dir):
     """Materialized-view maintenance: per-micro-batch partial
     aggregates merged into a VersionedTable (streaming/aggmaint.py)
@@ -234,67 +227,6 @@ def test_incremental_aggregate_maintenance_equals_batch(spark, tmp_path, sf_dir)
     )
     assert got == want
     assert len(store.history()) >= 1  # at least one atomic refresh
-
-
-def test_incremental_join_aggregate_maintenance_equals_batch(
-    spark, tmp_path, sf_dir
-):
-    """Join-view maintenance (streaming/aggmaint.py:
-    merge_join_partial_aggs): a (orders fact ⋈ customer dim) revenue-
-    by-market-segment aggregate maintained from insert-only fact
-    micro-batches must equal the batch recompute over ALL facts after
-    every refresh — Δ(F ⋈ D) = ΔF ⋈ D, history never rescanned."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from diabetes_etl_spark.sources.tables import load_table
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-    from diabetes_etl_spark.streaming.aggmaint import (
-        merge_join_partial_aggs,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    dim = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    store = VersionedTable(spark, str(tmp_path / "join_agg_store"))
-
-    # three insert-only micro-batches split deterministically
-    batches = [orders.filter(F.col("o_orderkey") % 3 == k) for k in range(3)]
-    seen = None
-    for k, b in enumerate(batches):
-        fact = b.select(
-            F.col("o_custkey").alias("c_custkey"), "o_totalprice"
-        )
-        merge_join_partial_aggs(
-            store, fact, dim, "c_custkey", ["c_mktsegment"],
-            ["o_totalprice"],
-        )
-        seen = batches[: k + 1]
-        want = sorted(
-            (r.c_mktsegment, r.n_rows, str(r.sum_o_totalprice))
-            for r in (
-                seen[0] if k == 0
-                else seen[0].unionByName(seen[1]) if k == 1
-                else seen[0].unionByName(seen[1]).unionByName(seen[2])
-            )
-            .select(F.col("o_custkey").alias("c_custkey"), "o_totalprice")
-            .join(dim, "c_custkey")
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(F.col("o_totalprice").cast("decimal(28,2)")).alias(
-                    "sum_o_totalprice"
-                ),
-            )
-            .collect()
-        )
-        got = sorted(
-            (r.c_mktsegment, r.n_rows, str(r.sum_o_totalprice))
-            for r in store.read().collect()
-        )
-        assert got == want, f"refresh {k} diverged from batch recompute"
-    # atomic refresh history: one committed version per micro-batch
-    assert len(store.history()) == 3
 
 
 def test_join_aggregate_maintenance_broadcasts_dim(spark, tmp_path, sf_dir):

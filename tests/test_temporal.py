@@ -9,7 +9,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from diabetes_etl_spark.operators.temporal import scd2_snapshot, temporal_join
+from diabetes_etl_spark.operators.temporal import temporal_join
 
 
 def _ts(s):
@@ -68,18 +68,6 @@ def test_temporal_join_inner_drops_prehistory_facts(spark):
     )
     with pytest.raises(ValueError, match="how"):
         temporal_join(facts, _history(spark), ["user_id"], "ts", how="full")
-
-
-def test_scd2_snapshot_is_at_most_one_row_per_key(spark):
-    snap = scd2_snapshot(
-        _history(spark), F.lit("2024-01-01 01:30:00").cast("timestamp")
-    )
-    rows = {r.user_id: r.state for r in snap.collect()}
-    assert rows == {1: 10}  # user 2 does not exist yet
-    snap2 = scd2_snapshot(
-        _history(spark), F.lit("2024-01-01 04:00:00").cast("timestamp")
-    )
-    assert {r.user_id: r.state for r in snap2.collect()} == {1: 20, 2: 99}
 
 
 def test_temporal_join_plan_is_single_equi_join(spark):

@@ -3,6 +3,9 @@ unit tests on a hand-computable corpus."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 from diabetes_etl_spark.operators.text import bigram_lm_score, doc_bigrams
 
 
@@ -101,173 +104,6 @@ def test_conjunctive_search_requires_all_terms(spark):
 
     with _pytest.raises(ValueError, match="at least one term"):
         conjunctive_search(docs, [])
-
-
-def test_posting_segments_merge_equals_full_rebuild(spark, tmp_path):
-    """Segment-model maintenance: N appended batch segments, read
-    through merged_postings, must be row-identical to a from-scratch
-    index over the union corpus; compaction preserves it and
-    collapses to one row per (term, chunk)."""
-    from diabetes_etl_spark.operators.invindex import (
-        append_posting_segment,
-        compact_postings,
-        inverted_postings,
-        merged_postings,
-    )
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-
-    batches = [
-        [(1, "spark join"), (2, "join shuffle")],
-        [(10, "spark shuffle scan")],
-        [(20, "join spark")],
-    ]
-    store = VersionedTable(spark, str(tmp_path / "idx"))
-    all_rows = []
-    for i, b in enumerate(batches):
-        append_posting_segment(
-            store,
-            spark.createDataFrame(b, "doc_id long, text string"),
-            app_txn=("feed", i + 1),
-        )
-        all_rows.extend(b)
-    assert store.last_app_version("feed") == 3
-
-    def canon(df):
-        return sorted(
-            (r.term, r.df, r.doc_lo, r.doc_hi, tuple(r.postings),
-             r.postings_checksum)
-            for r in df.collect()
-        )
-
-    full = canon(
-        inverted_postings(
-            spark.createDataFrame(all_rows, "doc_id long, text string")
-        )
-    )
-    assert canon(merged_postings(store)) == full
-
-    # compaction: canonical layout, reader-equivalent, time travel
-    # keeps the segment layout
-    pre_version = store._latest()[0]
-    compact_postings(store)
-    assert canon(merged_postings(store)) == full
-    assert store.read().count() == len(full)  # one row per term now
-    assert store.read(version_as_of=pre_version).count() > 0
-
-
-def test_minmax_view_driven_from_change_feed(spark, tmp_path):
-    """maintain_cdc_minmax closes the loop: versioned-table writes ->
-    change feed -> bounded-candidate max state, exactly-once."""
-    from diabetes_etl_spark.streaming.changefeed import maintain_cdc_minmax
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-
-    src = VersionedTable(spark, str(tmp_path / "src"), stats_cols=("k",))
-    view = VersionedTable(spark, str(tmp_path / "view"))
-
-    def rows(*tuples):
-        return spark.createDataFrame(list(tuples), "k long, g string, v double")
-
-    src.overwrite(rows((1, "a", 5.0), (2, "a", 9.0), (3, "b", 2.0)))
-    assert maintain_cdc_minmax(src, view, ["g"], "v", k=4) is not None
-    got = {r.g: r.group_max for r in view.read().collect()}
-    assert got == {"a": 9.0, "b": 2.0}
-
-    # delete the current max of group a through the feed
-    src.delete_where("k = 2")
-    maintain_cdc_minmax(src, view, ["g"], "v", k=4)
-    got = {r.g: r.group_max for r in view.read().collect()}
-    assert got == {"a": 5.0, "b": 2.0}
-
-    # replay safety: nothing new -> None, state unchanged
-    assert maintain_cdc_minmax(src, view, ["g"], "v", k=4) is None
-
-
-def test_tombstones_delete_without_rewrite_and_reinsert_nets(spark, tmp_path):
-    """Tombstone segments net a doc out of every term's postings; a
-    later re-insert of the same doc id (new content) nets back to
-    exactly the new content — the Lucene delete model on the
-    versioned store."""
-    from diabetes_etl_spark.operators.invindex import (
-        append_posting_segment,
-        append_posting_tombstones,
-        inverted_postings,
-        merged_postings,
-    )
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-
-    store = VersionedTable(spark, str(tmp_path / "idx"))
-
-    def docs(*rows):
-        return spark.createDataFrame(list(rows), "doc_id long, text string")
-
-    append_posting_segment(store, docs((1, "spark join"), (2, "join scan")))
-    n_commits = len(store.history())
-    append_posting_tombstones(store, docs((1, "spark join")))
-    # delete was an APPEND, not a rewrite
-    assert len(store.history()) == n_commits + 1
-
-    def canon(df):
-        return sorted(
-            (r.term, r.df, tuple(r.postings)) for r in df.collect()
-        )
-
-    assert canon(merged_postings(store)) == canon(
-        inverted_postings(docs((2, "join scan")))
-    )
-    # re-insert doc 1 with NEW content; overlapping term 'join' must
-    # net to both docs
-    append_posting_segment(store, docs((1, "join merge")))
-    assert canon(merged_postings(store)) == canon(
-        inverted_postings(docs((2, "join scan"), (1, "join merge")))
-    )
-
-
-def test_cdc_postings_follows_document_table(spark, tmp_path):
-    """maintain_cdc_postings: document-table commits (overwrite,
-    append, delete, merge-update) flow through the change feed into
-    the index exactly once; the merged index always equals a rebuild
-    over the current snapshot."""
-    from diabetes_etl_spark.operators.invindex import (
-        inverted_postings,
-        maintain_cdc_postings,
-        merged_postings,
-    )
-    from diabetes_etl_spark.sources.versioned import VersionedTable
-
-    src = VersionedTable(spark, str(tmp_path / "docs"), stats_cols=("doc_id",))
-    idx = VersionedTable(spark, str(tmp_path / "idx"))
-
-    def rows(*tuples):
-        return spark.createDataFrame(list(tuples), "doc_id long, text string")
-
-    def check():
-        got = sorted(
-            (r.term, r.df, tuple(r.postings))
-            for r in merged_postings(idx).collect()
-        )
-        want = sorted(
-            (r.term, r.df, tuple(r.postings))
-            for r in inverted_postings(src.read()).collect()
-        )
-        assert got == want
-
-    src.overwrite(rows((1, "spark join"), (2, "scan merge")))
-    assert maintain_cdc_postings(src, idx) is not None
-    check()
-
-    src.append(rows((3, "join merge")))
-    src.delete_where("doc_id = 2")
-    maintain_cdc_postings(src, idx)
-    check()
-
-    # update through merge: doc 3 gets new text (delete+insert pair)
-    src.merge(rows((3, "spark scan")), key_col="doc_id")
-    maintain_cdc_postings(src, idx)
-    check()
-
-    # replay safety
-    assert maintain_cdc_postings(src, idx) is None
-    check()
 
 
 def test_phrase_search_exact_adjacency_and_repeats(spark):
@@ -441,52 +277,24 @@ def test_kn_lm_partition_invariant_bit_identical(spark):
 
 
 # -- ROUGE / BLEU pairwise overlap -------------------------------------------
+#
+# text_rouge_bleu_pairs computes clipped n-gram overlap by joining
+# per-document count tables; the per-row lambda below is the reference
+# it is checked against.
 
 
-def _overlap_df(spark, ref, cand):
-    from pyspark.sql import functions as F
-
-    from diabetes_etl_spark.operators.text import bleu_score, rouge_n
-
-    df = spark.createDataFrame([(ref, cand)], "ref string, cand string")
-    p1, r1, f1 = rouge_n(F.col("ref"), F.col("cand"), 1)
-    p2, r2, f2 = rouge_n(F.col("ref"), F.col("cand"), 2)
-    return df.select(
-        p1.alias("p1"), r1.alias("r1"), f1.alias("f1"),
-        p2.alias("p2"), r2.alias("r2"), f2.alias("f2"),
-        bleu_score(F.col("ref"), F.col("cand"), 2).alias("bleu"),
-    ).collect()[0]
-
-
-def test_rouge_clipped_counts_known_values(spark):
-    """ref 'the cat sat on the mat', cand 'the cat the cat':
-    unigram clipped overlap = min(2,2)['the'] + min(1,2)['cat'] = 3
-    -> P=3/4, R=3/6; bigram overlap = 1 ('the cat' clipped at ref
-    count 1) -> P=1/3, R=1/5."""
-    r = _overlap_df(spark, "the cat sat on the mat", "the cat the cat")
-    assert (r.p1, r.r1) == (0.75, 0.5)
-    assert r.f1 == 0.6
-    assert (r.p2, r.r2) == (round(1 / 3, 9), 0.2)
-
-
-def test_bleu_matches_pure_python_formula(spark):
-    import math
-
-    ref, cand = "a b c d e f", "a b c x y"
-    r = _overlap_df(spark, ref, cand)
-    # ov1=3 of 5, ov2=2 of 4 bigrams (smoothed (2+1)/(4+1))
-    p1, p2s = 3 / 5, (2 + 1.0) / (4 + 1.0)
-    ls = 0.0 + round(math.log(p1), 9) / 2 + round(math.log(p2s), 9) / 2
-    bp = min(1.0, round(math.exp(1 - 6 / 5), 9))
-    assert r.bleu == round(bp * round(math.exp(ls), 9), 9)
-
-
-def test_rouge_bleu_zero_overlap_and_empty(spark):
-    r = _overlap_df(spark, "x y z", "a b c")
-    assert (r.f1, r.f2, r.bleu) == (0.0, 0.0, 0.0)
-    r = _overlap_df(spark, "", "")
-    # empty text tokenizes to [''] -> full overlap of the empty token
-    assert r.p1 == 1.0 and r.r1 == 1.0
+def _clipped_overlap(ref_grams: Column, cand_grams: Column) -> Column:
+    """Sum over distinct candidate n-grams of min(count-in-ref,
+    count-in-cand) — the clipped modified-precision numerator."""
+    return F.aggregate(
+        F.array_distinct(cand_grams),
+        F.lit(0),
+        lambda acc, g: acc
+        + F.least(
+            F.size(F.filter(ref_grams, lambda x: x == g)),
+            F.size(F.filter(cand_grams, lambda x: x == g)),
+        ),
+    )
 
 
 def test_ngram_count_table_matches_counter(spark):
@@ -518,7 +326,6 @@ def test_distributed_overlap_equals_clipped_lambda(spark):
     from pyspark.sql import functions as F
 
     from diabetes_etl_spark.operators.text import (
-        _clipped_overlap,
         ngram_count_table,
         ngrams_with_duplicates,
     )
