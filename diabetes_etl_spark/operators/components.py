@@ -6,13 +6,16 @@ one per cluster" becomes a single filter (id = component).
 
 Algorithm: iterative min-label propagation.
   comp[v]  <-  min(comp[v], min over neighbors u of comp[u])
-repeated until a fixpoint.  Each round is ONE shuffle (groupBy on the
-edge source) plus one equi-join — no driver-side graph, no quadratic
-work.  Convergence takes O(diameter) rounds; near-dup clusters are
-near-cliques (diameter 1-3 — a pair generator that produced a
-1000-hop chain of 0.8-Jaccard pairs would itself be broken), so the
-loop exits after 2-4 rounds in practice.  For adversarial/general
-graphs the published fix is alternating large-star/small-star
+repeated until a fixpoint, starting from each node's neighbourhood
+minimum (round 0, one aggregate over the edges — the same labels as
+an identity round followed by one propagation round).  Each later
+round is ONE shuffle (a groupBy over the node's own label and its
+neighbours' labels) plus one equi-join — no driver-side graph, no
+quadratic work.  Convergence takes O(diameter) rounds; near-dup
+clusters are near-cliques (diameter 1-3 — a pair generator that
+produced a 1000-hop chain of 0.8-Jaccard pairs would itself be
+broken), so the loop exits after 1-3 rounds in practice.  For
+adversarial/general graphs the published fix is alternating large-star/small-star
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14), which converges in O(log^2 n); the hook here is the same
 edge relation, so swapping the inner step is local to this file.
@@ -25,9 +28,11 @@ otherwise.
 
 The labels are (id, component) longs — the text/payload never enters
 the loop, so a round's state is tiny relative to the input corpus.
-The convergence signal is a ``changed`` column computed inside the
-round's own materialization, so each round costs exactly one
-materialization of new state plus a count over it.
+The convergence signal (how many labels changed) is an
+``Observation`` on the round's own materialization
+(RoundStore.commit_observed), so a round costs its materialization
+and no count job.  The fixpoint is unique, so the labels are the
+same as with any other round schedule.
 """
 
 from __future__ import annotations
@@ -77,7 +82,7 @@ def connected_components(
     High-diameter escape hatch: min-label propagation needs
     O(diameter) rounds, so when the per-round label-change count stops
     shrinking geometrically (the signature of a long-chain graph — a
-    near-dup cluster is a near-clique and converges in 2-4 rounds),
+    near-dup cluster is a near-clique and converges in 1-3 rounds),
     the loop AUTO-SWITCHES to :func:`connected_components_star`
     (O(log^2 n) rounds) over the already-materialized edge snapshot.
     The switch is recorded in ``work_dir`` so a restarted driver
@@ -113,18 +118,12 @@ def connected_components(
         )
         return labels.unionByName(missing)
 
-    # snapshot the RAW edge list first (eagerly), then symmetrize FROM
-    # THE SNAPSHOT: the upstream pair pipeline (shingling, LSH,
-    # verification joins) executes exactly once.  Building
-    # union(edges, swap(edges)) directly would duplicate the whole
-    # upstream subtree — Catalyst does not share common subtrees
-    # across union branches, so the most expensive stage of the job
-    # would run twice.
-    sym = raw = store.snapshot(
-        "raw_edges",
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
-        eager=True,
-    )
+    # both directions of every edge come out of ONE pass over the input
+    # (explode), so the upstream pair pipeline (shingling, LSH,
+    # verification joins) executes exactly once; union(edges,
+    # swap(edges)) would plan the whole upstream subtree twice —
+    # Catalyst does not share common subtrees across union branches.
+    pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # ``assume_symmetric``: the caller PROMISES the input already
     # carries both directions of every edge, deduplicated (e.g. it was
     # built as union(e, swap(e)).distinct() upstream, or filtered from
@@ -132,77 +131,83 @@ def connected_components(
     # whole edge set once more only to reproduce its input.  A wrong
     # promise gives wrong components; callers opt in explicitly.
     if not assume_symmetric:
-        sym = store.snapshot(
-            "sym_edges",
-            raw.union(
-                raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct(),
-        )
+        both = F.explode(F.array(F.array("a", "b"), F.array("b", "a")))
+        pairs = pairs.select(both.alias("e")).select(
+            F.col("e")[0].alias("a"), F.col("e")[1].alias("b")
+        ).distinct()
+    sym = store.snapshot("sym_edges", pairs)
     if store.marked(_STAR_SWITCH_MARKER):
         return _star_fallback(sym)
 
-    last, labels = store.resume(max_iter) or (
-        0,
-        store.commit(
-            0,
-            sym.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("component", F.col("id")),
-        ),
-    )
-    prev_changed: int | None = None
-    strikes = 0
-    for k in range(last + 1, max_iter + 1):
-        nbr_min = sym.join(
-            labels, sym["b"] == labels["id"]
-        ).groupBy("a").agg(F.min("component").alias("nbr_min"))
-        new_comp = F.least(
-            labels["component"],
-            F.coalesce(F.col("nbr_min"), labels["component"]),
+    # Round k holds every node's minimum id within k + 1 hops.  Round 0
+    # is one aggregate (each node's neighbourhood minimum, every node
+    # being an edge source of the symmetric set); each later round
+    # takes the minimum of a node's own label and its neighbours'
+    # labels in one join + aggregate.  The changed-label count is
+    # observed by the job that materializes the round.
+    def _commit(k: int, frame: DataFrame) -> tuple[DataFrame, int]:
+        state, m = store.commit_observed(
+            k, frame, changed=F.count_if(F.col("component") != F.col("prev"))
         )
-        # the convergence signal is computed INSIDE the round's
-        # materialization (the join is already running) and kept as a
-        # column, so the probe below is a filter+count over the tiny
-        # label state — not a second join job per round
-        new_labels = store.commit(
-            k,
-            labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
+        return state.select("id", "component"), m["changed"]
+
+    resumed = store.resume(max_iter - 1)
+    if resumed:
+        k, labels = resumed[0], resumed[1].select("id", "component")
+        changed = None  # not recorded across a restart
+    else:
+        k = 0
+        labels, changed = _commit(
+            0,
+            sym.groupBy("a")
+            .agg(F.least(F.col("a"), F.min("b")).alias("component"))
             .select(
-                labels["id"],
-                new_comp.alias("component"),
-                (new_comp != labels["component"]).alias("changed"),
+                F.col("a").alias("id"), "component", F.col("a").alias("prev")
             ),
         )
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            store.mark(_CONVERGED_MARKER, k)
-            return labels
-        # geometric-shrink probe (module docstring): a near-clique's
-        # change count collapses round over round; a chain's decays
-        # ~linearly (ratio -> 1).  One high ratio can be noise from a
-        # small residual right before the fixpoint (a bridged clique
-        # pair produces exactly that), so the switch needs TWO
-        # CONSECUTIVE rounds with ratio > 0.7 — the signature of
-        # O(diameter) rounds ahead — and then hands the same
-        # materialized edge set to the O(log^2 n) star algorithm
-        # (recording the switch so a restarted driver resumes straight
-        # onto the star path).
-        if prev_changed is not None and changed > 0.7 * prev_changed:
-            strikes += 1
-        else:
-            strikes = 0
-        if auto_star and k >= 3 and strikes >= 2:
-            store.mark(_STAR_SWITCH_MARKER, k)
-            return _star_fallback(sym)
+    prev_changed: int | None = None
+    strikes = 0
+    while changed != 0:
+        if changed is not None:
+            # geometric-shrink probe (module docstring): a near-clique's
+            # change count collapses round over round; a chain's decays
+            # ~linearly (ratio -> 1).  One high ratio can be noise from
+            # a small residual right before the fixpoint (a bridged
+            # clique pair produces exactly that), so the switch needs
+            # TWO CONSECUTIVE rounds with ratio > 0.7 — the signature
+            # of O(diameter) rounds ahead — and then hands the same
+            # materialized edge set to the O(log^2 n) star algorithm
+            # (recording the switch so a restarted driver resumes
+            # straight onto the star path).
+            if prev_changed is not None and changed > 0.7 * prev_changed:
+                strikes += 1
+            else:
+                strikes = 0
+            if auto_star and k >= 2 and strikes >= 2:
+                store.mark(_STAR_SWITCH_MARKER, k)
+                return _star_fallback(sym)
         prev_changed = changed
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "the edge set has a longer path than any near-dup cluster "
-        "should; raise max_iter only if that is intended (or use "
-        "connected_components_star, which converges in O(log^2 n) "
-        "rounds on high-diameter graphs)"
-    )
+        k += 1
+        if k >= max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+                " — the edge set has a longer path than any near-dup cluster"
+                " should; raise max_iter only if that is intended (or use "
+                "connected_components_star, O(log^2 n) rounds)"
+            )
+        side = labels.select(F.col("id").alias("b"), "component")
+        nbr = sym.join(side, "b").select(
+            F.col("a").alias("id"), "component", F.lit(None).alias("prev")
+        )
+        own = labels.select("id", "component", F.col("component").alias("prev"))
+        labels, changed = _commit(
+            k,
+            nbr.unionByName(own)
+            .groupBy("id")
+            .agg(F.min("component").alias("component"), F.min("prev").alias("prev")),
+        )
+    store.mark(_CONVERGED_MARKER, k)
+    return labels
 
 
 def connected_components_star(

@@ -18,7 +18,9 @@ Durable (``work_dir`` given): committed parquet under ``work_dir``.
 - ``commit(k, df)`` writes round k to ``<work_dir>/<prefix>_<k:05d>``,
   coalesced to the store's partition cap (O(nodes) state);
   ``commit_rows(k, df)`` writes it as one file (bounded centroid
-  state).  Both read the round back.
+  state).  Both read the round back.  ``commit_observed(k, df,
+  **metrics)`` is ``commit`` that also returns aggregates over the
+  round, taken by an ``Observation`` on the write itself.
 - Parquet's ``_SUCCESS`` file is the commit protocol.  A directory
   without it is a partial write: it is never read, and the next
   attempt overwrites it.  ``resume(max_round)`` returns the highest
@@ -39,7 +41,8 @@ Volatile (no ``work_dir``): per-invocation state, nothing persists.
   eager=False)`` is not job-free: under AQE the call runs the map
   stage of every exchange in the plan at once (the adaptive plan must
   be finalized to hand out its RDD); only the last stage waits for
-  the first action.
+  the first action.  ``commit_observed`` checkpoints eagerly: its
+  last stage is the job that fills the ``Observation``.
 - ``commit_rows`` collects the rows and rebuilds a local relation.
   ``createDataFrame(rows, schema)`` keeps the exact doubles, so the
   arithmetic is bit-identical to the parquet medium; a round costs one
@@ -64,7 +67,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 _MIN_STATE_PARTITIONS = 8
 
@@ -116,13 +119,10 @@ class RoundStore:
         df.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
-    def snapshot(
-        self, name: str, df: DataFrame, eager: bool = False
-    ) -> DataFrame:
-        """``df`` materialized once.  ``eager`` matters only in the
-        volatile medium (a parquet write always runs at once)."""
+    def snapshot(self, name: str, df: DataFrame) -> DataFrame:
+        """``df`` materialized once."""
         if self.work_dir is None:
-            return df.localCheckpoint(eager=eager)
+            return df.localCheckpoint(eager=False)
         path = self._path(name)
         if self._committed(path):
             return self.spark.read.parquet(path)
@@ -144,6 +144,18 @@ class RoundStore:
         if self.partitions is not None:
             df = df.coalesce(self.partitions)
         return self._write(self._round(k), df)
+
+    def commit_observed(
+        self, k: int, df: DataFrame, **metrics: Column
+    ) -> tuple[DataFrame, dict]:
+        """Round k of O(nodes) state, plus the named aggregate
+        ``metrics`` over it, taken by an ``Observation`` on the job that
+        materializes the round, so they cost no job of their own."""
+        obs = Observation()
+        df = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
+        if self.work_dir is None:
+            return df.localCheckpoint(eager=True), obs.get
+        return self.commit(k, df), obs.get
 
     def commit_rows(self, k: int, df: DataFrame) -> DataFrame:
         """Round k of bounded (centroid-sized) state."""

@@ -118,7 +118,11 @@ def bounded_bucket_pairs(
     # back to a leaders table; the head aggregation and the tail
     # projection then share the same Exchange+Sort+Window subtree
     # (Catalyst reuses the exchange, so the upstream — e.g. an
-    # expensive signature computation — runs once).
+    # expensive signature computation — runs once).  The head keeps
+    # its ids inside the aggregate rather than by a ``_rn <= cap``
+    # filter: the optimizer turns that filter into a WindowGroupLimit
+    # below the exchange, which gives the head its own exchange and
+    # its own run of the upstream.
     w = Window.partitionBy(*keys).orderBy(id_col)
     ranked = exploded.select(
         *keys,
@@ -127,9 +131,12 @@ def bounded_bucket_pairs(
         F.first(id_col).over(w).alias("_leader"),
     )
     head_pairs = (
-        ranked.filter(F.col("_rn") <= cap)
-        .groupBy(*keys)
-        .agg(F.collect_list("_id").alias("ids"))
+        ranked.groupBy(*keys)
+        .agg(
+            F.collect_list(F.when(F.col("_rn") <= cap, F.col("_id"))).alias(
+                "ids"
+            )
+        )
         .filter(F.size("ids") > 1)
         .select(F.explode(F.expr(_ALL_PAIRS)).alias("p"))
         .select("p.doc_a", "p.doc_b")

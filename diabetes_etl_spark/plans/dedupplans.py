@@ -81,8 +81,7 @@ SELECT doc_a, doc_b, jaccard_sim FROM (
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return DD.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=5, threshold=0.8, band_width=50,
-        length_col=None,
+        docs, "doc_id", "text", n=5, threshold=0.8, band_width=50
     )
 
 
@@ -205,14 +204,15 @@ def dedup_simhash_xx64(spark: SparkSession, sf_dir: str) -> DataFrame:
 # iterative min-label propagation computes distributed-side.  Named so
 # downstream plans that consume cluster labels (the leakage-guarded
 # split in samplingplans.py) reuse the SAME closure verbatim.
-_COMPONENTS_CLOSURE_SQL = f"""WITH RECURSIVE pairs AS (
+_JACCARD_EDGES_SQL = f"""WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({_JACCARD_PAIRS_ORACLE})
 ),
 edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
   SELECT doc_b, doc_a FROM pairs
-),
+)"""
+_COMPONENTS_CLOSURE_SQL = f"""{_JACCARD_EDGES_SQL},
 reach(id, comp) AS (
   SELECT a, a FROM edges
   UNION
@@ -233,11 +233,12 @@ FROM lab
 ORDER BY doc_id
 """,
     doc="Near-dup cluster formation: connected components over the "
-    "exact Jaccard pair relation via iterative min-label propagation "
-    "(operators/components.py — one shuffle per round, O(diameter) "
-    "rounds, lineage checkpointed).  Turns pairwise near-dup output "
-    "into keep-one-per-cluster semantics; singleton docs never enter "
-    "the graph.",
+    "verified Jaccard edge set (operators/dedup.py:near_dup_edges) via "
+    "min-label propagation (operators/components.py — seeded with "
+    "neighbourhood minima, one join + aggregate per round, change "
+    "count observed by the round's own job).  Turns pairwise near-dup "
+    "output into keep-one-per-cluster semantics; singleton docs never "
+    "enter the graph.",
     tags=("dedup", "components", "extension", "headline"),
     extended=True,
 )
@@ -247,29 +248,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.components import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    # the SCALE path feeds the graph: MinHash-LSH candidates (exact-
-    # verified, so no false positives by construction).  LSH recall at
-    # Jaccard exactly 0.8 with bands=8/rows=4 is ~98.5% per pair, and
-    # one missed edge relabels a whole cluster — so on SMALL corpora
-    # (<= the gate scale, where the band-blocked verifier is cheap) the
-    # edge set is additionally unioned with the exact pairs, pinning
-    # gate recall to 1 against the exact-closure oracle regardless of
-    # fixture draw.  Above the threshold the quadratic-within-band
-    # verifier would dominate the plan, so the bounded-bucket LSH stage
-    # (the 100 TB path) carries the graph alone — its recall floor at
-    # those scales is pinned by tests/test_dedup.py, and the adaptive
-    # switch itself is the same verify-small/trust-measured-recall-
-    # at-scale split every near-dup pipeline makes.
-    lsh_pairs = DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=32, bands=8, threshold=0.8
-    ).select("doc_a", "doc_b")
-    if docs.count() <= 2000:  # parquet-metadata count, one trivial job
-        exact_pairs = DD.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=5, threshold=0.8
-        )
-        pairs = lsh_pairs.union(exact_pairs.select("doc_a", "doc_b")).distinct()
-    else:
-        pairs = lsh_pairs
+    # LSH edges, plus the length-band ones at gate scale: one missed
+    # edge would relabel a whole cluster (operators/dedup.py)
+    pairs = DD.near_dup_edges(docs)
     comp = connected_components(pairs, "doc_a", "doc_b")
     return (
         comp.select(F.col("id").alias("doc_id"), "component")
@@ -288,20 +269,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation (the oracle's own relation), isolating the algorithm
     # under test from LSH recall
     oracle=f"""
-WITH RECURSIVE pairs AS (
-  SELECT doc_a, doc_b FROM ({_JACCARD_PAIRS_ORACLE})
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(id, comp) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e.a, r.comp FROM edges e JOIN reach r ON e.b = r.id
-),
-lab AS (SELECT id, MIN(comp) AS component FROM reach GROUP BY id)
+{_COMPONENTS_CLOSURE_SQL}
 SELECT id AS doc_id, component,
   CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS component_size
 FROM lab
@@ -473,20 +441,7 @@ def dedup_content_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -> min-id representative per cluster -> per-language kept/dropped
     # accounting joined back to the corpus.
     oracle=f"""
-WITH RECURSIVE pairs AS (
-  SELECT doc_a, doc_b FROM ({_JACCARD_PAIRS_ORACLE})
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(id, comp) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e.a, r.comp FROM edges e JOIN reach r ON e.b = r.id
-),
-lab AS (SELECT id, MIN(comp) AS component FROM reach GROUP BY id),
+{_COMPONENTS_CLOSURE_SQL},
 reps AS (SELECT component, MIN(id) AS rep FROM lab GROUP BY component),
 labeled AS (
   SELECT d.doc_id, d.lang, d.n_chars,
@@ -507,9 +462,9 @@ SELECT lang,
   CAST(COUNT(DISTINCT component) AS BIGINT) AS n_clusters
 FROM labeled GROUP BY lang ORDER BY lang
 """,
-    doc="Near-dedup APPLY: the pair relation (MinHash-LSH candidates, "
-    "exact-verified; exact pairs unioned at gate scale per the "
-    "dedup_components recall note) closes into clusters "
+    doc="Near-dedup APPLY: the pair relation (operators/dedup.py:"
+    "near_dup_edges — MinHash-LSH candidates, plus length-band "
+    "candidates at gate scale, exact-verified) closes into clusters "
     "(operators/components.py), each cluster keeps its min-id "
     "representative (operators/dedup.py:apply_dedup), and the corpus "
     "gets per-language kept/dropped/chars-saved accounting — the "
@@ -524,16 +479,7 @@ def dedup_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.dedup import apply_dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    lsh_pairs = DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=32, bands=8, threshold=0.8
-    ).select("doc_a", "doc_b")
-    if docs.count() <= 2000:
-        exact_pairs = DD.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=5, threshold=0.8
-        )
-        pairs = lsh_pairs.union(exact_pairs.select("doc_a", "doc_b")).distinct()
-    else:
-        pairs = lsh_pairs
+    pairs = DD.near_dup_edges(docs)
     labeled = apply_dedup(docs, pairs)
     return (
         labeled.groupBy("lang")
@@ -561,20 +507,7 @@ def dedup_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dup family can never straddle train/test (the contamination
     # a doc-id hash split cannot prevent).
     oracle=f"""
-WITH RECURSIVE pairs AS (
-  SELECT doc_a, doc_b FROM ({_JACCARD_PAIRS_ORACLE})
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(id, comp) AS (
-  SELECT a, a FROM edges
-  UNION
-  SELECT e.a, r.comp FROM edges e JOIN reach r ON e.b = r.id
-),
-lab AS (SELECT id, MIN(comp) AS component FROM reach GROUP BY id),
+{_COMPONENTS_CLOSURE_SQL},
 labeled AS (
   SELECT d.doc_id, d.lang,
     len(regexp_split_to_array(trim(d.text), '\\s+')) AS n_tokens,
@@ -611,16 +544,7 @@ def corpus_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    lsh_pairs = DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=32, bands=8, threshold=0.8
-    ).select("doc_a", "doc_b")
-    if docs.count() <= 2000:
-        exact_pairs = DD.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=5, threshold=0.8
-        )
-        pairs = lsh_pairs.union(exact_pairs.select("doc_a", "doc_b")).distinct()
-    else:
-        pairs = lsh_pairs
+    pairs = DD.near_dup_edges(docs)
     labeled = apply_dedup(docs, pairs)
     bucket = (F.col("component") * F.lit(2654435761)) % 100
     assigned = labeled.select(
@@ -1791,19 +1715,9 @@ def _dbscan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from diabetes_etl_spark.operators.clustering import dbscan_labels
 
     docs = load_table(spark, sf_dir, "documents")
-    # Same LSH-fed, small-corpus-exact-unioned edge relation as
-    # dedup_components (see that plan's recall note): eps-neighbourhood
-    # = 5-gram Jaccard >= 0.8.
-    lsh_pairs = DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=5, num_hashes=32, bands=8, threshold=0.8
-    ).select("doc_a", "doc_b")
-    if docs.count() <= 2000:
-        exact_pairs = DD.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=5, threshold=0.8
-        )
-        pairs = lsh_pairs.union(exact_pairs.select("doc_a", "doc_b")).distinct()
-    else:
-        pairs = lsh_pairs
+    # Same edge relation as dedup_components: eps-neighbourhood =
+    # 5-gram Jaccard >= 0.8.
+    pairs = DD.near_dup_edges(docs)
     roles = dbscan_labels(pairs, "doc_a", "doc_b", min_pts=3)
     return (
         docs.select(F.col("doc_id"))
@@ -1819,14 +1733,7 @@ def _dbscan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "cluster_dbscan_docs",
     oracle=f"""
-WITH RECURSIVE pairs AS (
-  SELECT doc_a, doc_b FROM ({_JACCARD_PAIRS_ORACLE})
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
+{_JACCARD_EDGES_SQL},
 deg AS (SELECT a, COUNT(*) + 1 AS n_eps FROM edges GROUP BY a),
 core AS (SELECT a AS id FROM deg WHERE n_eps >= 3),
 core_edges AS (

@@ -664,18 +664,7 @@ def docs_prep_pipeline_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv1 = docs.join(keep1, "doc_id", "left_semi")
     # stage 2: DBSCAN flood control (same edge relation as
     # cluster_dbscan_docs, computed on the survivors)
-    lsh_pairs = DD.minhash_lsh_pairs(
-        surv1, "doc_id", "text", n=5, num_hashes=32, bands=8, threshold=0.8
-    ).select("doc_a", "doc_b")
-    if surv1.count() <= 2000:
-        exact_pairs = DD.ngram_jaccard_pairs(
-            surv1, "doc_id", "text", n=5, threshold=0.8
-        )
-        pairs = lsh_pairs.union(
-            exact_pairs.select("doc_a", "doc_b")
-        ).distinct()
-    else:
-        pairs = lsh_pairs
+    pairs = DD.near_dup_edges(surv1)
     roles = dbscan_labels(pairs, "doc_a", "doc_b", min_pts=3)
     reps = roles.groupBy("component").agg(F.min("id").alias("rep"))
     drop2 = (

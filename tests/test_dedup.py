@@ -292,7 +292,7 @@ def test_connected_components_resumes_from_checkpointed_rounds(
     )
     wd = str(tmp_path / "cc_work")
     # simulated mid-job death: max_iter=3 raises AFTER committing
-    # rounds 0..3 to work_dir (same on-disk state as a crashed driver)
+    # rounds 0..2 to work_dir (same on-disk state as a crashed driver)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=3, work_dir=wd, auto_star=False)
     r2 = os.path.join(wd, "round_00002")
@@ -356,7 +356,7 @@ def test_connected_components_auto_switches_on_high_diameter(
 
 
 def test_connected_components_no_switch_on_near_clique(spark, tmp_path):
-    """Near-dup clusters (near-cliques) converge in 2-4 propagation
+    """Near-dup clusters (near-cliques) converge in 1-3 propagation
     rounds — the auto-switch must NOT trigger on the normal path."""
     import os
 
@@ -1295,3 +1295,204 @@ def test_components_volatile_star_switch_high_diameter(spark):
     }
     assert set(labels.values()) == {0}
     assert len(labels) == 31
+
+
+# -- near_dup_edges: one shingle pass, one Jaccard check ---------------------
+
+
+def _pair_set(df) -> set[tuple[int, int]]:
+    return {(r.doc_a, r.doc_b) for r in df.select("doc_a", "doc_b").collect()}
+
+
+def _two_pass_edges(df) -> set[tuple[int, int]]:
+    """The edge set as the union of the two separately verified pair
+    sets (LSH pairs and length-band pairs)."""
+    return _pair_set(
+        DD.minhash_lsh_pairs(
+            df, "doc_id", "text", n=5, num_hashes=32, bands=8, threshold=0.8
+        )
+    ) | _pair_set(DD.ngram_jaccard_pairs(df, "doc_id", "text", n=5))
+
+
+def _python_nodes_after(spark, last_execution: int) -> int:
+    """Python-worker plan nodes in the SQL executions after
+    ``last_execution`` (final adaptive plans, from the status store)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = 0
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        eid = it.next().executionId()
+        if eid <= last_execution:
+            continue
+        nodes = store.planGraph(eid).allNodes()
+        n += sum(
+            "Python" in nodes.apply(i).name() or "Arrow" in nodes.apply(i).name()
+            for i in range(nodes.size())
+        )
+    return n
+
+
+def _last_execution(spark) -> int:
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = -1
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        last = max(last, it.next().executionId())
+    return last
+
+
+def test_near_dup_edges_equal_two_pass_union_on_fixture(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert docs.count() <= DD.EXACT_EDGES_MAX_DOCS
+    before = _last_execution(spark)
+    edges = _pair_set(DD.near_dup_edges(docs))
+    # the kernel runs once: one Python node across every execution the
+    # edge set took (count, checkpoint, candidates + verification)
+    assert _python_nodes_after(spark, before) == 1
+    assert edges == _two_pass_edges(docs)
+    assert edges and all(a < b for a, b in edges)
+
+
+def test_near_dup_edges_keep_lsh_pair_that_length_bands_miss(spark):
+    """Whitespace padding makes a Jaccard-1.0 pair differ by more than
+    two length bands: LSH finds it, the band blocking cannot."""
+    toks = [f"w{j:03d}" for j in range(60)]
+    df = spark.createDataFrame(
+        [(1, " ".join(toks)), (2, "   ".join(toks)), (3, "unrelated text")],
+        "doc_id long, text string",
+    )
+    banded = _pair_set(DD.ngram_jaccard_pairs(df, "doc_id", "text", n=5))
+    edges = _pair_set(DD.near_dup_edges(df))
+    assert (1, 2) not in banded
+    assert edges == {(1, 2)} == _two_pass_edges(df)
+
+
+def test_near_dup_edges_keep_pair_across_band_boundary(spark):
+    """Lengths 249 and 250 fall in bands 4 and 5 (width 50); the pair
+    meets through the b+1 copy and its Jaccard is 41/51."""
+    toks = [f"t{j:03d}" for j in range(50)]
+    toks[0] += "x" * (249 - len(" ".join(toks)))
+    a = " ".join(toks)
+    b = a + "q"
+    assert (len(a) // 50, len(b) // 50) == (4, 5)
+    df = spark.createDataFrame(
+        [(7, a), (9, b), (11, "something else entirely")],
+        "doc_id long, text string",
+    )
+    edges = _pair_set(DD.near_dup_edges(df))
+    assert edges == {(7, 9)} == _two_pass_edges(df)
+
+
+# -- connected components: seeded round 0, observed change counts ------------
+
+
+def _identity_seeded_labels(edges) -> dict[int, int]:
+    """Reference min-label propagation from identity labels, with a
+    filter-count convergence check per round."""
+    sym = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    sym = sym.union(sym.select("b", "a")).distinct().localCheckpoint()
+    labels = (
+        sym.select(F.col("a").alias("id")).distinct()
+        .withColumn("component", F.col("id")).localCheckpoint()
+    )
+    while True:
+        nbr_min = (
+            sym.join(labels.withColumnRenamed("id", "b"), "b")
+            .groupBy("a").agg(F.min("component").alias("m"))
+        )
+        new = labels.join(
+            nbr_min.withColumnRenamed("a", "id"), "id", "left"
+        ).select(
+            "id",
+            F.least("component", F.coalesce("m", "component")).alias("c2"),
+            "component",
+        ).localCheckpoint()
+        if new.filter(F.col("c2") != F.col("component")).count() == 0:
+            return {r.id: r.component for r in labels.collect()}
+        labels = new.select("id", F.col("c2").alias("component"))
+
+
+@pytest.mark.parametrize(
+    "edge_list",
+    [
+        [(i, i + 1) for i in range(7)],  # chain
+        [  # two 5-cliques bridged by one edge
+            (a, b) for grp in (range(5), range(5, 10))
+            for a in grp for b in grp if a < b
+        ] + [(4, 5)],
+        [(2, 1), (2, 3), (3, 4), (10, 11), (11, 12), (4, 10), (20, 21), (30, 30)],
+    ],
+    ids=["chain", "bridged_cliques", "multi_component"],
+)
+def test_seeded_components_equal_identity_seeded_loop(spark, edge_list):
+    from diabetes_etl_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    got = {r.id: r.component for r in connected_components(edges).collect()}
+    assert got == _identity_seeded_labels(edges)
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["volatile", "durable"])
+def test_observed_changed_count_equals_filter_count(
+    spark, tmp_path, monkeypatch, durable
+):
+    """Every round's changed count, taken by an Observation on the
+    round's own materialization, equals a separate filter().count()."""
+    from diabetes_etl_spark.operators.components import connected_components
+    from diabetes_etl_spark.operators.iterstate import RoundStore
+
+    seen = []
+    orig = RoundStore.commit_observed
+
+    def spy(self, k, df, **metrics):
+        expected = df.filter(F.col("component") != F.col("prev")).count()
+        state, observed = orig(self, k, df, **metrics)
+        seen.append((k, observed["changed"], expected))
+        return state, observed
+
+    monkeypatch.setattr(RoundStore, "commit_observed", spy)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src long, dst long"
+    )
+    labels = connected_components(
+        chain,
+        auto_star=False,
+        work_dir=str(tmp_path / "cc") if durable else None,
+    ).collect()
+    assert {r.component for r in labels} == {0}
+    assert len(seen) >= 3
+    assert [k for k, _, _ in seen] == list(range(len(seen)))
+    assert all(n == expected for _, n, expected in seen)
+    assert seen[-1][1] == 0 and seen[0][1] > 0
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["volatile", "durable"])
+def test_components_on_empty_edge_set(spark, tmp_path, durable):
+    """A corpus with no near-dup pair gives an empty edge set: the
+    round-0 observation reads zero changes, the loop stops at once and
+    no node is labelled."""
+    import os
+
+    from diabetes_etl_spark.operators.components import connected_components
+
+    wd = str(tmp_path / "cc_empty") if durable else None
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert connected_components(empty, work_dir=wd).collect() == []
+    if durable:
+        assert os.path.exists(os.path.join(wd, "CONVERGED"))
+        assert not os.path.exists(os.path.join(wd, "round_00001"))
+
+
+def test_near_dup_edges_empty_on_corpus_without_duplicates(spark):
+    from diabetes_etl_spark.operators.components import connected_components
+
+    df = spark.createDataFrame(
+        [
+            (i, " ".join(f"d{i}w{j}" for j in range(40)))
+            for i in range(1, 6)
+        ],
+        "doc_id long, text string",
+    )
+    edges = DD.near_dup_edges(df)
+    assert edges.collect() == []
+    assert connected_components(edges, "doc_a", "doc_b").collect() == []

@@ -67,14 +67,13 @@ def test_profile_approx_close_to_exact(spark, sf_dir):
         assert exact[col].mean_value == approx[col].mean_value
 
 
-def test_corpus_card_entropy_and_dup_accounting(spark):
+def test_corpus_card_entropy_and_dup_accounting(spark, monkeypatch):
     """Entropy: single-lang source -> 0; uniform two-lang -> ln 2.
     Dup accounting: identical texts count in BOTH sources."""
     import math
 
     from diabetes_etl_spark.plans.registry import all_queries
     import diabetes_etl_spark.plans.profileplans as PP
-    from diabetes_etl_spark.sources import tables as T
 
     docs = spark.createDataFrame(
         [
@@ -85,17 +84,11 @@ def test_corpus_card_entropy_and_dup_accounting(spark):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    orig = T.load_table
-    try:
-        PP.load_table = lambda s, d, name: docs  # noqa: ARG005
-        rows = {
-            r.source: r
-            for r in all_queries(include_extended=True)[
-                "corpus_card_by_source"
-            ].fn(spark, "unused").collect()
-        }
-    finally:
-        PP.load_table = orig
+    # every plan module binds load_table at import: import them all
+    # first, then patch only the name the query under test reads
+    fn = all_queries(include_extended=True)["corpus_card_by_source"].fn
+    monkeypatch.setattr(PP, "load_table", lambda s, d, name: docs)
+    rows = {r.source: r for r in fn(spark, "unused").collect()}
     assert rows["s1"].lang_entropy == 0.0
     assert math.isclose(rows["s2"].lang_entropy, math.log(2), abs_tol=1e-6)
     assert rows["s1"].n_exact_dup_docs == 1

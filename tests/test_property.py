@@ -538,7 +538,7 @@ def test_edit_distance_pairs_lossless_random(spark, names, d):
     assert got == want
 
 
-def test_path_mining_partition_invariant(spark, sf_dir):
+def test_path_mining_partition_invariant(spark, sf_dir, monkeypatch):
     """The journey path is pinned by sort_array over (rn, type) structs,
     not collect_list arrival order — the result must be bit-identical
     across input partitionings."""
@@ -548,23 +548,13 @@ def test_path_mining_partition_invariant(spark, sf_dir):
     fn = all_queries(include_extended=True)["events_path_mining"].fn
     a = [tuple(r) for r in fn(spark, sf_dir).collect()]
 
-    import diabetes_etl_spark.sources.tables as tables
-
-    orig = tables.load_table
-
     def scrambled(spark_, d, name):
-        df = orig(spark_, d, name)
+        df = load_table(spark_, d, name)
         return df.repartition(13) if name == "events" else df
 
-    tables.load_table = scrambled
-    # the plan module captured load_table at import; patch there too
+    # the plan module bound load_table at import: patch that name only
     import diabetes_etl_spark.plans.events as evmod
 
-    ev_orig = evmod.load_table
-    evmod.load_table = scrambled
-    try:
-        b = [tuple(r) for r in fn(spark, sf_dir).collect()]
-    finally:
-        tables.load_table = orig
-        evmod.load_table = ev_orig
+    monkeypatch.setattr(evmod, "load_table", scrambled)
+    b = [tuple(r) for r in fn(spark, sf_dir).collect()]
     assert a == b

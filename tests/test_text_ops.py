@@ -144,7 +144,7 @@ def test_phrase_search_exact_adjacency_and_repeats(spark):
 # -- Zipf profile ------------------------------------------------------------
 
 
-def test_zipf_profile_recovers_known_slope(spark, sf_dir):
+def test_zipf_profile_recovers_known_slope(spark, sf_dir, monkeypatch):
     """A synthetic corpus with exact power-law counts n(r) = C / r
     must fit slope ~ -1."""
     from diabetes_etl_spark.plans.registry import all_queries
@@ -158,18 +158,12 @@ def test_zipf_profile_recovers_known_slope(spark, sf_dir):
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
 
     import diabetes_etl_spark.plans.textplans as TP
-    from diabetes_etl_spark.sources import tables as T
 
-    orig = T.load_table
-    try:
-        T.load_table = lambda s, d, name: docs  # noqa: ARG005
-        TP.load_table = T.load_table
-        row = all_queries(include_extended=True)[
-            "text_zipf_profile"
-        ].fn(spark, "unused").collect()[0]
-    finally:
-        T.load_table = orig
-        TP.load_table = orig
+    # every plan module binds load_table at import: import them all
+    # first, then patch only the name the query under test reads
+    fn = all_queries(include_extended=True)["text_zipf_profile"].fn
+    monkeypatch.setattr(TP, "load_table", lambda s, d, name: docs)
+    row = fn(spark, "unused").collect()[0]
     assert row.vocab_size == 40
     assert row.total_tokens == sum(round(1200 / r) for r in range(1, 41))
     assert math.isclose(row.zipf_slope, -1.0, abs_tol=0.05)
