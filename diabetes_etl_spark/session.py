@@ -12,6 +12,9 @@ correct on a multi-executor cluster:
   AQE coalesces from a higher initial number, so we only pin it down
   when running locally.
 - Arrow enabled for any pandas-UDF path (vectorized transfer).
+- a codegen class cache of 1000 entries, so a session that re-runs its
+  query shapes compiles each generated class once instead of evicting
+  it from Spark's 100-entry default before the next run can reuse it.
 """
 
 from __future__ import annotations
@@ -75,6 +78,20 @@ def session_conf(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(
             64 * 1024 * 1024
         ),
+        # Generated classes are cached by their source text, which
+        # holds no data, so a warm query shape needs no Janino compile
+        # -- while its classes stay cached.  One corpus_llm pass
+        # generates ~170 classes (dedup_components 104,
+        # cf_item_similarity_topk 47, text_wordpiece_segments 15) and a
+        # cold medallion refresh 90, so Spark's default LRU of 100
+        # evicts each class before the next pass and every warm pass
+        # recompiles them all (10-23% of each op's wall time at
+        # sf0.001).  1000 holds those working sets several times over.
+        # It costs no Metaspace: an evicted class is not unloaded
+        # either (after 3 corpus_llm passes, 168 MiB at 1000 entries,
+        # 170 MiB at 100).  A static conf: the JVM reads it once, when
+        # it first generates code.
+        "spark.sql.codegen.cache.maxEntries": "1000",
     }
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

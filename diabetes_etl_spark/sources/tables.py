@@ -9,11 +9,14 @@ eagerly and let pruning do its job at 100 TB.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 FIXTURE_TABLES = (
     "region",
@@ -35,7 +38,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _load_events(spark, path)
-    return spark.read.parquet(path)
+    if not os.path.exists(path):
+        # a remote URI or a missing table: Spark's reader resolves the
+        # one and reports the other
+        return spark.read.parquet(path)
+    # The footer's schema, read on the driver, spares the one-task job
+    # Spark would run to infer it.
+    return spark.read.schema(_spark_schema(spark, path)).parquet(path)
+
+
+# The footer key under which Spark records the schema it wrote.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's reader infers for ``path``, from its footer.
+
+    A Spark-written file records that schema, and Spark prefers it to
+    the parquet types (a TimestampType column is written as INT96, which
+    arrow reads as tz-naive).  Otherwise tz-naive timestamps (o_orderdate,
+    l_shipdate) map as Spark's own inference maps them."""
+    footer = _footer_schema(path)
+    written = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if written is not None:
+        return StructType.fromJson(json.loads(written))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    return from_arrow_schema(footer, prefer_timestamp_ntz=ntz.lower() == "true")
 
 
 # The fixture's event schema (TESTDATA.md).  ts has been published both
@@ -63,13 +91,13 @@ _TS_UNIT_TO_MICROS = {
     "s": "ts * 1000000",
 }
 
-def _events_ts_unit(path: str) -> str:
-    """Probe the parquet footer (one driver-side metadata read — no data
-    pages) for the ts column's physical time unit.  Deliberately
-    UNCACHED: the fixture generator has published both NANOS and MICROS
-    at the same path, so a process-lifetime cache would mis-scale ts by
-    1000x if the file is regenerated under a live session; the footer
-    read costs ~a stat call and happens once per query construction."""
+def _footer_schema(path: str):
+    """The arrow schema in a parquet footer (one driver-side metadata
+    read — no data pages).  Deliberately UNCACHED: the fixture generator
+    has published both NANOS and MICROS events at the same path, so a
+    process-lifetime cache would mis-scale ts by 1000x if the file is
+    regenerated under a live session; the read costs ~a stat call and
+    happens once per table read."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -81,7 +109,12 @@ def _events_ts_unit(path: str) -> str:
         if not parts:
             raise ValueError(f"no parquet part files under {path}")
         path = os.path.join(path, parts[0])
-    unit = pq.read_schema(path).field("ts").type.unit
+    return pq.read_schema(path)
+
+
+def _events_ts_unit(path: str) -> str:
+    """The physical time unit of the events file's ts column."""
+    unit = _footer_schema(path).field("ts").type.unit
     if unit not in _TS_UNIT_TO_MICROS:
         raise ValueError(f"unsupported parquet timestamp unit {unit!r}")
     return unit

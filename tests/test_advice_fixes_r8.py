@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from diabetes_etl_spark.session import session_conf
 
 SHUF = "spark.sql.shuffle.partitions"
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 
 
 # -- 1. shuffle-partitions pin is local-only --------------------------------
@@ -36,6 +37,8 @@ def test_session_conf_pins_shuffle_partitions_locally():
     conf = session_conf("local[32]", cpus=32)
     assert conf[SHUF] == "32"
     assert conf["spark.sql.adaptive.enabled"] == "true"
+    # the codegen cache holds a warm pass's generated classes
+    assert int(conf[CODEGEN_CACHE]) >= 1000
 
 
 def test_session_conf_leaves_cluster_shuffle_partitions_alone():
@@ -48,6 +51,8 @@ def test_session_conf_leaves_cluster_shuffle_partitions_alone():
         assert SHUF not in conf, master
         # AQE stays in charge of initial partitioning on the cluster
         assert conf["spark.sql.adaptive.enabled"] == "true"
+        # the driver compiles the generated code on a cluster too
+        assert int(conf[CODEGEN_CACHE]) >= 1000, master
 
 
 def test_session_conf_explicit_override_always_wins():

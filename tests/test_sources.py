@@ -1,17 +1,102 @@
-"""Source/sink coverage: multi-format round-trips (csv/json/orc keep
-values and types under an explicit schema), partitioned sinks, schema
-merging and malformed-row handling."""
+"""Source/sink coverage: fixture tables read with their footer schema,
+multi-format round-trips (csv/json/orc keep values and types under an
+explicit schema), partitioned sinks, schema merging and malformed-row
+handling."""
 
 from __future__ import annotations
+
+import glob
+import itertools
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from diabetes_etl_spark.sources.tables import (
+    FIXTURE_TABLES,
     load_table,
     read_source,
     write_sink,
 )
+from perfbench.datagen import write_tables
+from tests.conftest import SF_SMALL
+
+# `events` has its own loader (ts is rebuilt from the raw int64)
+FOOTER_TABLES = [t for t in FIXTURE_TABLES if t != "events"]
+# every fixture scale factor present next to the default one
+SF_DIRS = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*")))
+_GROUPS = itertools.count()
+
+
+@pytest.fixture(scope="module")
+def generated_dir(tmp_path_factory):
+    """The benchmark generator's tables (pyarrow-written, seed 1)."""
+    out = str(tmp_path_factory.mktemp("generated"))
+    write_tables(out, 1, 0.001, 80)
+    return out
+
+
+def _jobs_started(spark, build):
+    """Spark jobs started while ``build()`` runs, and its result."""
+    sc = spark.sparkContext
+    group = f"footer-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _assert_footer_read(spark, sf_dir, name):
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    jobs, df = _jobs_started(spark, lambda: load_table(spark, sf_dir, name))
+    inferred_jobs, inferred = _jobs_started(
+        spark, lambda: spark.read.parquet(path)
+    )
+    # the job count is seen: inference alone starts one
+    assert inferred_jobs >= 1
+    assert jobs == 0
+    assert df.schema == inferred.schema
+
+
+@pytest.mark.parametrize("name", FOOTER_TABLES)
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_load_table_reads_footer_schema_without_a_job(spark, sf_dir, name):
+    _assert_footer_read(spark, sf_dir, name)
+
+
+def test_footer_schema_keeps_timestamp_ntz(spark, sf_dir):
+    """Tz-naive parquet timestamps stay timestamp_ntz, as Spark's own
+    inference gives them (``from_arrow_schema`` defaults to timestamp)."""
+    types = {
+        f.name: f.dataType.simpleString()
+        for t in ("orders", "lineitem")
+        for f in load_table(spark, sf_dir, t).schema
+    }
+    assert types["o_orderdate"] == "timestamp_ntz"
+    assert types["l_shipdate"] == "timestamp_ntz"
+
+
+@pytest.mark.parametrize("name", FOOTER_TABLES)
+def test_load_table_footer_schema_on_generated_tables(
+    spark, generated_dir, name
+):
+    _assert_footer_read(spark, generated_dir, name)
+
+
+def test_load_table_reads_spark_written_directory(spark, sf_dir, tmp_path):
+    """A Spark-written table directory: the first part file's footer,
+    whose recorded Spark schema keeps a TimestampType column (written as
+    INT96, which arrow reads as tz-naive) a timestamp."""
+    out = str(tmp_path / "orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    orders.withColumn(
+        "o_ordered_at", F.col("o_orderdate").cast("timestamp")
+    ).repartition(3).write.parquet(out)
+    _assert_footer_read(spark, str(tmp_path), "orders")
+    back = load_table(spark, str(tmp_path), "orders")
+    assert back.schema["o_ordered_at"].dataType.simpleString() == "timestamp"
 
 
 @pytest.fixture(scope="module")

@@ -8,8 +8,9 @@ Times named registry queries in isolation with the noop sink (guide
     python tools/opt_measure.py q1_pricing_summary sim_pq_adc_topk \
         [--sf /root/testdata/sf0.1] [--reps 3] [--tag before]
 
-Prints one line per query: min / median over reps, plus exchange and
-python-boundary counts from the executed plan.
+Prints one line per query: min / median over reps, each rep's codegen
+compile count and compile ms (a warm rep compiles 0 classes), plus
+exchange and python-boundary counts from the executed plan.
 """
 
 from __future__ import annotations
@@ -29,6 +30,17 @@ from diabetes_etl_spark.session import get_spark, warm_session  # noqa: E402
 def formatted_plan(df) -> str:
     qe = df._jdf.queryExecution()
     return df.sparkSession._jvm.PythonSQLUtils.explainString(qe, "formatted")
+
+
+def codegen_totals(spark) -> tuple[int, float]:
+    """(classes compiled, ms spent compiling) so far in this JVM."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return (
+        compiles.METRIC_COMPILATION_TIME().getCount(),
+        generator.compileTime() / 1e6,
+    )
 
 
 def main() -> None:
@@ -55,13 +67,17 @@ def main() -> None:
         if spec is None:
             print(f"{name}: NOT IN REGISTRY", flush=True)
             continue
-        ts = []
+        ts, compiles, compile_ms = [], [], []
         df = None
         for _ in range(args.reps):
+            n0, ms0 = codegen_totals(spark)
             t0 = time.perf_counter()
             df = spec.fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.perf_counter() - t0, 3))
+            n1, ms1 = codegen_totals(spark)
+            compiles.append(n1 - n0)
+            compile_ms.append(round(ms1 - ms0))
         plan = formatted_plan(df)
         if args.tag:
             os.makedirs(plans_dir, exist_ok=True)
@@ -76,6 +92,8 @@ def main() -> None:
             + plan.count("BatchEvalPython")
             + plan.count("MapInArrow")
             + plan.count("FlatMapGroupsInPandas"),
+            "compiles": compiles,
+            "compile_ms": compile_ms,
         }
         med = sorted(ts)[len(ts) // 2]
         print(
