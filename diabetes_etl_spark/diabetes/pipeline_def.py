@@ -45,7 +45,17 @@ Decisions where the reference leaves room (SURVEY §2.11, §4):
 - `processing_duration_minutes` uses `unix_timestamp`;
 - the reference's ORDER BY on demographics and risk analysis belongs
   to the pipeline tables only; the builders are unordered, so a query
-  over a builder pays no sort.
+  over a builder pays no sort.  Each of the two tables is bounded by its
+  group keys (at most 5 x 4 x 4 = 80 and 3 x 3 x 4 = 36 cells), so the
+  pipeline writes it as one partition sorted in place: one sorted file,
+  with no range-partition sample job and no sort shuffle;
+- a distinct count over a column with few values per group is the size
+  of the group's set (`age_groups_represented`: at most the 5 age
+  groups; `pipeline_health_metrics.unique_files`: one landing path per
+  file name), so the gold aggregates in one shuffle, not the two of a
+  distinct aggregate.
+  `dashboard_refresh_log.files_processed` counts over all of silver, an
+  unbounded set, and keeps `countDistinct`.
 """
 
 from __future__ import annotations
@@ -109,6 +119,15 @@ def _count_if(cond: Column) -> Column:
     return F.sum(F.when(cond, 1).otherwise(0))
 
 
+def _n_distinct(c: str) -> Column:
+    """``countDistinct`` for a column whose distinct values in a group are
+    few: one set per group, so the aggregate takes one shuffle.  A
+    ``countDistinct`` beside other aggregates is planned as two
+    aggregations, with a shuffle each (and an Expand once there is a
+    second distinct column)."""
+    return F.size(F.collect_set(c)).cast("long")
+
+
 def _pct(part: str, whole: str) -> Column:
     return F.round(
         F.col(part).cast("double") / F.col(whole).cast("double") * 100, 2
@@ -150,7 +169,7 @@ def risk_analysis(silver: DataFrame, ctx: RunContext) -> DataFrame:
         _avg("DiabetesPedigreeFunction", 3).alias("avg_pedigree_function"),
         _avg("Insulin", 2).alias("avg_insulin"),
         _avg("SkinThickness", 2).alias("avg_skin_thickness"),
-        F.countDistinct("age_group").alias("age_groups_represented"),
+        _n_distinct("age_group").alias("age_groups_represented"),
         _avg("data_quality_score", 2).alias("avg_data_quality"),
     )
     dev = F.coalesce(F.col("stddev_risk_score"), F.lit(0.0))
@@ -262,7 +281,7 @@ def pipeline_health_metrics(bronze: DataFrame, ctx: RunContext) -> DataFrame:
         .groupBy("processing_hour", "file_name")
         .agg(
             F.count("*").alias("records_processed"),
-            F.countDistinct("source_file").alias("unique_files"),
+            _n_distinct("source_file").alias("unique_files"),
             F.min("ingestion_timestamp").alias("first_record_time"),
             F.max("ingestion_timestamp").alias("last_record_time"),
         )
@@ -365,6 +384,14 @@ def _audit_columns(df: DataFrame, ctx: RunContext) -> DataFrame:
     )
 
 
+def _one_sorted_file(gold: DataFrame, *keys: str) -> DataFrame:
+    """The reference's ORDER BY for a gold bounded by its group keys: one
+    partition sorted in place, written as one file that reads back in key
+    order.  ``orderBy`` would add a range-partitioning sample job and a
+    sort shuffle for a few dozen rows."""
+    return gold.coalesce(1).sortWithinPartitions(*keys)
+
+
 def _props(tier: str) -> dict[str, str]:
     """Per-table properties, as the reference declares on every table
     (pipeline:49-53 and per-table): a medallion quality tier plus its
@@ -437,8 +464,9 @@ def build_diabetes_pipeline(
         table_properties=_props("gold"),
     )
     def diabetes_demographics_summary(c) -> DataFrame:
-        return demographics_summary(c.read("diabetes_silver"), ctx).orderBy(
-            "age_group", "bmi_category", "pregnancy_risk"
+        return _one_sorted_file(
+            demographics_summary(c.read("diabetes_silver"), ctx),
+            "age_group", "bmi_category", "pregnancy_risk",
         )
 
     @p.table(
@@ -447,8 +475,9 @@ def build_diabetes_pipeline(
         table_properties=_props("gold"),
     )
     def diabetes_risk_analysis(c) -> DataFrame:
-        return risk_analysis(c.read("diabetes_silver"), ctx).orderBy(
-            "risk_level", "glucose_level", "bp_category"
+        return _one_sorted_file(
+            risk_analysis(c.read("diabetes_silver"), ctx),
+            "risk_level", "glucose_level", "bp_category",
         )
 
     @p.table(

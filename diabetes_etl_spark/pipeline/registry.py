@@ -24,13 +24,18 @@ Execution model (DLT runs independent flows at the same time):
   starting its own.  A wait that would close a cycle through other
   threads' builds raises the same ``dependency cycle`` error as a
   cycle inside one thread;
-- ``run()`` builds its targets from a thread pool with one thread per
-  session core, so once silver is written the golds and views that
-  read it are built side by side;
+- ``run()`` gives each target a build thread of its own, so every
+  dataset starts as soon as its inputs are written.  A build thread
+  mostly waits, on an upstream build or on its own Spark jobs, and
+  sharing the executor cores among those jobs is the Spark scheduler's
+  work.  A pool with fewer threads than targets would let targets that
+  wait on an upstream (the dashboard views wait on their golds) hold
+  every thread while datasets whose inputs are written sit in its
+  queue;
 - fail fast: each dataset's Spark jobs carry a job tag of their own.
-  The first error a target raises aborts the run: targets not yet
-  started are dropped, the jobs of the datasets still being built are
-  cancelled, and ``run()`` re-raises that first error (an
+  The first error a target raises aborts the run: the jobs of the
+  datasets still being built are cancelled, every target waiting on a
+  build re-raises that error, and ``run()`` re-raises it too (an
   ``ExpectationFailed`` stays an ``ExpectationFailed``);
 - ``materialize(name)`` called directly builds ``name`` and its
   upstreams serially in the calling thread.
@@ -51,7 +56,7 @@ import os
 import threading
 import uuid
 from collections.abc import Callable
-from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -338,19 +343,20 @@ class PipelineRunner:
 
     def run(self, targets: list[str] | None = None) -> dict[str, DataFrame]:
         """Materialize ``targets`` (default: every dataset) concurrently,
-        from a pool with one thread per session core, and return every
-        dataset built so far.  The first error a target raises stops the
-        run (queued targets are dropped, in-flight jobs cancelled) and is
-        re-raised here."""
+        one build thread per target, and return every dataset built so
+        far.  A target waiting on another's build costs a parked thread,
+        not a queue slot, so no target waits behind one that cannot
+        start yet.  The first error a target raises stops the run
+        (in-flight jobs are cancelled, waiting targets re-raise it) and
+        is re-raised here."""
         names = list(targets or self.pipeline.datasets)
-        workers = min(len(names), self.spark.sparkContext.defaultParallelism)
         try:
-            with ThreadPoolExecutor(max(1, workers),
+            # leaving the block joins every build thread
+            with ThreadPoolExecutor(max(1, len(names)),
                                     thread_name_prefix="pipeline") as pool:
-                futures = [pool.submit(self._run_target, n) for n in names]
-                wait(futures, return_when=FIRST_EXCEPTION)
-                pool.shutdown(cancel_futures=True)
-            # _run_target records every failure before its future fails
+                for n in names:
+                    pool.submit(self._run_target, n)
+            # _run_target records every failure before its thread ends
             if self._error is not None:
                 raise self._error
         finally:
@@ -624,15 +630,15 @@ class PipelineRunner:
             part = ", ".join(f"`{c}`" for c in ds.partition_by)
             ddl += f" PARTITIONED BY ({part})"
         ddl += f" LOCATION '{_sql_str(path)}'"
-        self.spark.sql(ddl)
-        if ds.partition_by:
-            self.spark.sql(f"ALTER TABLE {ident} RECOVER PARTITIONS")
         if ds.table_properties:
             kv = ", ".join(
                 f"'{_sql_str(k)}' = '{_sql_str(str(v))}'"
                 for k, v in ds.table_properties.items()
             )
-            self.spark.sql(f"ALTER TABLE {ident} SET TBLPROPERTIES ({kv})")
+            ddl += f" TBLPROPERTIES ({kv})"
+        self.spark.sql(ddl)
+        if ds.partition_by:
+            self.spark.sql(f"ALTER TABLE {ident} RECOVER PARTITIONS")
 
     def _materialize_stream(self, ds: Dataset, df: DataFrame) -> DataFrame:
         """Run a streaming dataset to completion with availableNow —

@@ -27,7 +27,7 @@ from diabetes_etl_spark.diabetes.dashboard import (
 )
 from diabetes_etl_spark.diabetes.pipeline_def import build_diabetes_pipeline
 from diabetes_etl_spark.diabetes.schema import DIABETES_SCHEMA, FALLBACK_MEDIANS
-from diabetes_etl_spark.pipeline.registry import PipelineRunner
+from diabetes_etl_spark.pipeline.registry import PipelineContext, PipelineRunner
 from diabetes_etl_spark.plans.diabetesplans import CTX, GOLD_ORACLES
 from perfbench.datagen import write_pima_csv
 from tests.pandas_compare import compare_frames
@@ -293,3 +293,43 @@ def test_warehouse_partitioned_gold_prunes(spark, csv_dir, tmp_path):
     )
     assert "PartitionFilters: [isnotnull(processing_date" in plan
     assert df.count() > 0
+
+
+ORDERED_GOLDS = {
+    "diabetes_demographics_summary": ("age_group", "bmi_category", "pregnancy_risk"),
+    "diabetes_risk_analysis": ("risk_level", "glucose_level", "bp_category"),
+}
+
+
+def test_golds_take_one_shuffle(spark, csv_dir, tmp_path):
+    """Warehouse mode: the ordered golds and the per-file health gold
+    each plan one exchange, with no range partitioning (no sample job, no
+    sort shuffle) and no Expand, and each ordered gold is one file that
+    reads back in its declared key order.  A ``countDistinct`` beside
+    other aggregates plans a second shuffle; ``orderBy`` a third."""
+    wh = str(tmp_path / "wh")
+    r = PipelineRunner(
+        build_diabetes_pipeline(csv_dir, ctx=CTX),
+        spark,
+        mode="warehouse",
+        warehouse=wh,
+    )
+    one_shuffle = [*ORDERED_GOLDS, "pipeline_health_metrics"]
+    r.run(one_shuffle)
+    ctx = PipelineContext(r)
+    for name in one_shuffle:
+        # the plan the pipeline wrote: the table's own builder over the
+        # upstream the run already wrote
+        df = r.pipeline.datasets[name].fn(ctx)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange ") == 1, (name, plan)
+        assert "rangepartitioning" not in plan, (name, plan)
+        assert "Expand" not in plan, (name, plan)
+    for name, keys in ORDERED_GOLDS.items():
+        files = [f for f in os.listdir(os.path.join(wh, name))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, files
+        rows = [tuple(row) for row in
+                spark.read.parquet(os.path.join(wh, name)).select(*keys).collect()]
+        assert len(rows) > 1
+        assert rows == sorted(rows), name

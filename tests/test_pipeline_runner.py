@@ -148,3 +148,22 @@ def test_each_dataset_built_once_under_contention(spark):
     assert calls == {n: 1 for n in names}
     for got in seen:
         assert all(got[n] is seen[0][n] for n in names)
+
+
+def test_run_starts_every_target_at_once(spark):
+    """``defaultParallelism + 2`` independent targets that each wait on
+    one barrier sized to the target count: the run ends only if every
+    target is being built at the same time, so no target may sit in a
+    queue behind targets that wait."""
+    n = spark.sparkContext.defaultParallelism + 2
+    barrier = threading.Barrier(n)
+    p = Pipeline("all-at-once")
+    names = [f"hol_{i}" for i in range(n)]
+    for name in names:
+        p.table(name=name)(
+            lambda c: (barrier.wait(20), c.spark.range(1))[1]
+        )
+    runner = PipelineRunner(p, spark, mode="views", view_prefix="hol_")
+    out = _run_bounded(runner.run, timeout=60)
+    assert "error" not in out, out
+    assert set(out["value"]) == set(names)
